@@ -157,12 +157,6 @@ object Bench {
     val pip = timeMedian(3) {
       GeoEngine.pipJoin(spark, geoDocs, benchPolys).count()
     }
-    // the knn ladder's candidate exchange is DATA-sized, not core-sized
-    // (the minhash partition-sizing lesson, ScalingBench dedup mode):
-    // pin the job to a corpus-derived partition count and restore after
-    val basePartitions = spark.conf.get("spark.sql.shuffle.partitions")
-    val knnPartitions = sys.env.getOrElse("SPARK_GRAFT_KNN_PARTS", "96")
-    spark.conf.set("spark.sql.shuffle.partitions", knnPartitions)
     val knn = timeMedian(3) {
       val queries = geoDocs.where(col("doc_id") <
           f"doc${2000}%012d")
@@ -170,7 +164,6 @@ object Bench {
       val data = geoDocs.select(col("doc_id").as("data_id"), col("lon"), col("lat"))
       GeoEngine.knnJoin(queries, data, k = 10, level = 12).count()
     }
-    spark.conf.set("spark.sql.shuffle.partitions", basePartitions)
     val range = timeMedian(3) {
       // within-distance (range) join: ~200 deterministic query docs vs the
       // full corpus at 25 km — headline "spatial-join output rows/s"
@@ -228,10 +221,8 @@ object Bench {
         .where(col("x").isNotNull)
         .agg(count(lit(1))).head().getLong(0)
     }
-    // re-touch the texts cache OUTSIDE the timed region: the knn ladder's
-    // candidate caches can evict its blocks, and a first rep that silently
-    // re-decodes the wide span arrays reads as a 4x spike (recorded
-    // 33 s vs 7 s in the round-4 trio before this line)
+    // re-touch the texts cache OUTSIDE the timed region: a first rep that
+    // silently re-decodes evicted span arrays reads as a 4x spike
     texts.count()
     val dedup = timeMedian(3) {
       Dedup.minhashLsh(texts, jaccardThreshold = 0.5).count()

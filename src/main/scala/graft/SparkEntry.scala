@@ -833,8 +833,9 @@ object SparkEntry {
     }),
     // --- kNN join --------------------------------------------------------
     "q_knn_chord" -> ((s, dir) => {
-      // brute-force kNN, chord^2 metric (SQL-mirrorable); the adaptive
-      // cell-ring kNN with the geodesic metric is validated in scalatest.
+      // brute-force kNN, chord^2 metric (SQL-mirrorable); the radius-
+      // escalating distance-join kNN with the geodesic metric is
+      // validated in scalatest.
       val data = geoLineitem(s, dir)
         .select(col("pt_id").as("data_id"), col("lon"), col("lat"))
       val queries = s.read.parquet(s"$dir/nation.parquet")
@@ -845,7 +846,8 @@ object SparkEntry {
         .select(col("query_id"), col("data_id"), col("rank").cast("long").as("rnk"))
     }),
     "q_knn_geodesic" -> ((s, dir) => {
-      // adaptive cell-ring kNN RANKED BY the Karney geodesic metric.
+      // radius-escalating distance-join kNN RANKED BY the Karney geodesic
+      // metric.
       // Hash-verified since round 4 via the chord-metric twin: the
       // reported metric column is the SQL-replayable squared chord of
       // each returned neighbor, and the oracle re-derives membership and

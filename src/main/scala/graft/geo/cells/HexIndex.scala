@@ -150,8 +150,6 @@ object HexIndex extends Serializable {
   def iseaResolution(id: Long): Int = (id & 0x1FL).toInt
   def iseaAperture(id: Long): Int = if (((id >> 5) & 1L) == 1L) 4 else 3
   def iseaQuad(id: Long): Int = ((id >> 6) & 0xFL).toInt
-  def iseaDx(id: Long): Long = { val z = (id >>> 10) & ((1L << 27) - 1); (z >>> 1) ^ -(z & 1L) }
-  def iseaDy(id: Long): Long = { val z = id >>> 37; (z >>> 1) ^ -(z & 1L) }
 
   /** Shared per-(resolution, aperture) binner.  The unit-sphere kernel
     * (a=1, no false origin) emits the raw reference hex address

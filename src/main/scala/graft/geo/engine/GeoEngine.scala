@@ -169,14 +169,6 @@ object GeoEngine {
     require(ring.length >= 6 && ring.length % 2 == 0,
       s"polygon $poly_id: ring must be [lon,lat]*n with n >= 3, " +
         s"got ${ring.length} values")
-    /** geodesic (ellipsoidal) ring area in m^2, counter-clockwise
-      * positive — the geod_polygon analogue for polygon-weighted stats */
-    def geodesicAreaM2(ell: graft.geo.math.Ellipsoid = graft.geo.math.Ellipsoid.WGS84): Double = {
-      val g = new graft.geo.geodesic.Geodesic(ell.a, ell.f)
-      val pts = (0 until ring.length / 2).map(i => (ring(2 * i + 1), ring(2 * i)))
-      g.polygonArea(pts)._1
-    }
-
     def bbox: (Double, Double, Double, Double) = {
       var lonMin = Double.MaxValue; var latMin = Double.MaxValue
       var lonMax = Double.MinValue; var latMax = Double.MinValue
@@ -256,34 +248,6 @@ object GeoEngine {
 
   // --- kNN join -------------------------------------------------------------
 
-  /** k nearest data points for each query point.
-    *
-    * Plan: tile both sides at `level`; explode the query side into the
-    * (2r+1)^2 cell neighborhood (candidate generation — query side is the
-    * smaller by convention); equi-join on cell (one shuffle, AQE-skew
-    * tolerant); rank candidates per query by squared chord distance with a
-    * total-order tie-break on data id; keep row_number <= k.
-    *
-    * Correctness bound: a neighborhood of radius r at `level` covers all
-    * true neighbors within ~r * cellWidth(level); callers size (level, r)
-    * for their distance budget, or use [[knnBruteForce]] when data is
-    * small enough to broadcast.  Ties break on (dist, id) so output is
-    * partition-independent. */
-  /** Exact geodesic top-k over candidate pairs, with a chord-distance
-    * prefilter: squared 3D chord (on the unit sphere of GEODETIC angles)
-    * is exactly monotone in the unit-sphere central angle, and the
-    * ellipsoidal geodesic distance per unit of that angle ranges over
-    * [b^2/a, a^2/b] (meridional radius at the equator ... at the pole;
-    * the zonal rate N*cos(phi)/cos(phi)=N lies inside), so two
-    * candidates can reorder only while their LINEAR chords are within
-    * (a/b)^3 ~ 1.0101 of each other — 1.0204 on SQUARED chords.  Keeping
-    * the kth-chord value x 1.022 (margin over 1.0204 for the arc-vs-
-    * chord curvature residual) and geodesic-ranking the survivors is
-    * therefore exact, while the expensive Karney solve runs on ~k rows
-    * per query instead of every candidate.  (The former 1.0068 band was
-    * the LINEAR (a/b)^2 local bound applied to squared chords — off by
-    * both the square and the global-vs-local radius range; a meridional
-    * candidate could be wrongly pruned in favor of a farther zonal one.) */
   /** Exact kth-smallest value with map-side combine — the partial-
     * aggregable replacement for a full row_number window over every
     * candidate row.  Buffer: b(0)=n, b(1..n)=a binary MAX-heap of the
@@ -331,6 +295,21 @@ object GeoEngine {
       org.apache.spark.sql.Encoders.scalaDouble
   }
 
+  /** Exact geodesic top-k over candidate pairs — the ranking behind
+    * [[knnBruteForce]] — with a chord-distance prefilter: squared 3D chord
+    * (on the unit sphere of GEODETIC angles) is exactly monotone in the
+    * unit-sphere central angle, and the ellipsoidal geodesic distance per
+    * unit of that angle ranges over [b^2/a, a^2/b] (meridional radius at
+    * the equator ... at the pole; the zonal rate N*cos(phi)/cos(phi)=N lies
+    * inside), so two candidates can reorder only while their LINEAR chords
+    * are within (a/b)^3 ~ 1.0101 of each other — 1.0204 on SQUARED chords.
+    * Keeping the kth-chord value x 1.022 (margin over 1.0204 for the
+    * arc-vs-chord curvature residual) and geodesic-ranking the survivors
+    * is therefore exact, while the expensive Karney solve runs on ~k rows
+    * per query instead of every candidate.  (The former 1.0068 band was the
+    * LINEAR (a/b)^2 local bound applied to squared chords — off by both the
+    * square and the global-vs-local radius range; a meridional candidate
+    * could be wrongly pruned in favor of a farther zonal one.) */
   private[graft] def geodesicTopK(pairs: DataFrame, k: Int, queryId: String,
                            dataId: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -363,144 +342,43 @@ object GeoEngine {
   def ringSafeRadius(level: Int, ring: Int): Double =
     ring * math.pow(2.0, -level) * (4.0 / 3.0) * 0.5 * 6356752.3 * 0.5
 
-  /** k nearest data points per query — adaptive cell-ring expansion.
+  /** k nearest data points per query — a radius-escalating distance join.
     *
-    * Each pass tiles both sides at `level`, explodes the query side into
-    * the (2r+1)^2 neighborhood, equi-joins on cell (one shuffle per pass,
-    * only pending queries re-join) and ranks by geodesic distance with a
-    * total-order (dist, id) tie-break.  A query is settled when it found k
-    * candidates whose kth distance is within the geometrically guaranteed
-    * covered radius of ring r; unsettled queries escalate to ring 3r, and
-    * after `maxPasses` the stragglers (isolated points) fall back to the
-    * broadcast brute-force.  Output is partition-count independent. */
+    * Rung l (`level`, `level` - 3, ... >= 2) runs [[distanceJoin]] of the
+    * still-pending queries at radius ringSafeRadius(l, 1), whose cover
+    * level is exactly l, so it returns every data point within the radius
+    * with its exact Karney `dist`.  A query with at least k of them is
+    * settled: no point outside the radius can outrank its kth neighbour,
+    * so its first k by (dist, data id) are the answer.  Queries still
+    * pending after the coarsest rung (isolated points, or k beyond the
+    * data size) fall back to [[knnBruteForce]].  Output (queryId, dataId,
+    * dist, rank) is partition-count independent. */
   def knnJoin(queries: DataFrame, data: DataFrame, k: Int, level: Int,
-              ring: Int = 1, maxPasses: Int = 8,
               queryId: String = "query_id", dataId: String = "data_id"): DataFrame = {
-    // Flat design: pass 1 joins every query at the finest level in one
-    // job; each unsettled query is then assigned its own escalation level
-    // from the pass-1 evidence (candidate count + kth distance found),
-    // and at most two further multi-level joins settle them — every query
-    // probes at its own rung inside ONE job per pass.  Stragglers that
-    // are still unsettled at the coarsest rung fall back to the broadcast
-    // brute force.  Driver-synchronized actions: ~4, independent of the
-    // ladder depth — the old per-rung loop serialized ~4 jobs per rung on
-    // the driver, which dominated wall time and would throttle thousands
-    // of concurrent queries on a cluster.
+    import org.apache.spark.sql.expressions.Window
     require(level >= 2 && level <= graft.geo.cells.CellIndex.MaxUsableLevel,
       s"knnJoin level must be in [2, ${graft.geo.cells.CellIndex.MaxUsableLevel}], got $level")
-    require(maxPasses >= 1, s"knnJoin maxPasses must be >= 1, got $maxPasses")
-    val ladder = (level to 2 by -3).take(maxPasses)
-    val coarsest = ladder.last
-    // tile + project the data side at the finest level; coarser join keys
-    // are derived by parent-cell bit-chopping — no re-tiling.  Not cached:
-    // each pass is one map-side scan of the source (at corpus scale a
-    // cache of the full projection is neither possible nor useful).
-    val fineData = tiled(data, level)
-      .select(col(dataId), col("lon").as("d_lon"), col("lat").as("d_lat"),
-        col("cell").as("fine_cell"))
-    val q0 = queries.select(col(queryId), col("lon"), col("lat"))
-
-    /** Escalation-level choice from a pass's evidence (columns n_cand /
-      * kth_dist / lvl): n==k -> the finest rung whose guarantee radius
-      * covers the kth distance found (an upper bound on the true kth, so
-      * settling there is certain); n<k -> 2D density extrapolation with
-      * 4x headroom, at least one rung coarser.  NULL lvl marks a query
-      * that can only be settled by brute force. */
-    def escalate(p: DataFrame): DataFrame = {
-      val byKth = ladder.init.foldRight(lit(coarsest): Column) { (l, els) =>
-        when(col("kth_dist") <= lit(ringSafeRadius(l, ring)), lit(l)).otherwise(els)
-      }
-      val nC = coalesce(col("n_cand"), lit(0L))
-      val steps = greatest(lit(1),
-        ceil(log(lit(4.0) * (k + 1) / greatest(nC, lit(1L))) / log(lit(64.0)))
-          .cast("int"))
-      val byDensity = least(col("lvl") - 3, lit(level) - lit(3) * steps)
-      val next = greatest(lit(coarsest),
-        when(nC === k, least(byKth, col("lvl") - 3)).otherwise(byDensity))
-      p.withColumn("lvl",
-          when(col("lvl") <= coarsest, lit(null)).otherwise(next).cast("int"))
-        .select(col(queryId), col("lon"), col("lat"), col("lvl"))
+    val byDist = Window.partitionBy(col(queryId)).orderBy(col("dist"), col(dataId))
+    val all = byDist.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    def settle(pending: DataFrame, rungs: List[Int]): List[DataFrame] = rungs match {
+      case Nil => List(knnBruteForce(pending, data, k, queryId, dataId))
+      case l :: coarser =>
+        // both frames are at most #queries x k rows: checkpoint them so
+        // the next rung re-plans neither this rung's join nor its window
+        val top = distanceJoin(pending, data, ringSafeRadius(l, 1), queryId, dataId)
+          .withColumn("n", count(lit(1)).over(all))
+          .withColumn("rank", row_number().over(byDist))
+          .where(col("n") >= k && col("rank") <= k)
+          .select(col(queryId), col(dataId), col("dist"), col("rank"))
+          .localCheckpoint(true)
+        val rest = pending
+          .join(broadcast(top.where(col("rank") === 1).select(queryId)),
+            Seq(queryId), "left_anti")
+          .localCheckpoint(true)
+        top :: (if (rest.isEmpty) Nil else settle(rest, coarser))
     }
-
-    val safeOf: Column = ladder.init.foldRight(
-      lit(ringSafeRadius(coarsest, ring)): Column) { (l, els) =>
-      when(col("lvl") === l, lit(ringSafeRadius(l, ring))).otherwise(els)
-    }
-
-    /** One candidate pass where each query probes at its own level
-      * (pend: queryId, lon, lat, lvl).  Returns (settled top-k rows,
-      * still-pending queries with their evidence columns), or nulls when
-      * nothing was pending.  Costs one tiny collect (distinct levels) and
-      * one broadcast join; the data side derives one parent-cell key per
-      * active level map-side (cell ids carry their level in the low bits,
-      * so a plain cand_cell equi-join cannot mix levels). */
-    def passAt(pend: DataFrame): (DataFrame, DataFrame) = {
-      val lvls = pend.select("lvl").distinct().collect().map(_.getInt(0))
-      if (lvls.isEmpty) return (null, null)
-      val dataMulti = lvls.toList.map { l =>
-        if (l == level) fineData.withColumnRenamed("fine_cell", "cand_cell")
-        else fineData.withColumn("cand_cell", geo.cellParent(col("fine_cell"), l))
-          .drop("fine_cell")
-      }.reduce(_ unionByName _)
-      val q = lvls.toList.map { l =>
-        pend.where(col("lvl") === l)
-          .withColumn("cand_cell",
-            explode(geo.cellNeighbors(geo.cellId(col("lon"), col("lat"), l), ring)))
-          .select(col(queryId), col("lon").as("q_lon"),
-            col("lat").as("q_lat"), col("cand_cell"))
-      }.reduce(_ unionByName _)
-      val cand = geodesicTopK(broadcast(q).join(dataMulti, "cand_cell"),
-        k, queryId, dataId).cache()
-      val stats = cand.groupBy(queryId)
-        .agg(count(lit(1)).as("n_cand"), max("dist").as("kth_dist"))
-      val settledIds = stats
-        .join(pend.select(col(queryId), safeOf.as("safe")), Seq(queryId))
-        .where(col("n_cand") === k && col("kth_dist") <= col("safe"))
-        .select(queryId)
-      // materialize both outputs eagerly (each is at most #queries x k
-      // rows), then release the pass's candidate cache — without this the
-      // cached partitions of every pass pile up across a job sequence and
-      // the GC churn makes run times non-reproducible (round-2 verdict)
-      val out = cand.join(broadcast(settledIds), queryId)
-        .select(col(queryId), col(dataId), col("dist"), col("rank"))
-        .localCheckpoint(true)
-      val still = pend.join(broadcast(settledIds), Seq(queryId), "left_anti")
-        .join(broadcast(stats), Seq(queryId), "left")
-        .localCheckpoint(true)
-      cand.unpersist()
-      (out, still)
-    }
-
-    val (out1, still1) = passAt(q0.withColumn("lvl", lit(level)))
-    var outs = List(Option(out1)).flatten
-    // passAt already checkpoints its outputs (lineage truncation + cache
-    // release), so escalate — a pure projection — needs no re-checkpoint
-    var pending =
-      if (still1 == null) null else escalate(still1)
-    // bounded escalation passes — the per-query byKth rule usually jumps
-    // straight to the settling rung, so most runs stop after one or two;
-    // an exhausted pass costs only a ~10-row collect.  NULL-lvl rows
-    // (ladder exhausted) short-circuit to the brute-force remainder.
-    var i = 0
-    while (i < ladder.length - 1 && pending != null) {
-      val (o, s) = passAt(pending.where(col("lvl").isNotNull))
-      outs = outs ++ Option(o)
-      val exhausted = pending.where(col("lvl").isNull)
-        .select(col(queryId), col("lon"), col("lat"), col("lvl"))
-      pending =
-        if (s == null) exhausted
-        else escalate(s).unionByName(exhausted)
-      i += 1
-    }
-    val rest =
-      if (pending == null || pending.isEmpty) null
-      else knnBruteForce(
-        pending.select(col(queryId), col("lon"), col("lat")), data, k,
-        queryId, dataId)
-    // an empty query set yields no passes at all — fall back to an empty
-    // frame with the contract schema instead of reducing an empty list
-    (outs ++ Option(rest)).reduceOption(_ unionByName _)
-      .getOrElse(knnBruteForce(q0.limit(0), data, k, queryId, dataId))
+    settle(queries.select(col(queryId), col("lon"), col("lat")),
+      (level to 2 by -3).toList).reduce(_ unionByName _)
   }
 
   /** Exact kNN by broadcast cross join — the small-data baseline and the

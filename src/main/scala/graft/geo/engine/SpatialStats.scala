@@ -218,14 +218,6 @@ object SpatialStats {
       c => geo.hexDisk(c, 1))
   }
 
-  /** Geary's C over the cube grid at `level` (8-neighbor queen
-    * contiguity). */
-  def gearyCells(pts: DataFrame, level: Int,
-                 lonCol: String = "lon", latCol: String = "lat",
-                 valueCol: String = null): DataFrame =
-    gearyOn(cubeCells(pts, level, lonCol, latCol, valueCol),
-      c => geo.cellNeighbors(c, 1))
-
   /** Join-count statistics core (Cliff–Ord BB/BW/WW over a binary map):
     * a cell is BLACK when its point count ≥ `threshold`, else white;
     * binary ring-1 contiguity EXCLUDING self.  One output row:
@@ -278,14 +270,6 @@ object SpatialStats {
     require(threshold > 0, "threshold must be positive")
     joinCountsOn(hexCells(pts, sizeMeters, lonCol, latCol),
       c => geo.hexDisk(c, 1), threshold)
-  }
-
-  /** Join counts over the cube grid at `level`. */
-  def joinCountsCells(pts: DataFrame, level: Int, threshold: Long,
-                      lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
-    require(threshold > 0, "threshold must be positive")
-    joinCountsOn(cubeCells(pts, level, lonCol, latCol),
-      c => geo.cellNeighbors(c, 1), threshold)
   }
 
   /** Local Moran's I core (Anselin 1995 LISA): per occupied cell,
@@ -341,15 +325,6 @@ object SpatialStats {
         col("x").as("n_points"), col("nbrsum"), col("nbrn"),
         col("i_local"), col("quad"))
   }
-
-  /** Local Moran (LISA) over the cube grid at `level`. */
-  def localMoranCells(pts: DataFrame, level: Int,
-                      lonCol: String = "lon", latCol: String = "lat",
-                      valueCol: String = null): DataFrame =
-    localMoranOn(cubeCells(pts, level, lonCol, latCol, valueCol),
-        c => geo.cellNeighbors(c, 1))
-      .select(col("cell"), col("x").as("n_points"), col("nbrsum"),
-        col("nbrn"), col("i_local"), col("quad"))
 
   /** Ripley's K function (multi-distance spatial clustering): the naive
     * (uncorrected) estimator K̂(r) = A · Σ_{i≠j} 1[d_ij ≤ r] / (n(n−1))
@@ -592,9 +567,9 @@ object SpatialStats {
     * supplies the study-area measure.
     *
     * Scale shape: the NN search is [[GeoEngine.knnJoin]] with k = 2
-    * (self rides along at distance 0 and is dropped) — the flat
-    * cell-ladder join, one map-side scan of the corpus per pass — then
-    * one exact-long aggregation.  Duplicate positions are genuine
+    * (self rides along at distance 0 and is dropped) — the radius-
+    * escalating distance join, one map-side scan of the corpus per rung —
+    * then one exact-long aggregation.  Duplicate positions are genuine
     * zero-distance neighbors. */
   def annStat(pts: DataFrame, areaM2: Double, level: Int = 11,
               idCol: String = "pt_id", lonCol: String = "lon",
@@ -930,14 +905,6 @@ object SpatialStats {
     generalGOn(hexCells(pts, sizeMeters, lonCol, latCol, valueCol),
       c => geo.hexDisk(c, 1))
   }
-
-  /** General G over the cube grid at `level` (8-neighbor queen
-    * contiguity, self excluded). */
-  def generalGCells(pts: DataFrame, level: Int,
-                    lonCol: String = "lon", latCol: String = "lat",
-                    valueCol: String = null): DataFrame =
-    generalGOn(cubeCells(pts, level, lonCol, latCol, valueCol),
-      c => geo.cellNeighbors(c, 1))
 
   /** Shared Knox core: the time-pair count (±1 exact-integer-bucket fan
     * self-join over (id, epoch µs)) and the final closed-form combine of
@@ -1313,17 +1280,5 @@ object SpatialStats {
       .select(dec.getField("q").as("hq"), dec.getField("r").as("hr"),
         col("n_bins"), col("n_hot"), col("n_cold"), col("last_z"),
         col("mk_z"), col("category"))
-  }
-
-  /** Emerging hot-spot analysis over the cube grid at `level`. */
-  def emergingHotSpotsCells(pts: DataFrame, level: Int, binSeconds: Long,
-                            zCrit: Double = 1.96, hotFrac: Double = 0.9,
-                            timeCol: String = "ts", lonCol: String = "lon",
-                            latCol: String = "lat"): DataFrame = {
-    require(binSeconds > 0, "binSeconds must be positive")
-    require(zCrit > 0, "zCrit must be positive")
-    require(hotFrac > 0 && hotFrac <= 1, "hotFrac must be in (0, 1]")
-    emergingOn(cubeBinnedCounts(pts, level, binSeconds * 1000000L,
-      timeCol, lonCol, latCol), c => geo.cellNeighbors(c, 1), zCrit, hotFrac)
   }
 }

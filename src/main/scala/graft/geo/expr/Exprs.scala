@@ -1031,9 +1031,6 @@ object geo {
   /** geohash text -> struct(lon, lat) cell center (malformed -> null) */
   def geohashDecode(gh: Column): Column = col(GeohashDecodeExpr(ex(gh)))
 
-  def pointInPolygon(lon: Column, lat: Column, ring: Column): Column =
-    col(PointInPolygonExpr(ex(lon), ex(lat), ex(ring)))
-
   /** one-pass geo-tag extraction from a media_ref span array (see
     * SpanGeoTagExpr): struct(lat, lon). */
   def spanGeoTag(mediaRefs: Column): Column = col(SpanGeoTagExpr(ex(mediaRefs)))

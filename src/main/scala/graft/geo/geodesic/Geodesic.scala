@@ -126,15 +126,8 @@ final class Geodesic(val a: Double, val f: Double) extends Serializable {
 
   /** Signed area (m^2) swept between the equator and the geodesic edge
     * from point 1 to point 2 — the S12 of geod_geninverse, derived from
-    * the solved azimuths (behavioral reference:
-    * /root/reference/src/geodesic.c:961-1022). */
-  def areaTerm(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
-    val r = inverse(lat1, lon1, lat2, lon2)
-    areaTermFromAzimuths(lat1, lat2, r.azi1, r.azi2)
-  }
-
-  /** Area term from an already-solved inverse problem — polygonArea runs
-    * ONE solve per edge (perimeter + area), not two. */
+    * an already-solved inverse problem's azimuths, so polygonArea runs ONE
+    * solve per edge (perimeter + area), not two. */
   private[geodesic] def areaTermFromAzimuths(lat1: Double, lat2: Double,
                                              azi1: Double, azi2: Double): Double = {
     val (salp1, calp1) = sincosd(azi1)
@@ -728,9 +721,6 @@ final case class GeodDirectFull(lat2: Double, lon2: Double, azi2: Double,
 object Geodesic {
   val WGS84 = new Geodesic(6378137.0, 1.0 / 298.257223563)
   val GRS80 = new Geodesic(6378137.0, 1.0 / 298.257222101)
-
-  def forEllipsoid(ell: graft.geo.math.Ellipsoid): Geodesic =
-    new Geodesic(ell.a, ell.f)
 
   // numeric guards (Karney's tiny/tolerance ladder)
   private[geodesic] val Tiny = math.sqrt(java.lang.Double.MIN_NORMAL)

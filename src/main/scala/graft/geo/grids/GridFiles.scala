@@ -156,13 +156,17 @@ object Grids {
     * broadcast constants — at 1000 executors that is one download, not
     * one thousand. */
   final case class UrlFetcher(baseUrl: String) extends GridFetcher {
-    def fetch(name: String): Option[Array[Byte]] = {
-      val url = new java.net.URI(baseUrl.stripSuffix("/") + "/" + name).toURL
+    def fetch(name: String): Option[Array[Byte]] =
       try {
-        val in = url.openStream()
+        val in = new java.net.URI(baseUrl.stripSuffix("/") + "/" + name)
+          .toURL.openStream()
         try Some(in.readAllBytes()) finally in.close()
-      } catch { case _: java.io.IOException => None }
-    }
+      } catch {
+        // a name that is not a valid URI (a space, say) is a miss like
+        // any other, so resolution falls through to GridMissing
+        case _: java.io.IOException | _: java.net.URISyntaxException |
+             _: IllegalArgumentException => None
+      }
   }
 
   @volatile private var fetchers: List[GridFetcher] = Nil

@@ -214,18 +214,63 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("cell kNN matches brute force when ring covers the distance budget") {
+    val sp = spark; import sp.implicits._
+    import graft.geo.cells.CellIndex
+    // each kNN rung's radius must select exactly that rung's cover level,
+    // or the distance join would not return every point within it
+    for (l <- 0 to CellIndex.MaxUsableLevel)
+      assert(GeoEngine.distanceJoinLevel(GeoEngine.ringSafeRadius(l, 1)) == l,
+        s"level $l")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.get(0).toString, r.get(1).toString, r.getDouble(2), r.getInt(3)))
+      .toVector.sorted
+    def same(queries: org.apache.spark.sql.DataFrame,
+             data: org.apache.spark.sql.DataFrame, k: Int, level: Int,
+             queryId: String = "query_id", dataId: String = "data_id") = {
+      val knn = rows(GeoEngine.knnJoin(queries, data, k, level, queryId, dataId))
+      assert(knn.nonEmpty)
+      assert(knn == rows(GeoEngine.knnBruteForce(queries, data, k, queryId, dataId)),
+        s"k=$k level=$level")
+      knn
+    }
     val docs = GeoEngine.withGeoTag(corpus(2000, 4))
     val data = docs.select(col("doc_id").as("data_id"), col("lon"), col("lat"))
     // queries: 30 docs re-used as query points (dense region guaranteed)
     val queries = docs.limit(30)
       .select(col("doc_id").as("query_id"), col("lon"), col("lat"))
-    // level 4 cells are ~2000 km wide: ring 1 covers any plausible top-3
-    // in the clustered corpus
-    val cellKnn = GeoEngine.knnJoin(queries, data, k = 3, level = 4, ring = 1)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(3))).toSet
-    val brute = GeoEngine.knnBruteForce(queries, data, k = 3)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(3))).toSet
-    assert(cellKnn == brute)
+    same(queries, data, k = 3, level = 4)
+    // annStat's shape: a self-join with k = 2 under other id names
+    val pts = docs.select(col("doc_id").as("pid"), col("lon"), col("lat"))
+    same(pts.select(col("pid").as("qid"), col("lon"), col("lat")),
+      pts.select(col("pid").as("did"), col("lon"), col("lat")),
+      k = 2, level = 11, queryId = "qid", dataId = "did")
+
+    // planted clusters whose 3rd neighbour lies ~0.33 km, 3.3 km, 22 km
+    // and 167 km north of the query, the first two inside the previous
+    // rung's radius: settled at rungs 12, 9, 6 and 3; one query with
+    // nothing within the coarsest radius goes to brute force
+    val offsets = Seq(Seq(0.001, 0.002, 0.003), Seq(0.001, 0.002, 0.03),
+      Seq(0.01, 0.02, 0.2), Seq(0.1, 0.2, 1.5))
+    val planted = offsets.zipWithIndex.flatMap { case (dlat, c) =>
+      dlat.zipWithIndex.map { case (d, i) => (s"d$c$i", 10.0 * (c + 1), 45.0 + d) }
+    }.toDF("data_id", "lon", "lat")
+    val plantedQ = ((1 to 4).map(c => (s"q$c", 10.0 * c, 45.0)) :+
+      (("q_far", -120.0, -40.0))).toDF("query_id", "lon", "lat")
+    val kth = same(plantedQ, planted, k = 3, level = 12)
+      .collect { case (q, _, d, 3) => q -> d }.toMap
+    def rungOf(d: Double) =
+      (12 to 2 by -3).find(l => d <= GeoEngine.ringSafeRadius(l, 1))
+    assert(kth.values.map(rungOf).toSet ==
+      Set(Some(12), Some(9), Some(6), Some(3), None))
+    // k beyond the data size: every query ends in the residue, short
+    val short = same(plantedQ, planted, k = 20, level = 12)
+    assert(short.groupBy(_._1).values.map(_.size).toSet == Set(12))
+    // no queries: no rows, the contract schema
+    val none = GeoEngine.knnJoin(plantedQ.limit(0), planted, 3, 12)
+    assert(none.isEmpty)
+    assert(none.schema.map(f => (f.name, f.dataType)) ==
+      GeoEngine.knnBruteForce(plantedQ, planted, 3).schema
+        .map(f => (f.name, f.dataType)))
   }
 
   test("neighborhood coverage guarantee holds across cube-face boundaries") {

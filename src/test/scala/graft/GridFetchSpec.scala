@@ -92,6 +92,12 @@ class GridFetchSpec extends AnyFunSuite {
     }
   }
 
+  test("UrlFetcher misses cleanly on a name that is not a valid URI") {
+    val mirror = Files.createTempDirectory("grid-mirror")
+    try assert(Grids.UrlFetcher(mirror.toUri.toString).fetch("a b.gsb").isEmpty)
+    finally Files.delete(mirror)
+  }
+
   test("path-escaping names are refused, local files always win") {
     Grids.registerFetcher(new Grids.GridFetcher {
       def fetch(n: String): Option[Array[Byte]] = Some(Array[Byte](1, 2, 3))
