@@ -1,7 +1,8 @@
 package graft.geo.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.geo.expr.geo
 
@@ -16,8 +17,11 @@ import graft.geo.expr.geo
   *  - tiling adds a LongType cell column inside whole-stage codegen;
   *  - the PIP join broadcasts (cell -> polygon) covers — polygons are the
   *    small side by construction — so the big fact table is never shuffled;
-  *  - the kNN join shuffles once on candidate cell, with the (2r+1)^2
-  *    neighborhood explode on the (small) query side only;
+  *  - the distance join explodes only the (small, broadcast) query side
+  *    into its 9-cell neighborhood, so the data side is tiled map-side
+  *    and never shuffled; the kNN join is that range join at escalating
+  *    radii, one collected job set per rung, with the pending queries
+  *    held on the driver;
   *  - skew: hot cells are detected from a sampled histogram and the salt
   *    factor applied on the *data* side, replicated on the probe side —
   *    plus AQE skew-join as backstop;
@@ -25,6 +29,7 @@ import graft.geo.expr.geo
   *    independent (bit-for-bit across local[8]/local[32]).
   */
 object GeoEngine {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Geo-tag extraction: first media span's `?geo=lat,lon` -> (lon, lat)
     * columns.  Pure projection; spans column untouched (order preserved). */
@@ -352,33 +357,63 @@ object GeoEngine {
     * so its first k by (dist, data id) are the answer.  Queries still
     * pending after the coarsest rung (isolated points, or k beyond the
     * data size) fall back to [[knnBruteForce]].  Output (queryId, dataId,
-    * dist, rank) is partition-count independent. */
+    * dist, rank) is partition-count independent.
+    *
+    * The pending set lives on the driver: the (queryId, lon, lat) rows
+    * are collected once, each rung is one local query frame and ONE
+    * `collect()` of its join, window and filter (at most three Spark
+    * jobs: query broadcast, pair shuffle, result), and settled query ids
+    * leave the pending list by value (`equals` on the collected id, as
+    * the former anti-join compared keys), so a settled query is never
+    * answered again at a coarser rung.  Driver memory is bounded by
+    * #queries rows plus the answer's #queries x k rows — the same order
+    * [[distanceJoin]] already collects to broadcast its query side.  The
+    * rung jobs are eager; only the brute-force residue, if any, stays
+    * lazy.  Each rung's jobs carry the description
+    * `knnJoin rung l=<level> pending=<n>` and the rung is logged at INFO. */
   def knnJoin(queries: DataFrame, data: DataFrame, k: Int, level: Int,
               queryId: String = "query_id", dataId: String = "data_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    import scala.jdk.CollectionConverters._
     require(level >= 2 && level <= graft.geo.cells.CellIndex.MaxUsableLevel,
       s"knnJoin level must be in [2, ${graft.geo.cells.CellIndex.MaxUsableLevel}], got $level")
+    val spark = queries.sparkSession
+    val q = queries.select(col(queryId), col("lon"), col("lat"))
     val byDist = Window.partitionBy(col(queryId)).orderBy(col("dist"), col(dataId))
     val all = byDist.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    def settle(pending: DataFrame, rungs: List[Int]): List[DataFrame] = rungs match {
-      case Nil => List(knnBruteForce(pending, data, k, queryId, dataId))
-      case l :: coarser =>
-        // both frames are at most #queries x k rows: checkpoint them so
-        // the next rung re-plans neither this rung's join nor its window
-        val top = distanceJoin(pending, data, ringSafeRadius(l, 1), queryId, dataId)
-          .withColumn("n", count(lit(1)).over(all))
-          .withColumn("rank", row_number().over(byDist))
-          .where(col("n") >= k && col("rank") <= k)
-          .select(col(queryId), col(dataId), col("dist"), col("rank"))
-          .localCheckpoint(true)
-        val rest = pending
-          .join(broadcast(top.where(col("rank") === 1).select(queryId)),
-            Seq(queryId), "left_anti")
-          .localCheckpoint(true)
-        top :: (if (rest.isEmpty) Nil else settle(rest, coarser))
+    def local(rows: Seq[Row], schema: StructType) =
+      spark.createDataFrame(rows.asJava, schema)
+    def rung(l: Int, pending: DataFrame): DataFrame =
+      distanceJoin(pending, data, ringSafeRadius(l, 1), queryId, dataId)
+        .withColumn("n", count(lit(1)).over(all))
+        .withColumn("rank", row_number().over(byDist))
+        .where(col("n") >= k && col("rank") <= k)
+        .select(col(queryId), col(dataId), col("dist"), col("rank"))
+    var pending = described(spark, "knnJoin collect queries")(q.collect()).toSeq
+    val settled = Seq.newBuilder[Row]
+    for (l <- level to 2 by -3 if pending.nonEmpty) {
+      val top = described(spark, s"knnJoin rung l=$l pending=${pending.size}")(
+        rung(l, local(pending, q.schema)).collect())
+      val done = top.iterator.map(_.get(0)).toSet
+      log.info(s"knnJoin rung l=$l pending=${pending.size} settled=${done.size}")
+      pending = pending.filterNot(r => done(r.get(0)))
+      settled ++= top
     }
-    settle(queries.select(col(queryId), col("lon"), col("lat")),
-      (level to 2 by -3).toList).reduce(_ unionByName _)
+    val answer = local(settled.result(), rung(level, q).schema)
+    if (pending.isEmpty) answer
+    else {
+      log.info(s"knnJoin brute-force residue=${pending.size}")
+      answer.unionByName(knnBruteForce(local(pending, q.schema), data, k, queryId, dataId))
+    }
+  }
+
+  /** Runs `body` with the Spark job description set to `desc`, restoring
+    * the caller's description afterwards. */
+  private def described[A](spark: SparkSession, desc: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setLocalProperty("spark.job.description", prev)
   }
 
   /** Exact kNN by broadcast cross join — the small-data baseline and the

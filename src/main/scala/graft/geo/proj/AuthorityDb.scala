@@ -118,13 +118,28 @@ object AuthorityDb {
     * `usable` is probed only for keys actually named as replacements
     * (e.g. instantiating the bridge kernel, which surfaces missing
     * grids — a mere DbBridge presence is not enough, because grid-backed
-    * records are only validated when the factory calls `kernel()`). */
-  private def dropSuperseded[A](items: Seq[A])(keyOf: A => String)
-                               (usable: A => Boolean): Seq[A] = {
+    * records are only validated when the factory calls `kernel()`).
+    * `replacedBy` is the supersession map (superseded key → replacement
+    * keys, [[supersededBy]] for the registry).
+    *
+    * Never empties a non-empty set.  That happens only when every record
+    * has a usable replacement among the others, i.e. through a
+    * supersession cycle (A replaced by B and B by A): then the records of
+    * the smallest key that some record names as a usable replacement
+    * survive — a replacement is by the registry's own account the newer
+    * realization.  On an acyclic map the rule is the plain drop. */
+  private[graft] def dropSuperseded[A](items: Seq[A], replacedBy: Map[String, Seq[String]])
+                                      (keyOf: A => String)(usable: A => Boolean): Seq[A] = {
     val byKey = items.groupBy(keyOf)
     def replacementOk(k: String) = byKey.get(k).exists(_.exists(usable))
-    items.filterNot(a => supersededBy.get(keyOf(a))
-      .exists(_.exists(r => r != keyOf(a) && replacementOk(r))))
+    def replacements(a: A) = replacedBy.getOrElse(keyOf(a), Nil)
+      .filter(r => r != keyOf(a) && replacementOk(r))
+    val kept = items.filter(a => replacements(a).isEmpty)
+    if (kept.nonEmpty || items.isEmpty) kept
+    else {
+      val survivor = items.flatMap(replacements).min
+      items.filter(a => keyOf(a) == survivor)
+    }
   }
 
   // ---------------------------------------------------------------- units
@@ -634,7 +649,7 @@ object AuthorityDb {
           Some(VertEdge(key(r(0), r(1)), srcK, tgtK, acc, step))
         } catch { case _: Unsupported => None }
       }
-    })(_.opKey)(_ => true).toVector // vert edges are grid-free: presence = usable
+    }, supersededBy)(_.opKey)(_ => true).toVector // vert edges are grid-free: presence = usable
 
   /** vertical CRS key → its vertical datum key. */
   private lazy val vertDatumOf: Map[String, String] =
@@ -1087,7 +1102,7 @@ object AuthorityDb {
         }
       }
     }
-    dropSuperseded(out.result())(_.opKey)(op =>
+    dropSuperseded(out.result(), supersededBy)(_.opKey)(op =>
       availableGrid(op.gridName).isDefined).sortBy(_.accuracy).toSeq
   }
 
@@ -1263,7 +1278,7 @@ object AuthorityDb {
     // dropped only when its replacement is itself a usable candidate —
     // usable meaning its kernel instantiates (a replacement pointing at a
     // non-shipped grid must not erase the working helmert fallback)
-    dropSuperseded(out.result())(_.opKey) { b =>
+    dropSuperseded(out.result(), supersededBy)(_.opKey) { b =>
       try { b.kernel(); true }
       catch {
         case _: Unsupported | _: ProjString.BadProjString |

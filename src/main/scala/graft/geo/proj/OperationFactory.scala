@@ -494,9 +494,11 @@ object OperationFactory {
       // the two predicates' difference in mind if either changes
       val nameish = !t.contains('[') && !t.contains('(') &&
         !t.contains('+') && !t.contains('=') && !t.contains('{')
+      // any resolver failure (unknown name, ambiguous name, a malformed
+      // registry) means "not a CRS name": fall back to the parsed epoch
       if (!nameish) m
       else try { resolveSpec(t); CoordinateMetadata(t) }
-      catch { case _: ProjString.Unsupported => m }
+      catch { case scala.util.control.NonFatal(_) => m }
     }
     val srcMeta = meta(srcSpec)
     val dstMeta = meta(dstSpec)

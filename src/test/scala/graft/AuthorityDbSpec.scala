@@ -386,6 +386,31 @@ class AuthorityDbSpec extends AnyFunSuite {
     assert(d > 50 && d < 500, s"CH1903 shift $d m")
   }
 
+  test("dropSuperseded: acyclic drops are unchanged, a cycle never empties the set") {
+    def drop(keys: Seq[String], replacedBy: Map[String, Seq[String]],
+             usable: String => Boolean = _ => true) =
+      AuthorityDb.dropSuperseded(keys, replacedBy)(identity)(usable)
+    // acyclic chain 1753 -> 1766 -> 7788: every record with a usable
+    // replacement in the set goes, even one whose replacement also goes
+    val chain = Map("E:1753" -> Seq("E:1766"), "E:1766" -> Seq("E:7788"))
+    assert(drop(Seq("E:1753", "E:1766", "E:7788", "E:9"), chain) == Seq("E:7788", "E:9"))
+    // an unusable replacement keeps its superseded record as fallback
+    assert(drop(Seq("E:1753", "E:1766", "E:7788"), chain, _ != "E:7788") ==
+      Seq("E:1766", "E:7788"))
+    // a record naming itself is not superseded; an absent replacement neither
+    assert(drop(Seq("E:1", "E:2"), Map("E:1" -> Seq("E:1"), "E:2" -> Seq("E:3"))) ==
+      Seq("E:1", "E:2"))
+    // a two-record cycle keeps the smaller key, in either input order
+    val cycle = Map("E:5" -> Seq("E:4"), "E:4" -> Seq("E:5"))
+    assert(drop(Seq("E:5", "E:4"), cycle) == Seq("E:4"))
+    assert(drop(Seq("E:4", "E:5"), cycle) == Seq("E:4"))
+    // a record superseded into the cycle is not the survivor
+    assert(drop(Seq("E:1", "E:4", "E:5"), cycle + ("E:1" -> Seq("E:4"))) == Seq("E:4"))
+    // a cycle beside a record with no replacement: that record alone survives
+    assert(drop(Seq("E:4", "E:5", "E:9"), cycle) == Seq("E:9"))
+    assert(drop(Seq.empty[String], cycle).isEmpty)
+  }
+
   test("expected-fail table: the unresolved set is pinned, per method") {
     // every non-deprecated projected CRS that does not resolve, audited
     // with its reason.  All remaining exclusions are parity-exact: the

@@ -214,7 +214,6 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("cell kNN matches brute force when ring covers the distance budget") {
-    val sp = spark; import sp.implicits._
     import graft.geo.cells.CellIndex
     // each kNN rung's radius must select exactly that rung's cover level,
     // or the distance join would not return every point within it
@@ -245,23 +244,17 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       pts.select(col("pid").as("did"), col("lon"), col("lat")),
       k = 2, level = 11, queryId = "qid", dataId = "did")
 
-    // planted clusters whose 3rd neighbour lies ~0.33 km, 3.3 km, 22 km
-    // and 167 km north of the query, the first two inside the previous
-    // rung's radius: settled at rungs 12, 9, 6 and 3; one query with
-    // nothing within the coarsest radius goes to brute force
-    val offsets = Seq(Seq(0.001, 0.002, 0.003), Seq(0.001, 0.002, 0.03),
-      Seq(0.01, 0.02, 0.2), Seq(0.1, 0.2, 1.5))
-    val planted = offsets.zipWithIndex.flatMap { case (dlat, c) =>
-      dlat.zipWithIndex.map { case (d, i) => (s"d$c$i", 10.0 * (c + 1), 45.0 + d) }
-    }.toDF("data_id", "lon", "lat")
-    val plantedQ = ((1 to 4).map(c => (s"q$c", 10.0 * c, 45.0)) :+
-      (("q_far", -120.0, -40.0))).toDF("query_id", "lon", "lat")
+    val (plantedQ, planted) = plantedClusters()
     val kth = same(plantedQ, planted, k = 3, level = 12)
       .collect { case (q, _, d, 3) => q -> d }.toMap
     def rungOf(d: Double) =
       (12 to 2 by -3).find(l => d <= GeoEngine.ringSafeRadius(l, 1))
     assert(kth.values.map(rungOf).toSet ==
       Set(Some(12), Some(9), Some(6), Some(3), None))
+    // LongType ids: a settled query leaves the driver-side pending set by
+    // value, or it would be answered again at a coarser rung
+    same(plantedQ.withColumn("query_id", xxhash64(col("query_id"))),
+      planted.withColumn("data_id", xxhash64(col("data_id"))), k = 3, level = 12)
     // k beyond the data size: every query ends in the residue, short
     val short = same(plantedQ, planted, k = 20, level = 12)
     assert(short.groupBy(_._1).values.map(_.size).toSet == Set(12))
@@ -271,6 +264,70 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(none.schema.map(f => (f.name, f.dataType)) ==
       GeoEngine.knnBruteForce(plantedQ, planted, 3).schema
         .map(f => (f.name, f.dataType)))
+  }
+
+  /** Planted clusters whose 3rd neighbour lies ~0.33 km, 3.3 km, 22 km
+    * and 167 km north of the query, the first two inside the previous
+    * rung's radius: with k = 3 from level 12, q1..q4 settle at rungs 12,
+    * 9, 6 and 3; q_far has nothing within the coarsest radius and goes
+    * to brute force.  Returns (queries, data). */
+  private def plantedClusters() = {
+    val sp = spark; import sp.implicits._
+    val offsets = Seq(Seq(0.001, 0.002, 0.003), Seq(0.001, 0.002, 0.03),
+      Seq(0.01, 0.02, 0.2), Seq(0.1, 0.2, 1.5))
+    val planted = offsets.zipWithIndex.flatMap { case (dlat, c) =>
+      dlat.zipWithIndex.map { case (d, i) => (s"d$c$i", 10.0 * (c + 1), 45.0 + d) }
+    }.toDF("data_id", "lon", "lat")
+    val plantedQ = ((1 to 4).map(c => (s"q$c", 10.0 * c, 45.0)) :+
+      (("q_far", -120.0, -40.0))).toDF("query_id", "lon", "lat")
+    (plantedQ, planted)
+  }
+
+  test("kNN runs one collected job set per rung and no rung past the last pending query") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, String]
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.put(e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    val Rung = """knnJoin rung l=(\d+) pending=(\d+)""".r
+    // (rung level, pending) per rung, and the job count, of one knnJoin call
+    def jobsOf(run: => org.apache.spark.sql.DataFrame) = {
+      org.apache.spark.ListenerBusDrain(sc)
+      started.clear(); ended.clear()
+      val out = run
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(ended.asScala == started.keySet.asScala, "a job never ended")
+      val rungs = started.values.asScala.collect { case Rung(l, n) => (l.toInt, n.toInt) }
+        .toSeq.distinct.sortBy(-_._1)
+      (out, rungs, started.size)
+    }
+    val (plantedQ, planted) = plantedClusters()
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    try {
+      val (all, rungs, jobs) = jobsOf(GeoEngine.knnJoin(plantedQ, planted, 3, 12))
+      assert(rungs == Seq(12 -> 5, 9 -> 4, 6 -> 3, 3 -> 2))
+      assert(jobs <= 1 + 3 * rungs.size, s"$jobs jobs for ${rungs.size} rungs")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      // q_far is the lazy brute-force residue
+      assert(all.collect().map(_.getString(0)).toSet ==
+        Set("q1", "q2", "q3", "q4", "q_far"))
+      val (one, oneRungs, oneJobs) = jobsOf(
+        GeoEngine.knnJoin(plantedQ.where(col("query_id") === "q1"), planted, 3, 12))
+      assert(oneRungs == Seq(12 -> 1), "a settled query set ran a coarser rung")
+      assert(oneJobs <= 1 + 3)
+      assert(one.collect().map(r => (r.getString(1), r.getInt(3))).toSet ==
+        Set(("d00", 1), ("d01", 2), ("d02", 3)))
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("neighborhood coverage guarantee holds across cube-face boundaries") {
