@@ -2006,17 +2006,24 @@ object SparkEntry {
   private final val OracleUnavailable = "__ORACLE_UNAVAILABLE__"
   private def guarded(build: => String): String =
     try build catch {
-      // ONLY the asset-missing class degrades to rows-only (absent grid
-      // file / absent data/sql registry).  A genuine code regression
-      // (NPE, MatchError, require) must still crash loudly — silently
-      // dropping the oracle would hide exactly the regressions the
-      // pinned-VALUES entries exist to catch.
-      case e @ (_: graft.geo.grids.Grids.GridMissing |
-                _: graft.geo.grids.Grids.BadGrid |
-                _: graft.geo.proj.ProjString.Unsupported) =>
+      // ONLY the asset-missing class degrades to rows-only.  A genuine
+      // code regression (NPE, MatchError, require) must still crash
+      // loudly — silently dropping the oracle would hide exactly the
+      // regressions the pinned-VALUES entries exist to catch.
+      case AssetMissing(e) =>
         System.err.println(s"[oracle] builder failed, entry omitted: ${e.getMessage}")
         OracleUnavailable
     }
+
+  /** Matches the asset-missing class of failures: an absent grid file or
+    * an absent `data/sql` registry. */
+  object AssetMissing {
+    def unapply(e: Throwable): Option[Throwable] = e match {
+      case _: graft.geo.grids.Grids.GridMissing | _: graft.geo.grids.Grids.BadGrid |
+           _: graft.geo.proj.ProjString.Unsupported => Some(e)
+      case _ => None
+    }
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get the weaker rows-only check. */

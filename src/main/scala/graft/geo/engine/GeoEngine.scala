@@ -1460,14 +1460,19 @@ object GeoEngine {
         sum(h.bitwiseAND(lit(0x7fffffffL))).as("checksum_lo"))
   }
 
-  /** Global order-insensitive checksum (sum of per-row xxhash64) — equal
-    * across any partitioning iff the row multiset is equal. */
-  def canonicalChecksum(df: DataFrame, cols: Seq[String]): String = {
-    val h = xxhash64(cols.map(col): _*)
-    val r = df.agg(sum(shiftrightunsigned(h, 33)),
+  /** Row count and global order-insensitive checksum (split sums of the
+    * per-row xxhash64 of `cols`) in one aggregation — equal across any
+    * partitioning iff the row multiset is equal. */
+  def rowsAndChecksum(df: DataFrame, cols: Seq[Column]): (Long, String) = {
+    val h = xxhash64(cols: _*)
+    val r = df.agg(count(lit(1)), sum(shiftrightunsigned(h, 33)),
       sum(h.bitwiseAND(lit(0x7fffffffL)))).head
-    if (r.isNullAt(0)) "0:0" else s"${r.getLong(0)}:${r.getLong(1)}"
+    (r.getLong(0), if (r.isNullAt(1)) "0:0" else s"${r.getLong(1)}:${r.getLong(2)}")
   }
+
+  /** The checksum half of [[rowsAndChecksum]] over named columns. */
+  def canonicalChecksum(df: DataFrame, cols: Seq[String]): String =
+    rowsAndChecksum(df, cols.map(col))._2
 
   /** Checkpointed stage execution: stage output is written per cell-prefix
     * partition under `dir`; a `_GRAFT_DONE` marker commits it.  Re-running

@@ -194,7 +194,7 @@ final class IntList(initial: Int) extends Serializable {
   * still sinks fully into one child.  (An exact 0.5 split — the previous
   * implementation — degenerates on grid-aligned TINs: every triangle
   * touching a split line stays at an ancestor and every query scans the
-  * pile; graft.TinBench on a 1458-triangle grid TIN measured
+  * pile; `graft.Bench tin` on a 1458-triangle grid TIN measured
   * 0.75 M pts/s before vs ~3.3 M after, identical output checksum.)
   * Splitting is lazy like the reference: a node
   * splits only when full AND the incoming box fits one of the would-be

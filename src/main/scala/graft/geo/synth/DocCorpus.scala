@@ -152,11 +152,7 @@ object DocCorpus {
   /** Order-insensitive corpus checksum over the full span structure —
     * equality across two runs/partitionings proves the span-sequence
     * invariant survived (kind, text, media_ref, order). */
-  def spanChecksum(docs: DataFrame): String = {
-    val h = xxhash64(col("doc_id"), to_json(col("spans")))
-    val r = docs.agg(sum(shiftrightunsigned(h, 33)),
-      sum(h.bitwiseAND(lit(0x7fffffffL)))).head
-    // empty frame: sum() is null (same guard as GeoEngine.canonicalChecksum)
-    if (r.isNullAt(0)) "0:0" else s"${r.getLong(0)}:${r.getLong(1)}"
-  }
+  def spanChecksum(docs: DataFrame): String =
+    graft.geo.engine.GeoEngine.rowsAndChecksum(
+      docs, Seq(col("doc_id"), to_json(col("spans"))))._2
 }
