@@ -275,18 +275,18 @@ object Bench {
     }
     job("kernel_10m") {
       // raw per-row numeric rate: webmerc fwd + cell encode over 10M
-      // generated points, single count — compares to PROJ's 1.6-4.4M/s/core
+      // generated points — compares to PROJ's 1.6-4.4M/s/core.  Both
+      // columns feed the checksum so Catalyst cannot prune the cell
+      // encode; no null filter (every point is inside webmerc's domain)
       val k = graft.geo.kernels.WebMercKernel()
       val n = 10000000L
       val pts = spark.range(0, n, 1, 64)
         .select((pmod(col("id") * lit(1.000003), lit(359.9)) - lit(179.95)).as("lon"),
           (pmod(col("id") * lit(1.000007), lit(169.9)) - lit(84.95)).as("lat"))
-      pts.select(
+      GeoEngine.rowsAndChecksum(pts.select(
           geo.transform(k, forward = true, outDims = 2, col("lon"), col("lat"))
             .getField("x").as("x"),
-          geo.cellId(col("lon"), col("lat"), 12).as("cell"))
-        .where(col("x").isNotNull)
-        .agg(count(lit(1))).head().getLong(0)
+          geo.cellId(col("lon"), col("lat"), 12).as("cell")), Seq(col("x"), col("cell")))._1
     }
     try job("gridshift_10m") {
       // NTv2 grid-shift rate over France (ntf_r93.gsb ships with the
@@ -458,11 +458,11 @@ object Bench {
 
   /** The data-pipeline scaling jobs: MinHash near-dup over the full corpus
     * and the end-to-end corpus pipeline (url+exact+near-dup+CC+quality
-    * gate+decontaminate+split+pack) under the production and the staged
-    * lineage.  All are hash-deterministic (content-addressed
-    * fingerprints, no RNG), so the checksums must match exactly. */
+    * gate+decontaminate+split+pack).  Both are hash-deterministic
+    * (content-addressed fingerprints, no RNG), so the checksums must match
+    * exactly at N and 4N. */
   private def dedupJobs(textsPath: String): Seq[ScaleJob] = {
-    def survivors(s: SparkSession, lineage: String) = {
+    def survivors(s: SparkSession) = {
       // deterministic url from the content fingerprint (the corpus
       // generator has no urls), eval set as a hash-sampled slice — the
       // q_corpus_pipeline shape at bench scale.  Repetition gates off for
@@ -475,21 +475,18 @@ object Bench {
         .select(col("doc_id").as("eval_id"), col("text"))
       val r = graft.data.CorpusPipeline.build(docs,
         graft.data.CorpusPipeline.Config(evalSet = Some(eval),
-          maxDupWordFrac = 1.0, maxTopBigramFrac = 1.0, lineage = lineage))
+          maxDupWordFrac = 1.0, maxTopBigramFrac = 1.0))
       GeoEngine.rowsAndChecksum(r.stages.last._2, Seq(col("doc_id")))
     }
     Seq(
       "minhash near-dup (full corpus)" -> (s => GeoEngine.rowsAndChecksum(
         Dedup.minhashLsh(s.read.parquet(textsPath), jaccardThreshold = 0.5),
         Seq(col("left_id"), col("right_id")))),
-      // the default build: cuts only post-near-dup and post-gate
-      "corpus pipeline, production lineage" -> (s => survivors(s, "production")),
-      // the wall-time yardstick the production build must stay within ~1.5x of
-      "corpus pipeline, staged lineage" -> (s => survivors(s, "staged")))
+      "corpus pipeline" -> survivors)
   }
 
   /** N vs 4N scaling evidence (BASELINE.md protocol); `dedup` runs the
-    * data-pipeline pair instead of the spatial one.  Use N = 2 on a
+    * data-pipeline jobs instead of the spatial one.  Use N = 2 on a
     * 16-core host: 8 vs 32 measures hyperthread contention, not scaling. */
   private def scaling(nDocs: Long, baseN: Int, dedup: Boolean): Unit = {
     val corpusPath = s"/tmp/graft_bench_corpus_$nDocs"
@@ -519,9 +516,6 @@ object Bench {
       val rows = scalingRuns(baseN, warm = false, Seq(
         "spark.sql.shuffle.partitions" -> 96,
         "spark.sql.files.maxPartitionBytes" -> 64 * 1024 * 1024), dedupJobs(textsPath))
-      val Seq(_, production, staged) = rows
-      require(production.rows == staged.rows && production.checksum == staged.checksum,
-        "staged and production builds disagree on survivors!")
       appendScalingTable("dedup_scaling_efficiency", nDocs, baseN, rows)
     } else {
       val rows = scalingRuns(baseN, warm = true, Seq(
@@ -668,13 +662,11 @@ object Bench {
     // team actually ships.  Repetition gates off: the synthetic text's
     // tiny vocabulary would trip caps tuned for natural prose.
     val pipeDocs = docs.join(urls, "doc_id")
-    for (ckpt <- Seq(false, true))
-      report(s"corpus_pipeline_ckpt_$ckpt", n)(
-        graft.data.CorpusPipeline.build(pipeDocs,
-          graft.data.CorpusPipeline.Config(
-            maxDupWordFrac = 1.0, maxTopBigramFrac = 1.0,
-            checkpointStages = ckpt))
-          .packed.count())
+    report("corpus_pipeline", n)(
+      graft.data.CorpusPipeline.build(pipeDocs,
+        graft.data.CorpusPipeline.Config(
+          maxDupWordFrac = 1.0, maxTopBigramFrac = 1.0))
+        .packed.count())
 
     // storage-layout A/B: the same N-point table written plain (random
     // partitioning) vs cell-clustered (range-partition + sort on cell),

@@ -1786,12 +1786,9 @@ object SparkEntry {
         .withColumn("url", plantedUrl(col("doc_id")))
       val eval = docs.where(pmod(col("doc_id"), lit(251)) === 0)
         .select(col("doc_id").as("eval_id"), col("text"))
-      // checkpointStages: measure() runs one count per stage, and each
-      // count would otherwise re-execute the whole upstream dedup chain
       val r = CorpusPipeline.build(docs, CorpusPipeline.Config(
         evalSet = Some(eval),
-        maxDupWordFrac = 1.0, maxTopBigramFrac = 1.0,
-        checkpointStages = true))
+        maxDupWordFrac = 1.0, maxTopBigramFrac = 1.0))
       val sp = s; import sp.implicits._
       (CorpusPipeline.measure(r) :+ ("packed" -> r.packed.count()))
         .toDF("stage", "n_docs")

@@ -34,6 +34,15 @@ import org.apache.spark.sql.functions._
   * the LSH candidate verify, which joins text back for candidate pairs
   * only.
   *
+  * Lineage: the survivors of stages 0-4 (and the DSIR input) are cut
+  * with a lazy `localCheckpoint`.  Each surviving frame feeds two
+  * subtrees that share no exchange — the next stage's key computation
+  * and its own semi-join base — and [[measure]] counts every stage, so
+  * an uncut stage re-scans and re-hashes everything upstream.  Cutting
+  * only after the near-dup and quality stages measured 1.15-1.7x this
+  * build's wall from 200k to 8M docs, whichever ran first (BASELINE.md).
+  * On a cluster the equivalent is a reliable checkpoint to the DFS.
+  *
   * Laziness caveat: stage 3's connected components is an iterative
   * driver loop, so [[build]] EXECUTES everything up to the near-dup
   * graph at construction time; the frames in [[Result]] are lazy from
@@ -92,34 +101,7 @@ object CorpusPipeline {
         * (Gumbel-top-k, deterministic).  None = stage off. */
       dsirTarget: Option[DataFrame] = None,
       dsirKeep: Int = 0,
-      tokenBudget: Long = 2048,
-      /** Truncate lineage after EVERY dedup stage (lazy localCheckpoint)
-        * — the "staged" build.  Each surviving frame feeds BOTH the next
-        * stage's key computation and its own semi-join base — two
-        * subtrees that do not share an exchange, so without a checkpoint
-        * every stage re-scans and re-hashes everything upstream.  On a
-        * real cluster this knob is a reliable checkpoint to the DFS
-        * instead.  `true` forces `lineage = "staged"` (kept for callers
-        * that want the per-stage measure() reporting). */
-      checkpointStages: Boolean = false,
-      /** Lineage policy for the surviving frames — the round-4 scaling
-        * study's conclusion made the default build:
-        *  - `"production"` (default): cut lineage ONLY where
-        *    re-execution multiplies — after the near-dup anti-join
-        *    (whose upstream includes the full LSH and feeds two
-        *    non-sharing subtrees), after the quality gate (the last
-        *    text-sized projection before the cap/decontaminate/split/
-        *    pack fan-out), and — only when DSIR selection is enabled —
-        *    before the resampler, whose eager train+threshold pass scans
-        *    its input twice at build time plus once downstream.
-        *    Measured r4: per-stage barriers serialize on
-        *    one host's memory controller (0.55 efficiency at 4→16)
-        *    while the fully lazy build pays ~2.4× wall in recompute —
-        *    this middle keeps both.
-        *  - `"staged"`: a cut after every stage (measure()-friendly).
-        *  - `"lazy"`: no cuts — one fused DAG, full recompute on every
-        *    downstream action. */
-      lineage: String = "production")
+      tokenBudget: Long = 2048)
 
   /** Every intermediate stage by name (for metrics/debugging — lazy
     * from the near-dup stage on, see the laziness caveat above) plus the
@@ -155,16 +137,8 @@ object CorpusPipeline {
       "maxDocsPerDomain needs urlCol (the domain comes from the url)")
     require(cfg.dsirTarget.isEmpty == (cfg.dsirKeep == 0),
       "DSIR selection needs BOTH dsirTarget and a positive dsirKeep")
-    val mode = if (cfg.checkpointStages) "staged" else cfg.lineage
-    require(Set("lazy", "staged", "production")(mode),
-      s"lineage must be lazy/staged/production, got '$mode'")
     val stages = Vector.newBuilder[(String, DataFrame)]
-    // per-stage cut: staged only
-    def cut(df: DataFrame): DataFrame =
-      if (mode == "staged") df.localCheckpoint(false) else df
-    // multiplying-point cut: staged AND production
-    def cutProd(df: DataFrame): DataFrame =
-      if (mode != "lazy") df.localCheckpoint(false) else df
+    def cut(df: DataFrame): DataFrame = df.localCheckpoint(false)
     stages += ("input" -> docs)
 
     // 0. incremental: drop docs whose text already shipped in the prior
@@ -198,7 +172,7 @@ object CorpusPipeline {
     val drops = Dedup.connectedComponents(pairs)
       .where(col("doc_id") =!= col("cluster_id"))
       .select("doc_id")
-    val afterNear = cutProd(afterExact.join(drops, Seq("doc_id"), "left_anti"))
+    val afterNear = cut(afterExact.join(drops, Seq("doc_id"), "left_anti"))
     stages += ("near_dedup" -> afterNear)
 
     // 3b. optional substring-duplicate strip: rewrites text in place
@@ -219,7 +193,7 @@ object CorpusPipeline {
     // tokenize and hash the text once per reference; docs with fewer than
     // two tokens pass it (no true bigram; the token band polices
     // degenerate lengths)
-    val afterQuality = cutProd(afterSpans.where(qualityGate(col("text"),
+    val afterQuality = cut(afterSpans.where(qualityGate(col("text"),
       cfg.minTokens, cfg.maxTokens, cfg.maxDupWordFrac,
       cfg.maxTopBigramFrac, cfg.langs,
       cfg.lmReference.map(Corpus.lmTrain(_)),
@@ -257,7 +231,7 @@ object CorpusPipeline {
     // shuffle and decontamination join would all re-execute 3+ times.
     val afterSelect = cfg.dsirTarget match {
       case Some(t) =>
-        Corpus.dsirResample(cutProd(afterDecon), t, cfg.dsirKeep)
+        Corpus.dsirResample(cut(afterDecon), t, cfg.dsirKeep)
       case None => afterDecon
     }
     stages += ("dsir_select" -> afterSelect)

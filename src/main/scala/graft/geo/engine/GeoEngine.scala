@@ -452,6 +452,20 @@ object GeoEngine {
     l
   }
 
+  /** [[distanceJoinLevel]] for a squared unit-sphere chord bound: the
+    * chord converts back to metres with 2% headroom so the 9-cell
+    * candidate set is complete.  Past level 0's safe radius that set is
+    * not a complete cover and true pairs would leak, so a larger bound
+    * is rejected (use a broadcast or time-bucketed cross join). */
+  private[graft] def chordCoverLevel(maxChord2: Double): Int = {
+    val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(maxChord2) / 2))
+    val coverMeters = theta * 6378137.0 * 1.02
+    require(coverMeters <= ringSafeRadius(0, 1),
+      f"chord bound needs a $coverMeters%.0f m cover, beyond the cell-cover " +
+        f"guarantee (${ringSafeRadius(0, 1)}%.0f m)")
+    distanceJoinLevel(coverMeters)
+  }
+
   /** All (query, data) pairs within `radiusMeters` — the range-join
     * sibling of [[knnJoin]] (reference: geodesic distance predicate,
     * `src/geodesic.c` geod_inverse; the reference exposes it per-point,
@@ -547,14 +561,7 @@ object GeoEngine {
                         queryId: String = "query_id", dataId: String = "data_id",
                         broadcastQueries: Boolean = true): DataFrame = {
     require(maxChord2 > 0, "maxChord2 must be positive")
-    val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(maxChord2) / 2))
-    val coverMeters = theta * 6378137.0 * 1.02
-    // same coverage bound as distanceJoin: past level 0's safe radius the
-    // 9-cell set is not a complete cover and true pairs would leak
-    require(coverMeters <= ringSafeRadius(0, 1),
-      f"chord bound needs a $coverMeters%.0f m cover, beyond the cell-cover " +
-        f"guarantee (${ringSafeRadius(0, 1)}%.0f m); use a broadcast cross join")
-    val level = distanceJoinLevel(coverMeters)
+    val level = chordCoverLevel(maxChord2)
     val d = tiled(data, level)
       .select(col(dataId), col("lon").as("d_lon"), col("lat").as("d_lat"),
         col("cell").as("cand_cell"))
@@ -605,12 +612,7 @@ object GeoEngine {
                     lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
     require(maxDistMeters > 0, "maxDistMeters must be positive")
     val maxC2 = maxChord2For(maxDistMeters)
-    val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(maxC2) / 2))
-    val coverMeters = theta * 6378137.0 * 1.02
-    require(coverMeters <= ringSafeRadius(0, 1),
-      f"Hausdorff bound needs a $coverMeters%.0f m cover, beyond the " +
-        f"cell-cover guarantee (${ringSafeRadius(0, 1)}%.0f m)")
-    val level = distanceJoinLevel(coverMeters)
+    val level = chordCoverLevel(maxC2)
     val base = pts
       .where(col(idCol).isNotNull && col(lonCol).isNotNull &&
         col(latCol).isNotNull)
@@ -693,12 +695,7 @@ object GeoEngine {
     import org.apache.spark.sql.Row
     require(maxDistMeters > 0, "maxDistMeters must be positive")
     val maxC2 = maxChord2For(maxDistMeters)
-    val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(maxC2) / 2))
-    val coverMeters = theta * 6378137.0 * 1.02
-    require(coverMeters <= ringSafeRadius(0, 1),
-      f"Frechet bound needs a $coverMeters%.0f m cover, beyond the " +
-        f"cell-cover guarantee (${ringSafeRadius(0, 1)}%.0f m)")
-    val level = distanceJoinLevel(coverMeters)
+    val level = chordCoverLevel(maxC2)
     val base = pts
       .where(col(idCol).isNotNull && col(timeCol).isNotNull &&
         col(lonCol).isNotNull && col(latCol).isNotNull)
@@ -863,13 +860,7 @@ object GeoEngine {
     require(maxChord2 > 0, "maxChord2 must be positive")
     require(tauSeconds > 0, "tauSeconds must be positive")
     require(idCol != entityCol, "idCol and entityCol must differ")
-    val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(maxChord2) / 2))
-    val coverMeters = theta * 6378137.0 * 1.02
-    require(coverMeters <= ringSafeRadius(0, 1),
-      f"chord bound needs a $coverMeters%.0f m cover, beyond the cell-cover " +
-        f"guarantee (${ringSafeRadius(0, 1)}%.0f m); use a time-bucketed " +
-        "cross join for continental-scale co-location radii")
-    val level = distanceJoinLevel(coverMeters)
+    val level = chordCoverLevel(maxChord2)
     colocCandidates(pts, idCol, entityCol, level, tauSeconds * 1000000L,
         timeCol, lonCol, latCol, excludeSameEntity)
       .withColumn("cd", chord2Xyz("a", "b"))
@@ -951,13 +942,7 @@ object GeoEngine {
     // pair-list shape cannot see zero-neighbor points); the original
     // paper's useful range starts at 2
     require(minPts >= 2, "minPts must be >= 2")
-    val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(maxChord2) / 2))
-    val coverMeters = theta * 6378137.0 * 1.02
-    require(coverMeters <= ringSafeRadius(0, 1),
-      f"eps needs a $coverMeters%.0f m cell cover, beyond the cell-cover " +
-        f"guarantee (${ringSafeRadius(0, 1)}%.0f m); DBSCAN at continental " +
-        "eps degenerates to one cluster — use a coarser analysis instead")
-    val level = distanceJoinLevel(coverMeters)
+    val level = chordCoverLevel(maxChord2)
     val base = pts
       .where(col(idCol).isNotNull && col(lonCol).isNotNull &&
         col(latCol).isNotNull)
@@ -1375,19 +1360,12 @@ object GeoEngine {
 
   // --- raster <-> vector ----------------------------------------------------
 
-  /** Assign each point the value of the raster tile containing it and
-    * aggregate per tile.  `raster` is (cell LONG, value DOUBLE) at
-    * `level`; broadcast if small, else plain equi-join (one shuffle). */
-  def rasterVectorAssign(pts: DataFrame, raster: DataFrame, level: Int,
-                         broadcastRaster: Boolean = true): DataFrame = {
-    val r = if (broadcastRaster) broadcast(raster) else raster
-    tiled(pts, level).join(r, "cell")
-  }
-
-  /** Per-tile stats of raster-joined points: the "tile assignment"
-    * headline aggregation. */
+  /** Per-tile stats of raster-joined points (the "tile assignment"
+    * headline aggregation): each point takes the value of the raster
+    * tile containing it.  `raster` is (cell LONG, value DOUBLE) at
+    * `level` and is broadcast. */
   def rasterVectorStats(pts: DataFrame, raster: DataFrame, level: Int): DataFrame =
-    rasterVectorAssign(pts, raster, level)
+    tiled(pts, level).join(broadcast(raster), "cell")
       .groupBy("cell")
       .agg(count(lit(1)).as("n_docs"), sum("value").as("sum_value"))
 

@@ -452,11 +452,7 @@ object SpatialStats {
     val all = base.select(lit(0L).as("sim"), col("pid"), col("lon"),
       col("lat")).unionByName(sims)
     val c2s = radiiMeters.map(GeoEngine.maxChord2For)
-    val theta = 2.0 * math.asin(math.min(1.0, math.sqrt(c2s.last) / 2))
-    val coverMeters = theta * 6378137.0 * 1.02
-    require(coverMeters <= GeoEngine.ringSafeRadius(0, 1),
-      "largest radius exceeds the cell-cover guarantee")
-    val level = GeoEngine.distanceJoinLevel(coverMeters)
+    val level = GeoEngine.chordCoverLevel(c2s.last)
     val d = all.select(col("sim"), col("pid").as("j"),
       col("lon").as("d_lon"), col("lat").as("d_lat"),
       geo.cellId(col("lon"), col("lat"), level).as("cell"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -253,26 +254,14 @@ class CorpusPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("urlCol"))
   }
 
-  test("lineage policy changes the physical plan, never the answer") {
+  test("every dedup stage and the quality gate cut lineage with a checkpoint") {
     val (docs, evalSet) = corpus()
-    def survivors(lineage: String) = CorpusPipeline.build(docs,
-        CorpusPipeline.Config(evalSet = Some(evalSet), lineage = lineage))
-      .stages.toMap.apply("split")
-      .select("doc_id", "split").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    val prod = survivors("production") // the default build
-    assert(prod == survivors("staged") && prod == survivors("lazy"))
-    // checkpointStages=true forces the staged build (legacy spelling)
-    val legacy = CorpusPipeline.build(docs,
-        CorpusPipeline.Config(evalSet = Some(evalSet),
-          checkpointStages = true))
-      .stages.toMap.apply("split")
-      .select("doc_id", "split").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(legacy == prod)
-    val bad = intercept[IllegalArgumentException](
-      CorpusPipeline.build(docs, CorpusPipeline.Config(lineage = "turbo")))
-    assert(bad.getMessage.contains("lineage"))
+    val stages = CorpusPipeline.build(docs, CorpusPipeline.Config(
+      evalSet = Some(evalSet), substringWindow = Some(6))).stages.toMap
+    for (name <- Seq("url_dedup", "exact_dedup", "near_dedup",
+        "substring_dedup", "quality"))
+      assert(stages(name).queryExecution.analyzed.isInstanceOf[LogicalRDD],
+        s"$name is not a checkpoint:\n${stages(name).queryExecution.analyzed}")
   }
 
   test("pipeline invariants hold on a seeded random corpus") {

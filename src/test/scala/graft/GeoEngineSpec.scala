@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.geo.engine.GeoEngine
+import graft.geo.engine.{GeoEngine, SpatialStats}
 import graft.geo.synth.DocCorpus
 
 class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -438,6 +438,30 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(brute.nonEmpty)
     assert(got == brute,
       s"missing=${(brute -- got).size} extra=${(got -- brute).size}")
+  }
+
+  test("every chord-cover entry point rejects a bound past the cell-cover guarantee") {
+    val sp = spark; import sp.implicits._
+    val pts = Seq((1L, "a", 0L, 0.0, 0.0), (2L, "b", 60L, 1.0, 1.0))
+      .toDF("pt_id", "traj_id", "ts", "lon", "lat")
+    // a 2,500 km bound needs a 2,550 km cover; level 0 guarantees ~2,119 km
+    val meters = 2.5e6
+    val c2 = GeoEngine.maxChord2For(meters)
+    val guarantee = f"cell-cover guarantee (${GeoEngine.ringSafeRadius(0, 1)}%.0f m)"
+    val calls: Seq[(String, () => Any)] = Seq(
+      "distanceJoinChord" -> (() => GeoEngine.distanceJoinChord(
+        pts.select(col("pt_id").as("query_id"), col("lon"), col("lat")),
+        pts.select(col("pt_id").as("data_id"), col("lon"), col("lat")), c2)),
+      "hausdorffJoin" -> (() => GeoEngine.hausdorffJoin(pts, meters)),
+      "frechetJoin" -> (() => GeoEngine.frechetJoin(pts, meters)),
+      "colocationJoinChord" -> (() => GeoEngine.colocationJoinChord(
+        pts, "pt_id", "traj_id", c2, tauSeconds = 60L)),
+      "dbscanChord" -> (() => GeoEngine.dbscanChord(pts, "pt_id", c2, 2)),
+      "lEnvelope" -> (() => SpatialStats.lEnvelope(pts, Seq(meters), 1e12)))
+    for ((name, call) <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(guarantee), s"$name: ${e.getMessage}")
+    }
   }
 
   test("hausdorffJoin equals the brute-force set distance") {
