@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.geo.grids.Grids
@@ -10,11 +10,12 @@ import graft.geo.proj.ProjString
   * (/root/reference/src/networkfilemanager.cpp behavior mapped to the
   * driver-side grid model): local dirs first, then the per-JVM fetch
   * cache, then registered fetchers; fetch-once caching; the
-  * enable-network switch defaults OFF like the reference. */
+  * enable-network switch defaults OFF like the reference.  The grid
+  * served and its local twin are [[GridFixtures.Hgrid]], a synthesized
+  * NTv2 file on the local search path. */
 class GridFetchSpec extends AnyFunSuite {
 
-  private val realGrid =
-    Paths.get("/root/reference/data/tests/test_hgrid_little_endian.gsb")
+  private val local = GridFixtures.Hgrid
 
   private def freshName(tag: String) = s"remote_${tag}_${System.nanoTime()}.gsb"
 
@@ -23,15 +24,14 @@ class GridFetchSpec extends AnyFunSuite {
     val calls = new AtomicInteger(0)
     Grids.registerFetcher(new Grids.GridFetcher {
       def fetch(n: String): Option[Array[Byte]] =
-        if (n == name) { calls.incrementAndGet(); Some(Files.readAllBytes(realGrid)) }
+        if (n == name) { calls.incrementAndGet(); Some(Files.readAllBytes(local.path)) }
         else None
     })
     try {
       Grids.setNetworkEnabled(true)
       assert(Grids.available(name))
       val k = ProjString.parse(s"+proj=hgridshift +grids=$name")
-      val ref = ProjString.parse(
-        "+proj=hgridshift +grids=tests/test_hgrid_little_endian.gsb")
+      val ref = ProjString.parse(s"+proj=hgridshift +grids=${local.name}")
       val a = Array(math.toRadians(4.5), math.toRadians(52.5), 0.0, 0.0)
       val b = a.clone()
       assert(k.fwd(a) && ref.fwd(b))
@@ -48,7 +48,7 @@ class GridFetchSpec extends AnyFunSuite {
     val calls = new AtomicInteger(0)
     Grids.registerFetcher(new Grids.GridFetcher {
       def fetch(n: String): Option[Array[Byte]] = {
-        calls.incrementAndGet(); Some(Files.readAllBytes(realGrid))
+        calls.incrementAndGet(); Some(Files.readAllBytes(local.path))
       }
     })
     try {
@@ -63,21 +63,17 @@ class GridFetchSpec extends AnyFunSuite {
 
   test("UrlFetcher serves grids from a base URL (file: twin of the CDN recipe)") {
     // the production recipe — UrlFetcher("https://cdn.proj.org") — run
-    // egress-free against a file: mirror: copy a reference test grid
-    // under a CDN-unknown name into a local "mirror" directory and let
-    // the fetcher+cache resolve it like a remote asset
+    // egress-free against a file: mirror: copy the synthesized fixture
+    // grid under a CDN-unknown name into a local "mirror" directory and
+    // let the fetcher+cache resolve it like a remote asset
     val mirror = java.nio.file.Files.createTempDirectory("grid-mirror")
     val name = "r5_url_fetch_twin.gsb"
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(
-        "/root/reference/data/tests/test_hgrid_little_endian.gsb"),
-      mirror.resolve(name))
+    java.nio.file.Files.copy(local.path, mirror.resolve(name))
     Grids.registerFetcher(Grids.UrlFetcher(mirror.toUri.toString))
     try {
       Grids.setNetworkEnabled(true)
       val k = ProjString.parse(s"+proj=hgridshift +grids=$name")
-      val twin = ProjString.parse(
-        "+proj=hgridshift +grids=tests/test_hgrid_little_endian.gsb")
+      val twin = ProjString.parse(s"+proj=hgridshift +grids=${local.name}")
       val a = Array(math.toRadians(4.5), math.toRadians(52.5), 0.0, 0.0)
       val b = a.clone()
       assert(k.fwd(a) && twin.fwd(b))
@@ -110,8 +106,7 @@ class GridFetchSpec extends AnyFunSuite {
       assert(Grids.resolve("..\\nope_zz.gsb").isEmpty)
       // a name that exists locally resolves locally (fetcher bytes are
       // garbage — if they were consulted first, parsing would fail)
-      val k = ProjString.parse(
-        "+proj=hgridshift +grids=tests/test_hgrid_little_endian.gsb")
+      val k = ProjString.parse(s"+proj=hgridshift +grids=${local.name}")
       val v = Array(math.toRadians(4.5), math.toRadians(52.5), 0.0, 0.0)
       assert(k.fwd(v))
     } finally { Grids.setNetworkEnabled(false); Grids.clearFetchers() }

@@ -16,6 +16,9 @@ class OperationFactorySpec extends AnyFunSuite {
     v
   }
 
+  /** Synthesized NTv2 grid over 4..7 x 52..55 (see [[GridFixtures]]). */
+  private def synthGrid: String = GridFixtures.Hgrid.name
+
   private def close(a: Array[Double], b: Array[Double], tol: Double): Unit = {
     assert(math.abs(a(0) - b(0)) < tol, s"x: ${a(0)} vs ${b(0)}")
     assert(math.abs(a(1) - b(1)) < tol, s"y: ${a(1)} vs ${b(1)}")
@@ -57,11 +60,11 @@ class OperationFactorySpec extends AnyFunSuite {
 
   test("grid candidate wins inside its extent, Helmert fallback outside") {
     val src = "+proj=longlat +ellps=GRS80" +
-      " +nadgrids=@tests/test_hgrid_little_endian.gsb +towgs84=100,0,0"
+      s" +nadgrids=@$synthGrid +towgs84=100,0,0"
     val k = OperationFactory.crsToCrs(src, "+proj=longlat +datum=WGS84")
     val gridRef = ProjString.parse(
       "+proj=pipeline +step +proj=unitconvert +xy_in=deg +xy_out=rad" +
-        " +step +proj=hgridshift +grids=tests/test_hgrid_little_endian.gsb" +
+        s" +step +proj=hgridshift +grids=$synthGrid" +
         " +step +proj=unitconvert +xy_in=rad +xy_out=deg")
     val helmRef = ProjString.parse(
       "+proj=pipeline +step +proj=unitconvert +xy_in=deg +xy_out=rad" +
@@ -77,7 +80,7 @@ class OperationFactorySpec extends AnyFunSuite {
   test("candidate list: extents, accuracies and ranking") {
     val cands = OperationFactory.createOperations(
       "+proj=longlat +ellps=GRS80" +
-        " +nadgrids=@tests/test_hgrid_little_endian.gsb,@null",
+        s" +nadgrids=@$synthGrid,@null",
       "+proj=longlat +datum=WGS84")
     assert(cands.length == 2)
     val grid = cands.head // best accuracy first
@@ -91,7 +94,7 @@ class OperationFactorySpec extends AnyFunSuite {
 
   test("area of interest filters candidates like proj_create_crs_to_crs's PJ_AREA") {
     val src = "+proj=longlat +ellps=GRS80" +
-      " +nadgrids=@tests/test_hgrid_little_endian.gsb +towgs84=100,0,0"
+      s" +nadgrids=@$synthGrid +towgs84=100,0,0"
     val dst = "+proj=longlat +datum=WGS84"
     // no area: grid candidate (extent 4..7 x 52..55) + Helmert fallback
     assert(OperationFactory.createOperations(src, dst).length == 2)
@@ -113,7 +116,7 @@ class OperationFactorySpec extends AnyFunSuite {
     // grid-only CRS with the area disjoint from every candidate: rejected
     intercept[ProjString.Unsupported] {
       OperationFactory.crsToCrs(
-        "+proj=longlat +ellps=GRS80 +nadgrids=tests/test_hgrid_little_endian.gsb",
+        s"+proj=longlat +ellps=GRS80 +nadgrids=$synthGrid",
         dst, authorityOrder = false, away)
     }
     // malformed area
@@ -125,7 +128,7 @@ class OperationFactorySpec extends AnyFunSuite {
   test("ACCURACY / ALLOW_BALLPARK / ONLY_BEST options match proj_create_crs_to_crs") {
     import OperationFactory.CrsToCrsOptions
     val src = "+proj=longlat +ellps=GRS80" +
-      " +nadgrids=@tests/test_hgrid_little_endian.gsb +towgs84=100,0,0"
+      s" +nadgrids=@$synthGrid +towgs84=100,0,0"
     val dst = "+proj=longlat +datum=WGS84"
     // candidate accuracies: grid 0.15+0.005, 3-param towgs84 5.0+0.005
     assert(OperationFactory.createOperations(src, dst,

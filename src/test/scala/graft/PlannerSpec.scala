@@ -6,10 +6,11 @@ import graft.geo.kernels.PointKernel
 
 /** CRS→CRS planner semantics (reference: pj_get_suggested_operation,
   * trans.cpp:47-176 + the HUGE_VAL retry at :233-342): bbox dispatch,
-  * accuracy ranking, retry-on-error, grid-free fallback. */
+  * accuracy ranking, retry-on-error, grid-free fallback.  The grid ops run
+  * on synthesized NTv2 grids ([[GridFixtures]]). */
 class PlannerSpec extends AnyFunSuite {
   private val gridOp = ProjString.parse(
-    "+proj=hgridshift +grids=tests/test_hgrid_little_endian.gsb")
+    s"+proj=hgridshift +grids=${GridFixtures.Hgrid.name}")
   private val offOp = ProjString.parse("+proj=geogoffset +dlon=18 +dlat=-36")
 
   private def runFwd(k: PointKernel, lon: Double, lat: Double): Array[Double] = {
@@ -59,9 +60,11 @@ class PlannerSpec extends AnyFunSuite {
   }
 
   test("inverse direction dispatches on the destination bbox (NTF grid)") {
-    // real-world grid (arcsec shifts) so the forward image stays inside
-    // the destination box; roundtrip must recover through the planner
-    val ntf = ProjString.parse("+proj=hgridshift +grids=ntf_r93.gsb")
+    // a grid over the candidate's own box with arcsec shifts, so the
+    // forward image stays inside the destination box; roundtrip must
+    // recover through the planner
+    val ntf = ProjString.parse(
+      s"+proj=hgridshift +grids=${GridFixtures.NtfBox.name}")
     val planner = CrsPlanner.kernel(Seq(
       CrsPlanner.Candidate(ntf, -5.5, 41.0, 10.0, 52.0, accuracy = 0.05,
         dstWestDeg = -5.5, dstSouthDeg = 41.0, dstEastDeg = 10.0,
