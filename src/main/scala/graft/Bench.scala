@@ -307,7 +307,7 @@ object Bench {
         .agg(count(lit(1))).head().getLong(0)
     } catch {
       // an absent grid costs this job only; any other failure fails the run
-      case SparkEntry.AssetMissing(e) => skipped += "gridshift_10m" -> e.getMessage
+      case e: graft.geo.proj.ProjString.AssetMissing => skipped += "gridshift_10m" -> e.detail
     }
     // re-touch the texts cache OUTSIDE the timed region: a first rep that
     // silently re-decodes evicted span arrays reads as a 4x spike

@@ -1997,30 +1997,21 @@ object SparkEntry {
   }
 
   /** Sentinel for an oracle whose builder could not run in this
-    * environment (missing optional asset) — filtered out of [[oracleSql]]
+    * environment (an absent asset file) — filtered out of [[oracleSql]]
     * so the query degrades to the rows-only check instead of aborting the
     * WHOLE oracle dump (losing every query's compare). */
   private final val OracleUnavailable = "__ORACLE_UNAVAILABLE__"
   private def guarded(build: => String): String =
     try build catch {
-      // ONLY the asset-missing class degrades to rows-only.  A genuine
-      // code regression (NPE, MatchError, require) must still crash
-      // loudly — silently dropping the oracle would hide exactly the
-      // regressions the pinned-VALUES entries exist to catch.
-      case AssetMissing(e) =>
-        System.err.println(s"[oracle] builder failed, entry omitted: ${e.getMessage}")
+      // ONLY an absent asset file degrades to rows-only.  A genuine
+      // code regression (NPE, MatchError, require), an unsupported
+      // operation or a corrupt file must still crash loudly — silently
+      // dropping the oracle would hide exactly the regressions the
+      // pinned-VALUES entries exist to catch.
+      case e: graft.geo.proj.ProjString.AssetMissing =>
+        System.err.println(s"[oracle] builder failed, entry omitted: ${e.detail}")
         OracleUnavailable
     }
-
-  /** Matches the asset-missing class of failures: an absent grid file or
-    * an absent `data/sql` registry. */
-  object AssetMissing {
-    def unapply(e: Throwable): Option[Throwable] = e match {
-      case _: graft.geo.grids.Grids.GridMissing | _: graft.geo.grids.Grids.BadGrid |
-           _: graft.geo.proj.ProjString.Unsupported => Some(e)
-      case _ => None
-    }
-  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get the weaker rows-only check. */

@@ -17,7 +17,9 @@ import graft.geo.math.Ellipsoid
   * easting/northing units, by plain addition or through geocentric
   * space. */
 object DefModel {
-  final case class BadModel(msg: String) extends RuntimeException(msg)
+  /** A model file that is present but malformed. */
+  final case class BadModel(msg: String)
+      extends graft.geo.proj.ProjString.BadProjString(msg)
 
   sealed trait TimeFn extends Serializable { def at(t: Double): Double }
   final case class ConstantFn() extends TimeFn { def at(t: Double) = 1.0 }
@@ -106,7 +108,7 @@ object DefModel {
   private val cache = TrieMap.empty[String, Model]
 
   def load(name: String): Model = {
-    val p = Grids.resolve(name).getOrElse(throw BadModel(s"no such file: $name"))
+    val p = Grids.locate(name)
     cache.getOrElseUpdate(p.toString,
       parse(new String(Files.readAllBytes(p), "UTF-8")))
   }

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.collection.concurrent.TrieMap
 
+import graft.geo.proj.ProjString.{AssetMissing, BadProjString}
+
 /** In-memory shift grids parsed from the public grid-file formats the
   * reference engine reads (NTv2 `.gsb`, GTX, CTable2 — see
   * /root/reference/src/grids.cpp:246-370 (GTX), :1977-2056 (CTable2),
@@ -99,14 +101,16 @@ final class VGrid(val name: String, val width: Int, val height: Int,
 
 /** Loader + per-JVM registry.  Grid names resolve against
   * `GRAFT_GRID_PATH` (colon-separated) plus the reference test-data
-  * directories, mirroring the reference's PROJ_DATA search. */
+  * directories, mirroring the reference's PROJ_DATA search.  [[Grids.locate]]
+  * is the one resolver of a required grid or model file: an absent file
+  * throws [[graft.geo.proj.ProjString.AssetMissing]], a present but
+  * malformed one a [[Grids.BadGrid]] (a `BadProjString`). */
 object Grids {
   final val RelTol = 1e-5 // REL_TOLERANCE_HGRIDSHIFT, grids.cpp:2760
   private final val ArcSecToRad = (math.Pi / 180.0) / 3600.0
 
-  final case class GridMissing(name: String)
-      extends RuntimeException(s"grid not found: $name")
-  final case class BadGrid(msg: String) extends RuntimeException(msg)
+  /** A grid file that is present but malformed. */
+  final case class BadGrid(msg: String) extends BadProjString(msg)
 
   /** Programmatic additions to the grid search path — the
     * `proj_context_set_search_paths` analogue (reference
@@ -163,7 +167,7 @@ object Grids {
         try Some(in.readAllBytes()) finally in.close()
       } catch {
         // a name that is not a valid URI (a space, say) is a miss like
-        // any other, so resolution falls through to GridMissing
+        // any other, so resolution falls through to AssetMissing
         case _: java.io.IOException | _: java.net.URISyntaxException |
              _: IllegalArgumentException => None
       }
@@ -220,6 +224,11 @@ object Grids {
     searchDirs.iterator.map(d => Paths.get(d, name)).find(Files.isRegularFile(_))
       .orElse(fetchToCache(name))
 
+  /** The one resolver of a required grid or model file: its path, or
+    * [[AssetMissing]] naming the file and the dirs searched. */
+  def locate(name: String): Path =
+    resolve(name).getOrElse(throw AssetMissing(s"grid $name", name, searchDirs))
+
   def available(name: String): Boolean =
     name == "null" || resolve(name).exists(p => readable(p))
 
@@ -235,6 +244,7 @@ object Grids {
 
   private val hCache = TrieMap.empty[String, List[HGrid]]
   private val vCache = TrieMap.empty[String, List[VGrid]]
+  private val gCache = TrieMap.empty[String, List[GenGrid]]
 
   val nullHGrid: HGrid = new HGrid("null", 3, 3,
     GridExtent(-math.Pi, -math.Pi / 2, math.Pi, math.Pi / 2, math.Pi, math.Pi / 2),
@@ -242,68 +252,40 @@ object Grids {
   val nullVGrid: VGrid = new VGrid("null", 3, 3,
     GridExtent(-math.Pi, -math.Pi / 2, math.Pi, math.Pi / 2, math.Pi, math.Pi / 2),
     new Array[Float](9), Nil, isNull = true)
-
-  /** Load the comma-separated `+grids=` spec ('@' prefix = optional).
-    * Returns one entry per loaded file (each a list of top-level grids).
-    * Throws [[GridMissing]] for a required grid that cannot be found. */
-  def hgridSets(spec: String): List[List[HGrid]] =
-    spec.split(',').toList.flatMap { raw =>
-      val optional = raw.startsWith("@")
-      val name = if (optional) raw.substring(1) else raw
-      if (name == "null") Some(List(nullHGrid))
-      else resolve(name) match {
-        case Some(p) =>
-          // any load failure on an OPTIONAL grid is a skip — corrupt
-          // files throw more than BadGrid (buffer reads past EOF, bad
-          // numeric attributes), and the reference skips an optional
-          // grid that fails to open for any reason
-          try Some(hCache.getOrElseUpdate(p.toString, loadH(p)))
-          catch { case scala.util.control.NonFatal(_) if optional => None }
-        case None if optional => None
-        case None => throw GridMissing(name)
-      }
-    }
-
-  def vgridSets(spec: String): List[List[VGrid]] =
-    spec.split(',').toList.flatMap { raw =>
-      val optional = raw.startsWith("@")
-      val name = if (optional) raw.substring(1) else raw
-      if (name == "null") Some(List(nullVGrid))
-      else resolve(name) match {
-        case Some(p) =>
-          try Some(vCache.getOrElseUpdate(p.toString, loadV(p)))
-          catch { case scala.util.control.NonFatal(_) if optional => None }
-        case None if optional => None
-        case None => throw GridMissing(name)
-      }
-    }
-
-  private def loadBytes(p: Path): Array[Byte] = Files.readAllBytes(p)
-
-  private val gCache = TrieMap.empty[String, List[GenGrid]]
-
   val nullGenGrid: GenGrid = new GenGrid("null", 3, 3,
     GridExtent(-math.Pi, -math.Pi / 2, math.Pi, math.Pi / 2, math.Pi, math.Pi / 2),
     Array(new Array[Float](9)), Map.empty, hasNodata = false, 0.0f,
     Nil, isNull = true)
 
-  /** Load generic grids for the unified `gridshift` op; a missing
-    * required grid is a hard error there (matching the reference's
-    * file-not-found failure). */
-  def genericGridSets(spec: String): List[List[GenGrid]] =
+  /** Load the comma-separated `+grids=` spec ('@' prefix = optional).
+    * Returns one entry per loaded file (each a list of top-level grids).
+    * A required grid throws [[AssetMissing]] when absent and [[BadGrid]]
+    * when malformed; an optional grid that fails to load for any reason
+    * is skipped, as the reference skips one that fails to open (corrupt
+    * files throw more than BadGrid: buffer reads past EOF, bad numeric
+    * attributes). */
+  private def gridSets[G](spec: String, nul: G, cache: TrieMap[String, List[G]],
+                          load: Path => List[G]): List[List[G]] =
     spec.split(',').toList.flatMap { raw =>
       val optional = raw.startsWith("@")
       val name = if (optional) raw.substring(1) else raw
-      if (name == "null") Some(List(nullGenGrid))
-      else resolve(name) match {
-        case Some(p) =>
-          try Some(gCache.getOrElseUpdate(p.toString,
-            TiffGrids.loadGeneric(p.getFileName.toString, loadBytes(p))))
-          catch { case _: BadGrid if optional => None }
-        case None if optional => None
-        case None => throw BadGrid(s"grid not found: $name")
-      }
+      if (name == "null") Some(List(nul))
+      else
+        try { val p = locate(name); Some(cache.getOrElseUpdate(p.toString, load(p))) }
+        catch { case scala.util.control.NonFatal(_) if optional => None }
     }
+
+  def hgridSets(spec: String): List[List[HGrid]] = gridSets(spec, nullHGrid, hCache, loadH)
+
+  def vgridSets(spec: String): List[List[VGrid]] = gridSets(spec, nullVGrid, vCache, loadV)
+
+  /** Generic grids for the unified `gridshift` op (and `deformation`,
+    * `xyzgridshift`, `defmodel` components). */
+  def genericGridSets(spec: String): List[List[GenGrid]] =
+    gridSets(spec, nullGenGrid, gCache,
+      p => TiffGrids.loadGeneric(p.getFileName.toString, loadBytes(p)))
+
+  private def loadBytes(p: Path): Array[Byte] = Files.readAllBytes(p)
 
   private def loadH(p: Path): List[HGrid] = {
     val bytes = loadBytes(p)

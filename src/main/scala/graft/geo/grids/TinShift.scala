@@ -34,12 +34,14 @@ object TinShift {
   final val FallbackNearestSide = 1
   final val FallbackNearestCentroid = 2
 
-  final case class BadModel(msg: String) extends RuntimeException(msg)
+  /** A model file that is present but malformed. */
+  final case class BadModel(msg: String)
+      extends graft.geo.proj.ProjString.BadProjString(msg)
 
   private val cache = TrieMap.empty[String, TinModel]
 
   def load(name: String): TinModel = {
-    val p = Grids.resolve(name).getOrElse(throw BadModel(s"no such file: $name"))
+    val p = Grids.locate(name)
     cache.getOrElseUpdate(p.toString, {
       val bytes = Files.readAllBytes(p)
       if (TinShiftGpkg.isSqlite(bytes)) TinShiftGpkg.parse(bytes)

@@ -43,10 +43,11 @@ object AuthorityDb {
   /** data/sql search: GRAFT_AUTHORITY_SQL, else `<gridDir>/sql` for each
     * grid-search dir (the reference layout keeps `data/sql` next to the
     * grids). */
+  private def sqlDirs: Seq[Path] = Grids.searchDirs.map(d => Paths.get(d, "sql"))
+
   lazy val sqlDir: Option[Path] =
     sys.env.get("GRAFT_AUTHORITY_SQL").map(Paths.get(_)).filter(Files.isDirectory(_))
-      .orElse(Grids.searchDirs.map(d => Paths.get(d, "sql"))
-        .find(p => Files.isRegularFile(p.resolve("unit_of_measure.sql"))))
+      .orElse(sqlDirs.find(p => Files.isRegularFile(p.resolve("unit_of_measure.sql"))))
 
   def available: Boolean = sqlDir.isDefined
 
@@ -59,8 +60,9 @@ object AuthorityDb {
     "vertical_crs", "compound_crs", "alias_name", "supersession")
 
   lazy val tables: Map[String, Vector[Array[String]]] =
-    AuthoritySql.load(sqlDir.getOrElse(
-      throw Unsupported("authority database scripts (data/sql) not found")), wanted)
+    AuthoritySql.load(sqlDir.getOrElse(throw ProjString.AssetMissing(
+      "authority database scripts (data/sql) not found", "data/sql",
+      (sys.env.get("GRAFT_AUTHORITY_SQL").toSeq ++ sqlDirs).map(_.toString))), wanted)
 
   private def key(auth: String, code: String) = auth.toUpperCase + ":" + code
 
@@ -1269,8 +1271,7 @@ object AuthorityDb {
           kernel()
           out += DbBridge(key(r(0), r(1)), r(2), kernel, acc, box, None)
         } catch {
-          case _: Unsupported | _: ProjString.BadProjString |
-               _: Grids.GridMissing | _: Grids.BadGrid => // not a candidate
+          case _: Unsupported | _: ProjString.BadProjString => // not a candidate
         }
       }
     }
@@ -1281,8 +1282,7 @@ object AuthorityDb {
     dropSuperseded(out.result(), supersededBy)(_.opKey) { b =>
       try { b.kernel(); true }
       catch {
-        case _: Unsupported | _: ProjString.BadProjString |
-             _: Grids.GridMissing | _: Grids.BadGrid => false
+        case _: Unsupported | _: ProjString.BadProjString => false
       }
     }.sortBy(_.accuracy)
   }

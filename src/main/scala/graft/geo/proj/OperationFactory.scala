@@ -200,7 +200,7 @@ object OperationFactory {
     val geoidgrids = p.get("geoidgrids")
     val geoidTok = geoidgrids.map(g => s" +geoidgrids=$g").getOrElse("")
     val geoidBox = geoidgrids.flatMap { g =>
-      try bboxOfVGrids(g) catch { case _: Grids.GridMissing => None }
+      try bboxOfVGrids(g) catch { case _: ProjString.AssetMissing => None }
     }
 
     // --- core: the datum-free conversion ---------------------------------
@@ -243,7 +243,7 @@ object OperationFactory {
           // the same way when networking is off
           val loaded =
             try { if (Grids.hgridSets(name).isEmpty) None else bboxOfHGrids(name) }
-            catch { case _: Grids.GridMissing | _: Grids.BadGrid => None }
+            catch { case _: ProjString.AssetMissing | _: Grids.BadGrid => None }
           loaded match {
             case Some(box) =>
               bridges += Bridge(s"grid:$name",
@@ -297,8 +297,7 @@ object OperationFactory {
             gridFree = b.gridName.isEmpty && geoidgrids.isEmpty,
             isNoop = noop)
         } catch {
-          case _: ProjString.Unsupported | _: ProjString.BadProjString |
-               _: Grids.GridMissing | _: Grids.BadGrid =>
+          case _: ProjString.Unsupported | _: ProjString.BadProjString =>
             dropped += b.opKey
         }
       }
@@ -545,8 +544,6 @@ object OperationFactory {
       try Right((p, AuthorityDb.pointMotionKernel(p, e1, e2)))
       catch {
         case e: ProjString.Unsupported => Left(s"${p.opKey}: ${e.getMessage}")
-        case e: Grids.GridMissing => Left(s"${p.opKey}: ${e.getMessage}")
-        case e: Grids.BadGrid => Left(s"${p.opKey}: ${e.getMessage}")
       }
     }.toSeq
     val (pmo, pk) = lowered.collectFirst { case Right(x) => x }.getOrElse(

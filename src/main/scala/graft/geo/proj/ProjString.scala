@@ -18,10 +18,26 @@ import graft.geo.math.{Ellipsoid, ProjMath => M}
   */
 object ProjString {
 
-  final case class Unsupported(what: String)
+  class Unsupported(what: String)
       extends RuntimeException(s"unsupported: $what")
-  final case class BadProjString(what: String)
-      extends RuntimeException(what)
+  object Unsupported { def apply(what: String) = new Unsupported(what) }
+
+  /** An asset file (grid, deformation model, triangulation, the `data/sql`
+    * registry) that none of `searched` holds: PROJ's
+    * PROJ_ERR_INVALID_OP_FILE_NOT_FOUND_OR_INVALID for an absent file.  An
+    * [[Unsupported]], so every caller that skips an operation outside the
+    * inventory skips one whose file is absent; a file that is present but
+    * malformed is a [[BadProjString]] instead. */
+  final case class AssetMissing(what: String, file: String, searched: Seq[String])
+      extends Unsupported(what) {
+    def detail: String = s"$getMessage (searched: ${searched.mkString(", ")})"
+  }
+
+  /** Malformed input: a proj-string, or an asset file that is present but
+    * unreadable ([[Grids.BadGrid]], [[TinShift.BadModel]],
+    * [[DefModel.BadModel]]). */
+  class BadProjString(what: String) extends RuntimeException(what)
+  object BadProjString { def apply(what: String) = new BadProjString(what) }
 
   /** One +key[=value] token bag, preserving duplicate-free lookup order. */
   final case class Params(kv: Map[String, String], flags: Set[String]) {
@@ -360,20 +376,6 @@ object ProjString {
     case Some(v) => parseDouble(v)
   }
 
-  private def hgridsOf(spec: String) =
-    try Grids.hgridSets(spec)
-    catch {
-      case Grids.GridMissing(n) => throw Unsupported(s"grid $n")
-      case e: Grids.BadGrid     => throw BadProjString(e.getMessage)
-    }
-
-  private def vgridsOf(spec: String) =
-    try Grids.vgridSets(spec)
-    catch {
-      case Grids.GridMissing(n) => throw Unsupported(s"grid $n")
-      case e: Grids.BadGrid     => throw BadProjString(e.getMessage)
-    }
-
   private def buildOne(proj: String, p0: Params): PointKernel = {
     val p = expandDatum(p0)
     BannedParams.find(b => p.has(b)).foreach(b => throw Unsupported(s"+$b"))
@@ -428,8 +430,8 @@ object ProjString {
       throw Unsupported("datum glue on non-angular operation")
 
     val ell = ellipsoidOf(p)
-    val hglue = p.get("nadgrids").map(s => HgridshiftGlue(HgridshiftKernel(hgridsOf(s))))
-    val vglue = p.get("geoidgrids").map(s => VgridshiftKernel(vgridsOf(s)))
+    val hglue = p.get("nadgrids").map(s => HgridshiftGlue(HgridshiftKernel(Grids.hgridSets(s))))
+    val vglue = p.get("geoidgrids").map(s => VgridshiftKernel(Grids.vgridSets(s)))
     val (cartW, helm, cartL) =
       if (hglue.isEmpty && towgsGlue) {
         val h = try Glue.helmertOfTowgs84(p.get("towgs84").get)
@@ -460,22 +462,18 @@ object ProjString {
       case "hgridshift" =>
         val spec = p.get("grids")
           .getOrElse(throw BadProjString("hgridshift needs +grids"))
-        HgridshiftKernel(hgridsOf(spec),
+        HgridshiftKernel(Grids.hgridSets(spec),
           tEpoch = p.double("t_epoch").getOrElse(0.0), tFinal = parseTFinal(p))
       case "vgridshift" =>
         val spec = p.get("grids")
           .getOrElse(throw BadProjString("vgridshift needs +grids"))
-        VgridshiftKernel(vgridsOf(spec),
+        VgridshiftKernel(Grids.vgridSets(spec),
           multiplier = p.double("multiplier").getOrElse(-1.0),
           tEpoch = p.double("t_epoch").getOrElse(0.0), tFinal = parseTFinal(p))
       case "defmodel" =>
         val file = p.get("model")
           .getOrElse(throw BadProjString("defmodel needs +model"))
-        try DefModelKernel(DefModel.load(file), ell)
-        catch {
-          case e: DefModel.BadModel => throw BadProjString(e.getMessage)
-          case e: Grids.BadGrid     => throw BadProjString(e.getMessage)
-        }
+        DefModelKernel(DefModel.load(file), ell)
       case "xyzgridshift" =>
         val spec = p.get("grids")
           .getOrElse(throw BadProjString("xyzgridshift needs +grids"))
@@ -484,10 +482,9 @@ object ProjString {
           case Some("output_crs")       => false
           case Some(o) => throw BadProjString(s"unsupported grid_ref $o")
         }
-        try XyzGridshiftKernel(Grids.genericGridSets(spec), ell,
+        XyzGridshiftKernel(Grids.genericGridSets(spec), ell,
           gridRefIsInput = refIsInput,
           multiplier = p.double("multiplier").getOrElse(1.0))
-        catch { case e: Grids.BadGrid => throw BadProjString(e.getMessage) }
       case "deformation" =>
         val hasGrids = p.has("grids")
         val hasXy = p.has("xy_grids")
@@ -500,29 +497,24 @@ object ProjString {
           throw BadProjString("deformation needs +dt or +t_epoch")
         if (dtv.isDefined && te.isDefined)
           throw BadProjString("+dt and +t_epoch are mutually exclusive")
-        try {
-          val gen = if (hasGrids)
-            Grids.genericGridSets(p.get("grids").get) else Nil
-          val hg = if (!hasGrids) hgridsOf(p.get("xy_grids").get) else Nil
-          val vg = if (!hasGrids) vgridsOf(p.get("z_grids").get) else Nil
-          DeformationKernel(gen, hg, vg, ell,
-            dt = dtv.getOrElse(Double.NaN), tEpoch = te.getOrElse(Double.NaN))
-        } catch { case e: Grids.BadGrid => throw BadProjString(e.getMessage) }
+        val gen = if (hasGrids) Grids.genericGridSets(p.get("grids").get) else Nil
+        val hg = if (!hasGrids) Grids.hgridSets(p.get("xy_grids").get) else Nil
+        val vg = if (!hasGrids) Grids.vgridSets(p.get("z_grids").get) else Nil
+        DeformationKernel(gen, hg, vg, ell,
+          dt = dtv.getOrElse(Double.NaN), tEpoch = te.getOrElse(Double.NaN))
       case "gridshift" =>
         val spec = p.get("grids")
           .getOrElse(throw BadProjString("gridshift needs +grids"))
         val interp = p.get("interpolation").getOrElse("")
         if (interp.nonEmpty && interp != "bilinear" && interp != "biquadratic")
           throw BadProjString("unsupported value for +interpolation")
-        try GridshiftKernel(Grids.genericGridSets(spec),
+        GridshiftKernel(Grids.genericGridSets(spec),
           interpolationOverride = interp,
           noZTransform = p.flags.contains("no_z_transform"))
-        catch { case e: Grids.BadGrid => throw BadProjString(e.getMessage) }
       case "tinshift" =>
         val file = p.get("file")
           .getOrElse(throw BadProjString("tinshift needs +file"))
-        try TinShiftKernel(TinShift.load(file))
-        catch { case e: TinShift.BadModel => throw BadProjString(e.getMessage) }
+        TinShiftKernel(TinShift.load(file))
       case "horner" =>
         def coefs(key: String, n: Int): Array[Double] = p.get(key) match {
           case None => null

@@ -665,14 +665,23 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // grid + Helmert fallback dispatch THROUGH the Catalyst path — the
     // planner kernel (with its grid arrays) must serialize into the
     // generated code references intact
-    val src = "+proj=longlat +ellps=GRS80" +
-      " +nadgrids=@tests/test_hgrid_little_endian.gsb +towgs84=100,0,0"
-    val k = graft.geo.proj.OperationFactory.crsToCrs(src, "+proj=longlat +datum=WGS84")
+    val dst = "+proj=longlat +datum=WGS84"
+    val src = s"+proj=longlat +ellps=GRS80 +nadgrids=@${GridFixtures.Hgrid.name}" +
+      " +towgs84=100,0,0"
+    val k = graft.geo.proj.OperationFactory.crsToCrs(src, dst)
+    // the in-grid point takes the grid, not the Helmert fallback: the
+    // grid arrays really are in the kernel that goes through codegen
+    val helmert = graft.geo.proj.OperationFactory.crsToCrs(
+      "+proj=longlat +ellps=GRS80 +towgs84=100,0,0", dst)
+    val (viaGrid, viaHelmert) = (Array(5.5, 53.5, 0.0, 0.0), Array(5.5, 53.5, 0.0, 0.0))
+    assert(k.fwd(viaGrid) && helmert.fwd(viaHelmert))
+    assert(!viaGrid.take(2).sameElements(viaHelmert.take(2)),
+      "in-grid point took the Helmert fallback")
     val sp = spark; import sp.implicits._
     val pts = Seq((5.5, 53.5), (20.0, 20.0), (5.1, 52.2), (-40.0, 10.0))
       .toDF("lon", "lat")
     val out = pts.withColumn("o",
-        geo.crsTransform(src, "+proj=longlat +datum=WGS84", col("lon"), col("lat")))
+        geo.crsTransform(src, dst, col("lon"), col("lat")))
       .select(col("lon"), col("lat"),
         col("o").getField("x"), col("o").getField("y")).collect()
     out.foreach { r =>

@@ -52,11 +52,10 @@ class GridFetchSpec extends AnyFunSuite {
       }
     })
     try {
-      // the dispatch surfaces the missing grid as a typed parse error
-      val e = intercept[RuntimeException](
+      // the dispatch surfaces the missing grid as the one typed asset error
+      val e = intercept[ProjString.AssetMissing](
         ProjString.parse(s"+proj=hgridshift +grids=$name"))
-      assert(e.isInstanceOf[Grids.GridMissing] ||
-        e.isInstanceOf[ProjString.Unsupported], e.toString)
+      assert(e.file == name && e.getMessage.contains(name), e.toString)
       assert(calls.get() == 0, "fetcher consulted while network disabled")
     } finally Grids.clearFetchers()
   }
@@ -78,7 +77,7 @@ class GridFetchSpec extends AnyFunSuite {
       val b = a.clone()
       assert(k.fwd(a) && twin.fwd(b))
       assert(a.sameElements(b), "URL-fetched grid must equal the local twin")
-      // unknown names miss cleanly (IOException -> None -> GridMissing)
+      // unknown names miss cleanly (IOException -> None -> AssetMissing)
       assert(Grids.UrlFetcher(mirror.toUri.toString)
         .fetch("definitely_absent.gsb").isEmpty)
     } finally {
