@@ -356,15 +356,16 @@ object Bench {
   }
 
   /** Runs `jobs` in order at local[baseN] and at local[4 baseN], one session
-    * per rung (after one discarded local[baseN] pass when `warm`), and
-    * asserts that each job's rows and checksum are equal at both. */
-  private def scalingRuns(baseN: Int, warm: Boolean, conf: Seq[(String, Any)],
+    * per rung, after one discarded local[baseN] pass (so no job's first rep
+    * pays the JVM's JIT and codegen warm-up), and asserts that each job's
+    * rows and checksum are equal at both. */
+  private def scalingRuns(baseN: Int, conf: Seq[(String, Any)],
                           jobs: Seq[ScaleJob]): Seq[ScaleRow] = {
     def at(n: Int): Seq[(RepDiag, (Long, String))] = {
       val spark = session(Some(n), conf: _*)
       try jobs.map { case (_, run) => timeRep(run(spark)) } finally spark.stop()
     }
-    if (warm) at(baseN)
+    at(baseN)
     val (small, big) = (at(baseN), at(4 * baseN))
     for ((((name, _), (ds, r)), (db, rb)) <- jobs.zip(small).zip(big)) yield {
       require(r == rb, s"$name: (rows, checksum) $r at local[$baseN] but $rb at local[${4 * baseN}]")
@@ -498,9 +499,6 @@ object Bench {
       if (dedup) {
         materialize(textsPath)(spanText(prep.read.parquet(corpusPath))
           .repartition(64).write.mode("overwrite").parquet(_))
-        // page-cache warm only (JIT is per-JVM anyway): a full dedup warm
-        // run would add ~25 min at 8M docs for no measurement benefit
-        prep.read.parquet(textsPath).agg(count(col("text"))).head
       } else
         materialize(narrowPath)(GeoEngine.withGeoTag(prep.read.parquet(corpusPath))
           .select("doc_id", "lon", "lat")
@@ -513,12 +511,12 @@ object Bench {
       // multi-GB sort partitions that spill at both rungs, so the ratio
       // would measure the disk.  Same value at BOTH parallelism levels;
       // AQE coalesces the small stages.
-      val rows = scalingRuns(baseN, warm = false, Seq(
+      val rows = scalingRuns(baseN, Seq(
         "spark.sql.shuffle.partitions" -> 96,
         "spark.sql.files.maxPartitionBytes" -> 64 * 1024 * 1024), dedupJobs(textsPath))
       appendScalingTable("dedup_scaling_efficiency", nDocs, baseN, rows)
     } else {
-      val rows = scalingRuns(baseN, warm = true, Seq(
+      val rows = scalingRuns(baseN, Seq(
         // split the skewed hotspot partition files into many input tasks
         "spark.sql.files.maxPartitionBytes" -> 8 * 1024 * 1024),
         spatialJobs(corpusPath, narrowPath, math.max(1L, nDocs / 4000)))

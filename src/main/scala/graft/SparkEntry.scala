@@ -4876,8 +4876,11 @@ object SparkEntry {
         |FROM res""".stripMargin,
     // factory-derived planner mirror: same bilinear NTv2 replay as
     // q_crs_planner inside the grid's header extent (4..7 x 52..55 deg),
-    // identity (@null bridge) elsewhere
-    "q_crs_factory" ->
+    // identity (@null bridge) elsewhere.  The node values are the grid's:
+    // without it the query's optional grid drops to @null everywhere, so
+    // the entry is omitted rather than compared against the wrong field.
+    "q_crs_factory" -> guarded {
+      graft.geo.grids.Grids.locate("tests/test_hgrid_little_endian.gsb")
       """WITH pts AS (
         |  SELECT l_orderkey, l_linenumber,
         |    3.0504 + (l_partkey * 7 + l_suppkey) % 3900 / 1000.0 AS lon,
@@ -4923,7 +4926,8 @@ object SparkEntry {
         |SELECT l_orderkey, l_linenumber,
         |  CAST(floor(olon*1e7 + 0.5) AS BIGINT) AS lon_e7,
         |  CAST(floor(olat*1e7 + 0.5) AS BIGINT) AS lat_e7
-        |FROM res""".stripMargin,
+        |FROM res""".stripMargin
+    },
     // barycentric mirror of tests/tinshift_crs_implicit.json: vertices
     // (2,49)->(2.1,49.1), (3,50)->(3.1,50.1), (2,50)->(2.1,50.1), one
     // triangle; points planted strictly inside.

@@ -19,9 +19,11 @@ import graft.geo.expr.geo
   *    small side by construction — so the big fact table is never shuffled;
   *  - the distance join explodes only the (small, broadcast) query side
   *    into its 9-cell neighborhood, so the data side is tiled map-side
-  *    and never shuffled; the kNN join is that range join at escalating
-  *    radii, one collected job set per rung, with the pending queries
-  *    held on the driver;
+  *    and never shuffled; the kNN join applies that range join's test at
+  *    escalating radii as ONE map-only job per rung: the pending queries
+  *    stay on the driver, which broadcasts their cover table and merges
+  *    per-query top-k partials as tasks finish (driver memory
+  *    O(pending x k));
   *  - skew: hot cells are detected from a sampled histogram and the salt
   *    factor applied on the *data* side, replicated on the probe side —
   *    plus AQE skew-join as backstop;
@@ -347,63 +349,238 @@ object GeoEngine {
   def ringSafeRadius(level: Int, ring: Int): Double =
     ring * math.pow(2.0, -level) * (4.0 / 3.0) * 0.5 * 6356752.3 * 0.5
 
-  /** k nearest data points per query — a radius-escalating distance join.
+  /** k nearest data points per query — a radius-escalating range join.
     *
-    * Rung l (`level`, `level` - 3, ... >= 2) runs [[distanceJoin]] of the
-    * still-pending queries at radius ringSafeRadius(l, 1), whose cover
-    * level is exactly l, so it returns every data point within the radius
-    * with its exact Karney `dist`.  A query with at least k of them is
-    * settled: no point outside the radius can outrank its kth neighbour,
-    * so its first k by (dist, data id) are the answer.  Queries still
-    * pending after the coarsest rung (isolated points, or k beyond the
+    * Rung l (`level`, `level` - 3, ... >= 2) finds, for every still-pending
+    * query, each data point within radius ringSafeRadius(l, 1) with its
+    * exact Karney distance: the test [[distanceJoin]] applies at that
+    * radius (cover level exactly l, the same chord caps, the same Karney
+    * predicate).  A query with at least k of them is settled: no point
+    * outside the radius can outrank its kth neighbour, so its first k by
+    * (dist, data id) are the answer.  Queries still pending after the
+    * coarsest rung (isolated points, a null coordinate, or k beyond the
     * data size) fall back to [[knnBruteForce]].  Output (queryId, dataId,
     * dist, rank) is partition-count independent.
     *
-    * The pending set lives on the driver: the (queryId, lon, lat) rows
-    * are collected once, each rung is one local query frame and ONE
-    * `collect()` of its join, window and filter (at most three Spark
-    * jobs: query broadcast, pair shuffle, result), and settled query ids
-    * leave the pending list by value (`equals` on the collected id, as
-    * the former anti-join compared keys), so a settled query is never
-    * answered again at a coarser rung.  Driver memory is bounded by
-    * #queries rows plus the answer's #queries x k rows — the same order
-    * [[distanceJoin]] already collects to broadcast its query side.  The
-    * rung jobs are eager; only the brute-force residue, if any, stays
-    * lazy.  Each rung's jobs carry the description
-    * `knnJoin rung l=<level> pending=<n>` and the rung is logged at INFO. */
+    * Each rung is ONE map-only Spark job.  The (queryId, lon, lat) rows
+    * are collected once and the pending ones stay on the driver; per rung
+    * the driver broadcasts a cover table (ring-1 cell neighbourhood at
+    * level l -> pending query indexes) with each query's unit-sphere xyz.
+    * The data side is planned once per call and scanned once per rung:
+    * each row computes its xyz and cell, probes the table, and feeds the
+    * in-radius pairs into per-query counts and bounded (dist, data id)
+    * heaps, ordered as the id type sorts in Spark, nulls first.  Task
+    * partials are merged on the driver as they arrive (`RDD.aggregate`),
+    * so nothing shuffles.  A query whose summed count reaches k settles
+    * with ranks 1..k and leaves the pending list by id value (`equals`);
+    * rows sharing a query id are one query, as in [[knnBruteForce]].  Driver memory is the pending rows plus O(pending x k) merged
+    * heaps and one task's partial in flight; task memory is O(pending x
+    * k).  The rung jobs are eager; only the brute-force residue, if any,
+    * stays lazy.  Each rung's job carries the description
+    * `knnJoin rung l=<level> pending=<n>`, and the rung is logged at INFO
+    * with its within-radius pair count. */
   def knnJoin(queries: DataFrame, data: DataFrame, k: Int, level: Int,
               queryId: String = "query_id", dataId: String = "data_id"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField}
     require(level >= 2 && level <= graft.geo.cells.CellIndex.MaxUsableLevel,
       s"knnJoin level must be in [2, ${graft.geo.cells.CellIndex.MaxUsableLevel}], got $level")
+    require(k >= 1, s"knnJoin k must be positive, got $k")
     val spark = queries.sparkSession
-    val q = queries.select(col(queryId), col("lon"), col("lat"))
-    val byDist = Window.partitionBy(col(queryId)).orderBy(col("dist"), col(dataId))
-    val all = byDist.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val q = queries.select(col(queryId),
+      col("lon").cast("double").as("lon"), col("lat").cast("double").as("lat"))
+    val d = data.select(col(dataId), col("lon").cast("double"), col("lat").cast("double"))
+    val idOrd = new KnnIdOrdering(d.schema.head.dataType)
+    val toExternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(idOrd.dataType)
+    lazy val scan = d.queryExecution.toRdd
+    val schema = StructType(Seq(q.schema.head, d.schema.head,
+      StructField("dist", DoubleType), StructField("rank", IntegerType, nullable = false)))
     def local(rows: Seq[Row], schema: StructType) =
       spark.createDataFrame(rows.asJava, schema)
-    def rung(l: Int, pending: DataFrame): DataFrame =
-      distanceJoin(pending, data, ringSafeRadius(l, 1), queryId, dataId)
-        .withColumn("n", count(lit(1)).over(all))
-        .withColumn("rank", row_number().over(byDist))
-        .where(col("n") >= k && col("rank") <= k)
-        .select(col(queryId), col(dataId), col("dist"), col("rank"))
     var pending = described(spark, "knnJoin collect queries")(q.collect()).toSeq
     val settled = Seq.newBuilder[Row]
     for (l <- level to 2 by -3 if pending.nonEmpty) {
-      val top = described(spark, s"knnJoin rung l=$l pending=${pending.size}")(
-        rung(l, local(pending, q.schema)).collect())
-      val done = top.iterator.map(_.get(0)).toSet
-      log.info(s"knnJoin rung l=$l pending=${pending.size} settled=${done.size}")
-      pending = pending.filterNot(r => done(r.get(0)))
-      settled ++= top
+      val (ids, probe) = KnnProbe(pending, l)
+      val top = if (probe.cover.isEmpty) new KnnTopK(ids.length, k)
+      else {
+        val bc = spark.sparkContext.broadcast(probe)
+        try described(spark, s"knnJoin rung l=$l pending=${pending.size}")(
+          scan.aggregate(new KnnTopK(ids.length, k))(
+            (acc, row) => acc.add(bc, row, idOrd), (a, b) => a.merge(b, idOrd)))
+        finally bc.destroy()
+      }
+      val done = ids.indices.filter(top.count(_) >= k)
+      for (s <- done; (dist, id, rank) <- top.ranked(s, idOrd))
+        settled += Row(ids(s), toExternal(id), dist, rank)
+      log.info(s"knnJoin rung l=$l pending=${pending.size} pairs=${top.pairs} " +
+        s"settled=${done.size}")
+      val doneIds = done.map(ids(_)).toSet
+      pending = pending.filterNot(r => doneIds(r.get(0)))
     }
-    val answer = local(settled.result(), rung(level, q).schema)
+    val answer = local(settled.result(), schema)
     if (pending.isEmpty) answer
     else {
       log.info(s"knnJoin brute-force residue=${pending.size}")
       answer.unionByName(knnBruteForce(local(pending, q.schema), data, k, queryId, dataId))
+    }
+  }
+
+  /** Spark's ascending order of a data-id type, nulls first (as
+    * `orderBy(col(dataId).asc)` sorts, the order [[knnBruteForce]] ranks
+    * by).  Built from the type where it is used, so only the type travels
+    * in a closure. */
+  private final class KnnIdOrdering(val dataType: org.apache.spark.sql.types.DataType)
+      extends Serializable {
+    @transient private lazy val ord =
+      org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dataType)
+    def compare(a: Any, b: Any): Int =
+      if (a == null) { if (b == null) 0 else -1 }
+      else if (b == null) 1
+      else ord.compare(a, b)
+  }
+
+  /** One kNN rung's broadcast: every pending row's slot (one per distinct
+    * query id), degrees and unit-sphere xyz, the ring-1 cover of each
+    * row's cell at `level` (cell -> row indexes; none when every row has
+    * a null coordinate), the radius and its chord caps. */
+  private final case class KnnProbe(slot: Array[Int],
+      lon: Array[Double], lat: Array[Double],
+      x: Array[Double], y: Array[Double], z: Array[Double],
+      cover: Option[graft.geo.expr.CoverTable], level: Int, radius: Double,
+      acceptCap: Double, rejectCap: Double)
+
+  private object KnnProbe {
+    /** The slots' query ids, and the probe of the pending rows. */
+    def apply(pending: Seq[Row], level: Int): (Array[Any], KnnProbe) = {
+      val slots = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
+      val slot = pending.map(r => slots.getOrElseUpdate(r.get(0), slots.size)).toArray
+      val n = pending.size
+      val (lon, lat) = (new Array[Double](n), new Array[Double](n))
+      val (x, y, z) = (new Array[Double](n), new Array[Double](n), new Array[Double](n))
+      val cells = Seq.newBuilder[(Long, Int)]
+      for ((r, i) <- pending.zipWithIndex if !r.isNullAt(1) && !r.isNullAt(2)) {
+        lon(i) = r.getDouble(1); lat(i) = r.getDouble(2)
+        val cl = math.cos(math.toRadians(lat(i)))
+        x(i) = cl * math.cos(math.toRadians(lon(i)))
+        y(i) = cl * math.sin(math.toRadians(lon(i)))
+        z(i) = math.sin(math.toRadians(lat(i)))
+        val c = graft.geo.cells.CellIndex.cellIdXyz(x(i), y(i), z(i), level)
+        for (nb <- graft.geo.cells.CellIndex.neighborhood(c, 1)) cells += nb -> i
+      }
+      val entries = cells.result()
+      val radius = ringSafeRadius(level, 1)
+      val (acceptCap, rejectCap) = chordCaps(radius)
+      (slots.keys.toArray, KnnProbe(slot, lon, lat, x, y, z,
+        if (entries.isEmpty) None else Some(graft.geo.expr.CoverTable(entries)),
+        level, radius, acceptCap, rejectCap))
+    }
+  }
+
+  /** Per-slot in-radius counts and bounded heaps of the k best (dist, id)
+    * pairs of one kNN rung: a task's partial, and the driver's merge of
+    * them.  Heap s is a max-heap over `dist(s)`/`id(s)` (worst at 0) and
+    * is allocated on the slot's first pair; ids are copied out of the
+    * scan's reused rows.  Only arrays, so any serializer ships it. */
+  private final class KnnTopK(slots: Int, k: Int) extends Serializable {
+    val count = new Array[Long](slots)
+    private val dist = new Array[Array[Double]](slots)
+    private val id = new Array[Array[Any]](slots)
+    private val size = new Array[Int](slots)
+    @transient private var probe: KnnProbe = _
+
+    def pairs: Long = count.sum
+
+    /** Probes one (data id, lon, lat) scan row against the cover table. */
+    def add(bc: org.apache.spark.broadcast.Broadcast[KnnProbe],
+            row: org.apache.spark.sql.catalyst.InternalRow,
+            ord: KnnIdOrdering): KnnTopK = {
+      if (probe == null) probe = bc.value
+      val p = probe
+      if (row.isNullAt(1) || row.isNullAt(2)) return this
+      val lon = row.getDouble(1); val lat = row.getDouble(2)
+      // the unit-sphere xyz of xyzCols, and the cell of CellIndex.cellId
+      val cl = math.cos(math.toRadians(lat))
+      val x = cl * math.cos(math.toRadians(lon))
+      val y = cl * math.sin(math.toRadians(lon))
+      val z = math.sin(math.toRadians(lat))
+      val cover = p.cover.get
+      val j = java.util.Arrays.binarySearch(cover.keys,
+        graft.geo.cells.CellIndex.cellIdXyz(x, y, z, p.level))
+      if (j < 0) return this
+      var t = cover.offs(j); val end = cover.offs(j + 1)
+      while (t < end) {
+        val i = cover.vals(t)
+        val c2 = (p.x(i) - x) * (p.x(i) - x) + (p.y(i) - y) * (p.y(i) - y) +
+          (p.z(i) - z) * (p.z(i) - z)
+        if (c2 <= p.rejectCap) {
+          val s12 = graft.geo.geodesic.Geodesic.WGS84.distance(p.lat(i), p.lon(i), lat, lon)
+          if (c2 <= p.acceptCap || s12 <= p.radius) {
+            val s = p.slot(i)
+            count(s) += 1
+            offer(s, s12, row, ord)
+          }
+        }
+        t += 1
+      }
+      this
+    }
+
+    /** Folds `that` in: counts add, heaps merge. */
+    def merge(that: KnnTopK, ord: KnnIdOrdering): KnnTopK = {
+      var s = 0
+      while (s < slots) {
+        count(s) += that.count(s)
+        var e = 0
+        while (e < that.size(s)) { insert(s, that.dist(s)(e), that.id(s)(e), ord); e += 1 }
+        s += 1
+      }
+      this
+    }
+
+    /** Slot s's pairs ascending by (dist, id), as (dist, id, rank). */
+    def ranked(s: Int, ord: KnnIdOrdering): Seq[(Double, Any, Int)] =
+      (0 until size(s)).map(e => (dist(s)(e), id(s)(e)))
+        .sortWith((a, b) => cmp(a._1, a._2, b._1, b._2, ord) < 0)
+        .zipWithIndex.map { case ((d, i), r) => (d, i, r + 1) }
+
+    private def cmp(d1: Double, i1: Any, d2: Double, i2: Any, ord: KnnIdOrdering): Int = {
+      val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(d1, d2)
+      if (c != 0) c else ord.compare(i1, i2)
+    }
+
+    /** A scan row's pair: its id is read (and copied) only if it can enter
+      * the heap, i.e. unless its dist is beyond a full heap's worst. */
+    private def offer(s: Int, d: Double,
+                      row: org.apache.spark.sql.catalyst.InternalRow,
+                      ord: KnnIdOrdering): Unit =
+      if (size(s) < k || d <= dist(s)(0)) {
+        val v = if (row.isNullAt(0)) null
+          else org.apache.spark.sql.catalyst.InternalRow.copyValue(row.get(0, ord.dataType))
+        insert(s, d, v, ord)
+      }
+
+    private def insert(s: Int, d: Double, v: Any, ord: KnnIdOrdering): Unit = {
+      if (dist(s) == null) { dist(s) = new Array[Double](k); id(s) = new Array[Any](k) }
+      val ds = dist(s); val is = id(s)
+      if (size(s) < k) {
+        // sift up from the new leaf
+        var i = size(s); size(s) += 1
+        while (i > 0 && cmp(ds((i - 1) / 2), is((i - 1) / 2), d, v, ord) < 0) {
+          ds(i) = ds((i - 1) / 2); is(i) = is((i - 1) / 2); i = (i - 1) / 2
+        }
+        ds(i) = d; is(i) = v
+      } else if (cmp(d, v, ds(0), is(0), ord) < 0) {
+        // replace the worst and sift down
+        var i = 0; var placed = false
+        while (!placed) {
+          val l = 2 * i + 1
+          val m = if (l + 1 < k && cmp(ds(l + 1), is(l + 1), ds(l), is(l), ord) > 0) l + 1 else l
+          if (l < k && cmp(ds(m), is(m), d, v, ord) > 0) { ds(i) = ds(m); is(i) = is(m); i = m }
+          else placed = true
+        }
+        ds(i) = d; is(i) = v
+      }
     }
   }
 
@@ -417,13 +594,14 @@ object GeoEngine {
   }
 
   /** Exact kNN by broadcast cross join — the small-data baseline and the
-    * correctness oracle for [[knnJoin]]. */
+    * correctness oracle for [[knnJoin]].  A data row with a null
+    * coordinate is no neighbour (a null distance would sort first). */
   def knnBruteForce(queries: DataFrame, data: DataFrame, k: Int,
                     queryId: String = "query_id", dataId: String = "data_id",
                     geodesic: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = broadcast(data.select(col(dataId),
-      col("lon").as("d_lon"), col("lat").as("d_lat")))
+    val d = broadcast(data.where(col("lon").isNotNull && col("lat").isNotNull)
+      .select(col(dataId), col("lon").as("d_lon"), col("lat").as("d_lat")))
     val q = queries.select(col(queryId), col("lon").as("q_lon"), col("lat").as("q_lat"))
     val pairs = q.crossJoin(d)
     if (geodesic) geodesicTopK(pairs, k, queryId, dataId)
@@ -519,18 +697,25 @@ object GeoEngine {
           geo.cellId(col("lon"), col("lat"), level), 1)).as("cand_cell") +:
         xyzCols("lon", "lat", "q"): _*)
     val q = if (broadcastQueries) broadcast(q0) else q0
-    def cap(divisorMeters: Double, band: Double): Double = {
-      val theta = math.min(math.Pi / 2, radiusMeters / divisorMeters)
-      4.0 * math.sin(theta / 2) * math.sin(theta / 2) * band
-    }
-    val rejectCap = cap(6.30e6, 1.02)
-    val acceptCap = cap(6.45e6, 1.0)
+    val (acceptCap, rejectCap) = chordCaps(radiusMeters)
     val c2 = chord2Xyz("q", "d")
     val dist = geo.geodDistance(col("q_lon"), col("q_lat"), col("d_lon"), col("d_lat"))
     q.join(d, "cand_cell")
       .where(c2 <= lit(acceptCap) ||
         (c2 <= lit(rejectCap) && dist <= lit(radiusMeters)))
       .select(col(queryId), col(dataId), dist.as("dist"))
+  }
+
+  /** [[distanceJoin]]'s squared unit-sphere chord caps for `radiusMeters`,
+    * (accept, reject): a pair at or below the first is surely within the
+    * radius, one above the second surely beyond it (bounds derived in
+    * [[distanceJoin]]'s Scaladoc). */
+  private def chordCaps(radiusMeters: Double): (Double, Double) = {
+    def cap(divisorMeters: Double, band: Double): Double = {
+      val theta = math.min(math.Pi / 2, radiusMeters / divisorMeters)
+      4.0 * math.sin(theta / 2) * math.sin(theta / 2) * band
+    }
+    (cap(6.45e6, 1.0), cap(6.30e6, 1.02))
   }
 
   /** Per-row unit-sphere coordinates: lon/lat passthrough plus (x,y,z),
@@ -886,12 +1071,7 @@ object GeoEngine {
         f"(${ringSafeRadius(0, 1)}%.0f m); use a time-bucketed cross join " +
         "for continental-scale co-location radii")
     val level = distanceJoinLevel(radiusMeters)
-    def cap(divisorMeters: Double, band: Double): Double = {
-      val theta = math.min(math.Pi / 2, radiusMeters / divisorMeters)
-      4.0 * math.sin(theta / 2) * math.sin(theta / 2) * band
-    }
-    val rejectCap = cap(6.30e6, 1.02)
-    val acceptCap = cap(6.45e6, 1.0)
+    val (acceptCap, rejectCap) = chordCaps(radiusMeters)
     val c2 = chord2Xyz("a", "b")
     val dist = geo.geodDistance(col("a_lon"), col("a_lat"),
       col("b_lon"), col("b_lat"))

@@ -762,8 +762,8 @@ object SpanGeoTagExpr {
   * only actual candidates leave the lookup (most rows return null and are
   * dropped by the explode).  The table rides the serialized plan once per
   * stage, like the grid registry. */
-final class CoverTable(val levels: Array[Int], keys: Array[Long],
-                       offs: Array[Int], vals: Array[Int])
+final class CoverTable(val levels: Array[Int], private[graft] val keys: Array[Long],
+                       private[graft] val offs: Array[Int], private[graft] val vals: Array[Int])
     extends Serializable {
   require(levels.nonEmpty && keys.length + 1 == offs.length &&
     offs.last == vals.length, "malformed cover table")
