@@ -1984,15 +1984,9 @@ object SparkEntry {
         " +grids=tests/nkgrf03vel_realigned_extract.tif +ellps=GRS80")
       .asInstanceOf[graft.geo.grids.DeformationKernel]
     val g = k.genGrids.head.head
-    var sE = 0; var sN = 1; var sU = 2
-    for (i <- g.samples.indices) {
-      val d = g.item("DESCRIPTION", i)
-      if (d == "east_velocity") sE = i
-      else if (d == "north_velocity") sN = i
-      else if (d == "up_velocity") sU = i
-    }
     (g.width, g.height, g.extent.west, g.extent.south,
-      g.extent.resX, g.extent.resY, g.samples, sE, sN, sU,
+      g.extent.resX, g.extent.resY, g.channels, g.channelOf("east_velocity", 0),
+      g.channelOf("north_velocity", 1), g.channelOf("up_velocity", 2),
       k.ell.a, k.ell.es)
   }
 

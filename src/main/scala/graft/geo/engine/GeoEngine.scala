@@ -1,8 +1,8 @@
 package graft.geo.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.geo.expr.geo
 
@@ -805,18 +805,7 @@ object GeoEngine {
         col(latCol).as("lat"))
       .distinct()
     val sizes = base.groupBy("tid").agg(count(lit(1)).as("np"))
-    val cellsOf = base
-      .select(col("tid"),
-        geo.cellId(col("lon"), col("lat"), level).as("cell"))
-      .distinct()
-    val nbrs = cellsOf
-      .select(col("tid").as("tid_b"),
-        explode(geo.cellNeighbors(col("cell"), 1)).as("cell"))
-      .distinct()
-    val cand = cellsOf.join(nbrs, "cell")
-      .where(col("tid") < col("tid_b"))
-      .select(col("tid").as("li"), col("tid_b").as("rj"))
-      .distinct()
+    val cand = candidatePairs(base, level)
     val aPts = base.select(col("tid").as("li"),
       col("lon").as("a_lon"), col("lat").as("a_lat"))
     val bPts = base.select(col("tid").as("rj"),
@@ -843,6 +832,24 @@ object GeoEngine {
       .where(col("cov_a") === col("na") && col("cov_b") === col("nb"))
       .select(col("li").as("left_id"), col("rj").as("right_id"),
         greatest(col("h_ab"), col("h_ba")).as("h_um"))
+  }
+
+  /** The id-pair prefilter under [[hausdorffJoin]] and [[frechetJoin]]:
+    * the distinct (li, rj) with li < rj where one of li's cells at
+    * `level` meets rj's neighbour fan, over `base`'s (tid, lon, lat). */
+  private def candidatePairs(base: DataFrame, level: Int): DataFrame = {
+    val cellsOf = base
+      .select(col("tid"),
+        geo.cellId(col("lon"), col("lat"), level).as("cell"))
+      .distinct()
+    val nbrs = cellsOf
+      .select(col("tid").as("tid_b"),
+        explode(geo.cellNeighbors(col("cell"), 1)).as("cell"))
+      .distinct()
+    cellsOf.join(nbrs, "cell")
+      .where(col("tid") < col("tid_b"))
+      .select(col("tid").as("li"), col("tid_b").as("rj"))
+      .distinct()
   }
 
   /** Ordered trajectory-similarity join: all pairs of TIME-ORDERED point
@@ -895,19 +902,7 @@ object GeoEngine {
           sin(radians(col("lat"))).as("z")).as("p"))
       .groupBy("tid")
       .agg(array_sort(collect_list(col("p"))).as("seq"))
-    val cellsOf = base
-      .select(col("tid"),
-        geo.cellId(col("lon"), col("lat"), level).as("cell"))
-      .distinct()
-    val nbrs = cellsOf
-      .select(col("tid").as("tid_b"),
-        explode(geo.cellNeighbors(col("cell"), 1)).as("cell"))
-      .distinct()
-    val cand = cellsOf.join(nbrs, "cell")
-      .where(col("tid") < col("tid_b"))
-      .select(col("tid").as("li"), col("tid_b").as("rj"))
-      .distinct()
-    val paired = cand
+    val paired = candidatePairs(base, level)
       .join(seqs.select(col("tid").as("li"), col("seq").as("sa")), "li")
       .join(seqs.select(col("tid").as("rj"), col("seq").as("sb")), "rj")
     val outSchema = StructType(Seq(
@@ -1306,89 +1301,47 @@ object GeoEngine {
                  maxRadiusMeters: Double = 200.0,
                  minDurationSeconds: Long = 1200L): DataFrame = {
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.{Encoders, Row}
     require(keys.nonEmpty, "stayPoints needs at least one key column")
-    val k = keys.length
     val c2max = maxChord2For(maxRadiusMeters)
     val minDurUs = minDurationSeconds * 1000000L
-    val coslat = cos(radians(col(latCol)))
-    val prepped = points
-      .where(keys.map(col(_).isNotNull).reduce(_ && _) &&
-        col(timeCol).isNotNull && col(lonCol).isNotNull &&
-        col(latCol).isNotNull)
-      .select(keys.map(col) ++ Seq(
-        unix_micros(col(timeCol).cast("timestamp")).as("__t_us"),
-        (coslat * cos(radians(col(lonCol)))).as("__x"),
-        (coslat * sin(radians(col(lonCol)))).as("__y"),
-        sin(radians(col(latCol))).as("__z")): _*)
-      .repartition(keys.map(col): _*)
-      // coords break time ties: a total order, so the anchor walk never
-      // depends on input partitioning
-      .sortWithinPartitions(
-        (keys.map(col(_).asc) ++ Seq(col("__t_us").asc, col("__x").asc,
-          col("__y").asc, col("__z").asc)): _*)
-    val keyFields = prepped.schema.fields.take(k)
-    val outSchema = StructType(keyFields ++ Seq(
+    walkKeyRuns(points, keys, timeCol, lonCol, latCol, Nil, Seq(
       StructField("stay_seq", LongType, nullable = false),
       StructField("n_points", LongType, nullable = false),
       StructField("stay_lon", DoubleType, nullable = false),
       StructField("stay_lat", DoubleType, nullable = false),
       StructField("first_us", LongType, nullable = false),
-      StructField("last_us", LongType, nullable = false)))
-    prepped.mapPartitions { rows =>
-      val in = rows.buffered
-      new Iterator[Row] {
-        private var out: Iterator[Row] = Iterator.empty
-        def hasNext: Boolean = {
-          while (!out.hasNext && in.hasNext) out = nextKeyRun()
-          out.hasNext
-        }
-        def next(): Row = { hasNext; out.next() }
-        private def keyOf(r: Row): Seq[Any] = (0 until k).map(r.get)
-        // consume one key's contiguous sorted run and walk it
-        private def nextKeyRun(): Iterator[Row] = {
-          val key = keyOf(in.head)
-          val t = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val xs = scala.collection.mutable.ArrayBuffer.empty[Double]
-          val ys = scala.collection.mutable.ArrayBuffer.empty[Double]
-          val zs = scala.collection.mutable.ArrayBuffer.empty[Double]
-          while (in.hasNext && keyOf(in.head) == key) {
-            val r = in.next()
-            t += r.getLong(k); xs += r.getDouble(k + 1)
-            ys += r.getDouble(k + 2); zs += r.getDouble(k + 3)
-          }
-          val m = t.length
-          val stays = scala.collection.mutable.ArrayBuffer.empty[Row]
-          var seq = 0L
-          var i = 0
-          while (i < m) {
-            var j = i + 1
-            while (j < m && {
-              val dx = xs(i) - xs(j); val dy = ys(i) - ys(j)
-              val dz = zs(i) - zs(j)
-              dx * dx + dy * dy + dz * dz <= c2max
-            }) j += 1
-            if (t(j - 1) - t(i) >= minDurUs) {
-              seq += 1
-              var mx = 0.0; var my = 0.0; var mz = 0.0
-              var p = i
-              while (p < j) { mx += xs(p); my += ys(p); mz += zs(p); p += 1 }
-              val n = (j - i).toDouble
-              mx /= n; my /= n; mz /= n
-              val lon = math.toDegrees(math.atan2(my, mx))
-              val lat = math.toDegrees(
-                math.atan2(mz, math.sqrt(mx * mx + my * my)))
-              // Seq[Any], NOT Seq(...): a mixed Long/Double literal would
-              // weakly unify to Seq[Double] and silently widen the longs
-              stays += Row.fromSeq(key ++ Seq[Any](seq, (j - i).toLong,
-                lon, lat, t(i), t(j - 1)))
-              i = j
-            } else i += 1
-          }
-          stays.iterator
-        }
+      StructField("last_us", LongType, nullable = false))) { (key, t, d) =>
+      val Array(xs, ys, zs) = d
+      val m = t.length
+      val stays = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var seq = 0L
+      var i = 0
+      while (i < m) {
+        var j = i + 1
+        while (j < m && {
+          val dx = xs(i) - xs(j); val dy = ys(i) - ys(j)
+          val dz = zs(i) - zs(j)
+          dx * dx + dy * dy + dz * dz <= c2max
+        }) j += 1
+        if (t(j - 1) - t(i) >= minDurUs) {
+          seq += 1
+          var mx = 0.0; var my = 0.0; var mz = 0.0
+          var p = i
+          while (p < j) { mx += xs(p); my += ys(p); mz += zs(p); p += 1 }
+          val n = (j - i).toDouble
+          mx /= n; my /= n; mz /= n
+          val lon = math.toDegrees(math.atan2(my, mx))
+          val lat = math.toDegrees(
+            math.atan2(mz, math.sqrt(mx * mx + my * my)))
+          // Seq[Any], NOT Seq(...): a mixed Long/Double literal would
+          // weakly unify to Seq[Double] and silently widen the longs
+          stays += Row.fromSeq(key ++ Seq[Any](seq, (j - i).toLong,
+            lon, lat, t(i), t(j - 1)))
+          i = j
+        } else i += 1
       }
-    }(Encoders.row(outSchema))
+      stays.iterator
+    }
   }
 
   /** Trajectory simplification (Ramer–Douglas–Peucker): within each key's
@@ -1422,12 +1375,77 @@ object GeoEngine {
                            lonCol: String = "lon",
                            latCol: String = "lat"): DataFrame = {
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.{Encoders, Row}
     require(keys.nonEmpty, "simplifyTrajectories needs at least one key column")
     require(toleranceMeters > 0, "toleranceMeters must be positive")
+    val tol2 = maxChord2For(toleranceMeters)
+    walkKeyRuns(points, keys, timeCol, lonCol, latCol,
+      Seq(col(lonCol).as("__lon"), col(latCol).as("__lat")), Seq(
+        StructField("t_us", LongType, nullable = false),
+        StructField(lonCol, DoubleType, nullable = false),
+        StructField(latCol, DoubleType, nullable = false))) { (key, t, d) =>
+      val Array(xs, ys, zs, lons, lats) = d
+      val m = t.length
+      val keep = new Array[Boolean](m)
+      keep(0) = true; keep(m - 1) = true
+      // squared 3D distance from point p to the segment (a, b)
+      def segDist2(p: Int, a: Int, b: Int): Double = {
+        val abx = xs(b) - xs(a); val aby = ys(b) - ys(a)
+        val abz = zs(b) - zs(a)
+        val apx = xs(p) - xs(a); val apy = ys(p) - ys(a)
+        val apz = zs(p) - zs(a)
+        val ab2 = abx * abx + aby * aby + abz * abz
+        val tt =
+          if (ab2 <= 0.0) 0.0
+          else {
+            val raw = (apx * abx + apy * aby + apz * abz) / ab2
+            if (raw < 0.0) 0.0 else if (raw > 1.0) 1.0 else raw
+          }
+        val dx = apx - tt * abx; val dy = apy - tt * aby
+        val dz = apz - tt * abz
+        dx * dx + dy * dy + dz * dz
+      }
+      var stack = List.empty[(Int, Int)]
+      if (m > 1) stack = (0, m - 1) :: stack
+      while (stack.nonEmpty) {
+        val (a, b) = stack.head
+        stack = stack.tail
+        if (b - a > 1) {
+          var best = -1
+          var bestD = tol2
+          var p = a + 1
+          while (p < b) {
+            val d = segDist2(p, a, b)
+            if (d > bestD) { bestD = d; best = p } // strict: first-max tie rule
+            p += 1
+          }
+          if (best >= 0) {
+            keep(best) = true
+            stack = (a, best) :: (best, b) :: stack
+          }
+        }
+      }
+      (0 until m).iterator.filter(keep(_))
+        .map(i => Row.fromSeq(key ++ Seq[Any](t(i), lons(i), lats(i))))
+    }
+  }
+
+  /** The sorted key-run walk under [[stayPoints]] and
+    * [[simplifyTrajectories]], the engine's justified `mapPartitions`
+    * shape (the secondary sort semanticDedup uses too): rows with a null
+    * key, time or coordinate are dropped; each row keeps its keys, its
+    * epoch micros, its unit-sphere (x, y, z) computed by codegen in the
+    * scan, then the `extra` double columns; rows are repartitioned on the
+    * keys and sorted by (keys, time, x, y, z) — a total order, so no walk
+    * depends on input partitioning.  `walk` gets each key's contiguous
+    * run as (key values, times, double columns x, y, z, extra…) and its
+    * rows are emitted after the key columns' `outFields`.  Memory is
+    * O(longest single-key run). */
+  private def walkKeyRuns(points: DataFrame, keys: Seq[String], timeCol: String,
+                          lonCol: String, latCol: String, extra: Seq[Column],
+                          outFields: Seq[StructField])(
+      walk: (Seq[Any], Array[Long], Array[Array[Double]]) => Iterator[Row]): DataFrame = {
     val k = keys.length
-    val half = math.sin(toleranceMeters / 6378137.0 / 2.0)
-    val tol2 = 4.0 * half * half // squared chord, [[maxChord2For]]
+    val nd = 3 + extra.length
     val coslat = cos(radians(col(latCol)))
     val prepped = points
       .where(keys.map(col(_).isNotNull).reduce(_ && _) &&
@@ -1435,93 +1453,33 @@ object GeoEngine {
         col(latCol).isNotNull)
       .select(keys.map(col) ++ Seq(
         unix_micros(col(timeCol).cast("timestamp")).as("__t_us"),
-        col(lonCol).as("__lon"), col(latCol).as("__lat"),
         (coslat * cos(radians(col(lonCol)))).as("__x"),
         (coslat * sin(radians(col(lonCol)))).as("__y"),
-        sin(radians(col(latCol))).as("__z")): _*)
+        sin(radians(col(latCol))).as("__z")) ++ extra: _*)
       .repartition(keys.map(col): _*)
       .sortWithinPartitions(
         (keys.map(col(_).asc) ++ Seq(col("__t_us").asc, col("__x").asc,
           col("__y").asc, col("__z").asc)): _*)
-    val keyFields = prepped.schema.fields.take(k)
-    val outSchema = StructType(keyFields ++ Seq(
-      StructField("t_us", LongType, nullable = false),
-      StructField(lonCol, DoubleType, nullable = false),
-      StructField(latCol, DoubleType, nullable = false)))
+    val outSchema = StructType(prepped.schema.fields.take(k) ++ outFields)
     prepped.mapPartitions { rows =>
       val in = rows.buffered
-      new Iterator[Row] {
-        private var out: Iterator[Row] = Iterator.empty
-        def hasNext: Boolean = {
-          while (!out.hasNext && in.hasNext) out = nextKeyRun()
-          out.hasNext
-        }
-        def next(): Row = { hasNext; out.next() }
-        private def keyOf(r: Row): Seq[Any] = (0 until k).map(r.get)
-        private def nextKeyRun(): Iterator[Row] = {
+      def keyOf(r: Row): Seq[Any] = (0 until k).map(r.get)
+      new Iterator[Iterator[Row]] {
+        def hasNext: Boolean = in.hasNext
+        // consume one key's contiguous sorted run and walk it
+        def next(): Iterator[Row] = {
           val key = keyOf(in.head)
-          val t = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val lons = scala.collection.mutable.ArrayBuffer.empty[Double]
-          val lats = scala.collection.mutable.ArrayBuffer.empty[Double]
-          val xs = scala.collection.mutable.ArrayBuffer.empty[Double]
-          val ys = scala.collection.mutable.ArrayBuffer.empty[Double]
-          val zs = scala.collection.mutable.ArrayBuffer.empty[Double]
+          val t = Array.newBuilder[Long]
+          val d = Array.fill(nd)(Array.newBuilder[Double])
           while (in.hasNext && keyOf(in.head) == key) {
             val r = in.next()
-            t += r.getLong(k); lons += r.getDouble(k + 1)
-            lats += r.getDouble(k + 2); xs += r.getDouble(k + 3)
-            ys += r.getDouble(k + 4); zs += r.getDouble(k + 5)
+            t += r.getLong(k)
+            var j = 0
+            while (j < nd) { d(j) += r.getDouble(k + 1 + j); j += 1 }
           }
-          val m = t.length
-          val keep = new Array[Boolean](m)
-          keep(0) = true; keep(m - 1) = true
-          // squared 3D distance from point p to the segment (a, b)
-          def segDist2(p: Int, a: Int, b: Int): Double = {
-            val abx = xs(b) - xs(a); val aby = ys(b) - ys(a)
-            val abz = zs(b) - zs(a)
-            val apx = xs(p) - xs(a); val apy = ys(p) - ys(a)
-            val apz = zs(p) - zs(a)
-            val ab2 = abx * abx + aby * aby + abz * abz
-            val tt =
-              if (ab2 <= 0.0) 0.0
-              else {
-                val raw = (apx * abx + apy * aby + apz * abz) / ab2
-                if (raw < 0.0) 0.0 else if (raw > 1.0) 1.0 else raw
-              }
-            val dx = apx - tt * abx; val dy = apy - tt * aby
-            val dz = apz - tt * abz
-            dx * dx + dy * dy + dz * dz
-          }
-          var stack = List.empty[(Int, Int)]
-          if (m > 1) stack = (0, m - 1) :: stack
-          while (stack.nonEmpty) {
-            val (a, b) = stack.head
-            stack = stack.tail
-            if (b - a > 1) {
-              var best = -1
-              var bestD = tol2
-              var p = a + 1
-              while (p < b) {
-                val d = segDist2(p, a, b)
-                if (d > bestD) { bestD = d; best = p } // strict: first-max tie rule
-                p += 1
-              }
-              if (best >= 0) {
-                keep(best) = true
-                stack = (a, best) :: (best, b) :: stack
-              }
-            }
-          }
-          val kept = scala.collection.mutable.ArrayBuffer.empty[Row]
-          var i = 0
-          while (i < m) {
-            if (keep(i))
-              kept += Row.fromSeq(key ++ Seq[Any](t(i), lons(i), lats(i)))
-            i += 1
-          }
-          kept.iterator
+          walk(key, t.result(), d.map(_.result()))
         }
-      }
+      }.flatten
     }(Encoders.row(outSchema))
   }
 

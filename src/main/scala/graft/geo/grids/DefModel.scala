@@ -12,7 +12,7 @@ import graft.geo.math.Ellipsoid
 /** `proj=defmodel` — full deformation-model evaluation from a master
   * JSON file (reference: /root/reference/src/transformations/defmodel.cpp
   * + defmodel_impl.hpp): a set of components, each with a spatial extent,
-  * a displacement grid (GeoTIFF via [[GenGrid]]) and a time function;
+  * a displacement grid (a GeoTIFF read as a generic [[Grid]]) and a time function;
   * displacements accumulate per epoch and apply in degree or
   * easting/northing units, by plain addition or through geocentric
   * space. */
@@ -74,7 +74,7 @@ object DefModel {
                              gridFile: String,
                              geocentricBilinear: Boolean,
                              timeFn: TimeFn) extends Serializable {
-    @transient lazy val grids: List[List[GenGrid]] =
+    @transient lazy val grids: List[List[Grid]] =
       Grids.genericGridSets(gridFile)
   }
 
@@ -253,25 +253,19 @@ final case class DefModelKernel(model: DefModel.Model, ell: Ellipsoid)
     * samples, descriptions present but not the expected ones, or a unit
     * other than the mode's) — the caller fails the POINT, like the
     * reference, instead of indexing garbage channels. */
-  private def channels(g: GenGrid, displacement: String): (Int, Int, Int) = {
-    var sx = 0; var sy = 1
-    var sz = if (g.samples.length == 1) 0 else 2
-    var anyDesc = false
-    var foundX = false; var foundY = false; var foundZ = false
-    for (i <- g.samples.indices) {
-      val d = g.item("DESCRIPTION", i)
-      if (d.nonEmpty) anyDesc = true
-      d match {
-        case "east_offset"     => sx = i; foundX = true
-        case "north_offset"    => sy = i; foundY = true
-        case "vertical_offset" => sz = i; foundZ = true
-        case _ =>
-      }
-    }
+  private def channels(g: Grid, displacement: String): (Int, Int, Int) = {
+    val n = g.channels.length
+    val anyDesc = (0 until n).exists(g.item("DESCRIPTION", _).nonEmpty)
+    val (ix, iy, iz) =
+      (g.channelOf("east_offset"), g.channelOf("north_offset"), g.channelOf("vertical_offset"))
+    val (foundX, foundY, foundZ) = (ix >= 0, iy >= 0, iz >= 0)
+    val sx = if (foundX) ix else 0
+    val sy = if (foundY) iy else 1
+    val sz = if (foundZ) iz else if (n == 1) 0 else 2
     val needsH = displacement == "horizontal" || displacement == "3d"
     val needsZ = displacement == "vertical" || displacement == "3d"
     if (needsH) {
-      if (g.samples.length < 2) return null
+      if (n < 2) return null
       if (anyDesc && (!foundX || !foundY)) return null
       val unit = g.item("UNITTYPE", sx)
       val expected = if (model.horizontalUnitDegree) "degree" else "metre"
@@ -279,7 +273,7 @@ final case class DefModelKernel(model: DefModel.Model, ell: Ellipsoid)
     }
     if (needsZ) {
       if (displacement == "vertical" && anyDesc && !foundZ) return null
-      if (sz >= g.samples.length) return null
+      if (sz >= n) return null
       val unit = g.item("UNITTYPE", sz)
       if (unit.nonEmpty && unit != "metre") return null
     }
@@ -313,7 +307,7 @@ final case class DefModelKernel(model: DefModel.Model, ell: Ellipsoid)
         var yg = math.min(math.max(cc(1), comp.bbox(1)), comp.bbox(3))
         val tf = comp.timeFn.at(t)
         if (tf != 0.0) {
-          val grid = GridApply.findGeneric(comp.grids, xg, yg)
+          val grid = GridApply.find(comp.grids, xg, yg, 0.0, GridApply.AnyGrid)
           if (grid != null && !grid.isNull) {
             if (grid.width < 2 || grid.height < 2) return null
             val ext = grid.extent
@@ -333,7 +327,7 @@ final case class DefModelKernel(model: DefModel.Model, ell: Ellipsoid)
               if (ch == null) return null
               val (sx, sy, sz) = ch
               def sv(idx: Int, xx: Int, yy: Int): Double =
-                grid.samples(idx)(yy * grid.width + xx)
+                grid.channels(idx)(yy * grid.width + xx)
               def bil(idx: Int): Double =
                 sv(idx, ix0, iy0) * m00 + sv(idx, ix0, iy0 + 1) * m01 +
                   sv(idx, ix0 + 1, iy0) * m10 + sv(idx, ix0 + 1, iy0 + 1) * m11

@@ -15,7 +15,7 @@ import graft.geo.math.Ellipsoid
   * cartesian space.  `gridRefIsInput` = false means the grid is
   * referenced in the OUTPUT frame (e.g. NTF->RGF93), making the forward
   * direction the iterative one. */
-final case class XyzGridshiftKernel(genGrids: List[List[GenGrid]],
+final case class XyzGridshiftKernel(genGrids: List[List[Grid]],
                                     ell: Ellipsoid,
                                     gridRefIsInput: Boolean = true,
                                     multiplier: Double = 1.0)
@@ -67,9 +67,9 @@ final case class XyzGridshiftKernel(genGrids: List[List[GenGrid]],
     if (gridRefIsInput) iterative(v, -1.0) else direct(v, -1.0)
 }
 
-final case class DeformationKernel(genGrids: List[List[GenGrid]],
-                                   hgrids: List[List[HGrid]],
-                                   vgrids: List[List[VGrid]],
+final case class DeformationKernel(genGrids: List[List[Grid]],
+                                   hgrids: List[List[Grid]],
+                                   vgrids: List[List[Grid]],
                                    ell: Ellipsoid,
                                    dt: Double, tEpoch: Double)
     extends PointKernel {

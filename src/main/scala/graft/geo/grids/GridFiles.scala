@@ -43,60 +43,70 @@ final case class GridExtent(west: Double, south: Double,
   }
 }
 
-/** One horizontal shift grid (possibly with nested finer sub-grids, the
-  * NTv2 parent/child structure). */
-final class HGrid(val name: String, val width: Int, val height: Int,
-                  val extent: GridExtent,
-                  val lonShift: Array[Float], val latShift: Array[Float],
-                  var children: List[HGrid] = Nil,
-                  val isNull: Boolean = false,
-                  // true for NTv1/NTv2/CTable2 ("west longitude positive"
-                  // on disk — the loaders normalize the ARRAYS to
-                  // east-positive, but the reference's VALUE path returns
-                  // the raw convention per format: west-positive for the
-                  // classic formats, always east-positive for GeoTIFF
-                  // (GTiffHGrid::valueAt ignores compensateNTConvention,
-                  // grids.cpp:2449-2462))
-                  val rawWestPositive: Boolean = true) extends Serializable {
+/** One shift grid, whichever operation reads it, with its finer sub-grids
+  * (the NTv2 and GeoTIFF parent/child structure) — the reference keeps one
+  * grid base (ExtentAndRes, gridAt, insertIntoHierarchy; grids.cpp) under
+  * its horizontal, vertical and generic grid sets, and so does this port.
+  * What `channels` holds depends on how the file was loaded:
+  *
+  *   - as an hgrid (NTv1/NTv2/CTable2/GeoTIFF): the (longitude, latitude)
+  *     shifts in radians, east positive;
+  *   - as a vgrid (GTX/GeoTIFF): the one offset channel as stored;
+  *   - as a generic grid (GeoTIFF): every sample channel, described by its
+  *     GDAL metadata in `meta`, keyed (sample, item) with sample −1 for the
+  *     grid's own items.  A GeoTIFF IFD without a TYPE item carries the
+  *     file's first grid's items under its own (GTiffGenericGrid::
+  *     setFirstGrid).
+  *
+  * `noData` is the GeoTIFF nodata value; `rawWestPositive` marks the
+  * formats whose raw longitude values are west positive (NTv1/NTv2/
+  * CTable2: the loaders normalize the arrays to east positive, but the
+  * reference's raw value path, pj_hgrid_value, returns the convention on
+  * disk; GeoTIFF grids are east positive either way, grids.cpp:2449-2462).
+  * Each operation keeps its own interpolation and edge rules. */
+final class Grid(val name: String, val width: Int, val height: Int,
+                 val extent: GridExtent,
+                 val channels: Array[Array[Float]],
+                 val meta: Map[(Int, String), String] = Map.empty,
+                 val noData: Option[Float] = None,
+                 var children: List[Grid] = Nil,
+                 val isNull: Boolean = false,
+                 val rawWestPositive: Boolean = false) extends Serializable {
+  def item(key: String, sample: Int = -1): String = meta.getOrElse((sample, key), "")
+  def gridType: String = item("TYPE")
+
+  /** The channel described as `description`, or `default`. */
+  def channelOf(description: String, default: Int = -1): Int =
+    Grid.channelOf(meta, channels.length, description, default)
+
+  def isNodata(v: Float): Boolean =
+    v.isNaN || (noData match { case Some(nd) => v == nd; case None => false })
+
   /** reference: HorizontalShiftGrid::gridAt (grids.cpp:2762-2773) —
-    * descend into the finest sub-grid containing the point. */
-  def gridAt(lam: Double, phi: Double): HGrid = {
+    * descend into the finest sub-grid containing the point, its extent
+    * widened by `relTol` of its resolution. */
+  def gridAt(x: Double, y: Double, relTol: Double): Grid = {
     var cs = children
     while (cs.nonEmpty) {
       val c = cs.head
-      val eps = (c.extent.resX + c.extent.resY) * Grids.RelTol
-      if (c.extent.containsPoint(lam, phi, eps)) return c.gridAt(lam, phi)
+      val eps = (c.extent.resX + c.extent.resY) * relTol
+      if (c.extent.containsPoint(x, y, eps)) return c.gridAt(x, y, relTol)
       cs = cs.tail
     }
     this
   }
 }
 
-/** One vertical (geoid/offset) grid; `values` raw as stored (meters after
-  * the op's multiplier is applied). */
-final class VGrid(val name: String, val width: Int, val height: Int,
-                  val extent: GridExtent, val values: Array[Float],
-                  var children: List[VGrid] = Nil,
-                  val isNull: Boolean = false,
-                  val nodataOverride: Option[Float] = None) extends Serializable {
-  def gridAt(lam: Double, phi: Double): VGrid = {
-    var cs = children
-    while (cs.nonEmpty) {
-      val c = cs.head
-      if (c.extent.containsPoint(lam, phi, 0.0)) return c.gridAt(lam, phi)
-      cs = cs.tail
-    }
-    this
+object Grid {
+  /** The last of `count` channels whose DESCRIPTION item is
+    * `description` (the reference's loops keep the last match), or
+    * `default`. */
+  def channelOf(meta: Map[(Int, String), String], count: Int, description: String,
+                default: Int): Int = {
+    var i = count - 1
+    while (i >= 0 && meta.getOrElse((i, "DESCRIPTION"), "") != description) i -= 1
+    if (i < 0) default else i
   }
-  /** reference: GTXVerticalShiftGrid::isNodata (grids.cpp:359-366) for
-    * GTX grids; GeoTIFF grids carry an explicit nodata value
-    * (GTiffVGrid::isNodata). */
-  def isNodata(v: Float, multiplier: Double): Boolean =
-    nodataOverride match {
-      case Some(nd) => v == nd || v.isNaN
-      case None =>
-        v * multiplier > 1000 || v * multiplier < -1000 || v == -88.88880f
-    }
 }
 
 /** Loader + per-JVM registry.  Grid names resolve against
@@ -230,32 +240,37 @@ object Grids {
     resolve(name).getOrElse(throw AssetMissing(s"grid $name", name, searchDirs))
 
   def available(name: String): Boolean =
-    name == "null" || resolve(name).exists(p => readable(p))
+    name == "null" || resolve(name).exists { p =>
+      val head = new Array[Byte](16)
+      val in = Files.newInputStream(p)
+      try in.readNBytes(head, 0, head.length) finally in.close()
+      sniff(p, head) != Format.Unknown
+    }
 
-  private def readable(p: Path): Boolean = {
-    val magic = new Array[Byte](16)
-    val in = Files.newInputStream(p)
-    try { in.read(magic) } finally in.close()
-    val s = new String(magic, "ISO-8859-1")
-    s.startsWith("NUM_OREC") || s.startsWith("CTABLE V2") ||
-      s.startsWith("HEADER") || s.startsWith("II") || s.startsWith("MM") ||
-      p.toString.toLowerCase.endsWith(".gtx")
+  private object Format extends Enumeration {
+    val Ntv2, Ntv1, Ctable2, Tiff, Gtx, Unknown = Value
   }
 
-  private val hCache = TrieMap.empty[String, List[HGrid]]
-  private val vCache = TrieMap.empty[String, List[VGrid]]
-  private val gCache = TrieMap.empty[String, List[GenGrid]]
+  /** The one format sniff: the magic in the file's first bytes, else the
+    * `.gtx` extension (GTX has no magic). */
+  private def sniff(p: Path, head: Array[Byte]): Format.Value = {
+    val s = new String(head, 0, math.min(16, head.length), "ISO-8859-1")
+    if (s.startsWith("NUM_OREC")) Format.Ntv2
+    else if (s.startsWith("HEADER")) Format.Ntv1
+    else if (s.startsWith("CTABLE V2")) Format.Ctable2
+    else if (s.startsWith("II") || s.startsWith("MM")) Format.Tiff
+    else if (p.toString.toLowerCase.endsWith(".gtx")) Format.Gtx
+    else Format.Unknown
+  }
 
-  val nullHGrid: HGrid = new HGrid("null", 3, 3,
+  /** Loaded grid lists keyed by (how the file was read, its path): one
+    * `.tif` loads differently as an hgrid, a vgrid and a generic grid. */
+  private val cache = TrieMap.empty[(Char, String), List[Grid]]
+
+  /** The `+grids=null` grid: any point, zero shift. */
+  val nullGrid: Grid = new Grid("null", 3, 3,
     GridExtent(-math.Pi, -math.Pi / 2, math.Pi, math.Pi / 2, math.Pi, math.Pi / 2),
-    new Array[Float](9), new Array[Float](9), Nil, isNull = true)
-  val nullVGrid: VGrid = new VGrid("null", 3, 3,
-    GridExtent(-math.Pi, -math.Pi / 2, math.Pi, math.Pi / 2, math.Pi, math.Pi / 2),
-    new Array[Float](9), Nil, isNull = true)
-  val nullGenGrid: GenGrid = new GenGrid("null", 3, 3,
-    GridExtent(-math.Pi, -math.Pi / 2, math.Pi, math.Pi / 2, math.Pi, math.Pi / 2),
-    Array(new Array[Float](9)), Map.empty, hasNodata = false, 0.0f,
-    Nil, isNull = true)
+    Array.empty, isNull = true)
 
   /** Load the comma-separated `+grids=` spec ('@' prefix = optional).
     * Returns one entry per loaded file (each a list of top-level grids).
@@ -264,51 +279,46 @@ object Grids {
     * is skipped, as the reference skips one that fails to open (corrupt
     * files throw more than BadGrid: buffer reads past EOF, bad numeric
     * attributes). */
-  private def gridSets[G](spec: String, nul: G, cache: TrieMap[String, List[G]],
-                          load: Path => List[G]): List[List[G]] =
+  private def gridSets(spec: String, kind: Char, load: Path => List[Grid]): List[List[Grid]] =
     spec.split(',').toList.flatMap { raw =>
       val optional = raw.startsWith("@")
       val name = if (optional) raw.substring(1) else raw
-      if (name == "null") Some(List(nul))
+      if (name == "null") Some(List(nullGrid))
       else
-        try { val p = locate(name); Some(cache.getOrElseUpdate(p.toString, load(p))) }
+        try { val p = locate(name); Some(cache.getOrElseUpdate((kind, p.toString), load(p))) }
         catch { case scala.util.control.NonFatal(_) if optional => None }
     }
 
-  def hgridSets(spec: String): List[List[HGrid]] = gridSets(spec, nullHGrid, hCache, loadH)
+  /** Horizontal grids for `hgridshift`, `+nadgrids` and `deformation
+    * +xy_grids`: channels (longitude, latitude) shift. */
+  def hgridSets(spec: String): List[List[Grid]] = gridSets(spec, 'h', p => {
+    val bytes = Files.readAllBytes(p)
+    val name = p.getFileName.toString
+    sniff(p, bytes) match {
+      case Format.Ntv2 => loadNtv2(name, bytes)
+      case Format.Ntv1 => List(loadNtv1(name, bytes))
+      case Format.Ctable2 => List(loadCtable2(name, bytes))
+      case Format.Tiff => TiffGrids.loadH(name, bytes)
+      case _ => throw BadGrid(s"unrecognized horizontal grid format: $p")
+    }
+  })
 
-  def vgridSets(spec: String): List[List[VGrid]] = gridSets(spec, nullVGrid, vCache, loadV)
+  /** Vertical grids for `vgridshift`, `+geoidgrids` and `deformation
+    * +z_grids`: one offset channel. */
+  def vgridSets(spec: String): List[List[Grid]] = gridSets(spec, 'v', p => {
+    val bytes = Files.readAllBytes(p)
+    val name = p.getFileName.toString
+    sniff(p, bytes) match {
+      case Format.Tiff => TiffGrids.loadV(name, bytes)
+      case Format.Gtx => List(loadGtx(name, bytes))
+      case _ => throw BadGrid(s"unrecognized vertical grid format: $p")
+    }
+  })
 
   /** Generic grids for the unified `gridshift` op (and `deformation`,
-    * `xyzgridshift`, `defmodel` components). */
-  def genericGridSets(spec: String): List[List[GenGrid]] =
-    gridSets(spec, nullGenGrid, gCache,
-      p => TiffGrids.loadGeneric(p.getFileName.toString, loadBytes(p)))
-
-  private def loadBytes(p: Path): Array[Byte] = Files.readAllBytes(p)
-
-  private def loadH(p: Path): List[HGrid] = {
-    val bytes = loadBytes(p)
-    val magic = new String(bytes.take(16), "ISO-8859-1")
-    if (magic.startsWith("NUM_OREC")) loadNtv2(p.getFileName.toString, bytes)
-    else if (magic.startsWith("HEADER"))
-      List(loadNtv1(p.getFileName.toString, bytes))
-    else if (magic.startsWith("CTABLE V2"))
-      List(loadCtable2(p.getFileName.toString, bytes))
-    else if (magic.startsWith("II") || magic.startsWith("MM"))
-      TiffGrids.loadH(p.getFileName.toString, bytes)
-    else throw BadGrid(s"unrecognized horizontal grid format: $p")
-  }
-
-  private def loadV(p: Path): List[VGrid] = {
-    val n = p.toString.toLowerCase
-    val bytes = loadBytes(p)
-    val magic = new String(bytes.take(4), "ISO-8859-1")
-    if (magic.startsWith("II") || magic.startsWith("MM"))
-      TiffGrids.loadV(p.getFileName.toString, bytes)
-    else if (n.endsWith(".gtx")) List(loadGtx(p.getFileName.toString, bytes))
-    else throw BadGrid(s"unrecognized vertical grid format: $p")
-  }
+    * `xyzgridshift`, `defmodel` components): every channel. */
+  def genericGridSets(spec: String): List[List[Grid]] =
+    gridSets(spec, 'g', p => TiffGrids.loadGeneric(p.getFileName.toString, Files.readAllBytes(p)))
 
   /** NTv2 `.gsb` (reference: NTv2GridSet::open, grids.cpp:2184-2345;
     * NTv2Grid::valueAt, :2123-2177).  Header = 11 records of 16 bytes;
@@ -317,7 +327,7 @@ object Grids {
     * longitude positive west) and GS_COUNT at record 10; data = 4 floats
     * per node (lat shift, lon shift, lat err, lon err) in arc-seconds,
     * rows south→north, columns east→west. */
-  private def loadNtv2(fileName: String, bytes: Array[Byte]): List[HGrid] = {
+  private def loadNtv2(fileName: String, bytes: Array[Byte]): List[Grid] = {
     if (bytes.length < 11 * 16) throw BadGrid(s"$fileName: truncated NTv2")
     // endianness: NUM_OREC value must be 11; detect which byte order makes it so
     val little = bytes(8) == 11
@@ -329,8 +339,8 @@ object Grids {
     if (numSub <= 0 || numSub > 100000) throw BadGrid(s"$fileName: bad NUM_FILE")
 
     var off = 11 * 16
-    val top = scala.collection.mutable.ListBuffer.empty[HGrid]
-    val byName = scala.collection.mutable.Map.empty[String, HGrid]
+    val top = scala.collection.mutable.ListBuffer.empty[Grid]
+    val byName = scala.collection.mutable.Map.empty[String, Grid]
     var sub = 0
     while (sub < numSub) {
       if (new String(bytes, off, 8, "ISO-8859-1") != "SUB_NAME")
@@ -372,7 +382,8 @@ object Grids {
       }
       off += gsCount * 16
 
-      val g = new HGrid(s"$fileName, $gridName", cols, rows, ext, lon, lat)
+      val g = new Grid(s"$fileName, $gridName", cols, rows, ext, Array(lon, lat),
+        rawWestPositive = true)
       byName.get(parentName) match {
         case Some(parent) => parent.children = parent.children :+ g
         case None         => top += g
@@ -387,7 +398,7 @@ object Grids {
     * big-endian header with degree extents (longitude positive west),
     * data = big-endian double pairs (lat, lon shift in arc-seconds,
     * longitude positive west), rows south->north, columns east->west. */
-  private def loadNtv1(fileName: String, bytes: Array[Byte]): HGrid = {
+  private def loadNtv1(fileName: String, bytes: Array[Byte]): Grid = {
     if (bytes.length < 192) throw BadGrid(s"$fileName: truncated NTv1")
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
     if (buf.getInt(8) != 12) throw BadGrid(s"$fileName: wrong NTv1 record count")
@@ -414,7 +425,7 @@ object Grids {
       }
       y += 1
     }
-    new HGrid(fileName, cols, rows, ext, lon, lat)
+    new Grid(fileName, cols, rows, ext, Array(lon, lat), rawWestPositive = true)
   }
 
   /** CTable2 (reference: CTable2Grid::open, grids.cpp:1977-2030).  160-byte
@@ -422,7 +433,7 @@ object Grids {
     * (west, south, resX, resY — radians) and 2 int32 at 128 (width,
     * height); data = float pairs (lonShift, latShift) in radians, lon
     * positive west, row-major from the south-west corner. */
-  private def loadCtable2(fileName: String, bytes: Array[Byte]): HGrid = {
+  private def loadCtable2(fileName: String, bytes: Array[Byte]): Grid = {
     if (bytes.length < 160) throw BadGrid(s"$fileName: truncated CTable2")
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val west = buf.getDouble(96)
@@ -447,14 +458,14 @@ object Grids {
       lat(i) = buf.getFloat(160 + 8 * i + 4)
       i += 1
     }
-    new HGrid(fileName, width, height, ext, lon, lat)
+    new Grid(fileName, width, height, ext, Array(lon, lat), rawWestPositive = true)
   }
 
   /** GTX vertical grid (reference: GTXVerticalShiftGrid::open,
     * grids.cpp:246-316).  40-byte big-endian header: 4 doubles (south
     * origin, west origin, resY, resX — degrees) + 2 int32 (rows, cols);
     * data = big-endian float32 row-major from the south. */
-  private def loadGtx(fileName: String, bytes: Array[Byte]): VGrid = {
+  private def loadGtx(fileName: String, bytes: Array[Byte]): Grid = {
     if (bytes.length < 40) throw BadGrid(s"$fileName: truncated GTX")
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
     val yorigin = buf.getDouble(0)
@@ -477,6 +488,6 @@ object Grids {
     var i = 0
     val n = cols * rows
     while (i < n) { vals(i) = buf.getFloat(40 + 4 * i); i += 1 }
-    new VGrid(fileName, cols, rows, ext, vals)
+    new Grid(fileName, cols, rows, ext, Array(vals))
   }
 }

@@ -14,33 +14,26 @@ object GridApply {
   private final val MaxIter = 10
   private final val Tol = 1e-12
 
-  /** find the grid containing the point across the ordered list of grid
-    * sets (reference: findGrid + HorizontalShiftGridSet::gridAt,
-    * grids.cpp:2776-2790, 3253-3263) */
-  def findH(sets: List[List[HGrid]], lam: Double, phi: Double): HGrid = {
-    var ss = sets
-    while (ss.nonEmpty) {
-      var gs = ss.head
-      while (gs.nonEmpty) {
-        val g = gs.head
-        if (g.isNull) return g
-        val eps = (g.extent.resX + g.extent.resY) * Grids.RelTol
-        if (g.extent.containsPoint(lam, phi, eps)) return g.gridAt(lam, phi)
-        gs = gs.tail
-      }
-      ss = ss.tail
-    }
-    null
-  }
+  /** Accepts every grid: the [[find]] filter of all but `gridshift`. */
+  final val AnyGrid: Grid => Boolean = _ => true
 
-  def findV(sets: List[List[VGrid]], lam: Double, phi: Double): VGrid = {
+  /** The finest grid containing the point across the ordered list of grid
+    * sets, or null; a null grid matches anywhere.  Extents widen by
+    * `relTol` of their resolution (hgridshift's REL_TOLERANCE, 0 for the
+    * others), and only top-level grids that `accept` takes are searched
+    * (gridshift's TYPE filter).  reference: findGrid +
+    * HorizontalShiftGridSet::gridAt (grids.cpp:2776-2790, 3253-3263),
+    * pj_find_generic_grid (:3828-3839). */
+  def find(sets: List[List[Grid]], x: Double, y: Double, relTol: Double,
+           accept: Grid => Boolean): Grid = {
     var ss = sets
     while (ss.nonEmpty) {
       var gs = ss.head
       while (gs.nonEmpty) {
         val g = gs.head
         if (g.isNull) return g
-        if (g.extent.containsPoint(lam, phi, 0.0)) return g.gridAt(lam, phi)
+        val eps = (g.extent.resX + g.extent.resY) * relTol
+        if (accept(g) && g.extent.containsPoint(x, y, eps)) return g.gridAt(x, y, relTol)
         gs = gs.tail
       }
       ss = ss.tail
@@ -52,7 +45,7 @@ object GridApply {
     * south-west origin; returns (lonShift, latShift) in radians or null
     * outside the grid (reference: pj_hgrid_interpolate,
     * grids.cpp:3325-3395). */
-  private def interpolate(g: HGrid, lamN: Double, phiN: Double): Array[Double] = {
+  private def interpolate(g: Grid, lamN: Double, phiN: Double): Array[Double] = {
     var tl = lamN / g.extent.resX
     var il = if (tl.isNaN) 0 else math.floor(tl).toInt
     var tp = phiN / g.extent.resY
@@ -78,19 +71,19 @@ object GridApply {
     val m11 = fl * fp
     val m01 = (1.0 - fl) * fp
     val m00 = (1.0 - fl) * (1.0 - fp)
+    val lon = g.channels(0)
+    val lat = g.channels(1)
     Array(
-      m00 * g.lonShift(i00) + m10 * g.lonShift(i10) +
-        m01 * g.lonShift(i01) + m11 * g.lonShift(i11),
-      m00 * g.latShift(i00) + m10 * g.latShift(i10) +
-        m01 * g.latShift(i01) + m11 * g.latShift(i11))
+      m00 * lon(i00) + m10 * lon(i10) + m01 * lon(i01) + m11 * lon(i11),
+      m00 * lat(i00) + m10 * lat(i10) + m01 * lat(i01) + m11 * lat(i11))
   }
 
   /** Apply the horizontal shift; returns (lam, phi) or null on error
     * (reference: pj_hgrid_apply + pj_hgrid_apply_internal,
     * grids.cpp:3400-3540). */
-  def applyH(sets: List[List[HGrid]], lam: Double, phi: Double,
+  def applyH(sets: List[List[Grid]], lam: Double, phi: Double,
              forward: Boolean): Array[Double] = {
-    var grid = findH(sets, lam, phi)
+    var grid = find(sets, lam, phi, Grids.RelTol, AnyGrid)
     if (grid == null) return null
     if (grid.isNull) return Array(lam, phi)
 
@@ -119,7 +112,7 @@ object GridApply {
         // estimate, or settle for the first approximation
         val lpLam = tLam + ext.west
         val lpPhi = tPhi + ext.south
-        val ng = findH(sets, lpLam, lpPhi)
+        val ng = find(sets, lpLam, lpPhi, Grids.RelTol, AnyGrid)
         if (ng == null || (ng eq grid) || ng.isNull) {
           // settle for the first approximation (reference logs
           // "using first approximation" here and carries on)
@@ -152,23 +145,6 @@ object GridApply {
     Array(M.adjlon(tLam + ext.west), tPhi + ext.south)
   }
 
-  /** find the generic grid containing the point (reference:
-    * pj_find_generic_grid, grids.cpp:3828-3839). */
-  def findGeneric(sets: List[List[GenGrid]], lam: Double, phi: Double): GenGrid = {
-    var ss = sets
-    while (ss.nonEmpty) {
-      var gs = ss.head
-      while (gs.nonEmpty) {
-        val g = gs.head
-        if (g.isNull) return g
-        if (g.extent.containsPoint(lam, phi, 0.0)) return g.gridAt(lam, phi)
-        gs = gs.tail
-      }
-      ss = ss.tail
-    }
-    null
-  }
-
   /** Shared 3-channel bilinear sampler over a generic-grid list: channel
     * indices resolved by description (positional 0/1/2 defaults), a unit
     * check on the first channel, longitude wrap, edge-clamped bilinear,
@@ -176,20 +152,16 @@ object GridApply {
     * xyzgridshift translations and the deformation velocities (reference:
     * the 3-sample bilinear helper, grids.cpp:3845-3922).  Null on error;
     * (0,0,0) on a null grid. */
-  def threeChannelBilinear(sets: List[List[GenGrid]], lam: Double, phi: Double,
+  def threeChannelBilinear(sets: List[List[Grid]], lam: Double, phi: Double,
                            descA: String, descB: String, descC: String,
                            expectedUnit: String, scale: Double): Array[Double] = {
-    val grid = findGeneric(sets, lam, phi)
+    val grid = find(sets, lam, phi, 0.0, AnyGrid)
     if (grid == null) return null
     if (grid.isNull) return Array(0.0, 0.0, 0.0)
-    if (grid.samples.length < 3) return null
-    var sA = 0; var sB = 1; var sC = 2
-    for (i <- grid.samples.indices) {
-      val d = grid.item("DESCRIPTION", i)
-      if (d == descA) sA = i
-      else if (d == descB) sB = i
-      else if (d == descC) sC = i
-    }
+    if (grid.channels.length < 3) return null
+    val sA = grid.channelOf(descA, 0)
+    val sB = grid.channelOf(descB, 1)
+    val sC = grid.channelOf(descC, 2)
     val unit = grid.item("UNITTYPE", sA)
     if (unit.nonEmpty && unit != expectedUnit) return null
     val ext = grid.extent
@@ -204,7 +176,7 @@ object GridApply {
     val ix2 = math.min(ix + 1, grid.width - 1)
     val iy2 = math.min(iy + 1, grid.height - 1)
     def s(idx: Int, xx: Int, yy: Int): Double =
-      grid.samples(idx)(yy * grid.width + xx)
+      grid.channels(idx)(yy * grid.width + xx)
     val fl = gx - ix
     val fp = gy - iy
     val m10 = fl * (1.0 - fp)
@@ -222,8 +194,8 @@ object GridApply {
     * the west-positive compensation (compensateNTConvention = false); the
     * loaders bake that negation into the arrays per format, so it is
     * undone here exactly where the raw convention requires it. */
-  def hgridValue(sets: List[List[HGrid]], lam: Double, phi: Double): Array[Double] = {
-    val grid = findH(sets, lam, phi)
+  def hgridValue(sets: List[List[Grid]], lam: Double, phi: Double): Array[Double] = {
+    val grid = find(sets, lam, phi, Grids.RelTol, AnyGrid)
     if (grid == null) return null
     if (grid.isNull) return Array(0.0, 0.0)
     val ext = grid.extent
@@ -242,11 +214,14 @@ object GridApply {
 
   /** Sample the vertical grid value (reference: read_vgrid_value,
     * grids.cpp — bilinear with per-corner nodata weighting and
-    * full-world longitude wrap); NaN on error/outside. */
-  def vgridValue(sets: List[List[VGrid]], lam: Double, phi: Double,
+    * full-world longitude wrap); NaN on error/outside.  A corner is
+    * nodata by the grid's own nodata value when it has one (GeoTIFF,
+    * GTiffVGrid::isNodata), else by the GTX rule (|v·multiplier| > 1000
+    * or −88.8888, GTXVerticalShiftGrid::isNodata, grids.cpp:359-366). */
+  def vgridValue(sets: List[List[Grid]], lam: Double, phi: Double,
                  vmultiplier: Double): Double = {
     if (phi.isNaN || lam.isNaN) return Double.NaN
-    val grid = findV(sets, lam, phi)
+    val grid = find(sets, lam, phi, 0.0, AnyGrid)
     if (grid == null) return Double.NaN
     if (grid.isNull) return 0.0
     val ext = grid.extent
@@ -275,19 +250,23 @@ object GridApply {
     var iy2 = iy + 1
     if (iy2 >= grid.height) iy2 = grid.height - 1
 
-    val va = grid.values(iy * grid.width + ix)
-    val vb = grid.values(iy * grid.width + ix2)
-    val vc = grid.values(iy2 * grid.width + ix)
-    val vd = grid.values(iy2 * grid.width + ix2)
+    val values = grid.channels(0)
+    val va = values(iy * grid.width + ix)
+    val vb = values(iy * grid.width + ix2)
+    val vc = values(iy2 * grid.width + ix)
+    val vd = values(iy2 * grid.width + ix2)
     val gxy = gx * gy
     val wa = 1.0 - gx - gy + gxy
     val wb = gx - gxy
     val wc = gy - gxy
     val wd = gxy
-    val aOk = !grid.isNodata(va, vmultiplier)
-    val bOk = !grid.isNodata(vb, vmultiplier)
-    val cOk = !grid.isNodata(vc, vmultiplier)
-    val dOk = !grid.isNodata(vd, vmultiplier)
+    def ok(v: Float): Boolean =
+      if (grid.noData.isDefined) !grid.isNodata(v)
+      else !(v * vmultiplier > 1000 || v * vmultiplier < -1000 || v == -88.88880f)
+    val aOk = ok(va)
+    val bOk = ok(vb)
+    val cOk = ok(vc)
+    val dOk = ok(vd)
     val nOk = (if (aOk) 1 else 0) + (if (bOk) 1 else 0) +
       (if (cOk) 1 else 0) + (if (dOk) 1 else 0)
     val value =
@@ -309,7 +288,7 @@ object GridApply {
   * (reference: /root/reference/src/transformations/hgridshift.cpp:11-200).
   * Optional time gating via `+t_epoch`/`+t_final` applies the shift only
   * to observations older than the epoch. */
-final case class HgridshiftKernel(grids: List[List[HGrid]],
+final case class HgridshiftKernel(grids: List[List[Grid]],
                                   tEpoch: Double = 0.0,
                                   tFinal: Double = 0.0) extends PointKernel {
   override def left: IOUnits.Value = IOUnits.Radians
@@ -334,7 +313,7 @@ final case class HgridshiftKernel(grids: List[List[HGrid]],
   * (reference: /root/reference/src/transformations/vgridshift.cpp:11-240).
   * The historical forward direction subtracts the grid value, i.e. the
   * default `+multiplier` is -1. */
-final case class VgridshiftKernel(grids: List[List[VGrid]],
+final case class VgridshiftKernel(grids: List[List[Grid]],
                                   multiplier: Double = -1.0,
                                   tEpoch: Double = 0.0,
                                   tFinal: Double = 0.0) extends PointKernel {

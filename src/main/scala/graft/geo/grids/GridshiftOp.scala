@@ -3,37 +3,6 @@ package graft.geo.grids
 import graft.geo.kernels.{IOUnits, PointKernel}
 import graft.geo.math.{ProjMath => M}
 
-/** Generic multi-type grid — the reference's GenericShiftGrid for the
-  * unified `gridshift` operation (/root/reference/src/grids.cpp:
-  * 2844-3060): all sample channels retained with their GDAL metadata;
-  * the TYPE item (with first-grid fallback) drives how channels are
-  * applied. */
-final class GenGrid(val name: String, val width: Int, val height: Int,
-                    val extent: GridExtent,
-                    val samples: Array[Array[Float]],
-                    val meta: Map[(Int, String), String],
-                    val hasNodata: Boolean, val noData: Float,
-                    var children: List[GenGrid] = Nil,
-                    val isNull: Boolean = false) extends Serializable {
-  /** metadata with fallback to the file's first grid (GTiffGenericGrid::
-    * setFirstGrid behaviour). */
-  var firstMeta: Map[(Int, String), String] = Map.empty
-  def item(key: String, sample: Int = -1): String =
-    meta.getOrElse((sample, key), firstMeta.getOrElse((sample, key), ""))
-  def gridType: String = item("TYPE")
-  def isNodata(v: Float): Boolean = (hasNodata && v == noData) || v.isNaN
-
-  def gridAt(x: Double, y: Double): GenGrid = {
-    var cs = children
-    while (cs.nonEmpty) {
-      val c = cs.head
-      if (c.extent.containsPoint(x, y, 0.0)) return c.gridAt(x, y)
-      cs = cs.tail
-    }
-    this
-  }
-}
-
 /** `proj=gridshift` — unified GeoTIFF grid shift (reference:
   * /root/reference/src/transformations/gridshift.cpp:48-1028).
   * Handles HORIZONTAL_OFFSET (+ aux vertical grids),
@@ -41,7 +10,7 @@ final class GenGrid(val name: String, val width: Int, val height: Int,
   * biquadratic (NOAA NCAT qterp) interpolation, projected-CRS grids
   * (easting/northing offsets in metres) and constant offsets.
   */
-final case class GridshiftKernel(gridSets: List[List[GenGrid]],
+final case class GridshiftKernel(gridSets: List[List[Grid]],
                                  interpolationOverride: String = "",
                                  noZTransform: Boolean = false)
     extends PointKernel {
@@ -109,7 +78,7 @@ final case class GridshiftKernel(gridSets: List[List[GenGrid]],
   private final case class Info(idxX: Int, idxY: Int, idxZ: Int,
                                 eastingNorthing: Boolean, bilinear: Boolean)
   @transient private lazy val infoCache =
-    new java.util.concurrent.ConcurrentHashMap[GenGrid, Info]()
+    new java.util.concurrent.ConcurrentHashMap[Grid, Info]()
 
   /** Sentinel for a grid whose channels fail validation: the reference's
     * grid_interpolate logs and fails only the POINT (HUGE_VAL,
@@ -118,7 +87,7 @@ final case class GridshiftKernel(gridSets: List[List[GenGrid]],
     * every row since only successes were cached. */
   private val BadInfo = Info(-2, -2, -2, eastingNorthing = false, bilinear = true)
 
-  private def infoOf(g: GenGrid, typ: String): Info = {
+  private def infoOf(g: Grid, typ: String): Info = {
     val cached = infoCache.get(g)
     if (cached != null) return cached
     try infoOfImpl(g, typ)
@@ -129,38 +98,22 @@ final case class GridshiftKernel(gridSets: List[List[GenGrid]],
     }
   }
 
-  private def infoOfImpl(g: GenGrid, typ: String): Info = {
+  private def infoOfImpl(g: Grid, typ: String): Info = {
     val projected = !g.extent.geographic
-    var idxX = -1; var idxY = -1; var idxZ = -1
-    var eastingNorthing = false
-    for (i <- g.samples.indices) {
-      val desc = g.item("DESCRIPTION", i)
-      val unit = g.item("UNITTYPE", i)
-      if (!projected && desc == "latitude_offset") {
-        idxY = i
-        if (unit.nonEmpty && unit != "arc-second")
-          throw Grids.BadGrid("only unit=arc-second handled")
-      } else if (!projected && desc == "longitude_offset") {
-        idxX = i
-        if (unit.nonEmpty && unit != "arc-second")
-          throw Grids.BadGrid("only unit=arc-second handled")
-      } else if (projected && desc == "easting_offset") {
-        eastingNorthing = true; idxX = i
-        if (unit.nonEmpty && unit != "metre")
-          throw Grids.BadGrid("only unit=metre handled")
-      } else if (projected && desc == "northing_offset") {
-        eastingNorthing = true; idxY = i
-        if (unit.nonEmpty && unit != "metre")
-          throw Grids.BadGrid("only unit=metre handled")
-      } else if (desc == "ellipsoidal_height_offset" ||
-                 desc == "geoid_undulation" || desc == "hydroid_height" ||
-                 desc == "vertical_offset") {
-        idxZ = i
-        if (unit.nonEmpty && unit != "metre")
-          throw Grids.BadGrid("only unit=metre handled")
-      }
+    def channel(description: String, unit: String): Int = {
+      val i = g.channelOf(description)
+      val u = if (i < 0) "" else g.item("UNITTYPE", i)
+      if (u.nonEmpty && u != unit) throw Grids.BadGrid(s"only unit=$unit handled")
+      i
     }
-    if (g.samples.length >= 2 && idxY < 0 && idxX < 0 &&
+    var idxX = channel(if (projected) "easting_offset" else "longitude_offset",
+      if (projected) "metre" else "arc-second")
+    var idxY = channel(if (projected) "northing_offset" else "latitude_offset",
+      if (projected) "metre" else "arc-second")
+    var eastingNorthing = projected && (idxX >= 0 || idxY >= 0)
+    val idxZ = Seq("ellipsoidal_height_offset", "geoid_undulation", "hydroid_height",
+      "vertical_offset").map(channel(_, "metre")).max
+    if (g.channels.length >= 2 && idxY < 0 && idxX < 0 &&
         typ == "HORIZONTAL_OFFSET") {
       if (projected) { eastingNorthing = true; idxX = 0; idxY = 1 }
       else { idxX = 1; idxY = 0 } // lat, lon order when metadata lacking
@@ -185,26 +138,10 @@ final case class GridshiftKernel(gridSets: List[List[GenGrid]],
     info
   }
 
-  private def findGrid(typ: String, x: Double, y: Double): GenGrid = {
-    var ss = gridSets
-    while (ss.nonEmpty) {
-      var gs = ss.head
-      while (gs.nonEmpty) {
-        val g = gs.head
-        if (g.isNull) return g
-        if (g.gridType == typ && g.extent.containsPoint(x, y, 0.0))
-          return g.gridAt(x, y)
-        gs = gs.tail
-      }
-      ss = ss.tail
-    }
-    null
-  }
-
   /** (shiftX, shiftY, shiftZ, biquadraticUsed) or null outside/nodata —
     * port of grid_interpolate (gridshift.cpp:240-580). */
   private def interpolate(typ: String, x: Double, y: Double,
-                          g: GenGrid): Array[Double] = {
+                          g: Grid): Array[Double] = {
     val info = infoOf(g, typ)
     if (info eq BadInfo) return null // per-point failure, like the reference
     val ext = g.extent
@@ -226,7 +163,7 @@ final case class GridshiftKernel(gridSets: List[List[GenGrid]],
       if (iy + 1 == g.height && fy < edge) { iy -= 1; fy = 1.0 } else return null
     }
 
-    def sample(idx: Int, xx: Int, yy: Int): Float = g.samples(idx)(yy * g.width + xx)
+    def sample(idx: Int, xx: Int, yy: Int): Float = g.channels(idx)(yy * g.width + xx)
     def anyNodata(idx: Int, x0: Int, y0: Int, n: Int): Boolean = {
       if (idx < 0) return false
       var j = 0
@@ -293,7 +230,7 @@ final case class GridshiftKernel(gridSets: List[List[GenGrid]],
     Array(sx, sy, sz, if (biquadratic) 1.0 else 0.0)
   }
 
-  private def normalizeX(g: GenGrid, x: Double): Double = {
+  private def normalizeX(g: Grid, x: Double): Double = {
     val ext = g.extent
     if (!ext.geographic) x
     else {
@@ -308,7 +245,7 @@ final case class GridshiftKernel(gridSets: List[List[GenGrid]],
     * (x, y, z) or null. */
   private def applyInternal(typ: String, verticalOnly: Boolean,
                             inX: Double, inY: Double, inZ: Double,
-                            forward: Boolean, g0: GenGrid): Array[Double] = {
+                            forward: Boolean, g0: Grid): Array[Double] = {
     var grid = g0
     var normX = normalizeX(grid, inX)
     var shift = interpolate(typ, normX, inY, grid)
@@ -326,7 +263,7 @@ final case class GridshiftKernel(gridSets: List[List[GenGrid]],
       while (continue) {
         val del = interpolate(typ, gx, gy, grid)
         if (del == null) {
-          val ng = findGrid(typ, gx, gy)
+          val ng = GridApply.find(gridSets, gx, gy, 0.0, _.gridType == typ)
           if (ng == null || (ng eq grid) || ng.isNull) {
             continue = false
           } else {
@@ -356,10 +293,10 @@ final case class GridshiftKernel(gridSets: List[List[GenGrid]],
     if (!forward) { x -= offsetX; y -= offsetY }
     var typ = mainType
     var foundGeog3D = false
-    var grid = findGrid(typ, x, y)
+    var grid = GridApply.find(gridSets, x, y, 0.0, _.gridType == typ)
     if (grid == null && mainIsGeog3D && hasHorizontal) {
       typ = "HORIZONTAL_OFFSET"
-      grid = findGrid(typ, x, y)
+      grid = GridApply.find(gridSets, x, y, 0.0, _.gridType == typ)
     } else if (grid != null && mainIsGeog3D) foundGeog3D = true
     if (grid == null) return false
     var out: Array[Double] = null
@@ -370,7 +307,7 @@ final case class GridshiftKernel(gridSets: List[List[GenGrid]],
       if (out == null) return false
     }
     if (!foundGeog3D && auxType.nonEmpty) {
-      val g2 = findGrid(auxType, out(0), out(1))
+      val g2 = GridApply.find(gridSets, out(0), out(1), 0.0, _.gridType == auxType)
       if (g2 == null) return false
       if (!g2.isNull) {
         out = applyInternal(auxType, verticalOnly = true,

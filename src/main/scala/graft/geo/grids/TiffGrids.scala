@@ -8,9 +8,9 @@ import scala.collection.mutable
 /** GeoTIFF shift-grid reader — the engine's equivalent of the reference's
   * libtiff-backed grid path (/root/reference/src/grids.cpp:388-1610 for
   * the raster layer, :2346-2660 for the horizontal wrapper, :1420-1610
-  * for the vertical one).  Grids are materialized into the same
-  * [[HGrid]]/[[VGrid]] arrays the binary formats use, so all downstream
-  * interpolation/apply logic is shared.
+  * for the vertical one).  Grids are materialized into the same [[Grid]]
+  * arrays the binary formats use, so all downstream interpolation/apply
+  * logic is shared.
   *
   * Supported: classic + BigTIFF, little/big endian, strips + tiles,
   * deflate compression with horizontal (2) and floating-point (3)
@@ -236,11 +236,14 @@ object TiffGrids {
     def metadataItem(key: String, sample: Int = -1): String =
       metadata.getOrElse((sample, key), "")
 
-    val (hasNodata, noData): (Boolean, Float) = tags.get(42113) match {
-      case Some(e) =>
-        try (true, r.ascii(e).trim.toDouble.toFloat)
-        catch { case _: NumberFormatException => (false, 0.0f) }
-      case None => (false, 0.0f)
+    def channelOf(description: String): Int = Grid.channelOf(metadata, spp, description, -1)
+
+    /** Whether any sample carries a DESCRIPTION. */
+    def described: Boolean = (0 until spp).exists(metadataItem("DESCRIPTION", _).nonEmpty)
+
+    val noData: Option[Float] = tags.get(42113).flatMap { e =>
+      try Some(r.ascii(e).trim.toDouble.toFloat)
+      catch { case _: NumberFormatException => None }
     }
 
     // --- georeferencing -----------------------------------------------------
@@ -416,6 +419,8 @@ object TiffGrids {
       val scale = if (scales != null) scales(sample) else 1.0
       val offset = if (offsets != null) offsets(sample) else 0.0
       val applyScale = scales != null
+      val hasNodata = noData.isDefined
+      val nodata = noData.getOrElse(0.0f)
       var by = 0
       while (by < blocksPerCol) {
         var bx = 0
@@ -447,7 +452,7 @@ object TiffGrids {
                 case _       => bb.getDouble(o)
               }
               val v =
-                if (applyScale && !(hasNodata && raw.toFloat == noData))
+                if (applyScale && !(hasNodata && raw.toFloat == nodata))
                   (raw * scale + offset).toFloat
                 else raw.toFloat
               out(y * width + (x0 + rx)) = v
@@ -488,198 +493,126 @@ object TiffGrids {
     out.toList
   }
 
-  /** reference: GTiffHGridShiftSet::open (grids.cpp:2492-2655). */
-  def loadH(fileName: String, bytes: Array[Byte]): List[HGrid] = {
-    val top = mutable.ListBuffer.empty[HGrid]
-    val byName = mutable.Map.empty[String, HGrid]
-    var ifd = 0
-    for (g <- rasters(fileName, bytes)) {
-      val ok = g.subfileType == 0 || g.subfileType == 2 // FILETYPE_PAGE
-      if (!ok) {
+  /** The one IFD walk under the three loaders (reference: the
+    * GTiff*GridShiftSet::open loops): every full-resolution IFD goes
+    * through `toGrid` (None skips an auxiliary IFD; the flag marks IFD 0)
+    * and into the file's hierarchy.  A reduced-resolution overview is
+    * skipped; an invalid first IFD fails the file. */
+  private def walk(fileName: String, bytes: Array[Byte], kind: String)(
+      toGrid: (Raster, Boolean) => Option[Grid]): List[Grid] = {
+    val top = mutable.ListBuffer.empty[Grid]
+    val byName = mutable.Map.empty[String, Grid]
+    for ((g, ifd) <- rasters(fileName, bytes).zipWithIndex) {
+      if (g.subfileType != 0 && g.subfileType != 2) { // not FILETYPE_PAGE
         if (ifd == 0) throw BadGrid("invalid subfileType")
-        // reduced-resolution overview: skip
-      } else if (g.spp < 2) {
-        if (ifd == 0) throw BadGrid("at least 2 samples per pixel needed")
-      } else {
-        var idxLat = 0
-        var idxLon = 1
-        var anyDesc = false
-        var foundLat = false
-        var foundLon = false
-        for (i <- 0 until g.spp) {
-          val d = g.metadataItem("DESCRIPTION", i)
-          if (d.nonEmpty) anyDesc = true
-          if (d == "latitude_offset") { idxLat = i; foundLat = true }
-          else if (d == "longitude_offset") { idxLon = i; foundLon = true }
-        }
-        if (anyDesc && !foundLat && !foundLon) {
-          if (ifd == 0)
-            throw BadGrid("IFD 0 has channel descriptions but no offset channels")
-          // else: auxiliary IFD, skip
-        } else if (foundLat != foundLon) {
-          throw BadGrid("only one of latitude_offset/longitude_offset found")
-        } else {
-          var positiveEast = true
-          if (foundLon) {
-            g.metadataItem("positive_value", idxLon) match {
-              case "" | "east" => positiveEast = true
-              case "west"      => positiveEast = false
-              case o => throw BadGrid(s"unsupported positive_value $o")
-            }
-          }
-          val unitLat = g.metadataItem("UNITTYPE", idxLat)
-          val unitLon = g.metadataItem("UNITTYPE", idxLon)
-          if (unitLat != unitLon)
-            throw BadGrid("different units for lat/lon offsets")
-          val conv = unitLat match {
-            case "" | "arc-second" | "arc-seconds per year" => ArcSecToRad
-            case "radian" => 1.0
-            case "degree" => math.Pi / 180.0
-            case o => throw BadGrid(s"unsupported unit $o")
-          }
-          val latRaw = g.sampleArray(idxLat)
-          val lonRaw = g.sampleArray(idxLon)
-          val lat = new Array[Float](latRaw.length)
-          val lon = new Array[Float](lonRaw.length)
-          var i = 0
-          while (i < latRaw.length) {
-            lat(i) = (latRaw(i) * conv).toFloat
-            val l = (lonRaw(i) * conv).toFloat
-            lon(i) = if (positiveEast) l else -l
-            i += 1
-          }
-          val hg = new HGrid(g.name, g.width, g.height, g.extent, lon, lat,
-            rawWestPositive = false)
-          insertHierarchyH(hg, g.metadataItem("grid_name"),
-            g.metadataItem("parent_grid_name"), top, byName)
-        }
-      }
-      ifd += 1
+      } else toGrid(g, ifd == 0).foreach(insertHierarchy(_, g.metadataItem("grid_name"),
+        g.metadataItem("parent_grid_name"), top, byName))
     }
-    if (top.isEmpty) throw BadGrid(s"$fileName: no usable horizontal grid")
+    if (top.isEmpty) throw BadGrid(s"$fileName: no usable ${kind}grid")
     top.toList
   }
 
-  /** reference: GTiffVGridShiftSet::open (grids.cpp:1430-1610). */
-  def loadV(fileName: String, bytes: Array[Byte]): List[VGrid] = {
-    val top = mutable.ListBuffer.empty[VGrid]
-    val byName = mutable.Map.empty[String, VGrid]
-    var ifd = 0
-    for (g <- rasters(fileName, bytes)) {
-      val ok = g.subfileType == 0 || g.subfileType == 2
-      if (!ok) {
-        if (ifd == 0) throw BadGrid("invalid subfileType")
+  /** reference: GTiffHGridShiftSet::open (grids.cpp:2492-2655): the
+    * (longitude, latitude) offset channels in radians, east positive. */
+  def loadH(fileName: String, bytes: Array[Byte]): List[Grid] =
+    walk(fileName, bytes, "horizontal ") { (g, first) =>
+      val iLat = g.channelOf("latitude_offset")
+      val iLon = g.channelOf("longitude_offset")
+      if (g.spp < 2) {
+        if (first) throw BadGrid("at least 2 samples per pixel needed")
+        None
+      } else if (g.described && iLat < 0 && iLon < 0) {
+        if (first) throw BadGrid("IFD 0 has channel descriptions but no offset channels")
+        None // auxiliary IFD
+      } else if ((iLat < 0) != (iLon < 0)) {
+        throw BadGrid("only one of latitude_offset/longitude_offset found")
       } else {
-        var idxSample = 0
-        var anyDesc = false
-        var found = false
-        for (i <- 0 until g.spp) {
-          val d = g.metadataItem("DESCRIPTION", i)
-          if (d.nonEmpty) anyDesc = true
-          if (d == "geoid_undulation" || d == "vertical_offset" ||
-              d == "hydroid_height" || d == "ellipsoidal_height_offset") {
-            idxSample = i
-            found = true
-          }
+        val idxLat = math.max(iLat, 0)
+        val idxLon = if (iLon < 0) 1 else iLon
+        val positiveEast = iLon < 0 || (g.metadataItem("positive_value", idxLon) match {
+          case "" | "east" => true
+          case "west"      => false
+          case o => throw BadGrid(s"unsupported positive_value $o")
+        })
+        val unitLat = g.metadataItem("UNITTYPE", idxLat)
+        if (unitLat != g.metadataItem("UNITTYPE", idxLon))
+          throw BadGrid("different units for lat/lon offsets")
+        val conv = unitLat match {
+          case "" | "arc-second" | "arc-seconds per year" => ArcSecToRad
+          case "radian" => 1.0
+          case "degree" => math.Pi / 180.0
+          case o => throw BadGrid(s"unsupported unit $o")
         }
-        if (anyDesc && !found) {
-          if (ifd == 0)
-            throw BadGrid("IFD 0 has channel descriptions but no vertical channel")
-          // else skip auxiliary IFD
-        } else {
-          val vals = g.sampleArray(idxSample)
-          val vg = new VGrid(g.name, g.width, g.height, g.extent, vals,
-            nodataOverride = if (g.hasNodata) Some(g.noData) else None)
-          insertHierarchyV(vg, g.metadataItem("grid_name"),
-            g.metadataItem("parent_grid_name"), top, byName)
+        val lat = g.sampleArray(idxLat)
+        val lon = g.sampleArray(idxLon)
+        var i = 0
+        while (i < lat.length) {
+          lat(i) = (lat(i) * conv).toFloat
+          val l = (lon(i) * conv).toFloat
+          lon(i) = if (positiveEast) l else -l
+          i += 1
         }
+        Some(new Grid(g.name, g.width, g.height, g.extent, Array(lon, lat)))
       }
-      ifd += 1
     }
-    if (top.isEmpty) throw BadGrid(s"$fileName: no usable vertical grid")
-    top.toList
-  }
+
+  private val VerticalChannels =
+    Seq("geoid_undulation", "vertical_offset", "hydroid_height", "ellipsoidal_height_offset")
+
+  /** reference: GTiffVGridShiftSet::open (grids.cpp:1430-1610): the one
+    * vertical channel (the first sample when no sample is described). */
+  def loadV(fileName: String, bytes: Array[Byte]): List[Grid] =
+    walk(fileName, bytes, "vertical ") { (g, first) =>
+      val idx = VerticalChannels.map(g.channelOf).max
+      if (g.described && idx < 0) {
+        if (first) throw BadGrid("IFD 0 has channel descriptions but no vertical channel")
+        None // auxiliary IFD
+      } else Some(new Grid(g.name, g.width, g.height, g.extent,
+        Array(g.sampleArray(math.max(idx, 0))), noData = g.noData))
+    }
 
   /** reference: GTiffGenericGridShiftSet::open (grids.cpp:3005-3055) —
-    * every sample channel retained; TYPE metadata inherited from the
-    * file's first grid when absent. */
-  def loadGeneric(fileName: String, bytes: Array[Byte]): List[GenGrid] = {
-    val top = mutable.ListBuffer.empty[GenGrid]
-    val byName = mutable.Map.empty[String, GenGrid]
-    var first: GenGrid = null
-    var ifd = 0
-    for (g <- rasters(fileName, bytes)) {
-      val ok = g.subfileType == 0 || g.subfileType == 2
-      if (!ok) {
-        if (ifd == 0) throw BadGrid("invalid subfileType")
-      } else {
-        val samples = Array.tabulate(g.spp)(g.sampleArray)
-        val gg = new GenGrid(g.name, g.width, g.height, g.extent, samples,
-          g.metadata, g.hasNodata, g.noData)
-        if (first != null && gg.meta.getOrElse((-1, "TYPE"), "").isEmpty &&
-            first.meta.getOrElse((-1, "TYPE"), "").nonEmpty)
-          gg.firstMeta = first.meta
-        if (first == null) first = gg
-        insertHierarchyG(gg, g.metadataItem("grid_name"),
-          g.metadataItem("parent_grid_name"), top, byName)
-      }
-      ifd += 1
+    * every sample channel retained; an IFD without a TYPE item carries
+    * the file's first grid's items under its own. */
+  def loadGeneric(fileName: String, bytes: Array[Byte]): List[Grid] = {
+    var firstMeta: Map[(Int, String), String] = null
+    walk(fileName, bytes, "") { (g, _) =>
+      val meta =
+        if (firstMeta != null && g.metadataItem("TYPE").isEmpty &&
+            firstMeta.getOrElse((-1, "TYPE"), "").nonEmpty) firstMeta ++ g.metadata
+        else g.metadata
+      if (firstMeta == null) firstMeta = g.metadata
+      Some(new Grid(g.name, g.width, g.height, g.extent,
+        Array.tabulate(g.spp)(g.sampleArray), meta, g.noData))
     }
-    if (top.isEmpty) throw BadGrid(s"$fileName: no usable grid")
-    top.toList
   }
 
-  // --- hierarchy (reference: insertIntoHierarchy, grids.cpp:1382-1440) -----
-
-  /** One body for all three grid types (the reference templates this):
-    * named-parent insertion with extent check, else bbox-containment
-    * descent from the top-level grids.  The type is abstracted by its
-    * extent/children accessors since HGrid/VGrid/GenGrid share no trait. */
-  private def insertHierarchy[G](g: G, gridName: String, parentName: String,
-                                 top: mutable.ListBuffer[G],
-                                 byName: mutable.Map[String, G],
-                                 extentOf: G => GridExtent,
-                                 childrenOf: G => List[G],
-                                 addChild: (G, G) => Unit): Unit = {
-    def insertByBbox(parent: G, child: G): Unit = {
-      for (c <- childrenOf(parent))
-        if (containsExt(extentOf(c), extentOf(child))) {
-          insertByBbox(c, child); return
-        }
-      addChild(parent, child)
-    }
+  /** reference: insertIntoHierarchy (grids.cpp:1382-1440): named-parent
+    * insertion with an extent check, else bbox-containment descent from
+    * the top-level grids. */
+  private def insertHierarchy(g: Grid, gridName: String, parentName: String,
+                              top: mutable.ListBuffer[Grid],
+                              byName: mutable.Map[String, Grid]): Unit = {
+    def insertByBbox(parent: Grid): Unit =
+      parent.children.find(c => containsExt(c.extent, g.extent)) match {
+        case Some(c) => insertByBbox(c)
+        case None    => parent.children :+= g
+      }
     if (gridName.nonEmpty) byName(gridName) = g
     if (parentName.nonEmpty) {
       byName.get(parentName) match {
-        case Some(p) if containsExt(extentOf(p), extentOf(g)) =>
-          addChild(p, g)
+        case Some(p) if containsExt(p.extent, g.extent) =>
+          p.children :+= g
           return
         case _ =>
       }
     } else if (gridName.nonEmpty) { top += g; return }
     // bbox fallback
-    for (cand <- top)
-      if (containsExt(extentOf(cand), extentOf(g))) { insertByBbox(cand, g); return }
-    top += g
+    top.find(c => containsExt(c.extent, g.extent)) match {
+      case Some(c) => insertByBbox(c)
+      case None    => top += g
+    }
   }
-
-  private def insertHierarchyG(g: GenGrid, gridName: String, parentName: String,
-                               top: mutable.ListBuffer[GenGrid],
-                               byName: mutable.Map[String, GenGrid]): Unit =
-    insertHierarchy[GenGrid](g, gridName, parentName, top, byName,
-      _.extent, _.children, (p, c) => p.children = p.children :+ c)
-
-  private def insertHierarchyH(g: HGrid, gridName: String, parentName: String,
-                               top: mutable.ListBuffer[HGrid],
-                               byName: mutable.Map[String, HGrid]): Unit =
-    insertHierarchy[HGrid](g, gridName, parentName, top, byName,
-      _.extent, _.children, (p, c) => p.children = p.children :+ c)
-
-  private def insertHierarchyV(g: VGrid, gridName: String, parentName: String,
-                               top: mutable.ListBuffer[VGrid],
-                               byName: mutable.Map[String, VGrid]): Unit =
-    insertHierarchy[VGrid](g, gridName, parentName, top, byName,
-      _.extent, _.children, (p, c) => p.children = p.children :+ c)
 
   /** reference: ExtentAndRes::contains (grids.cpp:97-100) */
   private def containsExt(a: GridExtent, b: GridExtent): Boolean =

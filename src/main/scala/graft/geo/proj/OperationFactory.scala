@@ -1,6 +1,6 @@
 package graft.geo.proj
 
-import graft.geo.grids.Grids
+import graft.geo.grids.{Grid, Grids}
 import graft.geo.kernels.{InverseKernel, IOUnits, NoopKernel, PipelineKernel, PointKernel}
 import graft.geo.math.Ellipsoid
 
@@ -153,19 +153,15 @@ object OperationFactory {
   /** Clamped union bbox (degrees) of a grid set's extents — one body for
     * the horizontal and vertical families so extent handling cannot
     * drift between them. */
-  private def bboxOfExtents(
-      es: Seq[graft.geo.grids.GridExtent]): Option[(Double, Double, Double, Double)] =
+  private def bboxOfGrids(
+      sets: List[List[Grid]]): Option[(Double, Double, Double, Double)] = {
+    val es = sets.flatten.map(_.extent)
     if (es.isEmpty) None
     else Some((math.max(-180, es.map(e => math.toDegrees(e.west)).min),
       math.max(-90, es.map(e => math.toDegrees(e.south)).min),
       math.min(180, es.map(e => math.toDegrees(e.east)).max),
       math.min(90, es.map(e => math.toDegrees(e.north)).max)))
-
-  private def bboxOfHGrids(spec: String): Option[(Double, Double, Double, Double)] =
-    bboxOfExtents(Grids.hgridSets(spec).flatten.map(_.extent))
-
-  private def bboxOfVGrids(spec: String): Option[(Double, Double, Double, Double)] =
-    bboxOfExtents(Grids.vgridSets(spec).flatten.map(_.extent))
+  }
 
   private def intersect(a: (Double, Double, Double, Double),
                         b: (Double, Double, Double, Double)): Option[(Double, Double, Double, Double)] = {
@@ -200,7 +196,7 @@ object OperationFactory {
     val geoidgrids = p.get("geoidgrids")
     val geoidTok = geoidgrids.map(g => s" +geoidgrids=$g").getOrElse("")
     val geoidBox = geoidgrids.flatMap { g =>
-      try bboxOfVGrids(g) catch { case _: ProjString.AssetMissing => None }
+      try bboxOfGrids(Grids.vgridSets(g)) catch { case _: ProjString.AssetMissing => None }
     }
 
     // --- core: the datum-free conversion ---------------------------------
@@ -242,7 +238,7 @@ object OperationFactory {
           // a candidate — the reference excludes grid-missing operations
           // the same way when networking is off
           val loaded =
-            try { if (Grids.hgridSets(name).isEmpty) None else bboxOfHGrids(name) }
+            try bboxOfGrids(Grids.hgridSets(name))
             catch { case _: ProjString.AssetMissing | _: Grids.BadGrid => None }
           loaded match {
             case Some(box) =>
