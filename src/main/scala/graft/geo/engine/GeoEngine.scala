@@ -351,36 +351,51 @@ object GeoEngine {
 
   /** k nearest data points per query — a radius-escalating range join.
     *
-    * Rung l (`level`, `level` - 3, ... >= 2) finds, for every still-pending
-    * query, each data point within radius ringSafeRadius(l, 1) with its
-    * exact Karney distance: the test [[distanceJoin]] applies at that
-    * radius (cover level exactly l, the same chord caps, the same Karney
-    * predicate).  A query with at least k of them is settled: no point
-    * outside the radius can outrank its kth neighbour, so its first k by
-    * (dist, data id) are the answer.  Queries still pending after the
-    * coarsest rung (isolated points, a null coordinate, or k beyond the
-    * data size) fall back to [[knnBruteForce]].  Output (queryId, dataId,
-    * dist, rank) is partition-count independent.
+    * Rung l (`level`, `level` - 3, ... >= 2) looks, for every still-pending
+    * query, at each data point within radius ringSafeRadius(l, 1): the
+    * points [[distanceJoin]] returns at that radius (cover level exactly l,
+    * the same chord caps, the same Karney distance).  Every pair within
+    * the reject cap (a chord bound no point within the radius exceeds)
+    * feeds the query's bounded heap of its k best (dist, data id) pairs.
+    * A query settles when its heap holds k pairs and the worst of them is
+    * within the radius: then its k best points overall are inside the
+    * radius, since no point outside it can outrank them, and the heap is
+    * the answer with ranks 1..k.  Queries still pending after the coarsest
+    * rung (isolated points, a null coordinate, or k beyond the data size)
+    * fall back to [[knnBruteForce]].  Output (queryId, dataId, dist, rank)
+    * is partition-count independent.
     *
     * Each rung is ONE map-only Spark job.  The (queryId, lon, lat) rows
     * are collected once and the pending ones stay on the driver; per rung
     * the driver broadcasts a cover table (ring-1 cell neighbourhood at
-    * level l -> pending query indexes) with each query's unit-sphere xyz.
-    * The data side is planned once per call and scanned once per rung:
-    * each row computes its xyz and cell, probes the table, and feeds the
-    * in-radius pairs into per-query counts and bounded (dist, data id)
-    * heaps, ordered as the id type sorts in Spark, nulls first.  Task
-    * partials are merged on the driver as they arrive (`RDD.aggregate`),
-    * so nothing shuffles.  A query whose summed count reaches k settles
-    * with ranks 1..k and leaves the pending list by id value (`equals`);
-    * rows sharing a query id are one query, as in [[knnBruteForce]].  Driver memory is the pending rows plus O(pending x k) merged
-    * heaps and one task's partial in flight; task memory is O(pending x
-    * k).  The rung jobs are eager; only the brute-force residue, if any,
-    * stays lazy.  Each rung's job carries the description
-    * `knnJoin rung l=<level> pending=<n>`, and the rung is logged at INFO
-    * with its within-radius pair count. */
+    * level l -> pending query indexes), each query's unit-sphere xyz, and
+    * a latitude band: the 2^16 latitude bins within the reject cap's
+    * central angle of some pending query.  The data side is planned once
+    * per call and scanned once per rung.  A row whose latitude falls
+    * outside the band is dropped before any trig (the central angle
+    * between two points is at least their latitude difference); the others
+    * compute their xyz and cell, and probe the table by hash.  A candidate
+    * pair within the reject cap gets its Karney distance only if it can
+    * enter the query's heap: while the heap is short of k, or while the
+    * pair's chord lower bound on the distance (b^2/a per radian of central
+    * angle) does not exceed the heap's worst, plus a slack for Karney's
+    * error and the chord's rounding.  Heaps are ordered as the id type
+    * sorts in Spark, nulls first.  Task partials are merged on the driver
+    * as they arrive (`RDD.aggregate`), so nothing shuffles.  A settled
+    * query leaves the pending list by id value (`equals`); rows sharing a
+    * query id are one query, as in [[knnBruteForce]].  Driver memory is the
+    * pending rows plus O(pending x k) merged heaps and one task's partial
+    * in flight; task memory is O(pending x k).  The rung jobs are eager;
+    * only the brute-force residue, if any, stays lazy.  Each rung's job
+    * carries the description `knnJoin rung l=<level> pending=<n>`, and the
+    * rung is logged at INFO with its [[KnnRung]] counters. */
   def knnJoin(queries: DataFrame, data: DataFrame, k: Int, level: Int,
-              queryId: String = "query_id", dataId: String = "data_id"): DataFrame = {
+              queryId: String = "query_id", dataId: String = "data_id"): DataFrame =
+    knnLadder(queries, data, k, level, queryId, dataId)._1
+
+  /** [[knnJoin]]'s answer, and the counters of each rung it ran. */
+  private[graft] def knnLadder(queries: DataFrame, data: DataFrame, k: Int, level: Int,
+      queryId: String, dataId: String): (DataFrame, Seq[KnnRung]) = {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField}
     require(level >= 2 && level <= graft.geo.cells.CellIndex.MaxUsableLevel,
@@ -400,6 +415,7 @@ object GeoEngine {
       spark.createDataFrame(rows.asJava, schema)
     var pending = described(spark, "knnJoin collect queries")(q.collect()).toSeq
     val settled = Seq.newBuilder[Row]
+    val rungs = Seq.newBuilder[KnnRung]
     for (l <- level to 2 by -3 if pending.nonEmpty) {
       val (ids, probe) = KnnProbe(pending, l)
       val top = if (probe.cover.isEmpty) new KnnTopK(ids.length, k)
@@ -410,20 +426,35 @@ object GeoEngine {
             (acc, row) => acc.add(bc, row, idOrd), (a, b) => a.merge(b, idOrd)))
         finally bc.destroy()
       }
-      val done = ids.indices.filter(top.count(_) >= k)
+      val done = ids.indices.filter(top.settled(_, probe.radius))
       for (s <- done; (dist, id, rank) <- top.ranked(s, idOrd))
         settled += Row(ids(s), toExternal(id), dist, rank)
-      log.info(s"knnJoin rung l=$l pending=${pending.size} pairs=${top.pairs} " +
-        s"settled=${done.size}")
+      val rung = KnnRung(l, pending.size, top.rows, top.banded, top.probed,
+        top.hits, top.inCap, top.solves, done.size)
+      log.info(s"knnJoin $rung")
+      rungs += rung
       val doneIds = done.map(ids(_)).toSet
       pending = pending.filterNot(r => doneIds(r.get(0)))
     }
     val answer = local(settled.result(), schema)
-    if (pending.isEmpty) answer
+    (if (pending.isEmpty) answer
     else {
       log.info(s"knnJoin brute-force residue=${pending.size}")
       answer.unionByName(knnBruteForce(local(pending, q.schema), data, k, queryId, dataId))
-    }
+    }, rungs.result())
+  }
+
+  /** One kNN rung's counts, summed over its scan: data rows scanned; rows
+    * dropped before any trig (`banded`: a null coordinate, or a latitude
+    * outside the band); rows `probed` against the cover (banded + probed
+    * = rows); the (row, pending query) candidates their cells `hit`; the
+    * candidates within the reject cap (`inCap`); the Karney `solves` among
+    * those; and the queries the rung settled. */
+  private[graft] final case class KnnRung(level: Int, pending: Int, rows: Long,
+      banded: Long, probed: Long, hits: Long, inCap: Long, solves: Long, settled: Int) {
+    override def toString: String =
+      s"rung l=$level pending=$pending rows=$rows banded=$banded probed=$probed " +
+        s"hits=$hits in_cap=$inCap karney=$solves settled=$settled"
   }
 
   /** Spark's ascending order of a data-id type, nulls first (as
@@ -443,14 +474,27 @@ object GeoEngine {
   /** One kNN rung's broadcast: every pending row's slot (one per distinct
     * query id), degrees and unit-sphere xyz, the ring-1 cover of each
     * row's cell at `level` (cell -> row indexes; none when every row has
-    * a null coordinate), the radius and its chord caps. */
+    * a null coordinate), the radius and its chord caps, and the latitude
+    * band: a bitset over [[KnnProbe.Bins]] equal latitude bins marking,
+    * for each row, the bins within the reject cap's central angle of its
+    * latitude plus one bin of slack on each side. */
   private final case class KnnProbe(slot: Array[Int],
       lon: Array[Double], lat: Array[Double],
       x: Array[Double], y: Array[Double], z: Array[Double],
       cover: Option[graft.geo.expr.CoverTable], level: Int, radius: Double,
-      acceptCap: Double, rejectCap: Double)
+      acceptCap: Double, rejectCap: Double, band: Array[Long]) {
+    /** Whether latitude `deg` in [-90, 90] lies in a marked bin. */
+    def inBand(deg: Double): Boolean = {
+      val b = KnnProbe.bin(deg)
+      (band(b >>> 6) & (1L << b)) != 0
+    }
+  }
 
   private object KnnProbe {
+    final val Bins = 1 << 16
+
+    def bin(deg: Double): Int = math.min(Bins - 1, ((deg + 90.0) * (Bins / 180.0)).toInt)
+
     /** The slots' query ids, and the probe of the pending rows. */
     def apply(pending: Seq[Row], level: Int): (Array[Any], KnnProbe) = {
       val slots = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
@@ -458,6 +502,13 @@ object GeoEngine {
       val n = pending.size
       val (lon, lat) = (new Array[Double](n), new Array[Double](n))
       val (x, y, z) = (new Array[Double](n), new Array[Double](n), new Array[Double](n))
+      val radius = ringSafeRadius(level, 1)
+      val (acceptCap, rejectCap) = chordCaps(radius)
+      // the central angle of the reject cap, in degrees of latitude
+      val reach = math.toDegrees(2 * math.asin(math.min(1.0, math.sqrt(rejectCap) / 2)))
+      val band = new Array[Long](Bins / 64)
+      def mark(from: Int, to: Int): Unit =
+        for (b <- math.max(0, from) to math.min(Bins - 1, to)) band(b >>> 6) |= 1L << b
       val cells = Seq.newBuilder[(Long, Int)]
       for ((r, i) <- pending.zipWithIndex if !r.isNullAt(1) && !r.isNullAt(2)) {
         lon(i) = r.getDouble(1); lat(i) = r.getDouble(2)
@@ -467,58 +518,73 @@ object GeoEngine {
         z(i) = math.sin(math.toRadians(lat(i)))
         val c = graft.geo.cells.CellIndex.cellIdXyz(x(i), y(i), z(i), level)
         for (nb <- graft.geo.cells.CellIndex.neighborhood(c, 1)) cells += nb -> i
+        // a NaN latitude is within no chord of anything; one beyond the
+        // poles is no geodetic latitude, so it marks every bin
+        if (math.abs(lat(i)) <= 90)
+          mark(bin(math.max(-90.0, lat(i) - reach)) - 1, bin(math.min(90.0, lat(i) + reach)) + 1)
+        else if (!lat(i).isNaN) mark(0, Bins - 1)
       }
       val entries = cells.result()
-      val radius = ringSafeRadius(level, 1)
-      val (acceptCap, rejectCap) = chordCaps(radius)
       (slots.keys.toArray, KnnProbe(slot, lon, lat, x, y, z,
         if (entries.isEmpty) None else Some(graft.geo.expr.CoverTable(entries)),
-        level, radius, acceptCap, rejectCap))
+        level, radius, acceptCap, rejectCap, band))
     }
   }
 
-  /** Per-slot in-radius counts and bounded heaps of the k best (dist, id)
-    * pairs of one kNN rung: a task's partial, and the driver's merge of
-    * them.  Heap s is a max-heap over `dist(s)`/`id(s)` (worst at 0) and
-    * is allocated on the slot's first pair; ids are copied out of the
-    * scan's reused rows.  Only arrays, so any serializer ships it. */
+  /** Per-slot bounded heaps of the k best (dist, id) pairs of one kNN rung,
+    * with the rung's [[KnnRung]] counts: a task's partial, and the
+    * driver's merge of them.  Heap s is a max-heap over `dist(s)`/`id(s)`
+    * (worst at 0) and is allocated on the slot's first pair; ids are
+    * copied out of the scan's reused rows.  `cut(s)` is the squared chord
+    * beyond which a pair cannot enter heap s: infinite until it holds k
+    * pairs, then recomputed on each insert from its worst distance.  Only
+    * arrays and counts, so any serializer ships it. */
   private final class KnnTopK(slots: Int, k: Int) extends Serializable {
-    val count = new Array[Long](slots)
     private val dist = new Array[Array[Double]](slots)
     private val id = new Array[Array[Any]](slots)
     private val size = new Array[Int](slots)
+    private val cut = Array.fill(slots)(Double.PositiveInfinity)
+    var rows, banded, probed, hits, inCap, solves = 0L
     @transient private var probe: KnnProbe = _
 
-    def pairs: Long = count.sum
+    /** Slot s holds k pairs, the worst within `radius`. */
+    def settled(s: Int, radius: Double): Boolean = size(s) == k && dist(s)(0) <= radius
 
-    /** Probes one (data id, lon, lat) scan row against the cover table. */
+    /** Probes one (data id, lon, lat) scan row against the band and the
+      * cover table. */
     def add(bc: org.apache.spark.broadcast.Broadcast[KnnProbe],
             row: org.apache.spark.sql.catalyst.InternalRow,
             ord: KnnIdOrdering): KnnTopK = {
       if (probe == null) probe = bc.value
       val p = probe
-      if (row.isNullAt(1) || row.isNullAt(2)) return this
-      val lon = row.getDouble(1); val lat = row.getDouble(2)
+      rows += 1
+      if (row.isNullAt(1) || row.isNullAt(2)) { banded += 1; return this }
+      val lat = row.getDouble(2)
+      // a NaN latitude or one beyond the poles skips the band test
+      if (math.abs(lat) <= 90 && !p.inBand(lat)) { banded += 1; return this }
+      probed += 1
+      val lon = row.getDouble(1)
       // the unit-sphere xyz of xyzCols, and the cell of CellIndex.cellId
       val cl = math.cos(math.toRadians(lat))
       val x = cl * math.cos(math.toRadians(lon))
       val y = cl * math.sin(math.toRadians(lon))
       val z = math.sin(math.toRadians(lat))
       val cover = p.cover.get
-      val j = java.util.Arrays.binarySearch(cover.keys,
-        graft.geo.cells.CellIndex.cellIdXyz(x, y, z, p.level))
+      val j = cover.indexOf(graft.geo.cells.CellIndex.cellIdXyz(x, y, z, p.level))
       if (j < 0) return this
       var t = cover.offs(j); val end = cover.offs(j + 1)
+      hits += end - t
       while (t < end) {
         val i = cover.vals(t)
         val c2 = (p.x(i) - x) * (p.x(i) - x) + (p.y(i) - y) * (p.y(i) - y) +
           (p.z(i) - z) * (p.z(i) - z)
         if (c2 <= p.rejectCap) {
-          val s12 = graft.geo.geodesic.Geodesic.WGS84.distance(p.lat(i), p.lon(i), lat, lon)
-          if (c2 <= p.acceptCap || s12 <= p.radius) {
-            val s = p.slot(i)
-            count(s) += 1
-            offer(s, s12, row, ord)
+          inCap += 1
+          val s = p.slot(i)
+          if (c2 <= cut(s)) {
+            solves += 1
+            offer(s, graft.geo.geodesic.Geodesic.WGS84.distance(p.lat(i), p.lon(i), lat, lon),
+              row, ord)
           }
         }
         t += 1
@@ -528,9 +594,10 @@ object GeoEngine {
 
     /** Folds `that` in: counts add, heaps merge. */
     def merge(that: KnnTopK, ord: KnnIdOrdering): KnnTopK = {
+      rows += that.rows; banded += that.banded; probed += that.probed
+      hits += that.hits; inCap += that.inCap; solves += that.solves
       var s = 0
       while (s < slots) {
-        count(s) += that.count(s)
         var e = 0
         while (e < that.size(s)) { insert(s, that.dist(s)(e), that.id(s)(e), ord); e += 1 }
         s += 1
@@ -580,7 +647,26 @@ object GeoEngine {
           else placed = true
         }
         ds(i) = d; is(i) = v
-      }
+      } else return
+      if (size(s) == k) cut(s) = KnnTopK.chordCut(ds(0))
+    }
+  }
+
+  private object KnnTopK {
+    /** Geodesic metres per radian of unit-sphere central angle, at least:
+      * b^2/a, the meridional radius of curvature at the equator. */
+    private val MinMetresPerRadian = {
+      val g = graft.geo.geodesic.Geodesic.WGS84
+      g.a * (1 - g.f) * (1 - g.f)
+    }
+
+    /** The squared chord beyond which a pair's geodesic distance exceeds
+      * `worst`, with a slack (relative 1e-9, absolute 1 µm) over Karney's
+      * 15 nm error and the chord's rounding; infinite past half a turn. */
+    def chordCut(worst: Double): Double = {
+      val theta = (worst * (1 + 1e-9) + 1e-6) / MinMetresPerRadian
+      if (theta >= math.Pi) Double.PositiveInfinity
+      else { val h = math.sin(theta / 2); 4 * h * h }
     }
   }
 

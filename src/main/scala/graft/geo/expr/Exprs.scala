@@ -757,11 +757,12 @@ object SpanGeoTagExpr {
   * sorted array with no (level, cell) composite key.  A point probes the
   * table once per distinct cover level — its finest-level cell is computed
   * once, coarser ones are pure bit chops — so the whole candidate
-  * generation is ~L binary searches over a few-thousand-entry array inside
-  * the scan, with NO join, NO broadcast exchange and NO row inflation:
-  * only actual candidates leave the lookup (most rows return null and are
-  * dropped by the explode).  The table rides the serialized plan once per
-  * stage, like the grid registry. */
+  * generation is ~L hash probes ([[indexOf]]: an open-addressing index
+  * over the keys, built lazily where the table is used) inside the scan,
+  * with NO join, NO broadcast exchange and NO row inflation: only actual
+  * candidates leave the lookup (most rows return null and are dropped by
+  * the explode).  The table rides the serialized plan once per stage,
+  * like the grid registry; the index does not travel with it. */
 final class CoverTable(val levels: Array[Int], private[graft] val keys: Array[Long],
                        private[graft] val offs: Array[Int], private[graft] val vals: Array[Int])
     extends Serializable {
@@ -770,6 +771,11 @@ final class CoverTable(val levels: Array[Int], private[graft] val keys: Array[Lo
 
   override def toString: String =
     s"cover[${keys.length} cells @ levels ${levels.mkString("/")}]"
+
+  @transient private lazy val index = new CoverTable.HashIndex(keys)
+
+  /** Index of `cell` in `keys`, or -1 when it is no key. */
+  def indexOf(cell: Long): Int = index.indexOf(cell)
 
   /** ring indexes of every polygon whose cover contains this point, or
     * null when none (the common case — callers explode, which drops null
@@ -782,7 +788,7 @@ final class CoverTable(val levels: Array[Int], private[graft] val keys: Array[Lo
     var i = 0
     while (i < levels.length) {
       val c = if (i == 0) finest else cells.parent(finest, levels(i))
-      val j = java.util.Arrays.binarySearch(keys, c)
+      val j = indexOf(c)
       if (j >= 0) {
         var k = offs(j); val e = offs(j + 1)
         while (k < e) {
@@ -800,6 +806,30 @@ final class CoverTable(val levels: Array[Int], private[graft] val keys: Array[Lo
 }
 
 object CoverTable {
+  /** Linear-probing hash index over distinct `keys` at load <= 1/2:
+    * slot h holds a key and its index in `keys`, or index -1 when empty,
+    * so any Long can be a key.  Slots come from a Fibonacci hash. */
+  private final class HashIndex(keys: Array[Long]) {
+    private val bits = 32 - Integer.numberOfLeadingZeros(math.max(1, 2 * keys.length - 1))
+    private val mask = (1 << bits) - 1
+    private val slotKey = new Array[Long](1 << bits)
+    private val slotIdx = Array.fill(1 << bits)(-1)
+    for (j <- keys.indices) {
+      var h = slot(keys(j))
+      while (slotIdx(h) >= 0) h = (h + 1) & mask
+      slotKey(h) = keys(j); slotIdx(h) = j
+    }
+
+    private def slot(cell: Long): Int =
+      ((cell * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
+
+    def indexOf(cell: Long): Int = {
+      var h = slot(cell)
+      while (slotIdx(h) >= 0 && slotKey(h) != cell) h = (h + 1) & mask
+      slotIdx(h)
+    }
+  }
+
   /** Build from (level-tagged cell id, ring index) pairs; a cell shared by
     * several polygons at the same level gets a multi-entry posting. */
   def apply(entries: Seq[(Long, Int)]): CoverTable = {
