@@ -178,7 +178,8 @@ object SparkEntry {
       // Equirectangular (IAU_2015:49910, method 1028 on the 3,396,190 m
       // sphere) resolved from the parsed database — eqc on a sphere is
       // closed-form (x = R·λ, y = R·φ), so the oracle replays it exactly
-      val rc = graft.geo.proj.AuthorityDb.crs("IAU_2015", "49910").get
+      val db = graft.geo.proj.AuthorityDb
+      val rc = db.required("IAU_2015", "49910")(db.crs)
       val k = graft.geo.proj.ProjString.parse(rc.spec)
       val pts = geoLineitem(s, dir)
       val xy = geo.transform(k, forward = true, outDims = 2,
@@ -197,8 +198,9 @@ object SparkEntry {
       // unit-conversion or sign mistake anywhere in the db parse breaks
       // the hash on all 60k rows.  Output is geocentric mm (no cart
       // inverse needed in SQL).
-      val st = graft.geo.proj.AuthorityDb.helmertStepTokens("EPSG", "1612").get
-      val ell = graft.geo.proj.AuthorityDb.geodeticEllTokens("EPSG", "4230").get
+      val db = graft.geo.proj.AuthorityDb
+      val st = db.required("EPSG", "1612")(db.helmertStepTokens)
+      val ell = db.required("EPSG", "4230")(db.geodeticEllTokens)
       val k = graft.geo.proj.ProjString.parse(
         s"+proj=pipeline +step +proj=cart $ell +step $st")
       val pts = geoLineitem(s, dir)
@@ -228,7 +230,8 @@ object SparkEntry {
       // authority database (EPSG:3857 via conversion 3856, method 1024)
       // instead of a kernel object / CRS text — the fourth front door;
       // results must hash-equal the q_webmerc_fwd oracle
-      val rc = graft.geo.proj.AuthorityDb.crs("EPSG", "3857").get
+      val db = graft.geo.proj.AuthorityDb
+      val rc = db.required("EPSG", "3857")(db.crs)
       val k = graft.geo.proj.ProjString.parse(rc.spec)
       val pts = geoLineitem(s, dir)
       val xy = geo.transform(k, forward = true, outDims = 2,

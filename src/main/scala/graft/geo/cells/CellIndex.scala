@@ -75,14 +75,14 @@ object CellIndex extends Serializable {
   def morton(i: Long, j: Long): Long = spread(i) << 1 | spread(j)
 
   /** Spread the low 26 bits of x so bit k lands at position 2k (the
-    * standard mask-shift Morton spread, extended to 26 bits). */
+    * standard 32-to-64-bit mask-shift Morton spread). */
   private def spread(xIn: Long): Long = {
     var x = xIn & 0x3FFFFFFL // 26 bits
-    x = (x | (x << 16)) & 0x0000_03FF_0000_FFFFL
-    x = (x | (x << 8))  & 0x0300_00FF_00FF_00FFL
-    x = (x | (x << 4))  & 0x030F_0F0F_0F0F_0F0FL
-    x = (x | (x << 2))  & 0x0333_3333_3333_3333L
-    x = (x | (x << 1))  & 0x1555_5555_5555_5555L
+    x = (x | (x << 16)) & 0x0000_FFFF_0000_FFFFL
+    x = (x | (x << 8))  & 0x00FF_00FF_00FF_00FFL
+    x = (x | (x << 4))  & 0x0F0F_0F0F_0F0F_0F0FL
+    x = (x | (x << 2))  & 0x3333_3333_3333_3333L
+    x = (x | (x << 1))  & 0x5555_5555_5555_5555L
     x
   }
 

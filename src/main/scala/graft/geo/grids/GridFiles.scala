@@ -129,10 +129,14 @@ object Grids {
   def addSearchDir(dir: String): Unit =
     synchronized { if (!extraDirs.contains(dir)) extraDirs ::= dir }
 
+  /** Root of the reference source tree (its `data`, `src` and `test`
+    * dirs): `GRAFT_REFERENCE_DIR`, else its conventional mount point. */
+  val referenceDir: String = sys.env.getOrElse("GRAFT_REFERENCE_DIR", "/root/reference")
+
   def searchDirs: Seq[String] =
     extraDirs ++
       sys.env.get("GRAFT_GRID_PATH").toSeq.flatMap(_.split(':').toSeq) ++
-      Seq("/root/reference/data", "/root/reference/data/tests")
+      Seq(s"$referenceDir/data", s"$referenceDir/data/tests")
 
   // ------------------------------------------------ remote grid access
   //

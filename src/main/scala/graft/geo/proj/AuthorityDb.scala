@@ -59,10 +59,21 @@ object AuthorityDb {
     "concatenated_operation_step", "grid_alternatives",
     "vertical_crs", "compound_crs", "alias_name", "supersession")
 
+  private def sqlMissing = ProjString.AssetMissing(
+    "authority database scripts (data/sql) not found", "data/sql",
+    (sys.env.get("GRAFT_AUTHORITY_SQL").toSeq ++ sqlDirs).map(_.toString))
+
   lazy val tables: Map[String, Vector[Array[String]]] =
-    AuthoritySql.load(sqlDir.getOrElse(throw ProjString.AssetMissing(
-      "authority database scripts (data/sql) not found", "data/sql",
-      (sys.env.get("GRAFT_AUTHORITY_SQL").toSeq ++ sqlDirs).map(_.toString))), wanted)
+    AuthoritySql.load(sqlDir.getOrElse(throw sqlMissing), wanted)
+
+  /** The record `lookup` finds for `auth:code`, for a caller that cannot
+    * do without it: [[ProjString.AssetMissing]] naming `data/sql` when the
+    * database is absent, an [[Unsupported]] naming the code when it holds
+    * no such record. */
+  def required[A](auth: String, code: String)(lookup: (String, String) => Option[A]): A =
+    lookup(auth, code).getOrElse(throw (
+      if (!available) sqlMissing
+      else Unsupported(s"authority code $auth:$code (not in the authority database)")))
 
   private def key(auth: String, code: String) = auth.toUpperCase + ":" + code
 

@@ -52,6 +52,25 @@ class AssetMissingSpec extends AnyFunSuite {
     assert(Grids.hgridSets(s"@$f").isEmpty)
   }
 
+  test("a registry record a query needs: AssetMissing without data/sql, else a named Unsupported") {
+    if (AuthorityDb.available) {
+      val e = intercept[ProjString.Unsupported](AuthorityDb.required("EPSG", "0")(AuthorityDb.crs))
+      assert(!e.isInstanceOf[AssetMissing] && e.getMessage.contains("EPSG:0"))
+    } else {
+      for (lookup <- Seq[(String, String) => Option[Any]](AuthorityDb.crs,
+          AuthorityDb.helmertStepTokens, AuthorityDb.geodeticEllTokens)) {
+        val e = intercept[AssetMissing](AuthorityDb.required("EPSG", "4230")(lookup))
+        assert(e.file == "data/sql" && e.searched.nonEmpty)
+      }
+      // the driver queries that read a registry record fail on it before
+      // they touch a session or a data dir
+      for (q <- Seq("q_mars_eqc", "q_authority_webmerc", "q_db_helmert")) {
+        val e = intercept[AssetMissing](SparkEntry.queries(q)(null, "/nonexistent"))
+        assert(e.file == "data/sql", q)
+      }
+    }
+  }
+
   test("an absent data/sql registry is AssetMissing with the old message") {
     if (AuthorityDb.available) assert(AuthorityDb.tables.nonEmpty)
     else {

@@ -300,7 +300,8 @@ class AuthorityDbSpec extends AnyFunSuite {
     // proj_context_set_search_paths analogue)
     val tmp = java.nio.file.Files.createTempDirectory("graft-geoid")
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/reference/data/tests/egm96_15_downsampled.gtx"),
+      java.nio.file.Paths.get(graft.geo.grids.Grids.referenceDir,
+        "data/tests/egm96_15_downsampled.gtx"),
       tmp.resolve("egm96_15.gtx"))
     graft.geo.grids.Grids.addSearchDir(tmp.toString)
     assert(AuthorityDb.geoidGridFor("EPSG:5773").contains("egm96_15.gtx"))

@@ -199,6 +199,49 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(miss == null)
     val single = t.lookup(-100.0, -20.0)
     assert(single != null && single.toIntArray().toSeq == Seq(3))
+
+    // a random multi-level table: every key is found at its index; an
+    // absent id is not, be it a key with only its level tag changed, a
+    // Morton neighbour of a key, or any other long
+    val rnd = new scala.util.Random(11)
+    def randomPoint() = (rnd.nextDouble() * 360 - 180, rnd.nextDouble() * 180 - 90)
+    val entries = for (i <- 0 until 3000) yield {
+      val (lon, lat) = randomPoint()
+      (cells.cellId(lon, lat, 2 + rnd.nextInt(cells.MaxUsableLevel - 1)), i)
+    }
+    val big = graft.geo.expr.CoverTable(entries)
+    val keys = big.keys.toSet
+    assert(big.levels.length > 20 && keys.size > 2000)
+    big.keys.zipWithIndex.foreach { case (c, j) => assert(big.indexOf(c) == j, c) }
+    val absent = big.keys.toSeq.flatMap { c =>
+      val level = cells.levelOf(c)
+      Seq((c & ~0x3FL) | ((level + 1) % 64), (c & ~0x3FL) | ((level + 63) % 64),
+        c + (1L << 6), c - (1L << 6))
+    } ++ Seq.fill(3000)(rnd.nextLong()) ++ Seq(0L, -1L, Long.MinValue, Long.MaxValue)
+    for (c <- absent if !keys(c)) assert(big.indexOf(c) == -1, c)
+    // lookup returns exactly the entries whose cell holds the point
+    for (_ <- 0 until 500) {
+      val (lon, lat) = randomPoint()
+      val want = entries.collect {
+        case (c, i) if cells.cellId(lon, lat, cells.levelOf(c)) == c => i }.toSet
+      val got = big.lookup(lon, lat)
+      if (want.isEmpty) assert(got == null, (lon, lat))
+      else assert(got != null && got.toIntArray().toSet == want, (lon, lat))
+    }
+  }
+
+  test("a cell id at every level is the bit chop of the finest one") {
+    val cells = graft.geo.cells.CellIndex
+    val rnd = new scala.util.Random(5)
+    val fin = cells.MaxUsableLevel
+    for (_ <- 0 until 2000) {
+      val (lon, lat) = (rnd.nextDouble() * 360 - 180, rnd.nextDouble() * 180 - 90)
+      val finest = cells.cellId(lon, lat, fin)
+      val i = cells.iOf(finest) & ((1L << fin) - 1); val j = cells.jOf(finest) & ((1L << fin) - 1)
+      assert(cells.encode(cells.faceOfId(finest), i, j, fin) == finest, (lon, lat))
+      for (l <- 0 until fin)
+        assert(cells.parent(finest, l) == cells.cellId(lon, lat, l), (lon, lat, l))
+    }
   }
 
   test("childrenAt enumerates exactly the Morton block under the parent") {
@@ -349,6 +392,50 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(knn == rows(GeoEngine.knnBruteForce(queries, data, 3)))
     assert(knn.map(r => (r._1, r._2, r._4)) == Set(("q1", "a1", 1), ("q1", "b1", 2),
       ("q1", "c1", 3), ("q2", "a2", 1), ("q2", "b2", 2), ("q2", "c2", 3)))
+
+    // distances at the scale of the Karney prune's slack, scanned in this
+    // order by one task: q3 has four data points on it (distance 0) and
+    // the one with the smallest id comes after the heap is full; q4's
+    // points lie 0.3 m apart, farthest first; q5's kth-place tie at 2 km
+    // has its smaller ids after the heap fills with larger ones, and one
+    // point 0.5 um beyond the tie.  Rows with a NaN latitude (at the
+    // queries' longitudes) are no neighbours.
+    val deg = 1 / 111195.0 // degrees of latitude per metre, about
+    val fine = (Seq("z3", "z1", "z2", "z0").map(id => (id, 60.0, -10.0)) ++
+      (6 to 1 by -1).map(i => (s"s$i", -150.0, 60.0 + i * 0.3 * deg)) ++
+      Seq(("t7", 120.0, 5.0 + 1000 * deg)) ++
+      Seq("t9", "t8", "t0", "t5", "t2").map(id =>
+        (id, 120.0, 5.0 + 2000 * deg + (if (id == "t0") 0.5e-6 * deg else 0.0))) ++
+      Seq(10.0, 60.0, -150.0, 120.0).map(lon => (s"nan$lon", lon, Double.NaN)))
+      .toDF("data_id", "lon", "lat").coalesce(1)
+    val fineQ = Seq(("q3", 60.0, -10.0), ("q4", -150.0, 60.0), ("q5", 120.0, 5.0))
+      .toDF("query_id", "lon", "lat")
+    val near = rows(GeoEngine.knnJoin(fineQ, fine, 3, 12))
+    assert(near == rows(GeoEngine.knnBruteForce(fineQ, fine, 3)))
+    assert(near.map(r => (r._1, r._2, r._4)) == Set(("q3", "z0", 1), ("q3", "z1", 2),
+      ("q3", "z2", 3), ("q4", "s1", 1), ("q4", "s2", 2), ("q4", "s3", 3),
+      ("q5", "t7", 1), ("q5", "t2", 2), ("q5", "t5", 3)))
+    assert(near.filter(_._1 == "q3").map(_._3) == Set(0.0))
+    val withNan = fine.unionByName(data)
+    val all = rows(GeoEngine.knnJoin(queries.unionByName(fineQ), withNan, 3, 12))
+    assert(all == knn ++ near)
+    assert(all == rows(GeoEngine.knnBruteForce(queries.unionByName(fineQ), withNan, 3)))
+  }
+
+  test("kNN rung counters: every row is banded or probed; Karney <= in-cap <= hits") {
+    val (plantedQ, planted) = plantedClusters()
+    val (answer, rungs) = GeoEngine.knnLadder(plantedQ, planted, 3, 12, "query_id", "data_id")
+    assert(rungs.map(r => (r.level, r.pending, r.settled)) ==
+      Seq((12, 5, 1), (9, 4, 1), (6, 3, 1), (3, 2, 1)))
+    val n = planted.count()
+    for (r <- rungs) {
+      assert(r.rows == n && r.banded + r.probed == r.rows, r)
+      assert(r.solves <= r.inCap && r.inCap <= r.hits, r)
+    }
+    // at level 12 the band (a few hundred metres of latitude around 45
+    // and -40 degrees) drops the clusters' farther points
+    assert(rungs.head.banded > 0 && rungs.head.solves > 0)
+    assert(answer.count() == 15)
   }
 
   test("kNN never returns a data row with a null coordinate") {

@@ -8,7 +8,7 @@ import graft.geo.gie.Gie
   * front-end.  Operations outside the engine's inventory are skipped;
   * the lower-bound assertions keep the skip mechanism honest. */
 class GieFixtureSpec extends AnyFunSuite {
-  private val dir = "/root/reference/test/gie"
+  private val dir = s"${graft.geo.grids.Grids.referenceDir}/test/gie"
 
   private def check(file: String, minChecks: Int,
                     mustCover: Seq[String] = Nil): Gie.Stats = {
@@ -236,8 +236,8 @@ class GieFixtureSpec extends AnyFunSuite {
 
   test("GIGS conformance series: every file passes in full") {
     // Geospatial Integrity of Geoscience Software suite — every file in
-    // /root/reference/test/gigs runs with zero skipped operations.
-    val dir2 = new java.io.File("/root/reference/test/gigs")
+    // the reference tree's test/gigs runs with zero skipped operations.
+    val dir2 = new java.io.File(graft.geo.grids.Grids.referenceDir, "test/gigs")
     var checks = 0
     var supported = 0
     val failures = scala.collection.mutable.ListBuffer.empty[String]
