@@ -354,7 +354,7 @@ object GeoEngine {
     * Rung l (`level`, `level` - 3, ... >= 2) looks, for every still-pending
     * query, at each data point within radius ringSafeRadius(l, 1): the
     * points [[distanceJoin]] returns at that radius (cover level exactly l,
-    * the same chord caps, the same Karney distance).  Every pair within
+    * the same reject cap, the same Karney distance).  Every pair within
     * the reject cap (a chord bound no point within the radius exceeds)
     * feeds the query's bounded heap of its k best (dist, data id) pairs.
     * A query settles when its heap holds k pairs and the worst of them is
@@ -474,7 +474,7 @@ object GeoEngine {
   /** One kNN rung's broadcast: every pending row's slot (one per distinct
     * query id), degrees and unit-sphere xyz, the ring-1 cover of each
     * row's cell at `level` (cell -> row indexes; none when every row has
-    * a null coordinate), the radius and its chord caps, and the latitude
+    * a null coordinate), the radius and its reject cap, and the latitude
     * band: a bitset over [[KnnProbe.Bins]] equal latitude bins marking,
     * for each row, the bins within the reject cap's central angle of its
     * latitude plus one bin of slack on each side. */
@@ -482,7 +482,7 @@ object GeoEngine {
       lon: Array[Double], lat: Array[Double],
       x: Array[Double], y: Array[Double], z: Array[Double],
       cover: Option[graft.geo.expr.CoverTable], level: Int, radius: Double,
-      acceptCap: Double, rejectCap: Double, band: Array[Long]) {
+      rejectCap: Double, band: Array[Long]) {
     /** Whether latitude `deg` in [-90, 90] lies in a marked bin. */
     def inBand(deg: Double): Boolean = {
       val b = KnnProbe.bin(deg)
@@ -503,7 +503,7 @@ object GeoEngine {
       val (lon, lat) = (new Array[Double](n), new Array[Double](n))
       val (x, y, z) = (new Array[Double](n), new Array[Double](n), new Array[Double](n))
       val radius = ringSafeRadius(level, 1)
-      val (acceptCap, rejectCap) = chordCaps(radius)
+      val rejectCap = chordCaps(radius)._2
       // the central angle of the reject cap, in degrees of latitude
       val reach = math.toDegrees(2 * math.asin(math.min(1.0, math.sqrt(rejectCap) / 2)))
       val band = new Array[Long](Bins / 64)
@@ -527,7 +527,7 @@ object GeoEngine {
       val entries = cells.result()
       (slots.keys.toArray, KnnProbe(slot, lon, lat, x, y, z,
         if (entries.isEmpty) None else Some(graft.geo.expr.CoverTable(entries)),
-        level, radius, acceptCap, rejectCap, band))
+        level, radius, rejectCap, band))
     }
   }
 
