@@ -437,11 +437,10 @@ object GeoEngine {
       pending = pending.filterNot(r => doneIds(r.get(0)))
     }
     val answer = local(settled.result(), schema)
+    if (pending.nonEmpty) log.info(s"knnJoin brute-force residue=${pending.size}")
     (if (pending.isEmpty) answer
-    else {
-      log.info(s"knnJoin brute-force residue=${pending.size}")
-      answer.unionByName(knnBruteForce(local(pending, q.schema), data, k, queryId, dataId))
-    }, rungs.result())
+     else answer.unionByName(knnBruteForce(local(pending, q.schema), data, k, queryId, dataId)),
+     rungs.result())
   }
 
   /** One kNN rung's counts, summed over its scan: data rows scanned; rows
