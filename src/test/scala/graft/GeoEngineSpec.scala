@@ -399,14 +399,14 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // points lie 0.3 m apart, farthest first; q5's kth-place tie at 2 km
     // has its smaller ids after the heap fills with larger ones, and one
     // point 0.5 um beyond the tie.  Rows with a NaN latitude (at the
-    // queries' longitudes) are no neighbours.
+    // queries' longitudes, scanned first) are no neighbours.
     val deg = 1 / 111195.0 // degrees of latitude per metre, about
-    val fine = (Seq("z3", "z1", "z2", "z0").map(id => (id, 60.0, -10.0)) ++
+    val fine = (Seq(10.0, 60.0, -150.0, 120.0).map(lon => (s"nan$lon", lon, Double.NaN)) ++
+      Seq("z3", "z1", "z2", "z0").map(id => (id, 60.0, -10.0)) ++
       (6 to 1 by -1).map(i => (s"s$i", -150.0, 60.0 + i * 0.3 * deg)) ++
       Seq(("t7", 120.0, 5.0 + 1000 * deg)) ++
       Seq("t9", "t8", "t0", "t5", "t2").map(id =>
-        (id, 120.0, 5.0 + 2000 * deg + (if (id == "t0") 0.5e-6 * deg else 0.0))) ++
-      Seq(10.0, 60.0, -150.0, 120.0).map(lon => (s"nan$lon", lon, Double.NaN)))
+        (id, 120.0, 5.0 + 2000 * deg + (if (id == "t0") 0.5e-6 * deg else 0.0))))
       .toDF("data_id", "lon", "lat").coalesce(1)
     val fineQ = Seq(("q3", 60.0, -10.0), ("q4", -150.0, 60.0), ("q5", 120.0, 5.0))
       .toDF("query_id", "lon", "lat")
