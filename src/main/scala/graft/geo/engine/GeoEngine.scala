@@ -351,10 +351,11 @@ object GeoEngine {
 
   /** k nearest data points per query — a radius-escalating range join.
     *
-    * Rung l (`level`, `level` - 3, ... >= 2) looks, for every still-pending
-    * query, at each data point within radius ringSafeRadius(l, 1): the
-    * points [[distanceJoin]] returns at that radius (cover level exactly l,
-    * the same reject cap, the same Karney distance).  Every pair within
+    * Rung l (a level of the schedule `level`, `level` - 3, ... >= 2) looks,
+    * for every still-pending query, at each data point within radius
+    * ringSafeRadius(l, 1): the points [[distanceJoin]] returns at that
+    * radius (cover level exactly l, the same reject cap, the same Karney
+    * distance).  Every pair within
     * the reject cap (a chord bound no point within the radius exceeds)
     * feeds the query's bounded heap of its k best (dist, data id) pairs.
     * A query settles when its heap holds k pairs and the worst of them is
@@ -364,6 +365,20 @@ object GeoEngine {
     * rung (isolated points, a null coordinate, or k beyond the data size)
     * fall back to [[knnBruteForce]].  Output (queryId, dataId, dist, rank)
     * is partition-count independent.
+    *
+    * The ladder starts at `level` and always ends at the schedule's
+    * coarsest level, but it may skip the levels between.  After rung l,
+    * with h_s the pairs pending heap s holds and N the rows the rung
+    * scanned, the next rung is the coarsest l' in l - 3, l - 6, ... >= 2
+    * with sum_s max(h_s, 1) x 4^(l - l') <= N, or l - 3 if none is.  A
+    * heap short of k holds every pair of its query within the reject cap,
+    * and the cap's area grows 4x per level, so the sum estimates the pairs
+    * rung l' would find; they cost a chord check of a few ns each, while a
+    * skipped rung saves decoding N rows (~190 ns of CPU per row of a cached
+    * (string id, lon, lat) side on a 4-vCPU Xeon).  Many pending
+    * queries, dense data or a small N keep the step of 3.  A skip changes
+    * no output: settling is exact at any rung, and the coarsest rung, whose
+    * leftovers are the residue, always runs.
     *
     * Each rung is ONE map-only Spark job.  The (queryId, lon, lat) rows
     * are collected once and the pending ones stay on the driver; per rung
@@ -381,7 +396,7 @@ object GeoEngine {
     * angle) does not exceed the heap's worst, plus a slack for Karney's
     * error and the chord's rounding.  Heaps are ordered as the id type
     * sorts in Spark, nulls first.  Task partials are merged on the driver
-    * as they arrive (`RDD.aggregate`), so nothing shuffles.  A settled
+    * as they arrive (`SparkContext.runJob`), so nothing shuffles.  A settled
     * query leaves the pending list by id value (`equals`); rows sharing a
     * query id are one query, as in [[knnBruteForce]].  Driver memory is the
     * pending rows plus O(pending x k) merged heaps and one task's partial
@@ -416,25 +431,30 @@ object GeoEngine {
     var pending = described(spark, "knnJoin collect queries")(q.collect()).toSeq
     val settled = Seq.newBuilder[Row]
     val rungs = Seq.newBuilder[KnnRung]
-    for (l <- level to 2 by -3 if pending.nonEmpty) {
+    var next = Option(level)
+    while (pending.nonEmpty && next.nonEmpty) {
+      val l = next.get
       val (ids, probe) = KnnProbe(pending, l)
-      val top = if (probe.cover.isEmpty) new KnnTopK(ids.length, k)
-      else {
+      val top = new KnnTopK(ids.length, k)
+      if (probe.cover.nonEmpty) {
         val bc = spark.sparkContext.broadcast(probe)
         try described(spark, s"knnJoin rung l=$l pending=${pending.size}")(
-          scan.aggregate(new KnnTopK(ids.length, k))(
-            (acc, row) => acc.add(bc, row, idOrd), (a, b) => a.merge(b, idOrd)))
+          spark.sparkContext.runJob(scan, KnnTopK.task(bc, ids.length, k, idOrd),
+            (_: Int, part: KnnTopK) => top.merge(part, idOrd)))
         finally bc.destroy()
       }
-      val done = ids.indices.filter(top.settled(_, probe.radius))
+      val (done, open) = ids.indices.partition(top.settled(_, probe.radius))
       for (s <- done; (dist, id, rank) <- top.ranked(s, idOrd))
         settled += Row(ids(s), toExternal(id), dist, rank)
+      val step = if (open.isEmpty) None
+        else knnNextRung(l, open.map(s => math.max(top.held(s), 1).toLong).sum, top.rows)
       val rung = KnnRung(l, pending.size, top.rows, top.banded, top.probed,
-        top.hits, top.inCap, top.solves, done.size)
+        top.hits, top.inCap, top.solves, done.size, step.map(_._1), step.fold(0L)(_._2))
       log.info(s"knnJoin $rung")
       rungs += rung
       val doneIds = done.map(ids(_)).toSet
       pending = pending.filterNot(r => doneIds(r.get(0)))
+      next = step.map(_._1)
     }
     val answer = local(settled.result(), schema)
     if (pending.nonEmpty) log.info(s"knnJoin brute-force residue=${pending.size}")
@@ -443,17 +463,32 @@ object GeoEngine {
      rungs.result())
   }
 
+  /** The rung after rung `l` of a kNN ladder whose pending heaps weigh
+    * `weight` (the sum over them of max(pairs held, 1)) after a scan of
+    * `rows`, with its expected pair count weight x 4^(l - l'): the coarsest
+    * l' in l - 3, l - 6, ... >= 2 whose count is at most `rows`, or l - 3
+    * whatever its count; None past the coarsest. */
+  private def knnNextRung(l: Int, weight: Long, rows: Long): Option[(Int, Long)] = {
+    def est(next: Int) = weight.toDouble * math.pow(4, l - next)
+    (l - 3 to 2 by -3).findLast(next => next == l - 3 || est(next) <= rows)
+      .map(next => next -> est(next).toLong)
+  }
+
   /** One kNN rung's counts, summed over its scan: data rows scanned; rows
     * dropped before any trig (`banded`: a null coordinate, or a latitude
     * outside the band); rows `probed` against the cover (banded + probed
     * = rows); the (row, pending query) candidates their cells `hit`; the
     * candidates within the reject cap (`inCap`); the Karney `solves` among
-    * those; and the queries the rung settled. */
+    * those; the queries the rung settled; the level of the `next` rung
+    * (none when nothing is pending or the rung was the coarsest) and the
+    * expected pair count `est` that picked it (0 for none). */
   private[graft] final case class KnnRung(level: Int, pending: Int, rows: Long,
-      banded: Long, probed: Long, hits: Long, inCap: Long, solves: Long, settled: Int) {
+      banded: Long, probed: Long, hits: Long, inCap: Long, solves: Long, settled: Int,
+      next: Option[Int], est: Long) {
     override def toString: String =
       s"rung l=$level pending=$pending rows=$rows banded=$banded probed=$probed " +
-        s"hits=$hits in_cap=$inCap karney=$solves settled=$settled"
+        s"hits=$hits in_cap=$inCap karney=$solves settled=$settled " +
+        s"next=${next.getOrElse("none")} est=$est"
   }
 
   /** Spark's ascending order of a data-id type, nulls first (as
@@ -544,23 +579,23 @@ object GeoEngine {
     private val size = new Array[Int](slots)
     private val cut = Array.fill(slots)(Double.PositiveInfinity)
     var rows, banded, probed, hits, inCap, solves = 0L
-    @transient private var probe: KnnProbe = _
 
     /** Slot s holds k pairs, the worst within `radius`. */
     def settled(s: Int, radius: Double): Boolean = size(s) == k && dist(s)(0) <= radius
 
+    /** The pairs heap s holds: while it is short of k, every pair of its
+      * query within the reject cap. */
+    def held(s: Int): Int = size(s)
+
     /** Probes one (data id, lon, lat) scan row against the band and the
       * cover table. */
-    def add(bc: org.apache.spark.broadcast.Broadcast[KnnProbe],
-            row: org.apache.spark.sql.catalyst.InternalRow,
-            ord: KnnIdOrdering): KnnTopK = {
-      if (probe == null) probe = bc.value
-      val p = probe
+    def add(p: KnnProbe, row: org.apache.spark.sql.catalyst.InternalRow,
+            ord: KnnIdOrdering): Unit = {
       rows += 1
-      if (row.isNullAt(1) || row.isNullAt(2)) { banded += 1; return this }
+      if (row.isNullAt(1) || row.isNullAt(2)) { banded += 1; return }
       val lat = row.getDouble(2)
       // a NaN latitude or one beyond the poles skips the band test
-      if (math.abs(lat) <= 90 && !p.inBand(lat)) { banded += 1; return this }
+      if (math.abs(lat) <= 90 && !p.inBand(lat)) { banded += 1; return }
       probed += 1
       val lon = row.getDouble(1)
       // the unit-sphere xyz of xyzCols, and the cell of CellIndex.cellId
@@ -570,7 +605,7 @@ object GeoEngine {
       val z = math.sin(math.toRadians(lat))
       val cover = p.cover.get
       val j = cover.indexOf(graft.geo.cells.CellIndex.cellIdXyz(x, y, z, p.level))
-      if (j < 0) return this
+      if (j < 0) return
       var t = cover.offs(j); val end = cover.offs(j + 1)
       hits += end - t
       while (t < end) {
@@ -588,11 +623,10 @@ object GeoEngine {
         }
         t += 1
       }
-      this
     }
 
     /** Folds `that` in: counts add, heaps merge. */
-    def merge(that: KnnTopK, ord: KnnIdOrdering): KnnTopK = {
+    def merge(that: KnnTopK, ord: KnnIdOrdering): Unit = {
       rows += that.rows; banded += that.banded; probed += that.probed
       hits += that.hits; inCap += that.inCap; solves += that.solves
       var s = 0
@@ -601,7 +635,6 @@ object GeoEngine {
         while (e < that.size(s)) { insert(s, that.dist(s)(e), that.id(s)(e), ord); e += 1 }
         s += 1
       }
-      this
     }
 
     /** Slot s's pairs ascending by (dist, id), as (dist, id, rank). */
@@ -652,6 +685,19 @@ object GeoEngine {
   }
 
   private object KnnTopK {
+    /** A rung's task: one partition's partial over `slots` heaps of `k`.
+      * Defined here so the closure cleaner reads this small class, not
+      * GeoEngine's. */
+    def task(bc: org.apache.spark.broadcast.Broadcast[KnnProbe], slots: Int, k: Int,
+             ord: KnnIdOrdering): (org.apache.spark.TaskContext,
+                 Iterator[org.apache.spark.sql.catalyst.InternalRow]) => KnnTopK =
+      (_, rows) => {
+        val p = bc.value
+        val top = new KnnTopK(slots, k)
+        while (rows.hasNext) top.add(p, rows.next(), ord)
+        top
+      }
+
     /** Geodesic metres per radian of unit-sphere central angle, at least:
       * b^2/a, the meridional radius of curvature at the equator. */
     private val MinMetresPerRadian = {

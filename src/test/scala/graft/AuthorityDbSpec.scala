@@ -299,9 +299,7 @@ class AuthorityDbSpec extends AnyFunSuite {
     // name, through the programmatic search path (the
     // proj_context_set_search_paths analogue)
     val tmp = java.nio.file.Files.createTempDirectory("graft-geoid")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(graft.geo.grids.Grids.referenceDir,
-        "data/tests/egm96_15_downsampled.gtx"),
+    java.nio.file.Files.copy(ReferenceTree.file("data/tests/egm96_15_downsampled.gtx"),
       tmp.resolve("egm96_15.gtx"))
     graft.geo.grids.Grids.addSearchDir(tmp.toString)
     assert(AuthorityDb.geoidGridFor("EPSG:5773").contains("egm96_15.gtx"))

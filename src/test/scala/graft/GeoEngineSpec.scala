@@ -427,6 +427,8 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (answer, rungs) = GeoEngine.knnLadder(plantedQ, planted, 3, 12, "query_id", "data_id")
     assert(rungs.map(r => (r.level, r.pending, r.settled)) ==
       Seq((12, 5, 1), (9, 4, 1), (6, 3, 1), (3, 2, 1)))
+    // a scan of 12 rows never pays for a bigger step
+    assert(rungs.map(_.next) == Seq(Some(9), Some(6), Some(3), None))
     val n = planted.count()
     for (r <- rungs) {
       assert(r.rows == n && r.banded + r.probed == r.rows, r)
@@ -436,6 +438,31 @@ class GeoEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and -40 degrees) drops the clusters' farther points
     assert(rungs.head.banded > 0 && rungs.head.solves > 0)
     assert(answer.count() == 15)
+  }
+
+  test("kNN skips a rung whose expected pairs cost less than its scan") {
+    // 6000 background rows far south of the planted clusters: q4's three
+    // neighbours lie 11, 22 and 167 km north of it.  After rung 12 q4
+    // holds no pair, and rung 6's expected 1 x 4^6 = 4096 pairs are fewer
+    // than the 6012 rows scanned (rung 3's 4^9 are not), so rung 9 is
+    // skipped; after rung 6 it holds two, and rung 3 is the coarsest.
+    val (plantedQ, planted) = plantedClusters()
+    val background = spark.range(6000).select(
+      concat(lit("bg"), col("id").cast("string")).as("data_id"),
+      (col("id") % 100 * 0.7 - 170).as("lon"), (floor(col("id") / 100) * 0.5 - 60).as("lat"))
+    val data = planted.unionByName(background)
+    val q4 = plantedQ.where(col("query_id") === "q4")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSet
+    val (answer, rungs) = GeoEngine.knnLadder(q4, data, 3, 12, "query_id", "data_id")
+    assert(rungs.map(r => (r.level, r.pending, r.settled, r.next, r.est)) ==
+      Seq((12, 1, 0, Some(6), 4096L), (6, 1, 0, Some(3), 128L), (3, 1, 1, None, 0L)))
+    assert(rungs.forall(_.rows == 6012), rungs)
+    assert(rows(answer).map(r => (r._2, r._4)) == Set(("d30", 1), ("d31", 2), ("d32", 3)))
+    assert(rows(answer) == rows(GeoEngine.knnBruteForce(q4, data, 3)))
+    // all planted queries: their pending heaps weigh too much for a skip
+    assert(rows(GeoEngine.knnJoin(plantedQ, data, 3, 12)) ==
+      rows(GeoEngine.knnBruteForce(plantedQ, data, 3)))
   }
 
   test("kNN never returns a data row with a null coordinate") {

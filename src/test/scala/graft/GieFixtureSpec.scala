@@ -8,11 +8,11 @@ import graft.geo.gie.Gie
   * front-end.  Operations outside the engine's inventory are skipped;
   * the lower-bound assertions keep the skip mechanism honest. */
 class GieFixtureSpec extends AnyFunSuite {
-  private val dir = s"${graft.geo.grids.Grids.referenceDir}/test/gie"
+  private def gie(file: String) = ReferenceTree.file(s"test/gie/$file").toString
 
   private def check(file: String, minChecks: Int,
                     mustCover: Seq[String] = Nil): Gie.Stats = {
-    val st = Gie.runFile(s"$dir/$file")
+    val st = Gie.runFile(gie(file))
     info(st.summary)
     info("checks by proj: " + st.checksByProj.toSeq.sortBy(-_._2).mkString(", "))
     st.failures.take(10).foreach(f =>
@@ -52,7 +52,7 @@ class GieFixtureSpec extends AnyFunSuite {
     // none of the four required grids (EGM2008, BD72, ICGC, RAF20) ship
     // with the reference test data — every block must skip via its
     // require_grid directive, exactly as the reference's gie does
-    val st = Gie.runFile(s"$dir/epsg_grid.gie")
+    val st = Gie.runFile(gie("epsg_grid.gie"))
     info(st.summary)
     assert(st.failures.isEmpty, st.failures.take(5).mkString("; "))
   }
@@ -237,7 +237,7 @@ class GieFixtureSpec extends AnyFunSuite {
   test("GIGS conformance series: every file passes in full") {
     // Geospatial Integrity of Geoscience Software suite — every file in
     // the reference tree's test/gigs runs with zero skipped operations.
-    val dir2 = new java.io.File(graft.geo.grids.Grids.referenceDir, "test/gigs")
+    val dir2 = ReferenceTree.file("test/gigs").toFile
     var checks = 0
     var supported = 0
     val failures = scala.collection.mutable.ListBuffer.empty[String]

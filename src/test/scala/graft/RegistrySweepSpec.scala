@@ -28,7 +28,7 @@ class RegistrySweepSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sample list covers the reference registry exactly (pj_list.h)") {
     val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(graft.geo.grids.Grids.referenceDir, "src/pj_list.h")), "UTF-8")
+      ReferenceTree.file("src/pj_list.h")), "UTF-8")
     val refNames = "PROJ_HEAD\\(([a-z0-9_]+)".r
       .findAllMatchIn(src).map(_.group(1)).toSet
     val ours = RegistrySweep.samples.map(_.op)

@@ -22,7 +22,7 @@ class RoundtripSweepSpec extends AnyFunSuite {
 
   test("worldwide fwd-inv closure <= 10 cm for all non-regional ops") {
     val content = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(graft.geo.grids.Grids.referenceDir, "test/gie/builtins.gie")), "UTF-8")
+      ReferenceTree.file("test/gie/builtins.gie")), "UTF-8")
     val ops = Gie.parse(content).collect { case Gie.Operation(s, _) => s }
     def nameOf(s: String) = s.split("\\s+")
       .find(_.stripPrefix("+").startsWith("proj="))
