@@ -59,18 +59,373 @@ object SparkEntry {
     * oracle embeds the identical double. */
   private val RipleyAreaM2 = 4.0 * math.Pi * 6371007.18 * 6371007.18
 
-  /** SQL mirror of the geo derivation. DuckDB `mod` keeps the dividend
-    * sign, so spell out the floored-mod identity used by Spark's pmod. */
   /** 16 integer support directions for the convex-hull oracle (exact
     * long dot products; shared by the Spark query and the SQL replay). */
   private val HullDirs = Seq((1, 0), (2, 1), (1, 1), (1, 2), (0, 1),
     (-1, 2), (-1, 1), (-2, 1), (-1, 0), (-2, -1), (-1, -1), (-1, -2),
     (0, -1), (1, -2), (1, -1), (2, -1))
 
+  /** Time of day of an events row as a fraction of the day: the clock the
+    * event-stream point models drift with. */
+  private def dayFrac: Column =
+    pmod(unix_micros(col("ts").cast("timestamp")), lit(86400000000L)) /
+      lit(86400000000.0)
+
+  /** events scan + the day-cycle drift positions (lon, lat) of the
+    * movement queries: 60 x 30 user classes that move 2 deg east and 1 deg
+    * north over a day and jump back at midnight.  `every4` keeps the
+    * event_id % 4 = 0 subset; `keep` columns come first.  The oracles
+    * replay it as [[eventPointsSql]]. */
+  private def eventPoints(s: SparkSession, dir: String, every4: Boolean,
+                          keep: String*): DataFrame = {
+    val ev = s.read.parquet(s"$dir/events.parquet")
+    (if (every4) ev.where(pmod(col("event_id"), lit(4)) === 0) else ev)
+      .select(keep.map(col) ++ Seq(
+        (pmod(col("user_id"), lit(60)) * 3.0 - 90.0 + dayFrac * 2.0).as("lon"),
+        (pmod(col("user_id"), lit(30)) * 2.0 - 30.0 + dayFrac * 1.0).as("lat")): _*)
+  }
+
+  /** nation scan as kNN / join query points (query_id, lon, lat), a
+    * deterministic spread like [[geoLineitem]]'s; the oracles replay it as
+    * [[nationQueriesCte]]. */
+  private def nationQueries(s: SparkSession, dir: String, lon: String = "lon",
+                            lat: String = "lat"): DataFrame =
+    s.read.parquet(s"$dir/nation.parquet")
+      .select(col("n_nationkey").cast("long").as("query_id"),
+        (pmod(col("n_nationkey") * lit(37.123457), lit(359.9)) - lit(179.95)).as(lon),
+        (pmod(col("n_nationkey") * lit(53.654321), lit(169.9)) - lit(84.95)).as(lat))
+
+  // --- SQL mirrors of engine primitives, shared by the oracles ------------
+
+  /** SQL mirror of the geo derivation. DuckDB `mod` keeps the dividend
+    * sign, so spell out the floored-mod identity used by Spark's pmod. */
   private val lonSql =
     "(mod(mod(l_extendedprice * 1.000003, 359.9) + 359.9, 359.9) - 179.95)"
   private val latSql =
     "(mod(mod(l_discount*1000.0 + l_partkey * 1.000007, 169.9) + 169.9, 169.9) - 84.95)"
+
+  /** [[nationQueries]]'s positions as select items, and the whole scan as
+    * the CTE `queries`. */
+  private val nationLonLatSql =
+    """(mod(mod(n_nationkey * 37.123457, 359.9) + 359.9, 359.9) - 179.95) AS lon,
+      |    (mod(mod(n_nationkey * 53.654321, 169.9) + 169.9, 169.9) - 84.95) AS lat""".stripMargin
+  private val nationQueriesCte =
+    s"""queries AS (
+       |  SELECT CAST(n_nationkey AS BIGINT) AS query_id,
+       |    $nationLonLatSql
+       |  FROM nation
+       |)""".stripMargin
+
+  /** [[dayFrac]] and the [[eventPoints]] positions as select items. */
+  private val dayFracSql = "(epoch_us(ts) % 86400000000) / 86400000000.0"
+  private val eventPointsSql =
+    s"""(user_id % 60) * 3.0 - 90.0 + $dayFracSql * 2.0 AS lon,
+       |    (user_id % 30) * 2.0 - 30.0 + $dayFracSql * 1.0 AS lat""".stripMargin
+
+  /** GeoEngine.trajectorySegments' split rule over the [[eventPoints]]
+    * streams: `flagged.is_new` is 1 where a user's point follows a gap
+    * over 6 h or a jump over 100 km (chord^2, the threshold computed by
+    * the engine's own maxChord2For); `keep` columns ride along. */
+  private def segmentFlagsSql(keep: String): String =
+    s"""WITH p AS (
+       |  SELECT event_id, user_id, ts,
+       |    $eventPointsSql
+       |  FROM events WHERE ts IS NOT NULL
+       |), lagged AS (
+       |  SELECT event_id, user_id, ts, lon, lat,
+       |    lag(ts) OVER w AS pts, lag(lon) OVER w AS plon,
+       |    lag(lat) OVER w AS plat
+       |  FROM p WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+       |), flagged AS (
+       |  SELECT event_id, user_id, ts$keep,
+       |    CASE WHEN pts IS NULL OR ts > pts + INTERVAL 6 HOUR
+       |      OR ${chord2Sql("plon", "plat", "lon", "lat")} > ${GeoEngine.maxChord2For(100000.0)}
+       |    THEN 1 ELSE 0 END AS is_new
+       |  FROM lagged
+       |)""".stripMargin
+
+  /** asinh(tan(lat)) written out as ln(tan + sqrt(tan^2 + 1)), not asinh,
+    * so both engines evaluate the same floating-point expression. */
+  private def lnTanSql(lat: String): String =
+    s"""ln(tan(radians($lat)) +
+       |    sqrt(tan(radians($lat))*tan(radians($lat)) + 1.0))""".stripMargin
+
+  /** WebMercKernel's forward (sphere R = 6378137 m) as the select items
+    * `x`, `y` in metres. */
+  private def webmercSql(lon: String, lat: String): String =
+    s"""6378137.0 * radians($lon) AS x,
+       |  6378137.0 * ${lnTanSql(lat)} AS y""".stripMargin
+
+  /** The XYZ web tile (x, y) of each lineitem point on an n x n grid. */
+  private def webTileSql(n: Int): String =
+    s"""SELECT CAST(least(greatest(floor(($lonSql + 180.0) / 360.0 * $n.0), 0), ${n - 1}) AS BIGINT) AS x,
+       |  CAST(least(greatest(floor((1.0 - ${lnTanSql(latSql)} / pi()) / 2.0 * $n.0), 0), ${n - 1}) AS BIGINT) AS y
+       |FROM lineitem""".stripMargin
+
+  /** The q_webmerc_fwd oracle, shared by every query that must reach the
+    * same plan through another front door (name, registry, WKT, ESRI WKT,
+    * PROJJSON, SQL text). */
+  private val webmercDmSql =
+    s"""SELECT l_orderkey, l_linenumber,
+       |  CAST(round(6378137.0 * radians($lonSql) * 10) AS BIGINT) AS x_dm,
+       |  CAST(round(6378137.0 * ${lnTanSql(latSql)} * 10) AS BIGINT) AS y_dm
+       |FROM lineitem""".stripMargin
+
+  /** HexIndex.fracQ/fracR at size 250 km over columns (x, y). */
+  private val hexFracSql =
+    """(sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
+      |         (2.0/3.0 * y) / 250000.0 AS fr""".stripMargin
+
+  /** HexIndex.cubeRoundQ/R: each cube coordinate rounded (rq, rr, rs),
+    * then the one with the largest error repaired with the same chain
+    * (strict >, fix q first, then r, else s) into (hq, hr). */
+  private val hexRoundSql =
+    """fq, fr, -fq - fr AS fs,
+      |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
+      |         floor(-fq - fr + 0.5) AS rs""".stripMargin
+  private val hexFixSql =
+    """CASE WHEN abs(rq - fq) > abs(rr - fr)
+      |                AND abs(rq - fq) > abs(rs - fs)
+      |              THEN -rr - rs ELSE rq END AS hq,
+      |         CASE WHEN abs(rq - fq) > abs(rr - fr)
+      |                AND abs(rq - fq) > abs(rs - fs) THEN rr
+      |              WHEN abs(rr - fr) > abs(rs - fs)
+      |              THEN -rq - rs ELSE rr END AS hr""".stripMargin
+
+  /** The planar hexbin (HexIndex, 250 km hexes on web-Mercator metres)
+    * as the CTEs xy -> fr -> rounded -> fixed; `fixed` holds (hq, hr).
+    * `lead` ("bin, ") and `carry` (", v") columns ride along every step;
+    * `xyCarry` selects the carried columns from `from`. */
+  private def hexSql(lon: String, lat: String, from: String, lead: String = "",
+                     carry: String = "", xyCarry: String = ""): String =
+    s"""xy AS (
+       |  SELECT $lead${webmercSql(lon, lat)}$xyCarry
+       |  FROM $from
+       |), fr AS (
+       |  SELECT $lead$hexFracSql$carry
+       |  FROM xy
+       |), rounded AS (
+       |  SELECT $lead$hexRoundSql$carry
+       |  FROM fr
+       |), fixed AS (
+       |  SELECT $lead$hexFixSql$carry
+       |  FROM rounded
+       |)""".stripMargin
+
+  /** [[hexSql]] over the lineitem points, then `cells`: the aggregates
+    * `agg` per hex (hq, hr).  A `value` expression is carried along as
+    * `v`. */
+  private def hexCellsSql(agg: String = "CAST(count(*) AS BIGINT) AS x",
+                          value: String = ""): String = {
+    val hex = if (value.isEmpty) hexSql(lonSql, latSql, "lineitem")
+      else hexSql(lonSql, latSql, "lineitem", carry = ", v", xyCarry = s", $value AS v")
+    s"""WITH $hex, cells AS (
+       |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
+       |         $agg
+       |  FROM fixed GROUP BY 1, 2
+       |)""".stripMargin
+  }
+
+  /** `g`: the cell count n and the exact moments sum_x, sum_x2 of `cells`. */
+  private val hexMomentsSql =
+    """g AS (
+      |  SELECT CAST(count(*) AS BIGINT) AS n,
+      |         CAST(sum(x) AS BIGINT) AS sum_x,
+      |         CAST(sum(x*x) AS BIGINT) AS sum_x2
+      |  FROM cells
+      |)""".stripMargin
+
+  /** Hex rows `a` and `b` are the same or adjacent hexes (axial grid
+    * distance <= 1, HexIndex's ring-1 disk). */
+  private val hexRing1Sql =
+    """(abs(a.hq - b.hq) + abs(a.hr - b.hr)
+      |        + abs((a.hq - b.hq) + (a.hr - b.hr))) / 2 <= 1""".stripMargin
+
+  /** The Gi* oracle over `cells` (hexes with attribute x): ring-1
+    * neighbour sums and the closed-form z from exact longs; x is output
+    * as `xName`. */
+  private def giStarSql(cells: String, xName: String): String =
+    s"""$cells, $hexMomentsSql, nbr AS (
+       |  SELECT a.hq, a.hr,
+       |         CAST(sum(b.x) AS BIGINT) AS wsum,
+       |         CAST(count(*) AS BIGINT) AS wn
+       |  FROM cells a JOIN cells b
+       |    ON $hexRing1Sql
+       |  GROUP BY 1, 2
+       |)
+       |SELECT c.hq, c.hr, c.x AS $xName, nb.wsum, nb.wn,
+       |  CASE WHEN g.n > 1 AND wn < g.n
+       |        AND CAST(g.sum_x2 AS DOUBLE)/g.n
+       |            - (CAST(g.sum_x AS DOUBLE)/g.n)
+       |              * (CAST(g.sum_x AS DOUBLE)/g.n) > 0
+       |  THEN CAST(floor(
+       |    (CAST(nb.wsum AS DOUBLE)
+       |       - CAST(g.sum_x AS DOUBLE)/g.n * nb.wn)
+       |    / (sqrt(CAST(g.sum_x2 AS DOUBLE)/g.n
+       |         - (CAST(g.sum_x AS DOUBLE)/g.n)
+       |           * (CAST(g.sum_x AS DOUBLE)/g.n))
+       |       * sqrt(CAST(g.n*nb.wn - nb.wn*nb.wn AS DOUBLE)
+       |              / CAST(g.n - 1 AS DOUBLE)))
+       |    * 1e6 + 0.5) AS BIGINT)
+       |  END AS z_e6
+       |FROM cells c
+       |JOIN nbr nb ON c.hq = nb.hq AND c.hr = nb.hr
+       |CROSS JOIN g""".stripMargin
+
+  /** `deltas`: the axial offsets of HexIndex's ring-2 disk; `fan`: the
+    * `cols` of every cell spread over its disk, with each offset's planar
+    * (dx, dy) in metres. */
+  private def hexFanSql(cols: String): String =
+    s"""deltas AS (
+       |  SELECT a.dq, b.dr
+       |  FROM (SELECT unnest(generate_series(-2, 2)) AS dq) a
+       |  CROSS JOIN (SELECT unnest(generate_series(-2, 2)) AS dr) b
+       |  WHERE (abs(a.dq) + abs(b.dr) + abs(a.dq + b.dr)) / 2 <= 2
+       |), fan AS (
+       |  SELECT c.hq + d.dq AS hq, c.hr + d.dr AS hr, $cols,
+       |         ${math.sqrt(3.0) * 250000.0} * (d.dq + d.dr / 2.0) AS dx,
+       |         ${1.5 * 250000.0} * d.dr AS dy
+       |  FROM cells c CROSS JOIN deltas d
+       |)""".stripMargin
+
+  /** q_emerging's and q_mk_trend's input: each user's fixed position,
+    * hexbinned, counted per (hex, day) in `counts`; `rng` holds the days
+    * spanned. */
+  private val userHexDaysCtes =
+    s"""WITH pts AS (
+       |  SELECT epoch_us(ts) // 86400000000 AS bin,
+       |         (user_id % 60) * 3.0 - 90.0 AS lon,
+       |         (user_id % 30) * 2.0 - 30.0 AS lat
+       |  FROM events
+       |), ${hexSql("lon", "lat", "pts", lead = "bin, ")}, counts AS (
+       |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
+       |         CAST(bin AS BIGINT) AS bin, CAST(count(*) AS BIGINT) AS x
+       |  FROM fixed GROUP BY 1, 2, 3
+       |), rng AS (
+       |  SELECT min(bin) AS minb, max(bin) AS maxb FROM counts
+       |)""".stripMargin
+
+  /** The lineitem points in web-Mercator millimetres (xq, yq), grouped by
+    * `grp` = l_suppkey % 7: the input of the hull and centrography
+    * oracles. */
+  private val mmGroupsCtes =
+    s"""WITH xy AS (
+       |  SELECT l_suppkey % 7 AS grp,
+       |         ${webmercSql(lonSql, latSql)}
+       |  FROM lineitem
+       |), q AS (
+       |  SELECT grp, CAST(floor(x * 1000.0 + 0.5) AS BIGINT) AS xq,
+       |         CAST(floor(y * 1000.0 + 0.5) AS BIGINT) AS yq
+       |  FROM xy
+       |)""".stripMargin
+
+  /** Unit-sphere vector (x, y, z) of columns (lon, lat) as select items,
+    * and the squared chord between two such rows `a` and `b`. */
+  private val xyzSql =
+    """cos(radians(lat))*cos(radians(lon)) AS x,
+      |    cos(radians(lat))*sin(radians(lon)) AS y,
+      |    sin(radians(lat)) AS z""".stripMargin
+  private val xyzChord2Sql =
+    """(a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)
+      |      + (a.z-b.z)*(a.z-b.z)""".stripMargin
+
+  /** Squared unit-sphere chord between two (lon, lat) degree expression
+    * pairs, in GeoEngine.chord2's operation order. */
+  private def chord2Sql(lon1: String, lat1: String, lon2: String,
+                        lat2: String): String =
+    s"""pow(cos(radians($lat1))*cos(radians($lon1)) - cos(radians($lat2))*cos(radians($lon2)), 2) +
+       |    pow(cos(radians($lat1))*sin(radians($lon1)) - cos(radians($lat2))*sin(radians($lon2)), 2) +
+       |    pow(sin(radians($lat1)) - sin(radians($lat2)), 2)""".stripMargin
+
+  /** The bilinear NTv2 shift of tests/test_hgrid_little_endian.gsb (4 x 4
+    * nodes, 1 arc-hour apart from 4 E 52 N; node i = row*4 + (3 - col)
+    * holds lat 14400 - 900*i and lon -900*(i+1) arc-seconds) in the
+    * kernel's float quantization and summation order.  `ntv2CellCtes`
+    * take (lam, phi) radians from `rad` to the cell's first node i00 and
+    * its weights m00..m11. */
+  private val ntv2CellCtes =
+    """g AS (
+      |  SELECT *,
+      |    (lam - 14400 * (pi()/180/3600)) / (3600 * (pi()/180/3600)) AS tl,
+      |    (phi - 187200 * (pi()/180/3600)) / (3600 * (pi()/180/3600)) AS tp
+      |  FROM rad
+      |), c AS (
+      |  SELECT *, floor(tl) AS il, floor(tp) AS ip,
+      |    tl - floor(tl) AS fl, tp - floor(tp) AS fp FROM g
+      |), mm AS (
+      |  SELECT *, (1.0-fl)*(1.0-fp) AS m00, fl*(1.0-fp) AS m10,
+      |    (1.0-fl)*fp AS m01, fl*fp AS m11,
+      |    ip*4 + (3 - il) AS i00 FROM c
+      |)""".stripMargin
+
+  /** `ntv2ShiftCtes` run the whole shift over `pts` (lon, lat degrees),
+    * adding (vlat, vlon) in radians. */
+  private val ntv2ShiftCtes =
+    s"""rad AS (
+       |  SELECT *, lon * (pi()/180) AS lam, lat * (pi()/180) AS phi FROM pts
+       |), $ntv2CellCtes, sh AS (
+       |  SELECT *,
+       |    m00*CAST(CAST(14400 - 900*i00 AS REAL) * (pi()/180/3600) AS REAL)
+       |      + m10*CAST(CAST(14400 - 900*(i00-1) AS REAL) * (pi()/180/3600) AS REAL)
+       |      + m01*CAST(CAST(14400 - 900*(i00+4) AS REAL) * (pi()/180/3600) AS REAL)
+       |      + m11*CAST(CAST(14400 - 900*(i00+3) AS REAL) * (pi()/180/3600) AS REAL) AS vlat,
+       |    m00*CAST(-CAST(-900*(i00+1) AS REAL) * (pi()/180/3600) AS REAL)
+       |      + m10*CAST(-CAST(-900*(i00) AS REAL) * (pi()/180/3600) AS REAL)
+       |      + m01*CAST(-CAST(-900*(i00+5) AS REAL) * (pi()/180/3600) AS REAL)
+       |      + m11*CAST(-CAST(-900*(i00+4) AS REAL) * (pi()/180/3600) AS REAL) AS vlon
+       |  FROM mm
+       |)""".stripMargin
+
+  /** FNV-1a 64 of a string expression's UTF-16 units (DedupHash) in
+    * HUGEINT arithmetic that replays the 64-bit wraparound; `i` names the
+    * lambda's index. */
+  private def fnvSql(s: String, i: String = "i"): String =
+    s"""list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
+       |      list_transform(generate_series(1, length($s)),
+       |        $i -> CAST(unicode(substr($s, $i, 1)) AS HUGEINT))),
+       |      (h, c) -> ((h - (h % 65536) +
+       |          CAST(xor(CAST(h % 65536 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT))
+       |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))""".stripMargin
+
+  /** An unsigned 64-bit HUGEINT as the signed view Spark's longs hold. */
+  private def signedSql(u: String): String =
+    s"""CASE WHEN $u >= CAST('9223372036854775808' AS HUGEINT)
+       |      THEN $u - CAST('18446744073709551616' AS HUGEINT)
+       |      ELSE $u END""".stripMargin
+
+  /** The 64-bit shingle combine of Dedup: fold a list of word hashes as
+    * ((OFS ^ h1) * P ^ h2) * P ..., the xor on the signed view. */
+  private def fnvCombineSql(list: String): String =
+    s"""list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
+       |      $list),
+       |      (acc, h) -> (((CAST(xor(
+       |          CAST(${signedSql("acc")} AS BIGINT),
+       |          CAST(${signedSql("h")} AS BIGINT)) AS HUGEINT)
+       |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
+       |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))""".stripMargin
+
+  /** The n-word shingle hashes of a document's word hashes `hs`: none for
+    * no words, one shingle of all of them below n words, else one per
+    * window (`window` spells hs[i..i+n-1]), distinct if `distinct`. */
+  private def shinglesSql(n: Int, window: String, distinct: Boolean): String = {
+    val all = s"list_transform(generate_series(1, len(hs) - ${n - 1}), i ->\n    " +
+      fnvCombineSql(window) + ")"
+    s"""CASE WHEN len(hs) = 0 THEN CAST([] AS HUGEINT[])
+       |    WHEN len(hs) < $n THEN [${fnvCombineSql("hs")}]
+       |    ELSE ${if (distinct) s"list_distinct($all)" else all} END""".stripMargin
+  }
+
+  /** Each document's words (`toks.ws`, single-space split, empties
+    * dropped) and their FNV hashes (`wh.hs`). */
+  private val wordHashCtes =
+    s"""WITH toks AS (
+       |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ws
+       |  FROM documents
+       |), wh AS (
+       |  SELECT doc_id, list_transform(ws, w ->
+       |    ${fnvSql("w")}
+       |  ) AS hs FROM toks
+       |)""".stripMargin
 
   /** The quadratic cube-face tiling (CellIndex) re-expressed as pure SQL:
     * produces columns (face, i, j) at `level` from lon/lat expressions. */
@@ -81,9 +436,7 @@ object SparkEntry {
        |WITH pts AS (
        |  SELECT $lonExpr AS lon, $latExpr AS lat$extraCols FROM $from
        |), xyz AS (
-       |  SELECT *, cos(radians(lat))*cos(radians(lon)) AS x,
-       |         cos(radians(lat))*sin(radians(lon)) AS y,
-       |         sin(radians(lat)) AS z
+       |  SELECT *, $xyzSql
        |  FROM pts
        |), faced AS (
        |  SELECT *, CASE
@@ -106,14 +459,14 @@ object SparkEntry {
        |  SELECT *,
        |    CASE WHEN u >= 0 THEN 0.5*sqrt(1+3*u) ELSE 1-0.5*sqrt(1-3*u) END AS s,
        |    CASE WHEN v >= 0 THEN 0.5*sqrt(1+3*v) ELSE 1-0.5*sqrt(1-3*v) END AS t
-       |  FROM st_base
+       |  FROM uv
        |), tiled AS (
        |  SELECT *,
        |    LEAST(GREATEST(CAST(floor(s*$n) AS BIGINT), 0), ${n - 1}) AS i,
        |    LEAST(GREATEST(CAST(floor(t*$n) AS BIGINT), 0), ${n - 1}) AS j
        |  FROM st
        |)
-     """.stripMargin.replace("FROM st_base", "FROM uv")
+     """.stripMargin
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -558,8 +911,6 @@ object SparkEntry {
       // bipartite min/max over quantized chord-arc integers with the
       // same coverage rule — equality also proves the cell prefilter
       // drops no true pair.
-      val us = unix_micros(col("ts").cast("timestamp"))
-      val dayFrac = pmod(us, lit(86400000000L)) / lit(86400000000.0)
       val pts = s.read.parquet(s"$dir/events.parquet")
         .where(pmod(col("event_id"), lit(4)) === 0)
         .select(col("user_id").as("traj_id"),
@@ -782,10 +1133,7 @@ object SparkEntry {
       // grid-distance identity — the pair sets must be identical.
       val data = geoLineitem(s, dir)
         .select(col("pt_id").as("data_id"), col("lon"), col("lat"))
-      val queries = s.read.parquet(s"$dir/nation.parquet")
-        .select(col("n_nationkey").cast("long").as("query_id"),
-          (pmod(col("n_nationkey") * lit(37.123457), lit(359.9)) - lit(179.95)).as("lon"),
-          (pmod(col("n_nationkey") * lit(53.654321), lit(169.9)) - lit(84.95)).as("lat"))
+      val queries = nationQueries(s, dir)
       GeoEngine.hexRingJoin(queries, data, sizeMeters = 250000.0, k = 2)
     }),
     // --- web tiles + geohash (the two SQL-expressible cell families) -----
@@ -841,10 +1189,7 @@ object SparkEntry {
       // validated in scalatest.
       val data = geoLineitem(s, dir)
         .select(col("pt_id").as("data_id"), col("lon"), col("lat"))
-      val queries = s.read.parquet(s"$dir/nation.parquet")
-        .select(col("n_nationkey").cast("long").as("query_id"),
-          (pmod(col("n_nationkey") * lit(37.123457), lit(359.9)) - lit(179.95)).as("lon"),
-          (pmod(col("n_nationkey") * lit(53.654321), lit(169.9)) - lit(84.95)).as("lat"))
+      val queries = nationQueries(s, dir)
       GeoEngine.knnBruteForce(queries, data, k = 3, geodesic = false)
         .select(col("query_id"), col("data_id"), col("rank").cast("long").as("rnk"))
     }),
@@ -869,10 +1214,7 @@ object SparkEntry {
         .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
       val data = dataPts
         .select(col("pt_id").as("data_id"), col("lon"), col("lat"))
-      val queries = s.read.parquet(s"$dir/nation.parquet")
-        .select(col("n_nationkey").cast("long").as("query_id"),
-          (pmod(col("n_nationkey") * lit(37.123457), lit(359.9)) - lit(179.95)).as("lon"),
-          (pmod(col("n_nationkey") * lit(53.654321), lit(169.9)) - lit(84.95)).as("lat"))
+      val queries = nationQueries(s, dir)
       val res = GeoEngine.knnJoin(queries, data, k = 3, level = 6)
       // FRESH frames for the coordinate join-back (the knn result shares
       // lineage with queries/data; reusing them would self-join on
@@ -881,10 +1223,7 @@ object SparkEntry {
       // inside the 2.04% band), so the oracle pins the top-3 MEMBERSHIP
       // and each member's chord — the geodesic ordering itself stays
       // cross-checked by brute-force equality in GeoEngineSpec.
-      val qc = s.read.parquet(s"$dir/nation.parquet")
-        .select(col("n_nationkey").cast("long").as("query_id"),
-          (pmod(col("n_nationkey") * lit(37.123457), lit(359.9)) - lit(179.95)).as("q_lon"),
-          (pmod(col("n_nationkey") * lit(53.654321), lit(169.9)) - lit(84.95)).as("q_lat"))
+      val qc = nationQueries(s, dir, "q_lon", "q_lat")
       val dc = dataPts
         .select(col("pt_id").as("data_id"), col("lon").as("d_lon"),
           col("lat").as("d_lat"))
@@ -901,10 +1240,7 @@ object SparkEntry {
       // GeoEngineSpec.  0.0022 chord^2 ~ a 300 km radius.
       val data = geoLineitem(s, dir)
         .select(col("pt_id").as("data_id"), col("lon"), col("lat"))
-      val queries = s.read.parquet(s"$dir/nation.parquet")
-        .select(col("n_nationkey").cast("long").as("query_id"),
-          (pmod(col("n_nationkey") * lit(37.123457), lit(359.9)) - lit(179.95)).as("lon"),
-          (pmod(col("n_nationkey") * lit(53.654321), lit(169.9)) - lit(84.95)).as("lat"))
+      val queries = nationQueries(s, dir)
       GeoEngine.distanceJoinChord(queries, data, maxChord2 = 0.0022)
         .select(col("query_id"), col("data_id"),
           floor(col("cd") * 1e12 + 0.5).cast("long").as("cd_e12"))
@@ -1440,8 +1776,6 @@ object SparkEntry {
       // plain SQL (islands with duration >= 30min; the engine's vector-
       // mean centroid of identical points equals the position to <1e-9,
       // absorbed by the 1e-7 output rounding).
-      val us = unix_micros(col("ts").cast("timestamp"))
-      val dayFrac = pmod(us, lit(86400000000L)) / lit(86400000000.0)
       val pts = s.read.parquet(s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("ts"),
           (pmod(col("user_id"), lit(60)) * 3.0 - 90.0
@@ -1462,14 +1796,7 @@ object SparkEntry {
       // user (smooth ~50km/6h drift) that wraps at midnight (>=160km
       // jump), so both split rules fire and thresholds sit far from any
       // borderline.  Same one-shuffle shape as q_sessionize.
-      val us = unix_micros(col("ts").cast("timestamp"))
-      val dayFrac = pmod(us, lit(86400000000L)) / lit(86400000000.0)
-      val pts = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          (pmod(col("user_id"), lit(60)) * 3.0 - 90.0 + dayFrac * 2.0)
-            .as("lon"),
-          (pmod(col("user_id"), lit(30)) * 2.0 - 30.0 + dayFrac * 1.0)
-            .as("lat"))
+      val pts = eventPoints(s, dir, every4 = false, "event_id", "user_id", "ts")
       GeoEngine.trajectorySegments(pts, Seq("user_id"), maxGap = "6 hours",
           maxJumpMeters = 100000.0, tiebreak = "event_id")
         .groupBy(col("user_id"), col("segment_seq"))
@@ -1486,14 +1813,7 @@ object SparkEntry {
       // quadratic cube tiling on BOTH endpoints — replays verbatim in
       // SQL.  One-point segments are dropped (engine default minPoints=2,
       // mirrored by the oracle's per-segment count filter).
-      val us = unix_micros(col("ts").cast("timestamp"))
-      val dayFrac = pmod(us, lit(86400000000L)) / lit(86400000000.0)
-      val pts = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          (pmod(col("user_id"), lit(60)) * 3.0 - 90.0 + dayFrac * 2.0)
-            .as("lon"),
-          (pmod(col("user_id"), lit(30)) * 2.0 - 30.0 + dayFrac * 1.0)
-            .as("lat"))
+      val pts = eventPoints(s, dir, every4 = false, "event_id", "user_id", "ts")
       val flows = GeoEngine.odFlows(pts, Seq("user_id"), level = 6,
         maxGap = "6 hours", maxJumpMeters = 100000.0, tiebreak = "event_id")
       val o = geo.cellDecode(col("o_cell"))
@@ -1542,15 +1862,7 @@ object SparkEntry {
       // The oracle replays the time + chord predicates over a quadratic
       // join on the event_id%4 subset; the engine's (bucket, cell)
       // candidate fan must be invisible to the result.
-      val us = unix_micros(col("ts").cast("timestamp"))
-      val dayFrac = pmod(us, lit(86400000000L)) / lit(86400000000.0)
-      val pts = s.read.parquet(s"$dir/events.parquet")
-        .where(pmod(col("event_id"), lit(4)) === 0)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          (pmod(col("user_id"), lit(60)) * 3.0 - 90.0 + dayFrac * 2.0)
-            .as("lon"),
-          (pmod(col("user_id"), lit(30)) * 2.0 - 30.0 + dayFrac * 1.0)
-            .as("lat"))
+      val pts = eventPoints(s, dir, every4 = true, "event_id", "user_id", "ts")
       GeoEngine.colocationJoinChord(pts, "event_id", "user_id",
           GeoEngine.maxChord2For(10000.0), tauSeconds = 1800L)
         .select(col("a_id"), col("b_id"),
@@ -1565,15 +1877,7 @@ object SparkEntry {
       // arc distances quantized to exact um longs; the oracle replays
       // the quadratic min per point and the closed-form R / z from the
       // identical integers.
-      val us = unix_micros(col("ts").cast("timestamp"))
-      val dayFrac = pmod(us, lit(86400000000L)) / lit(86400000000.0)
-      val pts = s.read.parquet(s"$dir/events.parquet")
-        .where(pmod(col("event_id"), lit(4)) === 0)
-        .select(col("event_id"),
-          (pmod(col("user_id"), lit(60)) * 3.0 - 90.0 + dayFrac * 2.0)
-            .as("lon"),
-          (pmod(col("user_id"), lit(30)) * 2.0 - 30.0 + dayFrac * 1.0)
-            .as("lat"))
+      val pts = eventPoints(s, dir, every4 = true, "event_id")
       graft.geo.engine.SpatialStats.annStatChord(pts, RipleyAreaM2,
           GeoEngine.maxChord2For(500000.0), idCol = "event_id")
         .select(col("n_points"), col("sum_nnd_um"),
@@ -1590,15 +1894,7 @@ object SparkEntry {
       // recomputes all three counts from a quadratic cross join and the
       // same closed-form doubles — the engine's three one-shuffle pair
       // streams must be invisible.
-      val us = unix_micros(col("ts").cast("timestamp"))
-      val dayFrac = pmod(us, lit(86400000000L)) / lit(86400000000.0)
-      val pts = s.read.parquet(s"$dir/events.parquet")
-        .where(pmod(col("event_id"), lit(4)) === 0)
-        .select(col("event_id"), col("ts"),
-          (pmod(col("user_id"), lit(60)) * 3.0 - 90.0 + dayFrac * 2.0)
-            .as("lon"),
-          (pmod(col("user_id"), lit(30)) * 2.0 - 30.0 + dayFrac * 1.0)
-            .as("lat"))
+      val pts = eventPoints(s, dir, every4 = true, "event_id", "ts")
       graft.geo.engine.SpatialStats.knoxChord(pts,
           GeoEngine.maxChord2For(10000.0), tauSeconds = 1800L,
           idCol = "event_id")
@@ -1614,14 +1910,7 @@ object SparkEntry {
       // reference DP and the tolerance property are pinned in
       // MovementOpsSpec).  The near-linear daily drift collapses to its
       // endpoints; midnight wraps and gap boundaries survive.
-      val us = unix_micros(col("ts").cast("timestamp"))
-      val dayFrac = pmod(us, lit(86400000000L)) / lit(86400000000.0)
-      val pts = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          (pmod(col("user_id"), lit(60)) * 3.0 - 90.0 + dayFrac * 2.0)
-            .as("lon"),
-          (pmod(col("user_id"), lit(30)) * 2.0 - 30.0 + dayFrac * 1.0)
-            .as("lat"))
+      val pts = eventPoints(s, dir, every4 = false, "event_id", "user_id", "ts")
       GeoEngine.simplifyTrajectories(pts, Seq("user_id"),
           toleranceMeters = 20000.0)
         .select(col("user_id"), col("t_us"),
@@ -1993,36 +2282,34 @@ object SparkEntry {
       k.ell.a, k.ell.es)
   }
 
-  /** Sentinel for an oracle whose builder could not run in this
-    * environment (an absent asset file) — filtered out of [[oracleSql]]
-    * so the query degrades to the rows-only check instead of aborting the
-    * WHOLE oracle dump (losing every query's compare). */
-  private final val OracleUnavailable = "__ORACLE_UNAVAILABLE__"
-  private def guarded(build: => String): String =
-    try build catch {
-      // ONLY an absent asset file degrades to rows-only.  A genuine
-      // code regression (NPE, MatchError, require), an unsupported
-      // operation or a corrupt file must still crash loudly — silently
-      // dropping the oracle would hide exactly the regressions the
-      // pinned-VALUES entries exist to catch.
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. Omitted keys get the weaker rows-only check.
+    * Each entry is built on its own, so one whose builder needs an absent
+    * asset file costs that query's compare alone: it is left out and
+    * named on stderr.  Any other builder error (a code regression, an
+    * unsupported operation, a corrupt file) propagates. */
+  def oracleSql: Map[String, String] = oracleBuilders.flatMap { case (name, build) =>
+    try Some(name -> build())
+    catch {
       case e: graft.geo.proj.ProjString.AssetMissing =>
         System.err.println(s"[oracle] builder failed, entry omitted: ${e.detail}")
-        OracleUnavailable
+        None
     }
+  }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get the weaker rows-only check. */
-  def oracleSql: Map[String, String] =
-    oracleSqlAll.filterNot(_._2 == OracleUnavailable)
+  /** `"q_x" ~> sql` pairs an oracle with its SQL, built when called. */
+  private implicit final class OracleName(private val name: String) extends AnyVal {
+    def ~>(sql: => String): (String, () => String) = (name, () => sql)
+  }
 
-  private def oracleSqlAll: Map[String, String] = Map(
-    "q_url_normalize" ->
+  private def oracleBuilders: Map[String, () => String] = Map(
+    "q_url_normalize" ~>
       (urlCtes + "\nSELECT doc_id, url_norm, host, domain FROM normed"),
-    "q_url_dedup" ->
+    "q_url_dedup" ~>
       (urlCtes + """
         |SELECT min(doc_id) AS keep_id, count(*) AS n_dups
         |FROM normed GROUP BY url_norm""".stripMargin),
-    "q_domain_mix" ->
+    "q_domain_mix" ~>
       (urlCtes + """,
         |per AS (
         |  SELECT domain, count(*) AS n_docs, count(DISTINCT host) AS n_hosts
@@ -2033,14 +2320,10 @@ object SparkEntry {
         |    CAST((SELECT sum(n_docs) FROM per) AS DOUBLE)) AS BIGINT)
         |    AS share_ppm
         |FROM per""".stripMargin),
-    "q_webmerc_fwd" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CAST(round(6378137.0 * radians($lonSql) * 10) AS BIGINT) AS x_dm,
-         |  CAST(round(6378137.0 * ln(tan(radians($latSql)) +
-         |    sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) * 10) AS BIGINT) AS y_dm
-         |FROM lineitem""".stripMargin,
+    "q_webmerc_fwd" ~>
+      webmercDmSql,
     // Mars equirectangular is closed-form on the registry's sphere
-    "q_mars_eqc" ->
+    "q_mars_eqc" ~>
       s"""SELECT l_orderkey, l_linenumber,
          |  CAST(round(3396190.0 * radians($lonSql) * 10) AS BIGINT) AS x_dm,
          |  CAST(round(3396190.0 * radians($latSql) * 10) AS BIGINT) AS y_dm
@@ -2050,7 +2333,7 @@ object SparkEntry {
     // small-angle position-vector matrix, with the PUBLISHED registry
     // values hard-coded — the Spark side derives the same constants from
     // the parsed authority database
-    "q_db_helmert" ->
+    "q_db_helmert" ~>
       s"""WITH pts AS (
          |  SELECT l_orderkey, l_linenumber,
          |    radians($lonSql) AS lam, radians($latSql) AS phi
@@ -2081,7 +2364,7 @@ object SparkEntry {
     // 12.5-year shift, all in the engine's own operation order.  The grid
     // lookup uses the original lam/phi where the engine round-trips
     // through cart-inverse — a ~1e-14 m difference, far inside cm rounding.
-    "q_point_motion" -> guarded {
+    "q_point_motion" ~> {
       val (w, h, west, south, resX, resY, samples, sE, sN, sU, a, es) =
         pmVelOracle
       def nodeRows: String = (for (iy <- 0 until h; ix <- 0 until w) yield
@@ -2132,49 +2415,29 @@ object SparkEntry {
     },
     // identical oracle to q_webmerc_fwd — the NAME-resolved plan
     // ("WGS 84 / Pseudo-Mercator") must hash-equal the kernel-object plan
-    "q_crs_name" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CAST(round(6378137.0 * radians($lonSql) * 10) AS BIGINT) AS x_dm,
-         |  CAST(round(6378137.0 * ln(tan(radians($latSql)) +
-         |    sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) * 10) AS BIGINT) AS y_dm
-         |FROM lineitem""".stripMargin,
+    "q_crs_name" ~>
+      webmercDmSql,
     // identical oracle to q_webmerc_fwd — the authority-database-resolved
     // EPSG:3857 plan must hash-equal the kernel-object plan
-    "q_authority_webmerc" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CAST(round(6378137.0 * radians($lonSql) * 10) AS BIGINT) AS x_dm,
-         |  CAST(round(6378137.0 * ln(tan(radians($latSql)) +
-         |    sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) * 10) AS BIGINT) AS y_dm
-         |FROM lineitem""".stripMargin,
+    "q_authority_webmerc" ~>
+      webmercDmSql,
     // identical oracle to q_webmerc_fwd — the point is that the
     // WKT-parsed plan hash-equals the kernel-object plan
-    "q_wkt_webmerc" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CAST(round(6378137.0 * radians($lonSql) * 10) AS BIGINT) AS x_dm,
-         |  CAST(round(6378137.0 * ln(tan(radians($latSql)) +
-         |    sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) * 10) AS BIGINT) AS y_dm
-         |FROM lineitem""".stripMargin,
+    "q_wkt_webmerc" ~>
+      webmercDmSql,
     // identical oracle again — the ESRI-WKT1-parsed plan must hash-equal
     // the kernel-object and WKT2-parsed plans
-    "q_esri_webmerc" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CAST(round(6378137.0 * radians($lonSql) * 10) AS BIGINT) AS x_dm,
-         |  CAST(round(6378137.0 * ln(tan(radians($latSql)) +
-         |    sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) * 10) AS BIGINT) AS y_dm
-         |FROM lineitem""".stripMargin,
+    "q_esri_webmerc" ~>
+      webmercDmSql,
     // identical oracle again — the PROJJSON-parsed plan must hash-equal
     // the kernel-object and WKT-parsed plans
-    "q_projjson_path" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CAST(round(6378137.0 * radians($lonSql) * 10) AS BIGINT) AS x_dm,
-         |  CAST(round(6378137.0 * ln(tan(radians($latSql)) +
-         |    sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) * 10) AS BIGINT) AS y_dm
-         |FROM lineitem""".stripMargin,
+    "q_projjson_path" ~>
+      webmercDmSql,
     // CRS identification: the matched EPSG code is recomputed
     // ARITHMETICALLY (WGS84 UTM north = 32600+zone) and the per-zone
     // counts from the same parquet geo derivation — independent of the
     // identification path under test
-    "q_crs_identify" ->
+    "q_crs_identify" ~>
       s"""SELECT zone, 'epsg:' || CAST(32600 + zone AS VARCHAR) AS code,
          |  CAST(70 AS INTEGER) AS confidence, COUNT(*) AS n_pts
          |FROM (SELECT CAST(FLOOR(($lonSql + 180.0) / 6.0) + 1 AS INTEGER) AS zone
@@ -2182,46 +2445,42 @@ object SparkEntry {
          |GROUP BY zone""".stripMargin,
     // identical oracle once more — the SQL-text path (registered
     // functions) must hash-equal the Column-DSL plans
-    "q_sql_surface" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |  CAST(round(6378137.0 * radians($lonSql) * 10) AS BIGINT) AS x_dm,
-         |  CAST(round(6378137.0 * ln(tan(radians($latSql)) +
-         |    sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) * 10) AS BIGINT) AS y_dm
-         |FROM lineitem""".stripMargin,
-    "q_mill_fwd" ->
+    "q_sql_surface" ~>
+      webmercDmSql,
+    "q_mill_fwd" ~>
       s"""SELECT l_orderkey, l_linenumber,
          |  CAST(round(6400000.0 * radians($lonSql) * 10) AS BIGINT) AS x_dm,
          |  CAST(round(6400000.0 * 1.25 * ln(tan(pi()/4 +
          |    0.4 * radians($latSql))) * 10) AS BIGINT) AS y_dm
          |FROM lineitem""".stripMargin,
-    "q_gall_fwd" ->
+    "q_gall_fwd" ~>
       s"""SELECT l_orderkey, l_linenumber,
          |  CAST(round(6400000.0 * 0.70710678118654752440 *
          |    radians($lonSql) * 10) AS BIGINT) AS x_dm,
          |  CAST(round(6400000.0 * 1.70710678118654752440 *
          |    tan(0.5 * radians($latSql)) * 10) AS BIGINT) AS y_dm
          |FROM lineitem""".stripMargin,
-    "q_merc_roundtrip" ->
+    "q_merc_roundtrip" ~>
       "SELECT CAST(count(*) AS BIGINT) AS n_rows, CAST(0 AS BIGINT) AS n_bad FROM lineitem",
-    "q_utm_pipeline" ->
+    "q_utm_pipeline" ~>
       s"""SELECT CAST(count(*) AS BIGINT) AS n_rows, CAST(0 AS BIGINT) AS n_bad
          |FROM lineitem
          |WHERE $lonSql BETWEEN 0.0 AND 6.0 AND $latSql BETWEEN 0.0 AND 80.0""".stripMargin,
-    "q_span_extract" ->
+    "q_span_extract" ~>
       s"""SELECT l_orderkey, l_linenumber,
          |  CAST(round($latSql * 1e6) AS BIGINT) AS g_lat_u,
          |  CAST(round($lonSql * 1e6) AS BIGINT) AS g_lon_u
          |FROM lineitem""".stripMargin,
-    "q_tile_occupancy" ->
+    "q_tile_occupancy" ~>
       s"""${tileSql(lonSql, latSql, 4, "lineitem")}
          |SELECT CAST(face AS BIGINT) AS face, CAST(count(*) AS BIGINT) AS n_points
          |FROM tiled GROUP BY face""".stripMargin,
-    "q_tile_assign" ->
+    "q_tile_assign" ~>
       s"""${tileSql(lonSql, latSql, 3, "lineitem")}
          |SELECT CAST(face AS BIGINT) AS face, i, j,
          |  CAST(count(*) AS BIGINT) AS n_points
          |FROM tiled GROUP BY 1, 2, 3""".stripMargin,
-    "q_tile_pyramid" ->
+    "q_tile_pyramid" ~>
       (1 to 3).map { l =>
         s"""SELECT * FROM (
            |${tileSql(lonSql, latSql, l, "lineitem")}
@@ -2232,31 +2491,8 @@ object SparkEntry {
     // planar hexbin replay: webmerc metres -> fractional axial coords ->
     // cube rounding with the exact comparison chain of HexIndex.cubeRound*
     // (strict >, fix q first, then r, else s)
-    "q_hex_occupancy" ->
-      s"""WITH xy AS (
-         |  SELECT 6378137.0 * radians($lonSql) AS x,
-         |         6378137.0 * ln(tan(radians($latSql)) +
-         |           sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) AS y
-         |  FROM lineitem
-         |), fr AS (
-         |  SELECT (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-         |         (2.0/3.0 * y) / 250000.0 AS fr
-         |  FROM xy
-         |), rounded AS (
-         |  SELECT fq, fr, -fq - fr AS fs,
-         |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-         |         floor(-fq - fr + 0.5) AS rs
-         |  FROM fr
-         |), fixed AS (
-         |  SELECT CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs)
-         |              THEN -rr - rs ELSE rq END AS hq,
-         |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs) THEN rr
-         |              WHEN abs(rr - fr) > abs(rs - fs)
-         |              THEN -rq - rs ELSE rr END AS hr
-         |  FROM rounded
-         |)
+    "q_hex_occupancy" ~>
+      s"""WITH ${hexSql(lonSql, latSql, "lineitem")}
          |SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
          |       CAST(count(*) AS BIGINT) AS n_points
          |FROM fixed GROUP BY 1, 2""".stripMargin,
@@ -2265,170 +2501,19 @@ object SparkEntry {
     // self-join, then the closed-form statistics from exact longs (the
     // engine keeps counts as the attribute precisely so both engines
     // derive identical IEEE doubles from identical integers).
-    "q_gi_star" ->
-      s"""WITH xy AS (
-         |  SELECT 6378137.0 * radians($lonSql) AS x,
-         |         6378137.0 * ln(tan(radians($latSql)) +
-         |           sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) AS y
-         |  FROM lineitem
-         |), fr AS (
-         |  SELECT (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-         |         (2.0/3.0 * y) / 250000.0 AS fr
-         |  FROM xy
-         |), rounded AS (
-         |  SELECT fq, fr, -fq - fr AS fs,
-         |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-         |         floor(-fq - fr + 0.5) AS rs
-         |  FROM fr
-         |), fixed AS (
-         |  SELECT CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs)
-         |              THEN -rr - rs ELSE rq END AS hq,
-         |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs) THEN rr
-         |              WHEN abs(rr - fr) > abs(rs - fs)
-         |              THEN -rq - rs ELSE rr END AS hr
-         |  FROM rounded
-         |), cells AS (
-         |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-         |         CAST(count(*) AS BIGINT) AS x
-         |  FROM fixed GROUP BY 1, 2
-         |), g AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n,
-         |         CAST(sum(x) AS BIGINT) AS sum_x,
-         |         CAST(sum(x*x) AS BIGINT) AS sum_x2
-         |  FROM cells
-         |), nbr AS (
-         |  SELECT a.hq, a.hr,
-         |         CAST(sum(b.x) AS BIGINT) AS wsum,
-         |         CAST(count(*) AS BIGINT) AS wn
-         |  FROM cells a JOIN cells b
-         |    ON (abs(a.hq - b.hq) + abs(a.hr - b.hr)
-         |        + abs((a.hq - b.hq) + (a.hr - b.hr))) / 2 <= 1
-         |  GROUP BY 1, 2
-         |)
-         |SELECT c.hq, c.hr, c.x AS n_points, nb.wsum, nb.wn,
-         |  CASE WHEN g.n > 1 AND wn < g.n
-         |        AND CAST(g.sum_x2 AS DOUBLE)/g.n
-         |            - (CAST(g.sum_x AS DOUBLE)/g.n)
-         |              * (CAST(g.sum_x AS DOUBLE)/g.n) > 0
-         |  THEN CAST(floor(
-         |    (CAST(nb.wsum AS DOUBLE)
-         |       - CAST(g.sum_x AS DOUBLE)/g.n * nb.wn)
-         |    / (sqrt(CAST(g.sum_x2 AS DOUBLE)/g.n
-         |         - (CAST(g.sum_x AS DOUBLE)/g.n)
-         |           * (CAST(g.sum_x AS DOUBLE)/g.n))
-         |       * sqrt(CAST(g.n*nb.wn - nb.wn*nb.wn AS DOUBLE)
-         |              / CAST(g.n - 1 AS DOUBLE)))
-         |    * 1e6 + 0.5) AS BIGINT)
-         |  END AS z_e6
-         |FROM cells c
-         |JOIN nbr nb ON c.hq = nb.hq AND c.hr = nb.hr
-         |CROSS JOIN g""".stripMargin,
+    "q_gi_star" ~> giStarSql(hexCellsSql(), "n_points"),
     // weighted Gi* replay: q_gi_star with the cell attribute swapped
     // from count(*) to the exact sum of the integer value column.
-    "q_gi_star_w" ->
-      s"""WITH xy AS (
-         |  SELECT 6378137.0 * radians($lonSql) AS x,
-         |         6378137.0 * ln(tan(radians($latSql)) +
-         |           sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) AS y,
-         |         l_orderkey % 97 AS v
-         |  FROM lineitem
-         |), fr AS (
-         |  SELECT (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-         |         (2.0/3.0 * y) / 250000.0 AS fr, v
-         |  FROM xy
-         |), rounded AS (
-         |  SELECT fq, fr, -fq - fr AS fs,
-         |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-         |         floor(-fq - fr + 0.5) AS rs, v
-         |  FROM fr
-         |), fixed AS (
-         |  SELECT CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs)
-         |              THEN -rr - rs ELSE rq END AS hq,
-         |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs) THEN rr
-         |              WHEN abs(rr - fr) > abs(rs - fs)
-         |              THEN -rq - rs ELSE rr END AS hr, v
-         |  FROM rounded
-         |), cells AS (
-         |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-         |         CAST(sum(v) AS BIGINT) AS x
-         |  FROM fixed GROUP BY 1, 2
-         |), g AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n,
-         |         CAST(sum(x) AS BIGINT) AS sum_x,
-         |         CAST(sum(x*x) AS BIGINT) AS sum_x2
-         |  FROM cells
-         |), nbr AS (
-         |  SELECT a.hq, a.hr,
-         |         CAST(sum(b.x) AS BIGINT) AS wsum,
-         |         CAST(count(*) AS BIGINT) AS wn
-         |  FROM cells a JOIN cells b
-         |    ON (abs(a.hq - b.hq) + abs(a.hr - b.hr)
-         |        + abs((a.hq - b.hq) + (a.hr - b.hr))) / 2 <= 1
-         |  GROUP BY 1, 2
-         |)
-         |SELECT c.hq, c.hr, c.x AS sum_v, nb.wsum, nb.wn,
-         |  CASE WHEN g.n > 1 AND wn < g.n
-         |        AND CAST(g.sum_x2 AS DOUBLE)/g.n
-         |            - (CAST(g.sum_x AS DOUBLE)/g.n)
-         |              * (CAST(g.sum_x AS DOUBLE)/g.n) > 0
-         |  THEN CAST(floor(
-         |    (CAST(nb.wsum AS DOUBLE)
-         |       - CAST(g.sum_x AS DOUBLE)/g.n * nb.wn)
-         |    / (sqrt(CAST(g.sum_x2 AS DOUBLE)/g.n
-         |         - (CAST(g.sum_x AS DOUBLE)/g.n)
-         |           * (CAST(g.sum_x AS DOUBLE)/g.n))
-         |       * sqrt(CAST(g.n*nb.wn - nb.wn*nb.wn AS DOUBLE)
-         |              / CAST(g.n - 1 AS DOUBLE)))
-         |    * 1e6 + 0.5) AS BIGINT)
-         |  END AS z_e6
-         |FROM cells c
-         |JOIN nbr nb ON c.hq = nb.hq AND c.hr = nb.hr
-         |CROSS JOIN g""".stripMargin,
-    "q_moran" ->
-      s"""WITH xy AS (
-         |  SELECT 6378137.0 * radians($lonSql) AS x,
-         |         6378137.0 * ln(tan(radians($latSql)) +
-         |           sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) AS y
-         |  FROM lineitem
-         |), fr AS (
-         |  SELECT (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-         |         (2.0/3.0 * y) / 250000.0 AS fr
-         |  FROM xy
-         |), rounded AS (
-         |  SELECT fq, fr, -fq - fr AS fs,
-         |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-         |         floor(-fq - fr + 0.5) AS rs
-         |  FROM fr
-         |), fixed AS (
-         |  SELECT CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs)
-         |              THEN -rr - rs ELSE rq END AS hq,
-         |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs) THEN rr
-         |              WHEN abs(rr - fr) > abs(rs - fs)
-         |              THEN -rq - rs ELSE rr END AS hr
-         |  FROM rounded
-         |), cells AS (
-         |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-         |         CAST(count(*) AS BIGINT) AS x
-         |  FROM fixed GROUP BY 1, 2
-         |), g AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n,
-         |         CAST(sum(x) AS BIGINT) AS sum_x,
-         |         CAST(sum(x*x) AS BIGINT) AS sum_x2
-         |  FROM cells
-         |), ed AS (
+    "q_gi_star_w" ~> giStarSql(
+      hexCellsSql("CAST(sum(v) AS BIGINT) AS x", value = "l_orderkey % 97"), "sum_v"),
+    "q_moran" ~>
+      s"""${hexCellsSql()}, $hexMomentsSql, ed AS (
          |  SELECT CAST(count(*) AS BIGINT) AS e,
          |         CAST(sum(a.x) AS BIGINT) AS s_xi,
          |         CAST(sum(b.x) AS BIGINT) AS s_xj,
          |         CAST(sum(a.x*b.x) AS BIGINT) AS s_xixj
          |  FROM cells a JOIN cells b
-         |    ON (abs(a.hq - b.hq) + abs(a.hr - b.hr)
-         |        + abs((a.hq - b.hq) + (a.hr - b.hr))) / 2 <= 1
+         |    ON $hexRing1Sql
          |   AND NOT (a.hq = b.hq AND a.hr = b.hr)
          |)
          |SELECT g.n AS n_cells, ed.e AS n_edges,
@@ -2452,49 +2537,11 @@ object SparkEntry {
     // IDW replay: hexbin chain carrying the integer value, ring-2 offset
     // fan with the same quantized (size/d)^2 weights, full join for the
     // exact-hit rule — all longs identical, estimate closed-form.
-    "q_idw" -> {
-      val sqrt3s = math.sqrt(3.0) * 250000.0
+    "q_idw" ~> {
       val r2 = 600000.0 * 600000.0
-      s"""WITH xy AS (
-         |  SELECT 6378137.0 * radians($lonSql) AS x,
-         |         6378137.0 * ln(tan(radians($latSql)) +
-         |           sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) AS y,
-         |         l_orderkey % 97 AS v
-         |  FROM lineitem
-         |), fr AS (
-         |  SELECT (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-         |         (2.0/3.0 * y) / 250000.0 AS fr, v
-         |  FROM xy
-         |), rounded AS (
-         |  SELECT fq, fr, -fq - fr AS fs,
-         |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-         |         floor(-fq - fr + 0.5) AS rs, v
-         |  FROM fr
-         |), fixed AS (
-         |  SELECT CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs)
-         |              THEN -rr - rs ELSE rq END AS hq,
-         |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs) THEN rr
-         |              WHEN abs(rr - fr) > abs(rs - fs)
-         |              THEN -rq - rs ELSE rr END AS hr, v
-         |  FROM rounded
-         |), cells AS (
-         |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-         |         CAST(count(*) AS BIGINT) AS x,
-         |         CAST(sum(v) AS BIGINT) AS sv
-         |  FROM fixed GROUP BY 1, 2
-         |), deltas AS (
-         |  SELECT a.dq, b.dr
-         |  FROM (SELECT unnest(generate_series(-2, 2)) AS dq) a
-         |  CROSS JOIN (SELECT unnest(generate_series(-2, 2)) AS dr) b
-         |  WHERE (abs(a.dq) + abs(b.dr) + abs(a.dq + b.dr)) / 2 <= 2
-         |), fan AS (
-         |  SELECT c.hq + d.dq AS hq, c.hr + d.dr AS hr, c.x, c.sv,
-         |         $sqrt3s * (d.dq + d.dr / 2.0) AS dx,
-         |         ${1.5 * 250000.0} * d.dr AS dy
-         |  FROM cells c CROSS JOIN deltas d
-         |), wtab AS (
+      val cells = hexCellsSql("CAST(count(*) AS BIGINT) AS x, CAST(sum(v) AS BIGINT) AS sv",
+        value = "l_orderkey % 97")
+      s"""$cells, ${hexFanSql("c.x, c.sv")}, wtab AS (
          |  SELECT hq, hr, x, sv,
          |    CASE WHEN dx*dx + dy*dy > 0 AND dx*dx + dy*dy <= $r2
          |    THEN CAST(floor((250000.0 / sqrt(dx*dx + dy*dy))
@@ -2531,7 +2578,7 @@ object SparkEntry {
     // the same final f > tau rejection, so the outputs coincide exactly.
     // Hash-verified since r5 (was rows-only "not SQL-expressible" — the
     // DP is expressible after all, in ~60 lines of lambdas).
-    "q_frechet" -> {
+    "q_frechet" ~> {
       val c2 = graft.geo.engine.GeoEngine.maxChord2For(50000.0)
       val twoR = 2.0 * 6378137.0
       val frac = "(epoch_us(ts) - 1704067200000000) / 2592000000000.0"
@@ -2543,9 +2590,7 @@ object SparkEntry {
          |  WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_id % 4 = 0
          |), v AS (
          |  SELECT uid, t_us, lon, lat,
-         |    cos(radians(lat))*cos(radians(lon)) AS x,
-         |    cos(radians(lat))*sin(radians(lon)) AS y,
-         |    sin(radians(lat)) AS z
+         |    $xyzSql
          |  FROM p
          |), seqs AS (
          |  SELECT uid,
@@ -2587,22 +2632,19 @@ object SparkEntry {
          |  CAST(floor($twoR * asin(sqrt(dpr[nb]) / 2.0) * 1e6 + 0.5) AS BIGINT) AS f_um
          |FROM dp WHERE i = na AND dpr[nb] <= $c2""".stripMargin
     },
-    "q_hausdorff" -> {
+    "q_hausdorff" ~> {
       val c2 = graft.geo.engine.GeoEngine.maxChord2For(50000.0)
       val twoR = 2.0 * 6378137.0
-      val frac = "(epoch_us(ts) % 86400000000) / 86400000000.0"
       s"""WITH p AS (
          |  SELECT DISTINCT user_id AS uid,
-         |    (user_id % 20) * 1.7 - 17.0 + $frac * 0.5 AS lon,
-         |    (user_id % 10) * 1.3 - 6.0 + $frac * 0.25 AS lat
+         |    (user_id % 20) * 1.7 - 17.0 + $dayFracSql * 0.5 AS lon,
+         |    (user_id % 10) * 1.3 - 6.0 + $dayFracSql * 0.25 AS lat
          |  FROM events
          |  WHERE ts IS NOT NULL AND user_id IS NOT NULL
          |    AND event_id % 4 = 0
          |), v AS (
          |  SELECT uid, lon, lat,
-         |    cos(radians(lat))*cos(radians(lon)) AS x,
-         |    cos(radians(lat))*sin(radians(lon)) AS y,
-         |    sin(radians(lat)) AS z
+         |    $xyzSql
          |  FROM p
          |), np AS (
          |  SELECT uid, CAST(count(*) AS BIGINT) AS n FROM v GROUP BY 1
@@ -2610,12 +2652,10 @@ object SparkEntry {
          |  SELECT a.uid AS li, b.uid AS rj,
          |    a.lon AS alon, a.lat AS alat, b.lon AS blon, b.lat AS blat,
          |    CAST(floor($twoR * asin(sqrt(
-         |      (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)
-         |      + (a.z-b.z)*(a.z-b.z)) / 2.0) * 1e6 + 0.5) AS BIGINT) AS um
+         |      $xyzChord2Sql) / 2.0) * 1e6 + 0.5) AS BIGINT) AS um
          |  FROM v a JOIN v b
          |    ON a.uid < b.uid
-         |   AND (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)
-         |     + (a.z-b.z)*(a.z-b.z) <= $c2
+         |   AND $xyzChord2Sql <= $c2
          |), ma AS (
          |  SELECT li, rj, alon, alat, min(um) AS mn
          |  FROM pr GROUP BY 1, 2, 3, 4
@@ -2640,35 +2680,8 @@ object SparkEntry {
     // quadrat replay: same hexbin chain, axial bounding-rectangle frame,
     // closed-form VMR / chi2 / z from the identical exact integers (the
     // empty-quadrat contribution enters via ss = sum_x2 - n^2/N).
-    "q_quadrat" ->
-      s"""WITH xy AS (
-         |  SELECT 6378137.0 * radians($lonSql) AS x,
-         |         6378137.0 * ln(tan(radians($latSql)) +
-         |           sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) AS y
-         |  FROM lineitem
-         |), fr AS (
-         |  SELECT (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-         |         (2.0/3.0 * y) / 250000.0 AS fr
-         |  FROM xy
-         |), rounded AS (
-         |  SELECT fq, fr, -fq - fr AS fs,
-         |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-         |         floor(-fq - fr + 0.5) AS rs
-         |  FROM fr
-         |), fixed AS (
-         |  SELECT CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs)
-         |              THEN -rr - rs ELSE rq END AS hq,
-         |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs) THEN rr
-         |              WHEN abs(rr - fr) > abs(rs - fs)
-         |              THEN -rq - rs ELSE rr END AS hr
-         |  FROM rounded
-         |), cells AS (
-         |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-         |         CAST(count(*) AS BIGINT) AS x
-         |  FROM fixed GROUP BY 1, 2
-         |), g AS (
+    "q_quadrat" ~>
+      s"""${hexCellsSql()}, g AS (
          |  SELECT CAST(count(*) AS BIGINT) AS occ,
          |         CAST(sum(x) AS BIGINT) AS sum_x,
          |         CAST(sum(x*x) AS BIGINT) AS sum_x2,
@@ -2702,35 +2715,8 @@ object SparkEntry {
     // General G replay: the q_moran edge frame plus per-cell degrees;
     // HUGEINT mirrors of the decimal moment sums; the Getis-Ord B0..B4
     // variance expansion written in the identical operation order.
-    "q_general_g" ->
-      s"""WITH xy AS (
-         |  SELECT 6378137.0 * radians($lonSql) AS x,
-         |         6378137.0 * ln(tan(radians($latSql)) +
-         |           sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) AS y
-         |  FROM lineitem
-         |), fr AS (
-         |  SELECT (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-         |         (2.0/3.0 * y) / 250000.0 AS fr
-         |  FROM xy
-         |), rounded AS (
-         |  SELECT fq, fr, -fq - fr AS fs,
-         |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-         |         floor(-fq - fr + 0.5) AS rs
-         |  FROM fr
-         |), fixed AS (
-         |  SELECT CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs)
-         |              THEN -rr - rs ELSE rq END AS hq,
-         |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs) THEN rr
-         |              WHEN abs(rr - fr) > abs(rs - fs)
-         |              THEN -rq - rs ELSE rr END AS hr
-         |  FROM rounded
-         |), cells AS (
-         |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-         |         CAST(count(*) AS BIGINT) AS x
-         |  FROM fixed GROUP BY 1, 2
-         |), g AS (
+    "q_general_g" ~>
+      s"""${hexCellsSql()}, g AS (
          |  SELECT CAST(count(*) AS BIGINT) AS n,
          |         CAST(sum(x) AS DOUBLE) AS m1,
          |         CAST(sum(x*x) AS DOUBLE) AS m2,
@@ -2741,8 +2727,7 @@ object SparkEntry {
          |  SELECT a.hq, a.hr, CAST(count(*) AS BIGINT) AS dg,
          |         sum(CAST(a.x AS HUGEINT) * b.x) AS sg
          |  FROM cells a JOIN cells b
-         |    ON (abs(a.hq - b.hq) + abs(a.hr - b.hr)
-         |        + abs((a.hq - b.hq) + (a.hr - b.hr))) / 2 <= 1
+         |    ON $hexRing1Sql
          |   AND NOT (a.hq = b.hq AND a.hr = b.hr)
          |  GROUP BY 1, 2
          |), ed AS (
@@ -2787,45 +2772,12 @@ object SparkEntry {
     // Geary's C replay: same hexbin + ordered ring-1 edge chain as
     // q_moran, with the exact-long squared-difference edge sum and the
     // closed-form (n-1)*s_d2 / (2*e*den) from the identical integers.
-    "q_geary" ->
-      s"""WITH xy AS (
-         |  SELECT 6378137.0 * radians($lonSql) AS x,
-         |         6378137.0 * ln(tan(radians($latSql)) +
-         |           sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) AS y
-         |  FROM lineitem
-         |), fr AS (
-         |  SELECT (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-         |         (2.0/3.0 * y) / 250000.0 AS fr
-         |  FROM xy
-         |), rounded AS (
-         |  SELECT fq, fr, -fq - fr AS fs,
-         |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-         |         floor(-fq - fr + 0.5) AS rs
-         |  FROM fr
-         |), fixed AS (
-         |  SELECT CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs)
-         |              THEN -rr - rs ELSE rq END AS hq,
-         |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs) THEN rr
-         |              WHEN abs(rr - fr) > abs(rs - fs)
-         |              THEN -rq - rs ELSE rr END AS hr
-         |  FROM rounded
-         |), cells AS (
-         |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-         |         CAST(count(*) AS BIGINT) AS x
-         |  FROM fixed GROUP BY 1, 2
-         |), g AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n,
-         |         CAST(sum(x) AS BIGINT) AS sum_x,
-         |         CAST(sum(x*x) AS BIGINT) AS sum_x2
-         |  FROM cells
-         |), ed AS (
+    "q_geary" ~>
+      s"""${hexCellsSql()}, $hexMomentsSql, ed AS (
          |  SELECT CAST(count(*) AS BIGINT) AS e,
          |         CAST(sum((a.x - b.x) * (a.x - b.x)) AS BIGINT) AS s_d2
          |  FROM cells a JOIN cells b
-         |    ON (abs(a.hq - b.hq) + abs(a.hr - b.hr)
-         |        + abs((a.hq - b.hq) + (a.hr - b.hr))) / 2 <= 1
+         |    ON $hexRing1Sql
          |   AND NOT (a.hq = b.hq AND a.hr = b.hr)
          |)
          |SELECT g.n AS n_cells, ed.e AS n_edges,
@@ -2846,35 +2798,8 @@ object SparkEntry {
     // join-count replay: binary flag at the same threshold, ordered
     // edge sums halved by integer division, hypergeometric expectations
     // from the same exact longs.
-    "q_join_counts" ->
-      s"""WITH xy AS (
-         |  SELECT 6378137.0 * radians($lonSql) AS x,
-         |         6378137.0 * ln(tan(radians($latSql)) +
-         |           sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) AS y
-         |  FROM lineitem
-         |), fr AS (
-         |  SELECT (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-         |         (2.0/3.0 * y) / 250000.0 AS fr
-         |  FROM xy
-         |), rounded AS (
-         |  SELECT fq, fr, -fq - fr AS fs,
-         |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-         |         floor(-fq - fr + 0.5) AS rs
-         |  FROM fr
-         |), fixed AS (
-         |  SELECT CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs)
-         |              THEN -rr - rs ELSE rq END AS hq,
-         |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs) THEN rr
-         |              WHEN abs(rr - fr) > abs(rs - fs)
-         |              THEN -rq - rs ELSE rr END AS hr
-         |  FROM rounded
-         |), cells AS (
-         |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-         |         CASE WHEN count(*) >= 150 THEN 1 ELSE 0 END AS b
-         |  FROM fixed GROUP BY 1, 2
-         |), g AS (
+    "q_join_counts" ~>
+      s"""${hexCellsSql("CASE WHEN count(*) >= 150 THEN 1 ELSE 0 END AS b")}, g AS (
          |  SELECT CAST(count(*) AS BIGINT) AS n,
          |         CAST(sum(b) AS BIGINT) AS nb
          |  FROM cells
@@ -2884,8 +2809,7 @@ object SparkEntry {
          |         CAST(sum(CASE WHEN a.b <> b.b THEN 1 ELSE 0 END)
          |              AS BIGINT) AS bw2
          |  FROM cells a JOIN cells b
-         |    ON (abs(a.hq - b.hq) + abs(a.hr - b.hr)
-         |        + abs((a.hq - b.hq) + (a.hr - b.hr))) / 2 <= 1
+         |    ON $hexRing1Sql
          |   AND NOT (a.hq = b.hq AND a.hr = b.hr)
          |)
          |SELECT g.n AS n_cells, g.nb AS n_black,
@@ -2916,37 +2840,17 @@ object SparkEntry {
     // convex-hull replay: the support function sampled on 16 integer
     // directions over RAW mm-quantized points — equals the engine's
     // hull-vertex supports iff the hull contains every extreme point.
-    "q_convex_hull" -> {
+    "q_convex_hull" ~> {
       val supportsSql = HullDirs.zipWithIndex.map { case ((dx, dy), i) =>
         f"max(xq * ($dx%d) + yq * ($dy%d)) AS s$i%02d"
       }.mkString(",\n         |         ")
-      s"""WITH xy AS (
-         |  SELECT l_suppkey % 7 AS grp,
-         |         6378137.0 * radians($lonSql) AS x,
-         |         6378137.0 * ln(tan(radians($latSql)) +
-         |           sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) AS y
-         |  FROM lineitem
-         |), q AS (
-         |  SELECT grp, CAST(floor(x * 1000.0 + 0.5) AS BIGINT) AS xq,
-         |         CAST(floor(y * 1000.0 + 0.5) AS BIGINT) AS yq
-         |  FROM xy
-         |)
+      s"""$mmGroupsCtes
          |SELECT grp, CAST(count(*) AS BIGINT) AS n_points,
          |         $supportsSql
          |FROM q GROUP BY 1""".stripMargin
     },
-    "q_centrography" ->
-      s"""WITH xy AS (
-         |  SELECT l_suppkey % 7 AS grp,
-         |         6378137.0 * radians($lonSql) AS x,
-         |         6378137.0 * ln(tan(radians($latSql)) +
-         |           sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) AS y
-         |  FROM lineitem
-         |), q AS (
-         |  SELECT grp, CAST(floor(x * 1000.0 + 0.5) AS BIGINT) AS xq,
-         |         CAST(floor(y * 1000.0 + 0.5) AS BIGINT) AS yq
-         |  FROM xy
-         |), s AS (
+    "q_centrography" ~>
+      s"""$mmGroupsCtes, s AS (
          |  SELECT grp, CAST(count(*) AS BIGINT) AS n,
          |         sum(CAST(xq AS HUGEINT)) AS sx,
          |         sum(CAST(yq AS HUGEINT)) AS sy,
@@ -2994,48 +2898,10 @@ object SparkEntry {
     // formula (constants printed by the same Scala code) and the exact
     // long numerator; empty-but-reached cells come back via the left
     // join exactly as in the engine.
-    "q_kde" -> {
-      val sqrt3s = math.sqrt(3.0) * 250000.0
+    "q_kde" ~> {
       val bw2 = 600000.0 * 600000.0
       val norm = 3.0 / (math.Pi * 600000.0 * 600000.0)
-      s"""WITH xy AS (
-         |  SELECT 6378137.0 * radians($lonSql) AS x,
-         |         6378137.0 * ln(tan(radians($latSql)) +
-         |           sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) AS y
-         |  FROM lineitem
-         |), fr AS (
-         |  SELECT (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-         |         (2.0/3.0 * y) / 250000.0 AS fr
-         |  FROM xy
-         |), rounded AS (
-         |  SELECT fq, fr, -fq - fr AS fs,
-         |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-         |         floor(-fq - fr + 0.5) AS rs
-         |  FROM fr
-         |), fixed AS (
-         |  SELECT CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs)
-         |              THEN -rr - rs ELSE rq END AS hq,
-         |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs) THEN rr
-         |              WHEN abs(rr - fr) > abs(rs - fs)
-         |              THEN -rq - rs ELSE rr END AS hr
-         |  FROM rounded
-         |), cells AS (
-         |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-         |         CAST(count(*) AS BIGINT) AS x
-         |  FROM fixed GROUP BY 1, 2
-         |), deltas AS (
-         |  SELECT a.dq, b.dr
-         |  FROM (SELECT unnest(generate_series(-2, 2)) AS dq) a
-         |  CROSS JOIN (SELECT unnest(generate_series(-2, 2)) AS dr) b
-         |  WHERE (abs(a.dq) + abs(b.dr) + abs(a.dq + b.dr)) / 2 <= 2
-         |), fan AS (
-         |  SELECT c.hq + d.dq AS hq, c.hr + d.dr AS hr, c.x,
-         |         $sqrt3s * (d.dq + d.dr / 2.0) AS dx,
-         |         ${1.5 * 250000.0} * d.dr AS dy
-         |  FROM cells c CROSS JOIN deltas d
-         |), wtab AS (
+      s"""${hexCellsSql()}, ${hexFanSql("c.x")}, wtab AS (
          |  SELECT hq, hr, x,
          |    CASE WHEN (dx*dx + dy*dy) / $bw2 < 1.0
          |    THEN CAST(floor((1.0 - (dx*dx + dy*dy) / $bw2)
@@ -3058,7 +2924,7 @@ object SparkEntry {
     // sample, counts per rung as conditional sums, then K = A*cnt/n(n-1)
     // and L = sqrt(K/pi) from the identical double constants (chord
     // thresholds and area computed by the same Scala code).
-    "q_ripley_k" -> {
+    "q_ripley_k" ~> {
       val bounds = Seq(100000.0, 200000.0, 400000.0)
         .map(graft.geo.engine.GeoEngine.maxChord2For)
       def rung(r: Long, c: String): String =
@@ -3077,9 +2943,7 @@ object SparkEntry {
          |  WHERE (l_orderkey*8 + l_linenumber) % 23 = 0
          |), pr AS (
          |  SELECT
-         |    pow(cos(radians(a.lat))*cos(radians(a.lon)) - cos(radians(b.lat))*cos(radians(b.lon)), 2) +
-         |    pow(cos(radians(a.lat))*sin(radians(a.lon)) - cos(radians(b.lat))*sin(radians(b.lon)), 2) +
-         |    pow(sin(radians(a.lat)) - sin(radians(b.lat)), 2) AS cd
+         |    ${chord2Sql("a.lon", "a.lat", "b.lon", "b.lat")} AS cd
          |  FROM p a JOIN p b ON a.pid <> b.pid
          |), cnt AS (
          |  SELECT
@@ -3098,7 +2962,7 @@ object SparkEntry {
     },
     // cross-K replay: quadratic A x B chord join over the same split
     // sample; conditional exact counts per rung, K/L closed-form.
-    "q_cross_k" -> {
+    "q_cross_k" ~> {
       val bounds = Seq(100000.0, 200000.0, 400000.0)
         .map(graft.geo.engine.GeoEngine.maxChord2For)
       def rung(r: Long, c: String): String =
@@ -3122,9 +2986,7 @@ object SparkEntry {
          |  SELECT * FROM p WHERE pid % 2 = 1
          |), pr AS (
          |  SELECT
-         |    pow(cos(radians(a.lat))*cos(radians(a.lon)) - cos(radians(b.lat))*cos(radians(b.lon)), 2) +
-         |    pow(cos(radians(a.lat))*sin(radians(a.lon)) - cos(radians(b.lat))*sin(radians(b.lon)), 2) +
-         |    pow(sin(radians(a.lat)) - sin(radians(b.lat)), 2) AS cd
+         |    ${chord2Sql("a.lon", "a.lat", "b.lon", "b.lat")} AS cd
          |  FROM pa a CROSS JOIN pb b
          |), cnt AS (
          |  SELECT
@@ -3146,46 +3008,13 @@ object SparkEntry {
     // self-excluded adjacency self-join (LEFT so isolates survive with
     // zero sums and null I/quad), then I_i and the strict-sign quadrant
     // from the exact longs.
-    "q_local_moran" ->
-      s"""WITH xy AS (
-         |  SELECT 6378137.0 * radians($lonSql) AS x,
-         |         6378137.0 * ln(tan(radians($latSql)) +
-         |           sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) AS y
-         |  FROM lineitem
-         |), fr AS (
-         |  SELECT (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-         |         (2.0/3.0 * y) / 250000.0 AS fr
-         |  FROM xy
-         |), rounded AS (
-         |  SELECT fq, fr, -fq - fr AS fs,
-         |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-         |         floor(-fq - fr + 0.5) AS rs
-         |  FROM fr
-         |), fixed AS (
-         |  SELECT CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs)
-         |              THEN -rr - rs ELSE rq END AS hq,
-         |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-         |                AND abs(rq - fq) > abs(rs - fs) THEN rr
-         |              WHEN abs(rr - fr) > abs(rs - fs)
-         |              THEN -rq - rs ELSE rr END AS hr
-         |  FROM rounded
-         |), cells AS (
-         |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-         |         CAST(count(*) AS BIGINT) AS x
-         |  FROM fixed GROUP BY 1, 2
-         |), g AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n,
-         |         CAST(sum(x) AS BIGINT) AS sum_x,
-         |         CAST(sum(x*x) AS BIGINT) AS sum_x2
-         |  FROM cells
-         |), nbr AS (
+    "q_local_moran" ~>
+      s"""${hexCellsSql()}, $hexMomentsSql, nbr AS (
          |  SELECT a.hq, a.hr,
          |         CAST(sum(b.x) AS BIGINT) AS nbrsum,
          |         CAST(count(b.x) AS BIGINT) AS nbrn
          |  FROM cells a LEFT JOIN cells b
-         |    ON (abs(a.hq - b.hq) + abs(a.hr - b.hr)
-         |        + abs((a.hq - b.hq) + (a.hr - b.hr))) / 2 <= 1
+         |    ON $hexRing1Sql
          |   AND NOT (a.hq = b.hq AND a.hr = b.hr)
          |  GROUP BY 1, 2
          |)
@@ -3232,43 +3061,8 @@ object SparkEntry {
     // and tie groups match because both engines derive bit-identical
     // doubles from the same exact longs), and the category CASE chain
     // in the engine's documented precedence.
-    "q_emerging" ->
-      """WITH pts AS (
-        |  SELECT epoch_us(ts) // 86400000000 AS bin,
-        |         (user_id % 60) * 3.0 - 90.0 AS lon,
-        |         (user_id % 30) * 2.0 - 30.0 AS lat
-        |  FROM events
-        |), xy AS (
-        |  SELECT bin, 6378137.0 * radians(lon) AS x,
-        |         6378137.0 * ln(tan(radians(lat)) +
-        |           sqrt(tan(radians(lat))*tan(radians(lat)) + 1.0)) AS y
-        |  FROM pts
-        |), fr AS (
-        |  SELECT bin, (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-        |         (2.0/3.0 * y) / 250000.0 AS fr
-        |  FROM xy
-        |), rounded AS (
-        |  SELECT bin, fq, fr, -fq - fr AS fs,
-        |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-        |         floor(-fq - fr + 0.5) AS rs
-        |  FROM fr
-        |), fixed AS (
-        |  SELECT bin,
-        |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-        |               AND abs(rq - fq) > abs(rs - fs)
-        |             THEN -rr - rs ELSE rq END AS hq,
-        |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-        |               AND abs(rq - fq) > abs(rs - fs) THEN rr
-        |              WHEN abs(rr - fr) > abs(rs - fs)
-        |             THEN -rq - rs ELSE rr END AS hr
-        |  FROM rounded
-        |), counts AS (
-        |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-        |         CAST(bin AS BIGINT) AS bin, CAST(count(*) AS BIGINT) AS x
-        |  FROM fixed GROUP BY 1, 2, 3
-        |), rng AS (
-        |  SELECT min(bin) AS minb, max(bin) AS maxb FROM counts
-        |), dcells AS (
+    "q_emerging" ~>
+      s"""$userHexDaysCtes, dcells AS (
         |  SELECT DISTINCT hq, hr FROM counts
         |), dense AS (
         |  SELECT d.hq, d.hr, g.bin, COALESCE(c.x, 0) AS x
@@ -3284,8 +3078,7 @@ object SparkEntry {
         |), adj AS (
         |  SELECT a.hq AS ahq, a.hr AS ahr, b.hq AS bhq, b.hr AS bhr
         |  FROM dcells a JOIN dcells b
-        |    ON (abs(a.hq - b.hq) + abs(a.hr - b.hr)
-        |        + abs((a.hq - b.hq) + (a.hr - b.hr))) / 2 <= 1
+        |    ON $hexRing1Sql
         |), nbr AS (
         |  SELECT t.hq, t.hr, t.bin,
         |         CAST(sum(u.x) AS BIGINT) AS wsum,
@@ -3423,43 +3216,8 @@ object SparkEntry {
     // the pair self-join, then the continuity-corrected z and the
     // exact-median Sen slope (row_number middle picks, averaging the
     // two middles for even pair counts) from the same integers.
-    "q_mk_trend" ->
-      """WITH pts AS (
-        |  SELECT epoch_us(ts) // 86400000000 AS bin,
-        |         (user_id % 60) * 3.0 - 90.0 AS lon,
-        |         (user_id % 30) * 2.0 - 30.0 AS lat
-        |  FROM events
-        |), xy AS (
-        |  SELECT bin, 6378137.0 * radians(lon) AS x,
-        |         6378137.0 * ln(tan(radians(lat)) +
-        |           sqrt(tan(radians(lat))*tan(radians(lat)) + 1.0)) AS y
-        |  FROM pts
-        |), fr AS (
-        |  SELECT bin, (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-        |         (2.0/3.0 * y) / 250000.0 AS fr
-        |  FROM xy
-        |), rounded AS (
-        |  SELECT bin, fq, fr, -fq - fr AS fs,
-        |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-        |         floor(-fq - fr + 0.5) AS rs
-        |  FROM fr
-        |), fixed AS (
-        |  SELECT bin,
-        |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-        |               AND abs(rq - fq) > abs(rs - fs)
-        |             THEN -rr - rs ELSE rq END AS hq,
-        |         CASE WHEN abs(rq - fq) > abs(rr - fr)
-        |               AND abs(rq - fq) > abs(rs - fs) THEN rr
-        |              WHEN abs(rr - fr) > abs(rs - fs)
-        |             THEN -rq - rs ELSE rr END AS hr
-        |  FROM rounded
-        |), counts AS (
-        |  SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-        |         CAST(bin AS BIGINT) AS bin, CAST(count(*) AS BIGINT) AS x
-        |  FROM fixed GROUP BY 1, 2, 3
-        |), rng AS (
-        |  SELECT min(bin) AS minb, max(bin) AS maxb FROM counts
-        |), dense AS (
+    "q_mk_trend" ~>
+      s"""$userHexDaysCtes, dense AS (
         |  SELECT d.hq, d.hr, g.bin, COALESCE(c.x, 0) AS x
         |  FROM (SELECT DISTINCT hq, hr FROM counts) d
         |  CROSS JOIN (SELECT unnest(generate_series(minb, maxb)) AS bin
@@ -3518,27 +3276,15 @@ object SparkEntry {
     // grid-distance identity (|dq|+|dr|+|dq+dr|)/2 <= k.  The engine's
     // disk-explode candidate set is exactly this predicate by
     // construction, so the pair sets must be identical.
-    "q_hex_ring_join" -> {
+    "q_hex_ring_join" ~> {
       def hexed(inner: String): String =
-        s"""SELECT id,
-           |  CASE WHEN abs(rq - fq) > abs(rr - fr)
-           |         AND abs(rq - fq) > abs(rs - fs)
-           |       THEN -rr - rs ELSE rq END AS hq,
-           |  CASE WHEN abs(rq - fq) > abs(rr - fr)
-           |         AND abs(rq - fq) > abs(rs - fs) THEN rr
-           |       WHEN abs(rr - fr) > abs(rs - fs)
-           |       THEN -rq - rs ELSE rr END AS hr
+        s"""SELECT id, $hexFixSql
            |FROM (
-           |  SELECT id, fq, fr, -fq - fr AS fs,
-           |         floor(fq + 0.5) AS rq, floor(fr + 0.5) AS rr,
-           |         floor(-fq - fr + 0.5) AS rs
+           |  SELECT id, $hexRoundSql
            |  FROM (
-           |    SELECT id, (sqrt(3.0)/3.0 * x - y/3.0) / 250000.0 AS fq,
-           |           (2.0/3.0 * y) / 250000.0 AS fr
+           |    SELECT id, $hexFracSql
            |    FROM (
-           |      SELECT id, 6378137.0 * radians(lon) AS x,
-           |             6378137.0 * ln(tan(radians(lat)) +
-           |               sqrt(tan(radians(lat))*tan(radians(lat)) + 1.0)) AS y
+           |      SELECT id, ${webmercSql("lon", "lat")}
            |      FROM ($inner)
            |    )
            |  )
@@ -3546,9 +3292,8 @@ object SparkEntry {
       val dataSrc =
         s"SELECT l_orderkey*8 + l_linenumber AS id, $lonSql AS lon, $latSql AS lat FROM lineitem"
       val querySrc =
-        """SELECT CAST(n_nationkey AS BIGINT) AS id,
-          |  (mod(mod(n_nationkey * 37.123457, 359.9) + 359.9, 359.9) - 179.95) AS lon,
-          |  (mod(mod(n_nationkey * 53.654321, 169.9) + 169.9, 169.9) - 84.95) AS lat
+        s"""SELECT CAST(n_nationkey AS BIGINT) AS id,
+          |  $nationLonLatSql
           |FROM nation""".stripMargin
       s"""WITH d AS (${hexed(dataSrc)}),
          |q AS (${hexed(querySrc)})
@@ -3562,35 +3307,26 @@ object SparkEntry {
     // web-tile replay: the identical closed-form spherical-Mercator
     // discretization (ln(tan+sqrt(tan^2+1)) is written out, not asinh, so
     // both engines evaluate the same floating-point expression)
-    "q_tile_xyz" -> {
-      def xyTiled(n: Int): String =
-        s"""SELECT CAST(least(greatest(floor(($lonSql + 180.0) / 360.0 * $n.0), 0), ${n - 1}) AS BIGINT) AS x,
-           |  CAST(least(greatest(floor((1.0 - ln(tan(radians($latSql)) +
-           |    sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) / pi()) / 2.0 * $n.0), 0), ${n - 1}) AS BIGINT) AS y
-           |FROM lineitem""".stripMargin
-      s"""WITH t AS (${xyTiled(64)})
+    "q_tile_xyz" ~>
+      s"""WITH t AS (${webTileSql(64)})
          |SELECT x, y, CAST(count(*) AS BIGINT) AS n_points
-         |FROM t GROUP BY 1, 2""".stripMargin
-    },
+         |FROM t GROUP BY 1, 2""".stripMargin,
     // quadkey replay: same tiling at z=5, then the base-4 digit string
     // (digit = 2*yBit + xBit, MSB-first) assembled by unrolled bit ops
-    "q_quadkey" -> {
+    "q_quadkey" ~> {
       val z = 5; val n = 1 << z
       val digits = (1 to z).map { i =>
         val sh = z - i
         s"CAST(((y >> $sh) & 1) * 2 + ((x >> $sh) & 1) AS VARCHAR)"
       }.mkString(" || ")
       s"""WITH t AS (
-         |SELECT CAST(least(greatest(floor(($lonSql + 180.0) / 360.0 * $n.0), 0), ${n - 1}) AS BIGINT) AS x,
-         |  CAST(least(greatest(floor((1.0 - ln(tan(radians($latSql)) +
-         |    sqrt(tan(radians($latSql))*tan(radians($latSql)) + 1.0)) / pi()) / 2.0 * $n.0), 0), ${n - 1}) AS BIGINT) AS y
-         |FROM lineitem)
+         |${webTileSql(n)})
          |SELECT $digits AS qk, CAST(count(*) AS BIGINT) AS n_points
          |FROM t GROUP BY 1""".stripMargin
     },
     // geohash replay: 10+10-bit lon/lat indexes, the 20-bit alternating
     // interleave unrolled as bit arithmetic, then 4 base-32 characters
-    "q_geohash" -> {
+    "q_geohash" ~> {
       val interleave = (0 to 9).flatMap { k =>
         Seq(s"(((li >> ${9 - k}) & 1) << ${19 - 2 * k})",
           s"(((ti >> ${9 - k}) & 1) << ${18 - 2 * k})")
@@ -3606,28 +3342,21 @@ object SparkEntry {
          |SELECT $chars AS gh, CAST(count(*) AS BIGINT) AS n_points
          |FROM c GROUP BY 1""".stripMargin
     },
-    "q_pip_join" -> {
+    "q_pip_join" ~> {
       val pts = s"SELECT l_orderkey*8 + l_linenumber AS pt_id, $lonSql AS lon, $latSql AS lat FROM lineitem"
       val arms = pipPolys.map(p =>
         s"""SELECT pt_id, '${p.poly_id}' AS poly_id FROM pts
            |WHERE ${convexPipSql(p.ring, "lon", "lat")}""".stripMargin)
       s"WITH pts AS ($pts)\n" + arms.mkString("\nUNION ALL\n")
     },
-    "q_knn_chord" ->
+    "q_knn_chord" ~>
       s"""WITH data AS (
          |  SELECT l_orderkey*8 + l_linenumber AS data_id,
          |         $lonSql AS lon, $latSql AS lat
          |  FROM lineitem
-         |), queries AS (
-         |  SELECT CAST(n_nationkey AS BIGINT) AS query_id,
-         |    (mod(mod(n_nationkey * 37.123457, 359.9) + 359.9, 359.9) - 179.95) AS lon,
-         |    (mod(mod(n_nationkey * 53.654321, 169.9) + 169.9, 169.9) - 84.95) AS lat
-         |  FROM nation
-         |), pairs AS (
+         |), $nationQueriesCte, pairs AS (
          |  SELECT q.query_id, d.data_id,
-         |    pow(cos(radians(q.lat))*cos(radians(q.lon)) - cos(radians(d.lat))*cos(radians(d.lon)), 2) +
-         |    pow(cos(radians(q.lat))*sin(radians(q.lon)) - cos(radians(d.lat))*sin(radians(d.lon)), 2) +
-         |    pow(sin(radians(q.lat)) - sin(radians(d.lat)), 2) AS dist
+         |    ${chord2Sql("q.lon", "q.lat", "d.lon", "d.lat")} AS dist
          |  FROM queries q CROSS JOIN data d
          |), ranked AS (
          |  SELECT query_id, data_id,
@@ -3636,7 +3365,7 @@ object SparkEntry {
          |)
          |SELECT query_id, data_id, CAST(rnk AS BIGINT) AS rnk
          |FROM ranked WHERE rnk <= 3""".stripMargin,
-    "q_knn_geodesic" ->
+    "q_knn_geodesic" ~>
       // chord-twin replay of the geodesic kNN (see the query's comment):
       // rank by chord over the 1/12 data subset, report the chord itself
       s"""WITH data AS (
@@ -3647,16 +3376,9 @@ object SparkEntry {
          |  QUALIFY row_number() OVER (
          |    PARTITION BY l_orderkey*8 + l_linenumber
          |    ORDER BY $lonSql, $latSql) = 1
-         |), queries AS (
-         |  SELECT CAST(n_nationkey AS BIGINT) AS query_id,
-         |    (mod(mod(n_nationkey * 37.123457, 359.9) + 359.9, 359.9) - 179.95) AS lon,
-         |    (mod(mod(n_nationkey * 53.654321, 169.9) + 169.9, 169.9) - 84.95) AS lat
-         |  FROM nation
-         |), pairs AS (
+         |), $nationQueriesCte, pairs AS (
          |  SELECT q.query_id, d.data_id,
-         |    pow(cos(radians(q.lat))*cos(radians(q.lon)) - cos(radians(d.lat))*cos(radians(d.lon)), 2) +
-         |    pow(cos(radians(q.lat))*sin(radians(q.lon)) - cos(radians(d.lat))*sin(radians(d.lon)), 2) +
-         |    pow(sin(radians(q.lat)) - sin(radians(d.lat)), 2) AS cd
+         |    ${chord2Sql("q.lon", "q.lat", "d.lon", "d.lat")} AS cd
          |  FROM queries q CROSS JOIN data d
          |), ranked AS (
          |  SELECT query_id, data_id, cd,
@@ -3670,27 +3392,20 @@ object SparkEntry {
     // engine's cell-cover candidate set is provably complete for the
     // radius, so filtering the cross join by the same predicate must
     // produce the identical pair set.
-    "q_distance_join" ->
+    "q_distance_join" ~>
       s"""WITH data AS (
          |  SELECT l_orderkey*8 + l_linenumber AS data_id,
          |         $lonSql AS lon, $latSql AS lat
          |  FROM lineitem
-         |), queries AS (
-         |  SELECT CAST(n_nationkey AS BIGINT) AS query_id,
-         |    (mod(mod(n_nationkey * 37.123457, 359.9) + 359.9, 359.9) - 179.95) AS lon,
-         |    (mod(mod(n_nationkey * 53.654321, 169.9) + 169.9, 169.9) - 84.95) AS lat
-         |  FROM nation
-         |), pairs AS (
+         |), $nationQueriesCte, pairs AS (
          |  SELECT q.query_id, d.data_id,
-         |    pow(cos(radians(q.lat))*cos(radians(q.lon)) - cos(radians(d.lat))*cos(radians(d.lon)), 2) +
-         |    pow(cos(radians(q.lat))*sin(radians(q.lon)) - cos(radians(d.lat))*sin(radians(d.lon)), 2) +
-         |    pow(sin(radians(q.lat)) - sin(radians(d.lat)), 2) AS cd
+         |    ${chord2Sql("q.lon", "q.lat", "d.lon", "d.lat")} AS cd
          |  FROM queries q CROSS JOIN data d
          |)
          |SELECT query_id, data_id,
          |  CAST(floor(cd * 1e12 + 0.5) AS BIGINT) AS cd_e12
          |FROM pairs WHERE cd <= 0.0022""".stripMargin,
-    "q_raster_tile" -> {
+    "q_raster_tile" ~> {
       val partLon = "(mod(mod(p_partkey * 11.234567, 359.9) + 359.9, 359.9) - 179.95)"
       val partLat = "(mod(mod(p_partkey * 7.654321, 169.9) + 169.9, 169.9) - 84.95)"
       s"""WITH raster AS (
@@ -3708,18 +3423,18 @@ object SparkEntry {
          |FROM li JOIN raster r USING (face, i, j)
          |GROUP BY 1, 2, 3""".stripMargin
     },
-    "q_dedup_exact" ->
+    "q_dedup_exact" ~>
       "SELECT min(doc_id) AS keep_id, count(*) AS n_dups FROM documents GROUP BY text",
     // incremental dedup replay: the exact anti-join semantics the Bloom
     // prefilters must be invisible to (NOT EXISTS, so null text survives)
-    "q_incremental_dedup" ->
+    "q_incremental_dedup" ~>
       """SELECT d.doc_id, d.n_chars FROM documents d
         |WHERE NOT EXISTS (SELECT 1 FROM documents o
         |                  WHERE o.doc_id % 3 = 0 AND o.text = d.text)""".stripMargin,
-    "q_dedup_pairs" ->
+    "q_dedup_pairs" ~>
       """SELECT CAST(sum(n * (n - 1) / 2) AS BIGINT) AS n_pairs
         |FROM (SELECT count(*) * 2 AS n FROM documents GROUP BY text)""".stripMargin,
-    "q_redact" ->
+    "q_redact" ~>
       """WITH planted AS (
         |  SELECT doc_id,
         |    text || ' contact u' || doc_id || '@mail' || (doc_id % 7) ||
@@ -3741,40 +3456,9 @@ object SparkEntry {
     // word, shingle = ((OFS^h1)*P ^ h2)*P ... (combine chain), distinct
     // shingle sets, posting-list pair counts, set Jaccard.  HUGEINT
     // arithmetic replays 64-bit wraparound; xor works on the signed view.
-    "q_dedup_jaccard" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ws
-        |  FROM documents
-        |), wh AS (
-        |  SELECT doc_id, list_transform(ws, w ->
-        |    list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      list_transform(generate_series(1, length(w)),
-        |        i -> CAST(unicode(substr(w, i, 1)) AS HUGEINT))),
-        |      (h, c) -> ((h - (h % 65536) +
-        |          CAST(xor(CAST(h % 65536 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))
-        |  ) AS hs FROM toks
-        |), sh AS (
-        |  SELECT doc_id, CASE WHEN len(hs) = 0 THEN CAST([] AS HUGEINT[])
-        |    WHEN len(hs) < 3 THEN [list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      hs),
-        |      (acc, h) -> (((CAST(xor(
-        |          CAST(CASE WHEN acc >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN acc - CAST('18446744073709551616' AS HUGEINT) ELSE acc END AS BIGINT),
-        |          CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT)) AS HUGEINT)
-        |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))]
-        |    ELSE list_distinct(list_transform(generate_series(1, len(hs) - 2), i ->
-        |    list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      [hs[i], hs[i+1], hs[i+2]]),
-        |      (acc, h) -> (((CAST(xor(
-        |          CAST(CASE WHEN acc >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN acc - CAST('18446744073709551616' AS HUGEINT) ELSE acc END AS BIGINT),
-        |          CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT)) AS HUGEINT)
-        |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT)))) END AS shs
+    "q_dedup_jaccard" ~>
+      s"""$wordHashCtes, sh AS (
+        |  SELECT doc_id, ${shinglesSql(3, "[hs[i], hs[i+1], hs[i+2]]", distinct = true)} AS shs
         |  FROM wh
         |), ex AS (
         |  SELECT doc_id, unnest(shs) AS s FROM sh
@@ -3794,40 +3478,9 @@ object SparkEntry {
     // unsigned bucket mod (== Java floorMod for 2^k), add-one-smoothed
     // frequency ratio, ln rounded half-up to integer micro-units, exact
     // integer per-doc sums; empty docs score 0 via the left join
-    "q_dsir_score" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ws
-        |  FROM documents
-        |), wh AS (
-        |  SELECT doc_id, list_transform(ws, w ->
-        |    list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      list_transform(generate_series(1, length(w)),
-        |        i -> CAST(unicode(substr(w, i, 1)) AS HUGEINT))),
-        |      (h, c) -> ((h - (h % 65536) +
-        |          CAST(xor(CAST(h % 65536 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))
-        |  ) AS hs FROM toks
-        |), sh AS (
-        |  SELECT doc_id, CASE WHEN len(hs) = 0 THEN CAST([] AS HUGEINT[])
-        |    WHEN len(hs) < 2 THEN [list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      hs),
-        |      (acc, h) -> (((CAST(xor(
-        |          CAST(CASE WHEN acc >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN acc - CAST('18446744073709551616' AS HUGEINT) ELSE acc END AS BIGINT),
-        |          CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT)) AS HUGEINT)
-        |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))]
-        |    ELSE list_transform(generate_series(1, len(hs) - 1), i ->
-        |    list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      hs[i:i+1]),
-        |      (acc, h) -> (((CAST(xor(
-        |          CAST(CASE WHEN acc >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN acc - CAST('18446744073709551616' AS HUGEINT) ELSE acc END AS BIGINT),
-        |          CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT)) AS HUGEINT)
-        |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))) END AS shs
+    "q_dsir_score" ~>
+      s"""$wordHashCtes, sh AS (
+        |  SELECT doc_id, ${shinglesSql(2, "hs[i:i+1]", distinct = false)} AS shs
         |  FROM wh
         |), ex AS (
         |  SELECT doc_id, unnest(shs) AS h FROM sh
@@ -3854,52 +3507,13 @@ object SparkEntry {
     // one-element FNV folds, bigrams the two-element folds, counts over
     // the reference subset, smoothed ln tables (c+1 bigram, c+B unigram),
     // position-aligned per-doc sums
-    "q_lm_logprob" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ws
-        |  FROM documents
-        |), wh AS (
-        |  SELECT doc_id, list_transform(ws, w ->
-        |    list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      list_transform(generate_series(1, length(w)),
-        |        i -> CAST(unicode(substr(w, i, 1)) AS HUGEINT))),
-        |      (h, c) -> ((h - (h % 65536) +
-        |          CAST(xor(CAST(h % 65536 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))
-        |  ) AS hs FROM toks
-        |), us AS (
+    "q_lm_logprob" ~>
+      s"""$wordHashCtes, us AS (
         |  SELECT doc_id, list_transform(hs, h0 ->
-        |    list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      [h0]),
-        |      (acc, h) -> (((CAST(xor(
-        |          CAST(CASE WHEN acc >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN acc - CAST('18446744073709551616' AS HUGEINT) ELSE acc END AS BIGINT),
-        |          CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT)) AS HUGEINT)
-        |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))) AS us
+        |    ${fnvCombineSql("[h0]")}) AS us
         |  FROM wh
         |), sh AS (
-        |  SELECT doc_id, CASE WHEN len(hs) = 0 THEN CAST([] AS HUGEINT[])
-        |    WHEN len(hs) < 2 THEN [list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      hs),
-        |      (acc, h) -> (((CAST(xor(
-        |          CAST(CASE WHEN acc >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN acc - CAST('18446744073709551616' AS HUGEINT) ELSE acc END AS BIGINT),
-        |          CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT)) AS HUGEINT)
-        |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))]
-        |    ELSE list_transform(generate_series(1, len(hs) - 1), i ->
-        |    list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      hs[i:i+1]),
-        |      (acc, h) -> (((CAST(xor(
-        |          CAST(CASE WHEN acc >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN acc - CAST('18446744073709551616' AS HUGEINT) ELSE acc END AS BIGINT),
-        |          CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT)) AS HUGEINT)
-        |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))) END AS shs
+        |  SELECT doc_id, ${shinglesSql(2, "hs[i:i+1]", distinct = false)} AS shs
         |  FROM wh
         |), cu AS (
         |  SELECT CAST(u % 1024 AS INTEGER) AS b, count(*) AS c
@@ -3935,40 +3549,9 @@ object SparkEntry {
     // 8-token FNV window hashes with positions, mark occurrences >= 2
     // minus the globally-first (doc_id, pos), and merge overlapping /
     // contiguous windows per doc via gaps-and-islands
-    "q_dedup_spans" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ws
-        |  FROM documents
-        |), wh AS (
-        |  SELECT doc_id, list_transform(ws, w ->
-        |    list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      list_transform(generate_series(1, length(w)),
-        |        i -> CAST(unicode(substr(w, i, 1)) AS HUGEINT))),
-        |      (h, c) -> ((h - (h % 65536) +
-        |          CAST(xor(CAST(h % 65536 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))
-        |  ) AS hs FROM toks
-        |), sh AS (
-        |  SELECT doc_id, CASE WHEN len(hs) = 0 THEN CAST([] AS HUGEINT[])
-        |    WHEN len(hs) < 8 THEN [list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      hs),
-        |      (acc, h) -> (((CAST(xor(
-        |          CAST(CASE WHEN acc >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN acc - CAST('18446744073709551616' AS HUGEINT) ELSE acc END AS BIGINT),
-        |          CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT)) AS HUGEINT)
-        |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))]
-        |    ELSE list_transform(generate_series(1, len(hs) - 7), i ->
-        |    list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      hs[i:i+7]),
-        |      (acc, h) -> (((CAST(xor(
-        |          CAST(CASE WHEN acc >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN acc - CAST('18446744073709551616' AS HUGEINT) ELSE acc END AS BIGINT),
-        |          CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT)) AS HUGEINT)
-        |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))) END AS shs
+    "q_dedup_spans" ~>
+      s"""$wordHashCtes, sh AS (
+        |  SELECT doc_id, ${shinglesSql(8, "hs[i:i+7]", distinct = false)} AS shs
         |  FROM wh
         |), ex AS (
         |  SELECT doc_id, unnest(generate_series(1, len(shs))) AS i, shs FROM sh
@@ -3997,8 +3580,8 @@ object SparkEntry {
     // decontamination mirror: identical FNV word-shingle chain as
     // q_dedup_jaccard on both sides; the eval side re-splits the first 8
     // words (single-space join == ws[1:8] since split drops no words).
-    "q_decontaminate" ->
-      """WITH toks AS (
+    "q_decontaminate" ~>
+      s"""WITH toks AS (
         |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS ws
         |  FROM documents
         |), etoks AS (
@@ -4006,65 +3589,17 @@ object SparkEntry {
         |  FROM toks WHERE doc_id % 50 = 0
         |), wh AS (
         |  SELECT doc_id, list_transform(ws, w ->
-        |    list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      list_transform(generate_series(1, length(w)),
-        |        i -> CAST(unicode(substr(w, i, 1)) AS HUGEINT))),
-        |      (h, c) -> ((h - (h % 65536) +
-        |          CAST(xor(CAST(h % 65536 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))
+        |    ${fnvSql("w")}
         |  ) AS hs FROM toks
         |), ewh AS (
         |  SELECT eval_id, list_transform(ws, w ->
-        |    list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      list_transform(generate_series(1, length(w)),
-        |        i -> CAST(unicode(substr(w, i, 1)) AS HUGEINT))),
-        |      (h, c) -> ((h - (h % 65536) +
-        |          CAST(xor(CAST(h % 65536 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))
+        |    ${fnvSql("w")}
         |  ) AS hs FROM etoks
         |), sh AS (
-        |  SELECT doc_id, CASE WHEN len(hs) = 0 THEN CAST([] AS HUGEINT[])
-        |    WHEN len(hs) < 3 THEN [list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      hs),
-        |      (acc, h) -> (((CAST(xor(
-        |          CAST(CASE WHEN acc >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN acc - CAST('18446744073709551616' AS HUGEINT) ELSE acc END AS BIGINT),
-        |          CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT)) AS HUGEINT)
-        |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))]
-        |    ELSE list_distinct(list_transform(generate_series(1, len(hs) - 2), i ->
-        |    list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      [hs[i], hs[i+1], hs[i+2]]),
-        |      (acc, h) -> (((CAST(xor(
-        |          CAST(CASE WHEN acc >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN acc - CAST('18446744073709551616' AS HUGEINT) ELSE acc END AS BIGINT),
-        |          CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT)) AS HUGEINT)
-        |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT)))) END AS shs
+        |  SELECT doc_id, ${shinglesSql(3, "[hs[i], hs[i+1], hs[i+2]]", distinct = true)} AS shs
         |  FROM wh
         |), esh AS (
-        |  SELECT eval_id, CASE WHEN len(hs) = 0 THEN CAST([] AS HUGEINT[])
-        |    WHEN len(hs) < 3 THEN [list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      hs),
-        |      (acc, h) -> (((CAST(xor(
-        |          CAST(CASE WHEN acc >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN acc - CAST('18446744073709551616' AS HUGEINT) ELSE acc END AS BIGINT),
-        |          CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT)) AS HUGEINT)
-        |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT))]
-        |    ELSE list_distinct(list_transform(generate_series(1, len(hs) - 2), i ->
-        |    list_reduce(list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      [hs[i], hs[i+1], hs[i+2]]),
-        |      (acc, h) -> (((CAST(xor(
-        |          CAST(CASE WHEN acc >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN acc - CAST('18446744073709551616' AS HUGEINT) ELSE acc END AS BIGINT),
-        |          CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-        |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT)) AS HUGEINT)
-        |        + CAST('18446744073709551616' AS HUGEINT)) % CAST('18446744073709551616' AS HUGEINT))
-        |        * 1099511628211) % CAST('18446744073709551616' AS HUGEINT)))) END AS shs
+        |  SELECT eval_id, ${shinglesSql(3, "[hs[i], hs[i+1], hs[i+2]]", distinct = true)} AS shs
         |  FROM ewh
         |), ex AS (
         |  SELECT doc_id, unnest(shs) AS s FROM sh
@@ -4076,7 +3611,7 @@ object SparkEntry {
         |  CAST(floor(CAST(count(*) AS DOUBLE) / any_value(eex.esz) * 1e7 + 0.5) AS BIGINT) AS ov_e7
         |FROM ex JOIN eex ON ex.s = eex.s
         |GROUP BY 1, 2""".stripMargin,
-    "q_dedup_cluster" ->
+    "q_dedup_cluster" ~>
       """WITH RECURSIVE edges AS (
         |  SELECT k AS a, k + 1 AS b FROM range(0, 100) t(k) WHERE k % 10 <> 9
         |  UNION ALL
@@ -4091,7 +3626,7 @@ object SparkEntry {
         |SELECT CAST(src AS BIGINT) AS doc_id,
         |  CAST(min(dst) AS BIGINT) AS cluster_id
         |FROM reach GROUP BY src""".stripMargin,
-    "q_semantic_dedup" ->
+    "q_semantic_dedup" ~>
       """WITH c AS (
         |  SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
         |  FROM embeddings WHERE vec_id < 16
@@ -4113,7 +3648,7 @@ object SparkEntry {
         |SELECT a.vec_id, CAST(a.cluster AS BIGINT) AS cluster,
         |  CAST(a.vec_id NOT IN (SELECT vec_id FROM dropped) AS BIGINT) AS kept
         |FROM a""".stripMargin,
-    "q_ann_cosine" ->
+    "q_ann_cosine" ~>
       """WITH q AS (
         |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
         |  FROM embeddings WHERE vec_id < 10
@@ -4128,13 +3663,13 @@ object SparkEntry {
         |)
         |SELECT query_id, vec_id, CAST(rnk AS BIGINT) AS rnk
         |FROM ranked WHERE rnk <= 5""".stripMargin,
-    "q_token_count" ->
+    "q_token_count" ~>
       """SELECT doc_id,
         |  CAST(CASE WHEN text IS NULL OR trim(text) = '' THEN 0
         |    ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS BIGINT) AS n_ws,
         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_bpe
         |FROM documents""".stripMargin,
-    "q_quality" -> {
+    "q_quality" ~> {
       val stopPat = "(?i)\\b(" + TextOps.stopwordsEn.mkString("|") + ")\\b"
       s"""SELECT doc_id,
          |  CAST(length(text) AS BIGINT) AS n_chars,
@@ -4146,7 +3681,7 @@ object SparkEntry {
          |    greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1) AS BIGINT) AS stop_ppm
          |FROM documents""".stripMargin
     },
-    "q_lang_id" -> {
+    "q_lang_id" ~> {
       def hits(ws: Seq[String]) =
         s"len(regexp_extract_all(text, '(?i)\\b(${ws.mkString("|")})\\b'))"
       val en = hits(TextOps.stopwordsEn); val de = hits(TextOps.stopwordsDe)
@@ -4159,7 +3694,7 @@ object SparkEntry {
          |  ELSE 'es' END AS lang_guess
          |FROM documents""".stripMargin
     },
-    "q_event_tiles" -> {
+    "q_event_tiles" ~> {
       val evLon = "(mod(mod(user_id * 17.234567, 359.9) + 359.9, 359.9) - 179.95)"
       val evLat = "(mod(mod(user_id * 23.876543, 169.9) + 169.9, 169.9) - 84.95)"
       s"""${tileSql(evLon, evLat, 2, "events", ", ts, value")}
@@ -4169,9 +3704,9 @@ object SparkEntry {
          |  CAST(round(sum(value) * 1000) AS BIGINT) AS sum_value_milli
          |FROM tiled GROUP BY 1, 2""".stripMargin
     },
-    "q_stay_points" -> {
-      val fracLon = "floor((epoch_us(ts) % 86400000000) / 86400000000.0 * 4.0) * 0.5"
-      val fracLat = "floor((epoch_us(ts) % 86400000000) / 86400000000.0 * 8.0) * 0.25"
+    "q_stay_points" ~> {
+      val fracLon = s"floor($dayFracSql * 4.0) * 0.5"
+      val fracLat = s"floor($dayFracSql * 8.0) * 0.25"
       s"""WITH p AS (
          |  SELECT event_id, user_id, ts,
          |    (user_id % 60) * 3.0 - 90.0 + $fracLon AS lon,
@@ -4207,30 +3742,8 @@ object SparkEntry {
     // chord² threshold computed by the SAME Scala code the query uses and
     // embedded via Double.toString (shortest round-trip decimal), so both
     // engines compare against the bit-identical constant
-    "q_trajectory" -> {
-      val c2 = graft.geo.engine.GeoEngine.maxChord2For(100000.0)
-      val frac = "(epoch_us(ts) % 86400000000) / 86400000000.0"
-      s"""WITH p AS (
-         |  SELECT event_id, user_id, ts,
-         |    (user_id % 60) * 3.0 - 90.0 + $frac * 2.0 AS lon,
-         |    (user_id % 30) * 2.0 - 30.0 + $frac * 1.0 AS lat
-         |  FROM events WHERE ts IS NOT NULL
-         |), lagged AS (
-         |  SELECT event_id, user_id, ts, lon, lat,
-         |    lag(ts) OVER w AS pts, lag(lon) OVER w AS plon,
-         |    lag(lat) OVER w AS plat
-         |  FROM p WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         |), flagged AS (
-         |  SELECT event_id, user_id, ts,
-         |    CASE WHEN pts IS NULL OR ts > pts + INTERVAL 6 HOUR
-         |      OR pow(cos(radians(plat))*cos(radians(plon))
-         |             - cos(radians(lat))*cos(radians(lon)), 2)
-         |       + pow(cos(radians(plat))*sin(radians(plon))
-         |             - cos(radians(lat))*sin(radians(lon)), 2)
-         |       + pow(sin(radians(plat)) - sin(radians(lat)), 2) > $c2
-         |    THEN 1 ELSE 0 END AS is_new
-         |  FROM lagged
-         |), seg AS (
+    "q_trajectory" ~>
+      s"""${segmentFlagsSql("")}, seg AS (
          |  SELECT user_id, ts,
          |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
          |      ROWS UNBOUNDED PRECEDING) AS segment_seq
@@ -4239,32 +3752,9 @@ object SparkEntry {
          |  CAST(count(*) AS BIGINT) AS n_points,
          |  CAST(epoch_us(min(ts)) AS BIGINT) AS first_us,
          |  CAST(epoch_us(max(ts)) AS BIGINT) AS last_us
-         |FROM seg GROUP BY user_id, segment_seq""".stripMargin
-    },
-    "q_od_flows" -> {
-      val c2 = graft.geo.engine.GeoEngine.maxChord2For(100000.0)
-      val frac = "(epoch_us(ts) % 86400000000) / 86400000000.0"
-      s"""WITH p AS (
-         |  SELECT event_id, user_id, ts,
-         |    (user_id % 60) * 3.0 - 90.0 + $frac * 2.0 AS lon,
-         |    (user_id % 30) * 2.0 - 30.0 + $frac * 1.0 AS lat
-         |  FROM events WHERE ts IS NOT NULL
-         |), lagged AS (
-         |  SELECT event_id, user_id, ts, lon, lat,
-         |    lag(ts) OVER w AS pts, lag(lon) OVER w AS plon,
-         |    lag(lat) OVER w AS plat
-         |  FROM p WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         |), flagged AS (
-         |  SELECT event_id, user_id, ts, lon, lat,
-         |    CASE WHEN pts IS NULL OR ts > pts + INTERVAL 6 HOUR
-         |      OR pow(cos(radians(plat))*cos(radians(plon))
-         |             - cos(radians(lat))*cos(radians(lon)), 2)
-         |       + pow(cos(radians(plat))*sin(radians(plon))
-         |             - cos(radians(lat))*sin(radians(lon)), 2)
-         |       + pow(sin(radians(plat)) - sin(radians(lat)), 2) > $c2
-         |    THEN 1 ELSE 0 END AS is_new
-         |  FROM lagged
-         |), seg AS (
+         |FROM seg GROUP BY user_id, segment_seq""".stripMargin,
+    "q_od_flows" ~>
+      s"""${segmentFlagsSql(", lon, lat")}, seg AS (
          |  SELECT event_id, user_id, ts, lon, lat,
          |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
          |      ROWS UNBOUNDED PRECEDING) AS segment_seq
@@ -4293,9 +3783,8 @@ object SparkEntry {
          |FROM ot o JOIN ot d
          |  ON o.user_id = d.user_id AND o.segment_seq = d.segment_seq
          |  AND o.side = 'o' AND d.side = 'd'
-         |GROUP BY 1, 2, 3, 4, 5, 6""".stripMargin
-    },
-    "q_dbscan" -> {
+         |GROUP BY 1, 2, 3, 4, 5, 6""".stripMargin,
+    "q_dbscan" ~> {
       val c2 = graft.geo.engine.GeoEngine.maxChord2For(500.0)
       s"""WITH RECURSIVE pts AS (
          |  SELECT CAST(c_custkey AS BIGINT) AS pt_id,
@@ -4306,15 +3795,12 @@ object SparkEntry {
          |              + floor(c_custkey / 24) * 0.002 END AS lat
          |  FROM customer
          |), v AS (
-         |  SELECT pt_id, cos(radians(lat))*cos(radians(lon)) AS x,
-         |    cos(radians(lat))*sin(radians(lon)) AS y,
-         |    sin(radians(lat)) AS z
+         |  SELECT pt_id, $xyzSql
          |  FROM pts
          |), pairs AS (
          |  SELECT a.pt_id AS a, b.pt_id AS b
          |  FROM v a JOIN v b ON a.pt_id <> b.pt_id
-         |   AND (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)
-         |     + (a.z-b.z)*(a.z-b.z) <= $c2
+         |   AND $xyzChord2Sql <= $c2
          |), core AS (
          |  SELECT a AS pt_id FROM pairs GROUP BY a HAVING count(*) + 1 >= 5
          |), ce AS (
@@ -4340,66 +3826,54 @@ object SparkEntry {
          |LEFT JOIN lbl l ON pts.pt_id = l.pt_id
          |LEFT JOIN border b ON pts.pt_id = b.pt_id""".stripMargin
     },
-    "q_colocation" -> {
+    "q_colocation" ~> {
       val c2 = graft.geo.engine.GeoEngine.maxChord2For(10000.0)
-      val frac = "(epoch_us(ts) % 86400000000) / 86400000000.0"
       s"""WITH p AS (
          |  SELECT event_id, CAST(user_id AS BIGINT) AS user_id,
          |    epoch_us(ts) AS t_us,
-         |    (user_id % 60) * 3.0 - 90.0 + $frac * 2.0 AS lon,
-         |    (user_id % 30) * 2.0 - 30.0 + $frac * 1.0 AS lat
+         |    $eventPointsSql
          |  FROM events
          |  WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_id % 4 = 0
          |), v AS (
          |  SELECT event_id, user_id, t_us,
-         |    cos(radians(lat))*cos(radians(lon)) AS x,
-         |    cos(radians(lat))*sin(radians(lon)) AS y,
-         |    sin(radians(lat)) AS z
+         |    $xyzSql
          |  FROM p
          |)
          |SELECT a.event_id AS a_id, b.event_id AS b_id,
          |  a.user_id AS a_ent, b.user_id AS b_ent,
          |  b.t_us - a.t_us AS dt_us,
-         |  CAST(floor(((a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)
-         |    + (a.z-b.z)*(a.z-b.z)) * 1e12 + 0.5) AS BIGINT) AS cd_e12
+         |  CAST(floor(($xyzChord2Sql) * 1e12 + 0.5) AS BIGINT) AS cd_e12
          |FROM v a JOIN v b
          |  ON a.event_id < b.event_id
          |  AND a.user_id <> b.user_id
          |  AND abs(a.t_us - b.t_us) <= 1800000000
-         |  AND (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)
-         |    + (a.z-b.z)*(a.z-b.z) <= $c2""".stripMargin
+         |  AND $xyzChord2Sql <= $c2""".stripMargin
     },
     // Clark-Evans replay: per-point quadratic min of the quantized NN
     // arc over pairs inside the chord bound, exact BIGINT sum, and the
     // same closed-form obs/exp/R/z (constants printed by the same
     // Scala code).
-    "q_ann_stat" -> {
+    "q_ann_stat" ~> {
       val c2 = graft.geo.engine.GeoEngine.maxChord2For(500000.0)
       val twoR = 2.0 * 6378137.0
       val a = RipleyAreaM2
-      val frac = "(epoch_us(ts) % 86400000000) / 86400000000.0"
       s"""WITH p AS (
          |  SELECT event_id,
-         |    (user_id % 60) * 3.0 - 90.0 + $frac * 2.0 AS lon,
-         |    (user_id % 30) * 2.0 - 30.0 + $frac * 1.0 AS lat
+         |    $eventPointsSql
          |  FROM events
          |  WHERE ts IS NOT NULL AND event_id % 4 = 0
          |), v AS (
          |  SELECT event_id,
-         |    cos(radians(lat))*cos(radians(lon)) AS x,
-         |    cos(radians(lat))*sin(radians(lon)) AS y,
-         |    sin(radians(lat)) AS z
+         |    $xyzSql
          |  FROM p
          |), nn AS (
          |  SELECT a.event_id,
          |    min(CAST(floor($twoR * asin(sqrt(
-         |      (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)
-         |      + (a.z-b.z)*(a.z-b.z)) / 2.0) * 1e6 + 0.5) AS BIGINT))
+         |      $xyzChord2Sql) / 2.0) * 1e6 + 0.5) AS BIGINT))
          |      AS nnd_um
          |  FROM v a JOIN v b
          |    ON a.event_id <> b.event_id
-         |   AND (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)
-         |     + (a.z-b.z)*(a.z-b.z) <= $c2
+         |   AND $xyzChord2Sql <= $c2
          |  GROUP BY 1
          |), g AS (
          |  SELECT CAST(count(*) AS BIGINT) AS n,
@@ -4428,24 +3902,19 @@ object SparkEntry {
     // Knox replay: quadratic pair frame over the same drifting points,
     // conditional exact counts for the three cuts, then E = ns*nt/C(n,2)
     // and z = (nst - E)/sqrt(E) from the identical integers.
-    "q_knox" -> {
+    "q_knox" ~> {
       val c2 = graft.geo.engine.GeoEngine.maxChord2For(10000.0)
-      val frac = "(epoch_us(ts) % 86400000000) / 86400000000.0"
       s"""WITH p AS (
          |  SELECT event_id, epoch_us(ts) AS t_us,
-         |    (user_id % 60) * 3.0 - 90.0 + $frac * 2.0 AS lon,
-         |    (user_id % 30) * 2.0 - 30.0 + $frac * 1.0 AS lat
+         |    $eventPointsSql
          |  FROM events
          |  WHERE ts IS NOT NULL AND event_id % 4 = 0
          |), v AS (
          |  SELECT event_id, t_us,
-         |    cos(radians(lat))*cos(radians(lon)) AS x,
-         |    cos(radians(lat))*sin(radians(lon)) AS y,
-         |    sin(radians(lat)) AS z
+         |    $xyzSql
          |  FROM p
          |), pr AS (
-         |  SELECT (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)
-         |       + (a.z-b.z)*(a.z-b.z) AS cd,
+         |  SELECT $xyzChord2Sql AS cd,
          |    abs(a.t_us - b.t_us) AS dt
          |  FROM v a JOIN v b ON a.event_id < b.event_id
          |), g AS (
@@ -4479,7 +3948,7 @@ object SparkEntry {
          |  END AS z_e6
          |FROM g CROSS JOIN agg""".stripMargin
     },
-    "q_sessionize" ->
+    "q_sessionize" ~>
       """WITH flagged AS (
         |  SELECT event_id, user_id, ts, value,
         |    CASE WHEN lag(ts) OVER w IS NULL
@@ -4498,7 +3967,7 @@ object SparkEntry {
         |  CAST(epoch_us(min(ts)) AS BIGINT) AS first_us,
         |  CAST(epoch_us(max(ts)) AS BIGINT) AS last_us
         |FROM sess GROUP BY user_id, session_seq""".stripMargin,
-    "q_interval_join" ->
+    "q_interval_join" ~>
       """WITH iv AS (
         |  SELECT c_custkey AS custkey, CAST(i AS BIGINT) AS version,
         |    757382400000000 + i * (90 + c_custkey % 30) * 86400000000
@@ -4512,7 +3981,7 @@ object SparkEntry {
         |FROM orders o LEFT JOIN iv ON o.o_custkey = iv.custkey
         |  AND epoch_us(o.o_orderdate) >= iv.vstart_us
         |  AND epoch_us(o.o_orderdate) < iv.vend_us""".stripMargin,
-    "q_asof_join" ->
+    "q_asof_join" ~>
       """WITH l AS (SELECT * FROM events WHERE event_type = 'click'),
         |     r AS (SELECT * FROM events WHERE event_type = 'view')
         |SELECT l.event_id AS click_id, l.user_id AS user_id,
@@ -4524,7 +3993,7 @@ object SparkEntry {
         | AND r.ts >= l.ts - INTERVAL 30 MINUTE
         |QUALIFY row_number() OVER (PARTITION BY l.event_id
         |  ORDER BY r.ts DESC, r.event_id DESC) = 1""".stripMargin,
-    "q_text_stats" ->
+    "q_text_stats" ~>
       """SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars_m,
         |CAST(length(text) - length(replace(text, ' ', '')) AS BIGINT) AS n_spaces
         |FROM documents""".stripMargin,
@@ -4534,7 +4003,7 @@ object SparkEntry {
     // repetition stats replayed relationally: unnest the same alnum-run
     // tokens with ordinals, build bigrams/trigrams via window leads,
     // aggregate totals / distincts / max group count per document.
-    "q_repetition" ->
+    "q_repetition" ~>
       """WITH toks AS (
         |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w,
         |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS i
@@ -4581,25 +4050,16 @@ object SparkEntry {
         |LEFT JOIN tri t ON d.doc_id = t.doc_id""".stripMargin,
     // split assignment: the q_fingerprint FNV fold, bucketed mod 100 with
     // Spark's pmod sign convention, thresholded at 90/95.
-    "q_split_assign" ->
-      """WITH norm AS (
-        |  SELECT doc_id, lang, regexp_replace(lower(text), '\s+', ' ', 'g') AS t
+    "q_split_assign" ~>
+      s"""WITH norm AS (
+        |  SELECT doc_id, lang, regexp_replace(lower(text), '\\s+', ' ', 'g') AS t
         |  FROM documents
         |), folded AS (
-        |  SELECT doc_id, lang, list_reduce(
-        |    list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      list_transform(generate_series(1, length(t)),
-        |        i -> CAST(unicode(substr(t, i, 1)) AS HUGEINT))),
-        |    (h, c) -> ((h - (h % 65536) +
-        |        CAST(xor(CAST(h % 65536 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT))
-        |      * 1099511628211) % CAST('18446744073709551616' AS HUGEINT)
-        |  ) AS fp_u
+        |  SELECT doc_id, lang, ${fnvSql("t")} AS fp_u
         |  FROM norm
         |), signedfp AS (
         |  SELECT lang,
-        |    CASE WHEN fp_u >= CAST('9223372036854775808' AS HUGEINT)
-        |      THEN fp_u - CAST('18446744073709551616' AS HUGEINT)
-        |      ELSE fp_u END AS fp
+        |    ${signedSql("fp_u")} AS fp
         |  FROM folded
         |), buck AS (
         |  SELECT lang, CAST(((fp % 100) + 100) % 100 AS BIGINT) AS b FROM signedfp
@@ -4613,7 +4073,7 @@ object SparkEntry {
     // first-occurrence-of-duplicates rule via windows over paragraph
     // text (the engine partitions by xxhash64(paragraph); identical
     // verdicts absent 64-bit collisions).
-    "q_paragraph_dedup" ->
+    "q_paragraph_dedup" ~>
       """WITH built AS (
         |  SELECT doc_id,
         |    'terms of service v' || (doc_id % 3) || chr(10) ||
@@ -4640,64 +4100,46 @@ object SparkEntry {
     // doc_id) as the rank, then smallest-40-per-language via a window
     // (the engine uses a kth-smallest threshold — same kept set for
     // distinct ranks).
-    "q_stratified_sample" ->
-      """WITH norm AS (
+    "q_stratified_sample" ~>
+      s"""WITH norm AS (
         |  SELECT doc_id, lang,
-        |    regexp_replace(lower(text || ' ' || doc_id), '\s+', ' ', 'g') AS t
+        |    regexp_replace(lower(text || ' ' || doc_id), '\\s+', ' ', 'g') AS t
         |  FROM documents
         |), folded AS (
-        |  SELECT doc_id, lang, list_reduce(
-        |    list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      list_transform(generate_series(1, length(t)),
-        |        i -> CAST(unicode(substr(t, i, 1)) AS HUGEINT))),
-        |    (h, c) -> ((h - (h % 65536) +
-        |        CAST(xor(CAST(h % 65536 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT))
-        |      * 1099511628211) % CAST('18446744073709551616' AS HUGEINT)
-        |  ) AS fp_u
+        |  SELECT doc_id, lang, ${fnvSql("t")} AS fp_u
         |  FROM norm
         |), ranked AS (
         |  SELECT lang, doc_id,
         |    row_number() OVER (PARTITION BY lang ORDER BY
-        |      CASE WHEN fp_u >= CAST('9223372036854775808' AS HUGEINT)
-        |        THEN fp_u - CAST('18446744073709551616' AS HUGEINT)
-        |        ELSE fp_u END, doc_id) AS rn
+        |      ${signedSql("fp_u")}, doc_id) AS rn
         |  FROM folded
         |)
         |SELECT lang, doc_id FROM ranked WHERE rn <= 40""".stripMargin,
     // geo-balanced sampling: cube-face tiling + FNV content rank + a
     // per-cell window replay the engine's kth-smallest threshold exactly
     // (64-bit fingerprints make rank ties impossible in practice).
-    "q_geo_sample" ->
+    "q_geo_sample" ~>
       (tileSql(lonSql, latSql, 3, "lineitem",
         ", l_orderkey*8 + l_linenumber AS pt_id") +
-        """, norm AS (
+        s""", norm AS (
           |  SELECT pt_id, face, i, j,
           |    regexp_replace(lower('pt ' || pt_id || ' ' || pt_id),
-          |      '\s+', ' ', 'g') AS t
+          |      '\\s+', ' ', 'g') AS t
           |  FROM tiled
           |), folded AS (
-          |  SELECT pt_id, face, i, j, list_reduce(
-          |    list_prepend(CAST('14695981039346656037' AS HUGEINT),
-          |      list_transform(generate_series(1, length(t)),
-          |        p -> CAST(unicode(substr(t, p, 1)) AS HUGEINT))),
-          |    (h, c) -> ((h - (h % 65536) +
-          |        CAST(xor(CAST(h % 65536 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT))
-          |      * 1099511628211) % CAST('18446744073709551616' AS HUGEINT)
-          |  ) AS fp_u
+          |  SELECT pt_id, face, i, j, ${fnvSql("t", "p")} AS fp_u
           |  FROM norm
           |), ranked AS (
           |  SELECT pt_id,
           |    row_number() OVER (PARTITION BY face, i, j ORDER BY
-          |      CASE WHEN fp_u >= CAST('9223372036854775808' AS HUGEINT)
-          |        THEN fp_u - CAST('18446744073709551616' AS HUGEINT)
-          |        ELSE fp_u END, pt_id) AS rn
+          |      ${signedSql("fp_u")}, pt_id) AS rn
           |  FROM folded
           |)
           |SELECT pt_id FROM ranked WHERE rn <= 5""".stripMargin),
     // sequence packing: same multiplicative-hash order + running token
     // sum as a single window (the engine computes the identical prefix
     // sum distributed, in two passes).
-    "q_pack_sequences" ->
+    "q_pack_sequences" ~>
       """WITH t AS (
         |  SELECT doc_id,
         |    CAST(CASE WHEN text IS NULL OR trim(text) = '' THEN 0
@@ -4713,33 +4155,24 @@ object SparkEntry {
         |  CAST((cum - tok) % 256 AS BIGINT) AS seq_off,
         |  tok AS n_tok
         |FROM c""".stripMargin,
-    "q_fingerprint" ->
-      """WITH norm AS (
-        |  SELECT doc_id, regexp_replace(lower(text), '\s+', ' ', 'g') AS t
+    "q_fingerprint" ~>
+      s"""WITH norm AS (
+        |  SELECT doc_id, regexp_replace(lower(text), '\\s+', ' ', 'g') AS t
         |  FROM documents
         |), folded AS (
-        |  SELECT doc_id, list_reduce(
-        |    list_prepend(CAST('14695981039346656037' AS HUGEINT),
-        |      list_transform(generate_series(1, length(t)),
-        |        i -> CAST(unicode(substr(t, i, 1)) AS HUGEINT))),
-        |    (h, c) -> ((h - (h % 65536) +
-        |        CAST(xor(CAST(h % 65536 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT))
-        |      * 1099511628211) % CAST('18446744073709551616' AS HUGEINT)
-        |  ) AS fp_u
+        |  SELECT doc_id, ${fnvSql("t")} AS fp_u
         |  FROM norm
         |)
         |SELECT doc_id,
-        |  CAST(CASE WHEN fp_u >= CAST('9223372036854775808' AS HUGEINT)
-        |    THEN fp_u - CAST('18446744073709551616' AS HUGEINT)
-        |    ELSE fp_u END AS BIGINT) AS fp
+        |  CAST(${signedSql("fp_u")} AS BIGINT) AS fp
         |FROM folded""".stripMargin,
     // bilinear NTv2 shift mirror for tests/test_hgrid_little_endian.gsb:
     // node (row y south->north, col x west->east) carries raw values
     // lat=14400-900*i, lon=-900*(i+1) arcsec with i = y*4 + (3-x); the
     // arithmetic below replays the kernel's float quantization and
     // summation order so results are bit-identical.
-    "q_hgridshift" ->
-      """WITH pts AS (
+    "q_hgridshift" ~>
+      s"""WITH pts AS (
         |  SELECT l_orderkey, l_linenumber,
         |    4.05 + (l_partkey * 7 + l_suppkey) % 2900 / 1000.0 AS lon,
         |    52.05 + (l_orderkey * 11 + l_linenumber) % 2900 / 1000.0 AS lat
@@ -4747,19 +4180,7 @@ object SparkEntry {
         |), rad AS (
         |  SELECT l_orderkey, l_linenumber,
         |    lon * (pi()/180) AS lam, lat * (pi()/180) AS phi FROM pts
-        |), g AS (
-        |  SELECT *,
-        |    (lam - 14400 * (pi()/180/3600)) / (3600 * (pi()/180/3600)) AS tl,
-        |    (phi - 187200 * (pi()/180/3600)) / (3600 * (pi()/180/3600)) AS tp
-        |  FROM rad
-        |), c AS (
-        |  SELECT *, floor(tl) AS il, floor(tp) AS ip,
-        |    tl - floor(tl) AS fl, tp - floor(tp) AS fp FROM g
-        |), mm AS (
-        |  SELECT *, (1.0-fl)*(1.0-fp) AS m00, fl*(1.0-fp) AS m10,
-        |    (1.0-fl)*fp AS m01, fl*fp AS m11,
-        |    ip*4 + (3 - il) AS i00 FROM c
-        |), sh AS (
+        |), $ntv2CellCtes, sh AS (
         |  SELECT *,
         |    CAST(CAST(14400 - 900*i00 AS REAL) * (pi()/180/3600) AS REAL) AS lat00,
         |    CAST(CAST(14400 - 900*(i00-1) AS REAL) * (pi()/180/3600) AS REAL) AS lat10,
@@ -4782,38 +4203,13 @@ object SparkEntry {
         |FROM res""".stripMargin,
     // planner CASE mirror: grid bbox -> bilinear NTv2 formula (same as
     // q_hgridshift), otherwise the +18/-36 arcsec constant offset.
-    "q_crs_planner" ->
-      """WITH pts AS (
+    "q_crs_planner" ~>
+      s"""WITH pts AS (
         |  SELECT l_orderkey, l_linenumber,
         |    3.05 + (l_partkey * 7 + l_suppkey) % 3900 / 1000.0 AS lon,
         |    51.05 + (l_orderkey * 11 + l_linenumber) % 3900 / 1000.0 AS lat
         |  FROM lineitem
-        |), rad AS (
-        |  SELECT *, lon * (pi()/180) AS lam, lat * (pi()/180) AS phi FROM pts
-        |), g AS (
-        |  SELECT *,
-        |    (lam - 14400 * (pi()/180/3600)) / (3600 * (pi()/180/3600)) AS tl,
-        |    (phi - 187200 * (pi()/180/3600)) / (3600 * (pi()/180/3600)) AS tp
-        |  FROM rad
-        |), c AS (
-        |  SELECT *, floor(tl) AS il, floor(tp) AS ip,
-        |    tl - floor(tl) AS fl, tp - floor(tp) AS fp FROM g
-        |), mm AS (
-        |  SELECT *, (1.0-fl)*(1.0-fp) AS m00, fl*(1.0-fp) AS m10,
-        |    (1.0-fl)*fp AS m01, fl*fp AS m11,
-        |    ip*4 + (3 - il) AS i00 FROM c
-        |), sh AS (
-        |  SELECT *,
-        |    m00*CAST(CAST(14400 - 900*i00 AS REAL) * (pi()/180/3600) AS REAL)
-        |      + m10*CAST(CAST(14400 - 900*(i00-1) AS REAL) * (pi()/180/3600) AS REAL)
-        |      + m01*CAST(CAST(14400 - 900*(i00+4) AS REAL) * (pi()/180/3600) AS REAL)
-        |      + m11*CAST(CAST(14400 - 900*(i00+3) AS REAL) * (pi()/180/3600) AS REAL) AS vlat,
-        |    m00*CAST(-CAST(-900*(i00+1) AS REAL) * (pi()/180/3600) AS REAL)
-        |      + m10*CAST(-CAST(-900*(i00) AS REAL) * (pi()/180/3600) AS REAL)
-        |      + m01*CAST(-CAST(-900*(i00+5) AS REAL) * (pi()/180/3600) AS REAL)
-        |      + m11*CAST(-CAST(-900*(i00+4) AS REAL) * (pi()/180/3600) AS REAL) AS vlon
-        |  FROM mm
-        |), res AS (
+        |), $ntv2ShiftCtes, res AS (
         |  SELECT l_orderkey, l_linenumber,
         |    CASE WHEN lon >= 4.0005 AND lon <= 6.9995 AND
         |              lat >= 52.0005 AND lat <= 54.9995
@@ -4833,7 +4229,7 @@ object SparkEntry {
     // nkgrf03vel_realigned_z_extract.gtx (5x5, row 0 = south, header
     // lat0=62.83333333333334 lon0=21 dlat=1/12 dlon=1/6) embedded as a
     // list; weights replayed in the kernel's exact double order.
-    "q_vgridshift" ->
+    "q_vgridshift" ~>
       """WITH pts AS (
         |  SELECT l_orderkey, l_linenumber,
         |    21.05 + (l_partkey * 7 + l_suppkey) % 600 / 1000.0 AS lon,
@@ -4876,39 +4272,14 @@ object SparkEntry {
     // identity (@null bridge) elsewhere.  The node values are the grid's:
     // without it the query's optional grid drops to @null everywhere, so
     // the entry is omitted rather than compared against the wrong field.
-    "q_crs_factory" -> guarded {
+    "q_crs_factory" ~> {
       graft.geo.grids.Grids.locate("tests/test_hgrid_little_endian.gsb")
-      """WITH pts AS (
+      s"""WITH pts AS (
         |  SELECT l_orderkey, l_linenumber,
         |    3.0504 + (l_partkey * 7 + l_suppkey) % 3900 / 1000.0 AS lon,
         |    51.0504 + (l_orderkey * 11 + l_linenumber) % 3900 / 1000.0 AS lat
         |  FROM lineitem
-        |), rad AS (
-        |  SELECT *, lon * (pi()/180) AS lam, lat * (pi()/180) AS phi FROM pts
-        |), g AS (
-        |  SELECT *,
-        |    (lam - 14400 * (pi()/180/3600)) / (3600 * (pi()/180/3600)) AS tl,
-        |    (phi - 187200 * (pi()/180/3600)) / (3600 * (pi()/180/3600)) AS tp
-        |  FROM rad
-        |), c AS (
-        |  SELECT *, floor(tl) AS il, floor(tp) AS ip,
-        |    tl - floor(tl) AS fl, tp - floor(tp) AS fp FROM g
-        |), mm AS (
-        |  SELECT *, (1.0-fl)*(1.0-fp) AS m00, fl*(1.0-fp) AS m10,
-        |    (1.0-fl)*fp AS m01, fl*fp AS m11,
-        |    ip*4 + (3 - il) AS i00 FROM c
-        |), sh AS (
-        |  SELECT *,
-        |    m00*CAST(CAST(14400 - 900*i00 AS REAL) * (pi()/180/3600) AS REAL)
-        |      + m10*CAST(CAST(14400 - 900*(i00-1) AS REAL) * (pi()/180/3600) AS REAL)
-        |      + m01*CAST(CAST(14400 - 900*(i00+4) AS REAL) * (pi()/180/3600) AS REAL)
-        |      + m11*CAST(CAST(14400 - 900*(i00+3) AS REAL) * (pi()/180/3600) AS REAL) AS vlat,
-        |    m00*CAST(-CAST(-900*(i00+1) AS REAL) * (pi()/180/3600) AS REAL)
-        |      + m10*CAST(-CAST(-900*(i00) AS REAL) * (pi()/180/3600) AS REAL)
-        |      + m01*CAST(-CAST(-900*(i00+5) AS REAL) * (pi()/180/3600) AS REAL)
-        |      + m11*CAST(-CAST(-900*(i00+4) AS REAL) * (pi()/180/3600) AS REAL) AS vlon
-        |  FROM mm
-        |), res AS (
+        |), $ntv2ShiftCtes, res AS (
         |  SELECT l_orderkey, l_linenumber,
         |    CASE WHEN lon >= 4.0 AND lon <= 7.0 AND
         |              lat >= 52.0 AND lat <= 55.0
@@ -4928,7 +4299,7 @@ object SparkEntry {
     // barycentric mirror of tests/tinshift_crs_implicit.json: vertices
     // (2,49)->(2.1,49.1), (3,50)->(3.1,50.1), (2,50)->(2.1,50.1), one
     // triangle; points planted strictly inside.
-    "q_tinshift" ->
+    "q_tinshift" ~>
       """WITH pts AS (
         |  SELECT l_orderkey, l_linenumber,
         |    (l_partkey * 3 + l_suppkey) % 900 AS u,
@@ -4956,16 +4327,13 @@ object SparkEntry {
         |  CAST(floor(ox*1e7 + 0.5) AS BIGINT) AS x_e7,
         |  CAST(floor(oy*1e7 + 0.5) AS BIGINT) AS y_e7
         |FROM res""".stripMargin,
-    "q_l_envelope" -> {
+    "q_l_envelope" ~> {
       // full CSR-envelope replay: the LCG sim generator, observed and
       // per-sim quadratic pair counts, envelope min/max, n_ge and the
       // p-value — all recomputed in SQL with the engine's own op order
       val bounds = Seq(100000.0, 200000.0, 400000.0)
         .map(graft.geo.engine.GeoEngine.maxChord2For)
-      val chord =
-        """pow(cos(radians(a.lat))*cos(radians(a.lon)) - cos(radians(b.lat))*cos(radians(b.lon)), 2) +
-          |    pow(cos(radians(a.lat))*sin(radians(a.lon)) - cos(radians(b.lat))*sin(radians(b.lon)), 2) +
-          |    pow(sin(radians(a.lat)) - sin(radians(b.lat)), 2)""".stripMargin
+      val chord = chord2Sql("a.lon", "a.lat", "b.lon", "b.lat")
       def cnt(grp: String): String =
         bounds.zipWithIndex.map { case (c2, k) =>
           s"CAST(sum(CASE WHEN cd <= $c2 THEN 1 ELSE 0 END) AS BIGINT) AS ${grp}c$k"
@@ -5042,7 +4410,7 @@ object SparkEntry {
          |UNION ALL
          |${rung(2, 400000L)}""".stripMargin
     },
-    "q_crs_catalog" ->
+    "q_crs_catalog" ~>
       // the registry catalog is a fixed input (the reference's data/sql
       // scripts), so its aggregate is pinned as literal VALUES — any
       // parser regression (lost rows, flipped deprecation, broken extent
@@ -5080,7 +4448,7 @@ object SparkEntry {
     // VALUES computed through the JVM-direct evaluator at oracle-build
     // time (the q_crs_catalog stance): any kernel regression in any of
     // the 186 operations shifts a checksum and fails the hash
-    "q_registry_sweep" -> guarded {
+    "q_registry_sweep" ~> {
       val rows = graft.geo.proj.RegistrySweep.samples.map { sm =>
         val (n, c) = graft.geo.proj.RegistrySweep.expected(sm)
         s"('${sm.op}',$n,$c)"
@@ -5097,7 +4465,7 @@ object SparkEntry {
     // recomputed JVM-direct at oracle-build time and pinned as VALUES
     // (AuthoritySweepSparkSpec already asserts the Catalyst path equals
     // this evaluator bit-for-bit; the oracle re-checks through DuckDB)
-    "q_authority_sweep" -> guarded {
+    "q_authority_sweep" ~> {
       val M = 1000000007L
       def pmodL(a: Long): Long = ((a % M) + M) % M
       def esc(s: String) = s.replace("'", "''")
@@ -5132,7 +4500,7 @@ object SparkEntry {
     // and the per-hex counts are pinned as VALUES — Snyder's icosahedral
     // forward has no SQL form, but the fixed input makes the output a
     // build constant like q_crs_catalog
-    "q_isea_hex" -> guarded {
+    "q_isea_hex" ~> {
       val binner = new graft.geo.cells.HexIndex.IseaBinner(4, 4)
       // Spark's Pmod on doubles returns a % b UNCHANGED when non-negative
       // (only negative remainders get the +b fold) — replaying the naive
@@ -5153,7 +4521,7 @@ object SparkEntry {
       s"""SELECT CAST(hex AS BIGINT) AS hex, CAST(n AS BIGINT) AS n_points
          |FROM (VALUES $rows) AS t(hex, n)""".stripMargin
     },
-    "q_vert_offset" ->
+    "q_vert_offset" ~>
       // constants inlined from vertOracleConsts (same-JVM bit parity);
       // z_hop replays the 2-hop chain step for step ((z-0.06)+0.34),
       // not the collapsed sum — addition order matters at the bit level

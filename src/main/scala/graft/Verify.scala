@@ -41,9 +41,9 @@ object Verify {
       case c => c.toString
     } + "\""
     // a failed oracle BUILDER must never cost the round's whole compare:
-    // risky builders are individually guarded inside SparkEntry.oracleSql
-    // (entries degrade to rows-only), and this outer net guarantees a
-    // well-formed oracle_sql.json lands even if map construction throws
+    // SparkEntry.oracleSql builds each entry on its own (one that needs an
+    // absent asset degrades to rows-only), and this outer net guarantees a
+    // well-formed oracle_sql.json lands even if another builder throws
     val json =
       try SparkEntry.oracleSql
         .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

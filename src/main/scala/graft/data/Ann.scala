@@ -31,8 +31,9 @@ object Ann {
     val d = data.select(col(dataId), col(vecCol).as("d_vec"))
     val pairs = d.crossJoin(q)
       .withColumn("cosine", dataops.cosineSim(col("q_vec"), col("d_vec")))
-    val kthAgg = udaf(new KthLargest(k))
-    val kth = pairs.groupBy(queryId).agg(kthAgg(col("cosine")).as("c_k"))
+    // kth-largest cosine = -(kth-smallest -cosine): negation is exact
+    val kthAgg = udaf(new graft.geo.engine.GeoEngine.KthSmallest(k))
+    val kth = pairs.groupBy(queryId).agg((-kthAgg(-col("cosine"))).as("c_k"))
     val w = Window.partitionBy(col(queryId))
       .orderBy(col("cosine").desc, col(dataId).asc)
     pairs.join(broadcast(kth), Seq(queryId))
@@ -53,42 +54,6 @@ object Ann {
     .limit(n)
     .select(col(vecCol)).collect()
     .map(_.getSeq[Float](0).toArray)
-
-  /** Exact kth-largest value with map-side combine (mirror of the
-    * engine's kth-smallest chord aggregate).  Buffer: b(0)=n, b(1..k)=the
-    * current k largest, unordered — order-insensitive so results are
-    * partition-count independent.  NegativeInfinity while under k values
-    * (then nothing is filtered). */
-  private final class KthLargest(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[Double, Array[Double], Double] {
-    def zero: Array[Double] = new Array[Double](k + 1)
-    private def insert(b: Array[Double], v: Double): Unit = {
-      val n = b(0).toInt
-      if (n < k) { b(n + 1) = v; b(0) = n + 1 }
-      else {
-        var mi = 1; var i = 2
-        while (i <= k) { if (b(i) < b(mi)) mi = i; i += 1 }
-        if (v > b(mi)) b(mi) = v
-      }
-    }
-    def reduce(b: Array[Double], v: Double): Array[Double] = { insert(b, v); b }
-    def merge(b1: Array[Double], b2: Array[Double]): Array[Double] = {
-      var i = 1; val n2 = b2(0).toInt
-      while (i <= n2) { insert(b1, b2(i)); i += 1 }
-      b1
-    }
-    def finish(b: Array[Double]): Double = {
-      val n = b(0).toInt
-      if (n < k) Double.NegativeInfinity
-      else { var mi = 1; var i = 2
-        while (i <= k) { if (b(i) < b(mi)) mi = i; i += 1 }
-        b(mi) }
-    }
-    def bufferEncoder: org.apache.spark.sql.Encoder[Array[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    def outputEncoder: org.apache.spark.sql.Encoder[Double] =
-      org.apache.spark.sql.Encoders.scalaDouble
-  }
 
   /** SRP-LSH approximate top-k with multi-probe: each query probes its own
     * bucket and every bucket at hamming distance 1 in signature space

@@ -44,7 +44,8 @@ object HexIndex extends Serializable {
   /** Cube rounding: round each cube coordinate, then repair the one with
     * the largest rounding error so q+r+s == 0 (nearest hex center wins).
     * The comparison chain (strict >, q-then-r-then-s) is mirrored verbatim
-    * in the DuckDB oracle SQL — keep the two in lockstep. */
+    * in the DuckDB oracle SQL by SparkEntry's one hexbin builder (`hexSql`,
+    * via `hexFixSql`) — keep the two in lockstep. */
   def cubeRoundQ(fq: Double, fr: Double): Long = {
     val fs = -fq - fr
     val rq = math.floor(fq + 0.5); val rr = math.floor(fr + 0.5)

@@ -262,7 +262,7 @@ object GeoEngine {
     * so insert is O(log k) — the former unordered buffer scanned all k
     * slots per insert, quadratic pain past small k.  Order-insensitive,
     * so results stay partition-count independent. */
-  private final class KthSmallest(k: Int)
+  private[graft] final class KthSmallest(k: Int)
       extends org.apache.spark.sql.expressions.Aggregator[Double, Array[Double], Double] {
     def zero: Array[Double] = new Array[Double](k + 1)
     private def siftUp(b: Array[Double], i0: Int): Unit = {

@@ -71,9 +71,14 @@ object AuthorityDb {
     * database is absent, an [[Unsupported]] naming the code when it holds
     * no such record. */
   def required[A](auth: String, code: String)(lookup: (String, String) => Option[A]): A =
-    lookup(auth, code).getOrElse(throw (
-      if (!available) sqlMissing
-      else Unsupported(s"authority code $auth:$code (not in the authority database)")))
+    lookup(auth, code).getOrElse {
+      requireAvailable()
+      throw Unsupported(s"authority code $auth:$code (not in the authority database)")
+    }
+
+  /** [[ProjString.AssetMissing]] naming `data/sql` when the database is
+    * absent, for a caller about to report a lookup as "not found". */
+  def requireAvailable(): Unit = if (!available) throw sqlMissing
 
   private def key(auth: String, code: String) = auth.toUpperCase + ":" + code
 

@@ -120,10 +120,11 @@ object OperationFactory {
       AuthorityDb.crs(auth, code) match {
         case Some(rc) => (rc.spec, rc.latFirst, Some(rc))
         case None =>
-          if (auth.equalsIgnoreCase("epsg"))
+          if (auth.equalsIgnoreCase("epsg")) {
+            AuthorityDb.requireAvailable()
             throw ProjString.Unsupported(
               s"authority code $t (not in builtin table or authority database)")
-          else (t, false, None) // not an authority we know — try as proj tokens
+          } else (t, false, None) // not an authority we know — try as proj tokens
       }
     } else if (!t.contains('+') && !t.contains('=') && !t.contains('[') &&
                t.length >= 3 && t.exists(_.isLetter)) {
@@ -135,7 +136,9 @@ object OperationFactory {
             case Some(rc) => (rc.spec, rc.latFirst, Some(rc))
             case None => throw ProjString.Unsupported(s"CRS name '$t' ($auth:$code)")
           }
-        case None => throw ProjString.Unsupported(s"unknown CRS name '$t'")
+        case None =>
+          AuthorityDb.requireAvailable()
+          throw ProjString.Unsupported(s"unknown CRS name '$t'")
       }
     } else (t, false, None)
   }

@@ -71,6 +71,31 @@ class AssetMissingSpec extends AnyFunSuite {
     }
   }
 
+  test("a CRS only the registry can resolve: AssetMissing without data/sql, else not found") {
+    import graft.geo.proj.OperationFactory
+    // an authority the registry does not know falls through to proj tokens
+    val other = intercept[Exception](OperationFactory.crsToCrs("NOSUCH:1", "EPSG:4326"))
+    assert(!other.isInstanceOf[AssetMissing], other.getMessage)
+    if (AuthorityDb.available) {
+      val code = intercept[ProjString.Unsupported](
+        OperationFactory.crsToCrs("EPSG:999999999", "EPSG:4326"))
+      assert(!code.isInstanceOf[AssetMissing] &&
+        code.getMessage.contains("not in builtin table or authority database"))
+      val name = intercept[ProjString.Unsupported](
+        OperationFactory.crsToCrs("definitely not a crs name", "EPSG:4326"))
+      assert(!name.isInstanceOf[AssetMissing] && name.getMessage.contains("unknown CRS name"))
+    } else {
+      for (crs <- Seq("EPSG:4440", "WGS 84")) {
+        val e = intercept[AssetMissing](OperationFactory.crsToCrs(crs, "EPSG:4326"))
+        assert(e.file == "data/sql" && e.searched.nonEmpty, crs)
+      }
+      for (q <- Seq("q_vert_offset", "q_point_motion", "q_crs_name")) {
+        val e = intercept[AssetMissing](SparkEntry.queries(q)(null, "/nonexistent"))
+        assert(e.file == "data/sql", q)
+      }
+    }
+  }
+
   test("an absent data/sql registry is AssetMissing with the old message") {
     if (AuthorityDb.available) assert(AuthorityDb.tables.nonEmpty)
     else {

@@ -151,6 +151,30 @@ class DataOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(nearDups.count() > 0)
   }
 
+  test("brute-force top-k: ties at the kth cosine and k above the data rank like a full sort") {
+    val sp = spark; import sp.implicits._
+    // d0..d2 and d3..d4 are identical vectors, so their cosines tie exactly
+    val data = Seq(
+      "d0" -> Array(1f, 0f, 0f), "d1" -> Array(1f, 0f, 0f), "d2" -> Array(1f, 0f, 0f),
+      "d3" -> Array(1f, 1f, 0f), "d4" -> Array(1f, 1f, 0f), "d5" -> Array(0f, 0.5f, 1f))
+    val queries = Seq("qa" -> Array(1f, 0.1f, 0f), "qb" -> Array(0.2f, 1f, 0f))
+    def cosine(a: Array[Float], b: Array[Float]): Double = {
+      val dot = a.zip(b).map { case (x, y) => x.toDouble * y }.sum
+      val na = a.map(x => x.toDouble * x).sum; val nb = b.map(x => x.toDouble * x).sum
+      dot / math.sqrt(na * nb)
+    }
+    val dataDf = data.toDF("vec_id", "embedding")
+    val queryDf = queries.toDF("query_id", "embedding")
+    for (k <- Seq(1, 2, 3, 4, 5, 6, 10)) {
+      val got = Ann.bruteForceTopK(queryDf, dataDf, k).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getInt(3))).toSet
+      val want = (for ((q, qv) <- queries) yield
+        data.sortBy { case (id, dv) => (-cosine(qv, dv), id) }.take(k)
+          .zipWithIndex.map { case ((id, _), i) => (q, id, i + 1) }).flatten.toSet
+      assert(got == want, s"k=$k")
+    }
+  }
+
   test("IVF-PQ: ADC candidates + exact re-rank reach brute-force recall") {
     val sp = spark; import sp.implicits._
     val vecs = (0 until 200).map { i =>

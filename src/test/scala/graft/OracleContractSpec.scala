@@ -32,9 +32,39 @@ class OracleContractSpec extends AnyFunSuite {
         " oracle, or a guarded builder silently degraded (check stderr)")
     assert((q -- o) == rowsOnly,
       s"rows-only set drifted: ${(q -- o).toSeq.sorted}")
-    // every oracle is non-trivial SQL (no sentinel leaked through)
-    assert(SparkEntry.oracleSql.values.forall(s =>
-      s.length > 20 && s.toUpperCase.contains("SELECT")))
+  }
+
+  /** What a badly spliced SQL fragment leaves behind: a parenthesis
+    * unbalanced outside quoted literals and `--` comments, an unpaired
+    * single quote, or an uninterpolated `${`. */
+  private def malformed(sql: String): Option[String] = {
+    var depth = 0; var quoted = false; var i = 0
+    while (i < sql.length) {
+      val c = sql(i)
+      if (quoted) { if (c == '\'') quoted = false } // '' reopens at once
+      else if (c == '\'') quoted = true
+      else if (sql.startsWith("--", i)) {
+        val eol = sql.indexOf('\n', i); i = if (eol < 0) sql.length else eol
+      } else if (c == '(') depth += 1
+      else if (c == ')') {
+        depth -= 1
+        if (depth < 0) return Some(s"')' without '(' at offset $i")
+      }
+      i += 1
+    }
+    if (quoted) Some("unpaired single quote")
+    else if (depth != 0) Some(s"$depth '(' left open")
+    else if (sql.contains("${")) Some("uninterpolated ${")
+    else None
+  }
+
+  test("every oracle is well-formed, non-trivial SQL") {
+    // runs without the reference tree too, so a badly spliced fragment
+    // fails here before the DuckDB compare
+    for ((name, sql) <- SparkEntry.oracleSql) {
+      assert(sql.length > 20 && sql.toUpperCase.contains("SELECT"), name)
+      assert(malformed(sql) === None, name)
+    }
   }
 
   test("the oracle map builds anywhere; an absent asset omits only a guarded entry") {
