@@ -2288,14 +2288,23 @@ object SparkEntry {
     * asset file costs that query's compare alone: it is left out and
     * named on stderr.  Any other builder error (a code regression, an
     * unsupported operation, a corrupt file) propagates. */
-  def oracleSql: Map[String, String] = oracleBuilders.flatMap { case (name, build) =>
-    try Some(name -> build())
-    catch {
-      case e: graft.geo.proj.ProjString.AssetMissing =>
-        System.err.println(s"[oracle] builder failed, entry omitted: ${e.detail}")
-        None
-    }
+  def oracleSql: Map[String, String] = oracleBuilds.flatMap {
+    case (name, Right(sql)) => Some(name -> sql)
+    case (_, Left(e)) =>
+      System.err.println(s"[oracle] builder failed, entry omitted: ${e.detail}")
+      None
   }
+
+  /** The oracles [[oracleSql]] leaves out: name -> the absent asset file
+    * its builder named. */
+  def oracleOmitted: Map[String, graft.geo.proj.ProjString.AssetMissing] =
+    oracleBuilds.collect { case (name, Left(e)) => name -> e }
+
+  private def oracleBuilds =
+    oracleBuilders.map { case (name, build) =>
+      name -> (try Right(build())
+        catch { case e: graft.geo.proj.ProjString.AssetMissing => Left(e) })
+    }
 
   /** `"q_x" ~> sql` pairs an oracle with its SQL, built when called. */
   private implicit final class OracleName(private val name: String) extends AnyVal {

@@ -2,10 +2,7 @@ package graft.data
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpectsInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A trained BPE merge list, in application order.  `ranks` is rebuilt
@@ -170,37 +167,4 @@ object Bpe {
     preTokenize(text.toString).foreach(w => applyWord(w, m, out))
     out.size()
   }
-}
-
-/** text -> array<string> of BPE subword tokens (merge table baked into
-  * the plan as an expression constant). */
-case class BpeTokensExpr(child: Expression, model: BpeModel)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def inputTypes = Seq(StringType)
-  override def prettyName: String = s"bpe_tokens_${model.merges.length}"
-  protected override def nullSafeEval(t: Any): Any =
-    Bpe.encode(t.asInstanceOf[UTF8String], model)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeModel", model, "graft.data.BpeModel")
-    defineCodeGen(ctx, ev, t => s"graft.data.Bpe$$.MODULE$$.encode($t, $ref)")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** text -> exact BPE token count. */
-case class BpeCountExpr(child: Expression, model: BpeModel)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = IntegerType
-  override def inputTypes = Seq(StringType)
-  override def prettyName: String = s"bpe_count_${model.merges.length}"
-  protected override def nullSafeEval(t: Any): Any =
-    Bpe.count(t.asInstanceOf[UTF8String], model)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeModel", model, "graft.data.BpeModel")
-    defineCodeGen(ctx, ev, t => s"graft.data.Bpe$$.MODULE$$.count($t, $ref)")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }

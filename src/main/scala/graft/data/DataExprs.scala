@@ -2,12 +2,11 @@ package graft.data
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.geo.expr.StaticCall
 
 /** Shared hashing for the dedup/similarity operators: 64-bit FNV-1a over
   * UTF-8 bytes + splitmix64 finalizer for per-permutation re-keying.
@@ -264,187 +263,15 @@ object DedupHash {
   }
 }
 
-/** text -> array<long> MinHash signature (one pass, codegen). */
-case class MinHashExpr(child: Expression, numHashes: Int, shingle: Int,
-                       seed: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def inputTypes = Seq(StringType)
-  override def prettyName: String = s"minhash_${numHashes}x$shingle"
-  protected override def nullSafeEval(t: Any): Any =
-    new GenericArrayData(DedupHash.minhash(
-      t.asInstanceOf[UTF8String], numHashes, shingle, seed))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.data.DedupHash$$.MODULE$$.minhash($t, $numHashes, $shingle, ${seed}L))")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
-/** text -> array<long> of word n-gram shingle hashes (exact Jaccard base). */
-case class ShingleHashExpr(child: Expression, shingle: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def inputTypes = Seq(StringType)
-  override def prettyName: String = s"shingles_$shingle"
-  protected override def nullSafeEval(t: Any): Any =
-    new GenericArrayData(
-      DedupHash.shingleHashes(t.asInstanceOf[UTF8String], shingle))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.data.DedupHash$$.MODULE$$.shingleHashes($t, $shingle))")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
-/** sorted array<long> of duplicate-window start positions -> merged
-  * array<struct<s,e>> half-open token spans (windows are `window` tokens). */
-case class MergeTokenSpansExpr(child: Expression, window: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("s", LongType, nullable = false),
-      StructField("e", LongType, nullable = false))), containsNull = false)
-  override def inputTypes = Seq(ArrayType(LongType, containsNull = false))
-  override def prettyName: String = s"merge_token_spans_$window"
-  protected override def nullSafeEval(ps: Any): Any =
-    DedupHash.mergeSpans(ps.asInstanceOf[ArrayData], window)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, ps =>
-      s"graft.data.DedupHash$$.MODULE$$.mergeSpans($ps, $window)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
-/** (text, sorted array<struct<s,e>> token spans) -> text with the covered
-  * tokens removed, survivors re-joined with single spaces. */
-case class DropTokenSpansExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def inputTypes = Seq(StringType, ArrayType(
-    StructType(Seq(StructField("s", LongType, nullable = false),
-      StructField("e", LongType, nullable = false))), containsNull = false))
-  override def prettyName: String = "drop_token_spans"
-  protected override def nullSafeEval(t: Any, sp: Any): Any =
-    DedupHash.dropTokenSpans(t.asInstanceOf[UTF8String],
-      sp.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, sp) =>
-      s"graft.data.DedupHash$$.MODULE$$.dropTokenSpans($t, $sp)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
 
-/** text -> array<int> hashed n-gram feature buckets (power-of-two count). */
-case class NgramBucketsExpr(child: Expression, n: Int, buckets: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(buckets > 0 && (buckets & (buckets - 1)) == 0,
-    s"bucket count must be a power of two for unsigned-mod parity, got $buckets")
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def inputTypes = Seq(StringType)
-  override def prettyName: String = s"ngram_buckets_${n}x$buckets"
-  protected override def nullSafeEval(t: Any): Any =
-    new GenericArrayData(
-      DedupHash.ngramBuckets(t.asInstanceOf[UTF8String], n, buckets))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.data.DedupHash$$.MODULE$$.ngramBuckets($t, $n, $buckets))")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
-/** array<int> bucket ids -> long sum of the plan-constant weight table
-  * (the hashed-feature linear scorer; the table rides as a codegen
-  * reference object — no join, no shuffle). */
-case class BucketSumExpr(child: Expression, table: Array[Long])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def inputTypes = Seq(ArrayType(IntegerType, containsNull = false))
-  override def prettyName: String = s"bucket_sum_${table.length}"
-  protected override def nullSafeEval(bs: Any): Any =
-    DedupHash.bucketSum(bs.asInstanceOf[ArrayData], table)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bucketTable", table, "long[]")
-    defineCodeGen(ctx, ev, bs =>
-      s"graft.data.DedupHash$$.MODULE$$.bucketSum($bs, $ref)")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
-/** text -> struct(lp_e6, n_bi, n_tok): one-pass hashed-bigram LM score. */
-case class LmScoreExpr(child: Expression, uni: Array[Long], bi: Array[Long],
-                       buckets: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("lp_e6", LongType, nullable = false),
-    StructField("n_bi", IntegerType, nullable = false),
-    StructField("n_tok", IntegerType, nullable = false)))
-  override def inputTypes = Seq(StringType)
-  override def prettyName: String = s"lm_score_$buckets"
-  protected override def nullSafeEval(t: Any): Any =
-    DedupHash.lmScore(t.asInstanceOf[UTF8String], uni, bi, buckets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val u = ctx.addReferenceObj("lmUni", uni, "long[]")
-    val b = ctx.addReferenceObj("lmBi", bi, "long[]")
-    defineCodeGen(ctx, ev, t =>
-      s"graft.data.DedupHash$$.MODULE$$.lmScore($t, $u, $b, $buckets)")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
-/** text -> boolean: the LM quality gate as one codegen evaluation. */
-case class LmGateExpr(child: Expression, uni: Array[Long], bi: Array[Long],
-                      buckets: Int, floorE6: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BooleanType
-  override def inputTypes = Seq(StringType)
-  override def prettyName: String = s"lm_gate_$buckets"
-  protected override def nullSafeEval(t: Any): Any =
-    DedupHash.lmPass(t.asInstanceOf[UTF8String], uni, bi, buckets, floorE6)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val u = ctx.addReferenceObj("lmUni", uni, "long[]")
-    val b = ctx.addReferenceObj("lmBi", bi, "long[]")
-    defineCodeGen(ctx, ev, t =>
-      s"graft.data.DedupHash$$.MODULE$$.lmPass($t, $u, $b, $buckets, ${floorE6}L)")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
-/** text -> 64-bit SimHash. */
-case class SimHashExpr(child: Expression, seed: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def inputTypes = Seq(StringType)
-  override def prettyName: String = "simhash"
-  protected override def nullSafeEval(t: Any): Any =
-    DedupHash.simhash(t.asInstanceOf[UTF8String], seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.data.DedupHash$$.MODULE$$.simhash($t, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
-/** text -> rolling-hash fingerprint. */
-case class FingerprintExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def inputTypes = Seq(StringType)
-  override def prettyName: String = "doc_fingerprint"
-  protected override def nullSafeEval(t: Any): Any =
-    DedupHash.fingerprint(t.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.data.DedupHash$$.MODULE$$.fingerprint($t)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
 /** Serializable carrier for a Bloom filter riding in a plan as a
   * reference object (the broadcast-dimension-table shape grids use):
@@ -465,26 +292,6 @@ object BloomHolder {
   }
 }
 
-/** `bloom.mightContain(key)` as a codegen expression — the map-side
-  * prefilter of the incremental (snapshot) dedup: rows whose fingerprint
-  * cannot be in the prior corpus skip the exact verification join
-  * entirely.  No false negatives by construction; false positives only
-  * cost a candidate row. */
-case class BloomMightContainExpr(child: Expression, holder: BloomHolder)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BooleanType
-  override def inputTypes = Seq(LongType)
-  override def prettyName: String = "bloom_might_contain"
-  protected override def nullSafeEval(v: Any): Any =
-    holder.mightContain(v.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomHolder", holder,
-      classOf[BloomHolder].getName)
-    defineCodeGen(ctx, ev, v => s"$ref.mightContain($v)")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
 /** Gopher-style repetition signals (Rae et al. 2021 §A1.1, the standard
   * web-corpus repetition filters): per-document word / bigram / trigram
@@ -556,29 +363,6 @@ object RepetitionOps {
   }
 }
 
-/** text -> struct of 9 integer repetition stats (one pass, codegen). */
-case class RepetitionStatsExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("words", IntegerType, nullable = false),
-    StructField("distinct_words", IntegerType, nullable = false),
-    StructField("top_word", IntegerType, nullable = false),
-    StructField("bigrams", IntegerType, nullable = false),
-    StructField("distinct_bigrams", IntegerType, nullable = false),
-    StructField("top_bigram", IntegerType, nullable = false),
-    StructField("trigrams", IntegerType, nullable = false),
-    StructField("distinct_trigrams", IntegerType, nullable = false),
-    StructField("top_trigram", IntegerType, nullable = false)))
-  override def inputTypes = Seq(StringType)
-  override def prettyName: String = "repetition_stats"
-  protected override def nullSafeEval(t: Any): Any =
-    RepetitionOps.stats(t.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.data.RepetitionOps$$.MODULE$$.stats($t)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
 object VectorOps {
   /** cosine similarity of two float vectors (double accumulation). */
@@ -635,55 +419,8 @@ object VectorOps {
   }
 }
 
-/** (array<float>, array<float>) -> cosine similarity. */
-case class CosineSimExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def prettyName: String = "cosine_sim"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.data.VectorOps$$.MODULE$$.cosine($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
 
-/** array<float> -> array<long> of `tables` independent banded SRP
-  * signatures (posexplode for the (table, bucket) LSH shuffle key). */
-case class SrpSignatureBandsExpr(child: Expression, bits: Int, tables: Int,
-                                 seed: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(bits >= 1 && bits <= 64 && tables >= 1)
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def inputTypes = Seq(ArrayType(FloatType))
-  override def prettyName: String = s"srp_sig_${bits}x$tables"
-  protected override def nullSafeEval(v: Any): Any =
-    VectorOps.srpSignatures(v.asInstanceOf[ArrayData], bits, tables, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v =>
-      s"graft.data.VectorOps$$.MODULE$$.srpSignatures($v, $bits, $tables, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
-/** array<float> -> 64-bit signed-random-projection LSH signature. */
-case class SrpSignatureExpr(child: Expression, bits: Int, seed: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(bits >= 1 && bits <= 64)
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def inputTypes = Seq(ArrayType(FloatType))
-  override def prettyName: String = s"srp_sig_$bits"
-  protected override def nullSafeEval(v: Any): Any =
-    VectorOps.srpSignature(v.asInstanceOf[ArrayData], bits, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v =>
-      s"graft.data.VectorOps$$.MODULE$$.srpSignature($v, $bits, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
 object VectorOpsCentroids {
   /** n nearest centroids of v by cosine (ties on index), as an int array
@@ -725,26 +462,6 @@ object VectorOpsCentroids {
   }
 }
 
-/** array<float> -> array<int> of the n nearest centroid indices (cosine).
-  * The centroid matrix is a driver-side constant baked into the plan —
-  * the IVF coarse quantizer applied map-side. */
-case class CentroidTopExpr(child: Expression, centroids: Array[Array[Float]],
-                           n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(centroids.nonEmpty && n >= 1)
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def inputTypes = Seq(ArrayType(FloatType))
-  override def prettyName: String = s"centroid_top_$n"
-  protected override def nullSafeEval(v: Any): Any =
-    VectorOpsCentroids.topCentroids(v.asInstanceOf[ArrayData], centroids, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "float[][]")
-    defineCodeGen(ctx, ev, v =>
-      s"graft.data.VectorOpsCentroids$$.MODULE$$.topCentroids($v, $ref, $n)")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
 /** Product-quantization kernels (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011): split the vector into `m`
@@ -848,101 +565,124 @@ object VectorOpsPq {
   }
 }
 
-/** array<float> -> array<int>: PQ code word (m sub-codes). */
-case class PqEncodeExpr(child: Expression, cb: Array[Array[Array[Float]]])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def inputTypes = Seq(ArrayType(FloatType))
-  override def prettyName: String = s"pq_encode_${cb.length}x${cb(0).length}"
-  protected override def nullSafeEval(v: Any): Any =
-    VectorOpsPq.encode(v.asInstanceOf[ArrayData], cb)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cb", cb, "float[][][]")
-    defineCodeGen(ctx, ev, v =>
-      s"graft.data.VectorOpsPq$$.MODULE$$.encode($v, $ref)")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
-/** array<float> -> array<float>: per-query ADC lookup table (m*ksub). */
-case class PqLutExpr(child: Expression, cb: Array[Array[Array[Float]]])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def inputTypes = Seq(ArrayType(FloatType))
-  override def prettyName: String = "pq_lut"
-  protected override def nullSafeEval(v: Any): Any =
-    VectorOpsPq.lut(v.asInstanceOf[ArrayData], cb)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cb", cb, "float[][][]")
-    defineCodeGen(ctx, ev, v =>
-      s"graft.data.VectorOpsPq$$.MODULE$$.lut($v, $ref)")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
-/** (codes, lut) -> float approximate dot product. */
-case class PqAdcExpr(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = FloatType
-  override def inputTypes = Seq(ArrayType(IntegerType), ArrayType(FloatType))
-  override def prettyName: String = "pq_adc"
-  protected override def nullSafeEval(c: Any, l: Any): Any =
-    VectorOpsPq.adc(c.asInstanceOf[ArrayData], l.asInstanceOf[ArrayData], ksub)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, l) =>
-      s"graft.data.VectorOpsPq$$.MODULE$$.adc($c, $l, $ksub)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
 
-/** Column DSL over the data-pipeline expressions. */
+/** Column DSL over the data-pipeline operators: each function is one
+  * [[graft.geo.expr.StaticCall]] whose inputs must already have their
+  * types (no implicit casts). */
 object dataops {
-  private def col(e: Expression): Column = GraftSqlShim.column(e)
-  private def ex(c: Column): Expression = GraftSqlShim.expression(c)
+  private val longs = ArrayType(LongType, containsNull = false)
+  private val ints = ArrayType(IntegerType, containsNull = false)
+  private val floats = ArrayType(FloatType)
+  private val spans = ArrayType(StructType(Seq(
+    StructField("s", LongType, nullable = false),
+    StructField("e", LongType, nullable = false))), containsNull = false)
 
+  /** `target.method(inputs..., consts...)`, inputs checked strictly. */
+  private def call(name: String, dataType: DataType, target: AnyRef, method: String,
+                   inputs: (Column, DataType)*)(consts: Any*): Column =
+    StaticCall.column(name, dataType, target, method, castInputs = false, inputs, consts: _*)
+
+  /** text -> array<long> MinHash signature (one pass) */
   def minhash(text: Column, numHashes: Int = 64, shingle: Int = 3,
               seed: Long = 42L): Column =
-    col(MinHashExpr(ex(text), numHashes, shingle, seed))
+    call(s"minhash_${numHashes}x$shingle", longs, DedupHash, "minhash",
+      text -> StringType)(numHashes, shingle, seed)
+  /** text -> array<long> of word n-gram shingle hashes (exact Jaccard base) */
   def shingles(text: Column, shingle: Int = 3): Column =
-    col(ShingleHashExpr(ex(text), shingle))
+    call(s"shingles_$shingle", longs, DedupHash, "shingleHashes", text -> StringType)(shingle)
   def simhash(text: Column, seed: Long = 42L): Column =
-    col(SimHashExpr(ex(text), seed))
-  def fingerprint(text: Column): Column = col(FingerprintExpr(ex(text)))
+    call("simhash", LongType, DedupHash, "simhash", text -> StringType)(seed)
+  /** text -> rolling-hash fingerprint */
+  def fingerprint(text: Column): Column =
+    call("doc_fingerprint", LongType, DedupHash, "fingerprint", text -> StringType)()
+  /** sorted array<long> of duplicate-window start positions -> merged
+    * array<struct<s,e>> half-open token spans (windows are `window` tokens) */
   def mergeTokenSpans(positions: Column, window: Int): Column =
-    col(MergeTokenSpansExpr(ex(positions), window))
-  def ngramBuckets(text: Column, n: Int, buckets: Int): Column =
-    col(NgramBucketsExpr(ex(text), n, buckets))
+    call(s"merge_token_spans_$window", spans, DedupHash, "mergeSpans",
+      positions -> longs)(window)
+  /** text -> array<int> hashed n-gram feature buckets (power-of-two count) */
+  def ngramBuckets(text: Column, n: Int, buckets: Int): Column = {
+    require(buckets > 0 && (buckets & (buckets - 1)) == 0,
+      s"bucket count must be a power of two for unsigned-mod parity, got $buckets")
+    call(s"ngram_buckets_${n}x$buckets", ints, DedupHash, "ngramBuckets",
+      text -> StringType)(n, buckets)
+  }
+  /** array<int> bucket ids -> long sum of the plan-constant weight table
+    * (the hashed-feature linear scorer; no join, no shuffle) */
   def bucketSum(buckets: Column, table: Array[Long]): Column =
-    col(BucketSumExpr(ex(buckets), table))
+    call(s"bucket_sum_${table.length}", LongType, DedupHash, "bucketSum",
+      buckets -> ints)(table)
+  /** text -> struct(lp_e6, n_bi, n_tok): one-pass hashed-bigram LM score */
   def lmScore(text: Column, uni: Array[Long], bi: Array[Long],
               buckets: Int): Column =
-    col(LmScoreExpr(ex(text), uni, bi, buckets))
+    call(s"lm_score_$buckets", StructType(Seq(
+      StructField("lp_e6", LongType, nullable = false),
+      StructField("n_bi", IntegerType, nullable = false),
+      StructField("n_tok", IntegerType, nullable = false))),
+      DedupHash, "lmScore", text -> StringType)(uni, bi, buckets)
+  /** text -> boolean: the LM quality gate as one evaluation */
   def lmGate(text: Column, uni: Array[Long], bi: Array[Long],
              buckets: Int, floorE6: Long): Column =
-    col(LmGateExpr(ex(text), uni, bi, buckets, floorE6))
-  def dropTokenSpans(text: Column, spans: Column): Column =
-    col(DropTokenSpansExpr(ex(text), ex(spans)))
+    call(s"lm_gate_$buckets", BooleanType, DedupHash, "lmPass",
+      text -> StringType)(uni, bi, buckets, floorE6)
+  /** (text, sorted token spans) -> text with the covered tokens removed,
+    * survivors re-joined with single spaces */
+  def dropTokenSpans(text: Column, spanCol: Column): Column =
+    call("drop_token_spans", StringType, DedupHash, "dropTokenSpans",
+      text -> StringType, spanCol -> spans)()
+  /** `bloom.mightContain(key)` — the map-side prefilter of the snapshot
+    * dedups: rows whose fingerprint cannot be in the prior corpus skip
+    * the exact verification join.  No false negatives by construction;
+    * a false positive only costs a candidate row. */
+  def bloomMightContain(key: Column, bloom: BloomHolder): Column =
+    call("bloom_might_contain", BooleanType, bloom, "mightContain", key -> LongType)()
+  /** text -> struct of 9 integer repetition stats (one pass) */
   def repetitionStats(text: Column): Column =
-    col(RepetitionStatsExpr(ex(text)))
-  def cosineSim(a: Column, b: Column): Column = col(CosineSimExpr(ex(a), ex(b)))
-  def srpSignature(v: Column, bits: Int = 16, seed: Long = 42L): Column =
-    col(SrpSignatureExpr(ex(v), bits, seed))
-
-  def srpSignatures(v: Column, bits: Int, tables: Int, seed: Long = 42L): Column =
-    col(SrpSignatureBandsExpr(ex(v), bits, tables, seed))
-  def centroidTop(v: Column, centroids: Array[Array[Float]], n: Int): Column =
-    col(CentroidTopExpr(ex(v), centroids, n))
+    call("repetition_stats", StructType(Seq("words", "distinct_words",
+      "top_word", "bigrams", "distinct_bigrams", "top_bigram", "trigrams",
+      "distinct_trigrams", "top_trigram").map(StructField(_, IntegerType, nullable = false))),
+      RepetitionOps, "stats", text -> StringType)()
+  def cosineSim(a: Column, b: Column): Column =
+    call("cosine_sim", DoubleType, VectorOps, "cosine", a -> floats, b -> floats)()
+  /** array<float> -> 64-bit signed-random-projection LSH signature */
+  def srpSignature(v: Column, bits: Int = 16, seed: Long = 42L): Column = {
+    require(bits >= 1 && bits <= 64)
+    call(s"srp_sig_$bits", LongType, VectorOps, "srpSignature", v -> floats)(bits, seed)
+  }
+  /** array<float> -> array<long> of `tables` independent banded SRP
+    * signatures (posexplode for the (table, bucket) LSH shuffle key) */
+  def srpSignatures(v: Column, bits: Int, tables: Int, seed: Long = 42L): Column = {
+    require(bits >= 1 && bits <= 64 && tables >= 1)
+    call(s"srp_sig_${bits}x$tables", longs, VectorOps, "srpSignatures",
+      v -> floats)(bits, tables, seed)
+  }
+  /** array<float> -> array<int> of the n nearest centroid indices
+    * (cosine): the IVF coarse quantizer applied map-side */
+  def centroidTop(v: Column, centroids: Array[Array[Float]], n: Int): Column = {
+    require(centroids.nonEmpty && n >= 1)
+    call(s"centroid_top_$n", ints, VectorOpsCentroids, "topCentroids",
+      v -> floats)(centroids, n)
+  }
+  /** array<float> -> array<int>: PQ code word (m sub-codes) */
   def pqEncode(v: Column, cb: Array[Array[Array[Float]]]): Column =
-    col(PqEncodeExpr(ex(v), cb))
+    call(s"pq_encode_${cb.length}x${cb(0).length}", ints, VectorOpsPq, "encode",
+      v -> floats)(cb)
+  /** array<float> -> array<float>: per-query ADC lookup table (m*ksub) */
   def pqLut(v: Column, cb: Array[Array[Array[Float]]]): Column =
-    col(PqLutExpr(ex(v), cb))
+    call("pq_lut", ArrayType(FloatType, containsNull = false), VectorOpsPq, "lut",
+      v -> floats)(cb)
+  /** (codes, lut) -> float approximate dot product */
   def pqAdc(codes: Column, lut: Column, ksub: Int): Column =
-    col(PqAdcExpr(ex(codes), ex(lut), ksub))
+    call("pq_adc", FloatType, VectorOpsPq, "adc",
+      codes -> ArrayType(IntegerType), lut -> floats)(ksub)
+  /** text -> array<string> of BPE subword tokens */
   def bpeTokens(text: Column, model: BpeModel): Column =
-    col(BpeTokensExpr(ex(text), model))
+    call(s"bpe_tokens_${model.merges.length}", ArrayType(StringType, containsNull = false),
+      Bpe, "encode", text -> StringType)(model)
+  /** text -> exact BPE token count */
   def bpeTokenCount(text: Column, model: BpeModel): Column =
-    col(BpeCountExpr(ex(text), model))
+    call(s"bpe_count_${model.merges.length}", IntegerType, Bpe, "count",
+      text -> StringType)(model)
 }

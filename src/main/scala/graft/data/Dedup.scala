@@ -97,9 +97,7 @@ object Dedup {
         "fingerprint and run incrementalDedup per bucket")
     val snapBloom = BloomHolder.from(
       oldFp.stat.bloomFilter(col("__graft_fp"), nOld, fpp))
-    def hit(c: org.apache.spark.sql.Column) = org.apache.spark.sql.GraftSqlShim
-      .column(BloomMightContainExpr(
-        org.apache.spark.sql.GraftSqlShim.expression(c), snapBloom))
+    def hit(c: org.apache.spark.sql.Column) = dataops.bloomMightContain(c, snapBloom)
     val newFp = newDocs
       .withColumn("__graft_fp", dataops.fingerprint(col(textCol)))
       .withColumn("__graft_fp2", xxhash64(col(textCol)))
@@ -115,10 +113,7 @@ object Dedup {
     // add an fpp-fraction of the batch), never correctness.
     val candBloom = BloomHolder.from(
       cand.stat.bloomFilter(col("__graft_fp"), nOld, fpp))
-    def hit2(c: org.apache.spark.sql.Column) = org.apache.spark.sql.GraftSqlShim
-      .column(BloomMightContainExpr(
-        org.apache.spark.sql.GraftSqlShim.expression(c), candBloom))
-    val oldPruned = oldFp.filter(hit2(col("__graft_fp")))
+    val oldPruned = oldFp.filter(dataops.bloomMightContain(col("__graft_fp"), candBloom))
     val verified = cand.join(oldPruned, Seq("__graft_fp", "__graft_fp2"),
       "left_anti")
     // by name: the using-columns join hoists the key columns to the
@@ -148,9 +143,11 @@ object Dedup {
     // add a rare false candidate, which the exact verify removes)
     val banded = sig.select(col(idCol),
       explode(split_sig(col("sig"), bands, rows)).as("bucket"))
-    // window-count the bucket sizes: one shuffle on bucket whose
-    // partitioning the self-join then reuses (no re-exchange), vs the
-    // groupBy+join cap which costs three
+    // window-count the bucket sizes to drop buckets over the cap.  The
+    // self-join below does not reuse the window's partitioning: in the
+    // final AQE plan each join side runs its own Window over its own
+    // Exchange hashpartitioning(bucket), so the banded rows are
+    // exchanged twice before the join on bucket
     val w = org.apache.spark.sql.expressions.Window.partitionBy("bucket")
     val capped = banded
       .withColumn("_bn", count(lit(1)).over(w))

@@ -755,7 +755,7 @@ object GeoEngine {
   def distanceJoinLevel(radiusMeters: Double): Int = {
     // start at the finest ENCODABLE level — a centimetre-scale radius
     // must select level 26 (whose cover still holds), not an
-    // unencodable 27-30 that crashes CellIdExpr's level check
+    // unencodable 27-30 that crashes geo.cellId's level check
     var l = graft.geo.cells.CellIndex.MaxUsableLevel
     while (l > 0 && ringSafeRadius(l, 1) < radiusMeters) l -= 1
     l

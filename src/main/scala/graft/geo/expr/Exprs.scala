@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.types._
 
+import graft.geo.cells.{CellIndex, HexIndex, TileIndex}
 import graft.geo.kernels.{IOUnits, PointKernel}
 import graft.geo.math.{ProjMath => M}
 
@@ -124,48 +125,7 @@ case class PointTransformExpr(first: Expression, second: Expression,
     copy(first = a, second = b, third = c, fourth = d)
 }
 
-/** lon/lat (degrees) -> S2-style cell id at a fixed level (LongType).
-  * Single scalar output: no boxing, fully codegen'd via a static call. */
-case class CellIdExpr(left: Expression, right: Expression, level: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  require(level >= 0 && level <= graft.geo.cells.CellIndex.MaxUsableLevel)
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def inputTypes = Seq(DoubleType, DoubleType)
-  override def prettyName: String = s"cell_id_l$level"
 
-  protected override def nullSafeEval(lon: Any, lat: Any): Any =
-    graft.geo.cells.CellIndex.cellId(
-      lon.asInstanceOf[Double], lat.asInstanceOf[Double], level)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lon, lat) =>
-      s"graft.geo.cells.CellIndex$$.MODULE$$.cellId($lon, $lat, $level)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
-
-/** parent cell at a coarser level — pure bit arithmetic, inlined. */
-case class CellParentExpr(child: Expression, parentLevel: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  // plan-time bound (the child-relative check stays per-row in
-  // CellIndex.parent): a negative level would OR sign-extended garbage
-  // into every emitted id with no error
-  require(parentLevel >= 0 &&
-    parentLevel <= graft.geo.cells.CellIndex.MaxUsableLevel,
-    s"cell_parent level $parentLevel outside [0, ${graft.geo.cells.CellIndex.MaxUsableLevel}]")
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def inputTypes = Seq(LongType)
-  override def prettyName: String = s"cell_parent_l$parentLevel"
-  protected override def nullSafeEval(id: Any): Any =
-    graft.geo.cells.CellIndex.parent(id.asInstanceOf[Long], parentLevel)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, id =>
-      s"graft.geo.cells.CellIndex$$.MODULE$$.parent($id, $parentLevel)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
 /** cell id -> struct(face, i, j): de-interleaves the Morton index (the
   * inverse of the encoder; lets tiling outputs be keyed by coordinates an
@@ -204,53 +164,7 @@ case class CellDecodeExpr(child: Expression)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** The (2k+1)^2 neighborhood of a cell (array<long>) — kNN candidate
-  * generation; explodes into an equi-join key. */
-case class CellNeighborsExpr(child: Expression, k: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  // plan-time bounds: k < 0 silently returns an empty neighborhood
-  // (emptying a kNN candidate set with no error) and a huge k runs
-  // (2k+1)^2 set insertions per row
-  require(k >= 0 && k <= 32,
-    s"cell_neighbors ring k=$k outside [0, 32] ((2k+1)^2 cells per row)")
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def inputTypes = Seq(LongType)
-  override def prettyName: String = s"cell_neighbors_$k"
-  protected override def nullSafeEval(id: Any): Any =
-    new GenericArrayData(
-      graft.geo.cells.CellIndex.neighborhood(id.asInstanceOf[Long], k))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, id =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.geo.cells.CellIndex$$.MODULE$$.neighborhood($id, $k))")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
-/** Projected (x, y) metres -> packed planar axial hex id (pointy-top,
-  * circumradius `size` metres) — the planar tier of the hex index
-  * ([[graft.geo.cells.HexIndex]]).  Closed-form, fully codegen'd, and
-  * mirrored verbatim by the DuckDB oracle of q_hex_occupancy. */
-case class HexBinExpr(left: Expression, right: Expression, size: Double)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  require(size > 0.0 && java.lang.Double.isFinite(size),
-    s"hex size $size must be a positive finite length in metres")
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def inputTypes = Seq(DoubleType, DoubleType)
-  override def prettyName: String = s"hex_bin_$size"
-
-  protected override def nullSafeEval(x: Any, y: Any): Any =
-    graft.geo.cells.HexIndex.bin(
-      x.asInstanceOf[Double], y.asInstanceOf[Double], size)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y) =>
-      s"graft.geo.cells.HexIndex$$.MODULE$$.bin($x, $y, $size)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
 
 /** packed hex id -> struct(q, r, x, y): axial coordinates plus the hex
   * center in projected metres (lets an independent SQL implementation
@@ -285,25 +199,6 @@ case class HexDecodeExpr(child: Expression, size: Double)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** all hexes within grid distance k of a packed hex id (3k^2+3k+1 cells,
-  * array<long>) — candidate generation for hex-indexed joins, the hex
-  * counterpart of CellNeighborsExpr. */
-case class HexDiskExpr(child: Expression, k: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(k >= 0 && k <= 64, s"hex_disk k=$k outside [0, 64]")
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def inputTypes = Seq(LongType)
-  override def prettyName: String = s"hex_disk_$k"
-  protected override def nullSafeEval(id: Any): Any =
-    new GenericArrayData(
-      graft.geo.cells.HexIndex.disk(id.asInstanceOf[Long], k))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, id =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.geo.cells.HexIndex$$.MODULE$$.disk($id, $k))")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
 /** lon/lat degrees -> ISEA equal-area hex DGGS id (aperture 3 or 4) —
   * the icosahedral tier of the hex index; the binning math is the
@@ -346,30 +241,6 @@ case class IseaHexIdExpr(left: Expression, right: Expression,
     copy(left = l, right = r)
 }
 
-/** lon/lat degrees -> packed XYZ web-map tile id at a fixed zoom
-  * (slippy-map spherical-Mercator pyramid, [[graft.geo.cells.TileIndex]]).
-  * Closed-form, fully codegen'd, and mirrored verbatim by the DuckDB
-  * oracle of q_tile_xyz. */
-case class TileIdExpr(left: Expression, right: Expression, zoom: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  require(zoom >= 0 && zoom <= graft.geo.cells.TileIndex.MaxZoom,
-    s"tile zoom $zoom outside [0, ${graft.geo.cells.TileIndex.MaxZoom}]")
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def inputTypes = Seq(DoubleType, DoubleType)
-  override def prettyName: String = s"tile_id_z$zoom"
-
-  protected override def nullSafeEval(lon: Any, lat: Any): Any =
-    graft.geo.cells.TileIndex.tileId(
-      lon.asInstanceOf[Double], lat.asInstanceOf[Double], zoom)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lon, lat) =>
-      s"graft.geo.cells.TileIndex$$.MODULE$$.tileId($lon, $lat, $zoom)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
 
 /** packed tile id -> struct(z, x, y) — the raster-store addressing an
   * independent SQL implementation can recompute. */
@@ -400,23 +271,6 @@ case class TileDecodeExpr(child: Expression)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** packed tile id -> Bing quadkey text (z base-4 digits, parent = string
-  * prefix — the key format raster tile stores actually use). */
-case class QuadkeyExpr(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def inputTypes = Seq(LongType)
-  override def prettyName: String = "quadkey"
-  protected override def nullSafeEval(id: Any): Any =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      graft.geo.cells.TileIndex.quadkey(id.asInstanceOf[Long]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, id =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.geo.cells.TileIndex$$.MODULE$$.quadkey($id))")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
 
 /** quadkey text -> packed tile id; malformed input -> null (in-band). */
 case class QuadkeyToTileExpr(child: Expression)
@@ -443,31 +297,6 @@ case class QuadkeyToTileExpr(child: Expression)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** lon/lat degrees -> geohash text at a fixed precision (Niemeyer base-32
-  * alternating bit interleave; parent = string prefix).  Closed-form and
-  * mirrored verbatim by the DuckDB oracle of q_geohash. */
-case class GeohashExpr(left: Expression, right: Expression, precision: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  require(precision >= 1 && precision <= graft.geo.cells.TileIndex.MaxPrecision,
-    s"geohash precision $precision outside [1, ${graft.geo.cells.TileIndex.MaxPrecision}]")
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def inputTypes = Seq(DoubleType, DoubleType)
-  override def prettyName: String = s"geohash_p$precision"
-
-  protected override def nullSafeEval(lon: Any, lat: Any): Any =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      graft.geo.cells.TileIndex.geohash(
-        lon.asInstanceOf[Double], lat.asInstanceOf[Double], precision))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lon, lat) =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.geo.cells.TileIndex$$.MODULE$$.geohash($lon, $lat, $precision))")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
 
 /** geohash text -> struct(lon, lat) cell center; malformed -> null. */
 case class GeohashDecodeExpr(child: Expression)
@@ -499,35 +328,6 @@ case class GeohashDecodeExpr(child: Expression)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** Karney geodesic inverse distance (metres) between two lon/lat points
-  * in degrees — the kNN ranking metric (SURVEY.md §2.5).  The Geodesic
-  * instance (with its setup-time series constants) serializes with the
-  * plan; codegen emits one virtual call per row, which the JIT
-  * devirtualizes (single receiver). */
-case class GeodesicDistExpr(first: Expression, second: Expression,
-                            third: Expression, fourth: Expression,
-                            geod: graft.geo.geodesic.Geodesic)
-    extends QuaternaryExpression with ImplicitCastInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def inputTypes = Seq(DoubleType, DoubleType, DoubleType, DoubleType)
-  override def prettyName: String = "geod_distance"
-
-  override protected def nullSafeEval(lon1: Any, lat1: Any, lon2: Any, lat2: Any): Any =
-    geod.distance(lat1.asInstanceOf[Double], lon1.asInstanceOf[Double],
-      lat2.asInstanceOf[Double], lon2.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("geod", geod,
-      classOf[graft.geo.geodesic.Geodesic].getName)
-    defineCodeGen(ctx, ev, (lon1, lat1, lon2, lat2) =>
-      s"$ref.distance($lat1, $lon1, $lat2, $lon2)")
-  }
-
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression, d: Expression): Expression =
-    copy(first = a, second = b, third = c, fourth = d)
-}
 
 /** Karney geodesic direct problem: (lon1, lat1, azi deg, s12 m) ->
   * struct(lon2, lat2, azi2) — cell-ring kNN radius expansion. */
@@ -568,126 +368,6 @@ case class GeodesicDirectExpr(first: Expression, second: Expression,
     copy(first = a, second = b, third = c, fourth = d)
 }
 
-/** Geodesic densification: the line between two lon/lat points split into
-  * `n` equal-length segments -> array of n+1 struct(lon, lat, azi)
-  * waypoints, endpoints included.  One line init (inverse solve + series
-  * expansion) per row, then n cheap position evaluations — the
-  * geod_lineinit/geod_position cost split (reference src/geodesic.c:419,
-  * 662).  Trajectory tiling explodes the array and cell-encodes each
-  * waypoint. */
-case class GeodesicWaypointsExpr(first: Expression, second: Expression,
-                                 third: Expression, fourth: Expression,
-                                 n: Int, geod: graft.geo.geodesic.Geodesic)
-    extends QuaternaryExpression with ImplicitCastInputTypes {
-  require(n >= 1 && n <= 100000,
-    s"waypoint count n=$n outside [1, 100000] (allocates n+1 structs per row)")
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("lon", DoubleType, nullable = false),
-    StructField("lat", DoubleType, nullable = false),
-    StructField("azi", DoubleType, nullable = false))), containsNull = false)
-  override def inputTypes = Seq(DoubleType, DoubleType, DoubleType, DoubleType)
-  override def prettyName: String = s"geod_waypoints_$n"
-
-  override protected def nullSafeEval(lon1: Any, lat1: Any, lon2: Any, lat2: Any): Any =
-    GeodesicWaypointsExpr.waypoints(geod,
-      lon1.asInstanceOf[Double], lat1.asInstanceOf[Double],
-      lon2.asInstanceOf[Double], lat2.asInstanceOf[Double], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("geod", geod,
-      classOf[graft.geo.geodesic.Geodesic].getName)
-    defineCodeGen(ctx, ev, (lon1, lat1, lon2, lat2) =>
-      s"graft.geo.expr.GeodesicWaypointsExpr$$.MODULE$$.waypoints(" +
-        s"$ref, $lon1, $lat1, $lon2, $lat2, $n)")
-  }
-
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression, d: Expression): Expression =
-    copy(first = a, second = b, third = c, fourth = d)
-}
-
-object GeodesicWaypointsExpr {
-  def waypoints(geod: graft.geo.geodesic.Geodesic,
-                lon1: Double, lat1: Double, lon2: Double, lat2: Double,
-                n: Int): GenericArrayData = {
-    val line = geod.inverseLine(lat1, lon1, lat2, lon2)
-    val out = new Array[Any](n + 1)
-    var i = 0
-    while (i <= n) {
-      val p = line.position(line.s13 * i / n)
-      out(i) = new GenericInternalRow(Array[Any](p.lon2, p.lat2, p.azi2))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
-/** Point-in-polygon test: (lon, lat, ring) where ring is a flat
-  * array<double> [lon0,lat0, lon1,lat1, ...] of a closed (first==last not
-  * required) simple polygon in lon/lat space.  Even-odd ray crossing with
-  * the boundary counted as inside.  This is the refine step of the PIP
-  * join (the coarse step is the cell-id equi-join); the pattern follows
-  * PROJ's quadtree+triangle-walk in tinshift
-  * (/root/reference/src/quadtree.hpp:85-199) re-expressed relationally. */
-case class PointInPolygonExpr(first: Expression, second: Expression,
-                              third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BooleanType
-  override def inputTypes =
-    Seq(DoubleType, DoubleType, ArrayType(DoubleType, containsNull = false))
-  override def prettyName: String = "point_in_polygon"
-
-  protected override def nullSafeEval(lon: Any, lat: Any, ring: Any): Any =
-    PointInPolygonExpr.containsAd(lon.asInstanceOf[Double],
-      lat.asInstanceOf[Double],
-      ring.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lon, lat, ring) =>
-      // read the ArrayData in place: a per-row toDoubleArray() copy turns
-      // the refine into a GC-bound stage at scale
-      s"graft.geo.expr.PointInPolygonExpr$$.MODULE$$.containsAd(" +
-        s"$lon, $lat, $ring)")
-
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression) =
-    copy(first = a, second = b, third = c)
-}
-
-/** Indexed point-in-polygon refine: the candidate row carries only a
-  * small int ring index and the ring table rides the serialized plan
-  * once per executor (a codegen reference object, the same shape as the
-  * grid registry).  This replaces a broadcast-rings join whose output
-  * copied the ring array into every candidate UnsafeRow — at 10^8
-  * candidates that copy is the dominant allocation of the whole PIP
-  * stage (measured: the refine leg of the 32M-point scaling probe
-  * dropped ~40% wall when the per-row array copy went away). */
-case class PointInPolygonIdxExpr(first: Expression, second: Expression,
-                                 third: Expression,
-                                 rings: Array[Array[Double]])
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BooleanType
-  override def inputTypes = Seq(DoubleType, DoubleType, IntegerType)
-  override def prettyName: String = "point_in_polygon_idx"
-
-  protected override def nullSafeEval(lon: Any, lat: Any, idx: Any): Any =
-    PointInPolygonExpr.contains(lon.asInstanceOf[Double],
-      lat.asInstanceOf[Double], rings(idx.asInstanceOf[Int]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("rings", rings, "double[][]")
-    defineCodeGen(ctx, ev, (lon, lat, idx) =>
-      s"graft.geo.expr.PointInPolygonExpr$$.MODULE$$.contains(" +
-        s"$lon, $lat, $ref[$idx])")
-  }
-
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression) =
-    copy(first = a, second = b, third = c)
-}
 
 /** One-pass geo-tag extraction from a document's media_ref span array:
   * first non-null ref, text after its last `?geo=`, two comma-separated
@@ -883,39 +563,42 @@ case class CellCoverLookupExpr(left: Expression, right: Expression,
     copy(left = l, right = r)
 }
 
-/** Geodesic polygon area + perimeter over the same flat
-  * [lon0,lat0,lon1,lat1,...] ring encoding as point_in_polygon —
-  * `geod_polygonarea` (/root/reference/src/geodesic.c:1974) as a scalar
-  * expression: struct(area_m2, perimeter_m), counter-clockwise positive,
-  * area reduced into (-A/2, A/2] of the ellipsoid total like
-  * geod_polygon_compute. */
-case class GeodPolygonAreaExpr(child: Expression,
-                               geod: graft.geo.geodesic.Geodesic)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("area_m2", DoubleType, nullable = false),
-    StructField("perimeter_m", DoubleType, nullable = false)))
-  override def inputTypes = Seq(ArrayType(DoubleType, containsNull = false))
-  override def prettyName: String = "geod_polygon_area"
 
-  protected override def nullSafeEval(ring: Any): Any =
-    GeodPolygonAreaExpr.compute(geod,
-      ring.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+/** The geodesic calls of the Column DSL with the inputs in its order
+  * (lon before lat) and the Geodesic last, as a static call takes them.
+  * The Geodesic (with its setup-time series constants) rides the plan as
+  * a reference object. */
+object GeodesicCalls {
+  /** Karney inverse distance in metres — the kNN ranking metric
+    * (SURVEY.md §2.5). */
+  def distance(lon1: Double, lat1: Double, lon2: Double, lat2: Double,
+               geod: graft.geo.geodesic.Geodesic): Double =
+    geod.distance(lat1, lon1, lat2, lon2)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("geod", geod,
-      classOf[graft.geo.geodesic.Geodesic].getName)
-    defineCodeGen(ctx, ev, ring =>
-      s"graft.geo.expr.GeodPolygonAreaExpr$$.MODULE$$.compute($ref, $ring)")
+  /** The line between two points split into `n` equal-length segments:
+    * n+1 struct(lon, lat, azi) waypoints, endpoints included.  One line
+    * init (inverse solve + series expansion) per row, then n cheap
+    * position evaluations — the geod_lineinit/geod_position cost split
+    * (reference src/geodesic.c:419, 662). */
+  def waypoints(lon1: Double, lat1: Double, lon2: Double, lat2: Double,
+                n: Int, geod: graft.geo.geodesic.Geodesic): GenericArrayData = {
+    val line = geod.inverseLine(lat1, lon1, lat2, lon2)
+    val out = new Array[Any](n + 1)
+    var i = 0
+    while (i <= n) {
+      val p = line.position(line.s13 * i / n)
+      out(i) = new GenericInternalRow(Array[Any](p.lon2, p.lat2, p.azi2))
+      i += 1
+    }
+    new GenericArrayData(out)
   }
 
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-object GeodPolygonAreaExpr {
-  def compute(geod: graft.geo.geodesic.Geodesic,
-              ring: org.apache.spark.sql.catalyst.util.ArrayData): InternalRow = {
+  /** `geod_polygonarea` (reference src/geodesic.c:1974) over a flat
+    * [lon0,lat0,lon1,lat1,...] ring: struct(area_m2, perimeter_m),
+    * counter-clockwise positive, area reduced into (-A/2, A/2] of the
+    * ellipsoid total like geod_polygon_compute. */
+  def polygonArea(ring: org.apache.spark.sql.catalyst.util.ArrayData,
+                  geod: graft.geo.geodesic.Geodesic): InternalRow = {
     val n = ring.numElements() / 2
     // parallel primitive arrays, no per-vertex boxing (hot path —
     // same discipline as PointInPolygonExpr.containsAd)
@@ -931,6 +614,12 @@ object GeodPolygonAreaExpr {
   }
 }
 
+/** Point-in-polygon over a flat [lon0,lat0, lon1,lat1, ...] ring of a
+  * simple polygon in lon/lat space (first == last not required):
+  * even-odd ray crossing.  The refine step of the PIP join (the coarse
+  * step is the cell cover lookup); the pattern follows PROJ's
+  * quadtree+triangle-walk in tinshift (reference src/quadtree.hpp:85-199)
+  * re-expressed relationally. */
 object PointInPolygonExpr {
   /** allocation-free variant over Catalyst ArrayData (hot join path) */
   def containsAd(lon: Double, lat: Double,
@@ -952,6 +641,16 @@ object PointInPolygonExpr {
     }
     inside
   }
+
+  /** [[contains]] against ring `idx` of a plan-constant ring table: the
+    * candidate row carries only the small int index, and the table rides
+    * the plan once per executor instead of a ring array copied into every
+    * candidate row (that copy was the dominant allocation of the PIP stage:
+    * the refine leg of the 32M-point scaling probe dropped ~40% wall when
+    * it went away). */
+  def containsIdx(lon: Double, lat: Double, idx: Int,
+                  rings: Array[Array[Double]]): Boolean =
+    contains(lon, lat, rings(idx))
 
   /** Even-odd crossing test on the lon/lat plane; points exactly on a
     * horizontal edge resolve via the half-open rule (consistent and
@@ -983,6 +682,11 @@ object geo {
   private val litNaN = Literal(Double.NaN, DoubleType)
   private val lit0 = Literal(0.0, DoubleType)
 
+  /** `target.method(inputs..., consts...)`, inputs cast to their types. */
+  private def call(name: String, dataType: DataType, target: AnyRef, method: String,
+                   inputs: (Column, DataType)*)(consts: Any*): Column =
+    StaticCall.column(name, dataType, target, method, castInputs = true, inputs, consts: _*)
+
   /** generic kernel application: (x,y[,z[,t]]) -> struct(x,y[,z[,t]]) */
   def transform(kernel: PointKernel, forward: Boolean, outDims: Int,
                 x: Column, y: Column, z: Column = null, t: Column = null): Column =
@@ -1013,50 +717,91 @@ object geo {
     transform(graft.geo.proj.OperationFactory.crsToCrs(srcCrs, dstCrs, opts),
       forward, outDims, x, y, z, t)
 
-  def cellId(lon: Column, lat: Column, level: Int): Column =
-    col(CellIdExpr(ex(lon), ex(lat), level))
+  /** lon/lat degrees -> S2-style cell id at a fixed level */
+  def cellId(lon: Column, lat: Column, level: Int): Column = {
+    require(level >= 0 && level <= CellIndex.MaxUsableLevel)
+    call(s"cell_id_l$level", LongType, CellIndex, "cellId",
+      lon -> DoubleType, lat -> DoubleType)(level)
+  }
 
-  def cellParent(cell: Column, parentLevel: Int): Column =
-    col(CellParentExpr(ex(cell), parentLevel))
+  /** parent cell at a coarser level — pure bit arithmetic */
+  def cellParent(cell: Column, parentLevel: Int): Column = {
+    // plan-time bound (the child-relative check stays per-row in
+    // CellIndex.parent): a negative level would OR sign-extended garbage
+    // into every emitted id with no error
+    require(parentLevel >= 0 && parentLevel <= CellIndex.MaxUsableLevel,
+      s"cell_parent level $parentLevel outside [0, ${CellIndex.MaxUsableLevel}]")
+    call(s"cell_parent_l$parentLevel", LongType, CellIndex, "parent",
+      cell -> LongType)(parentLevel)
+  }
 
   def cellDecode(cell: Column): Column = col(CellDecodeExpr(ex(cell)))
 
-  def cellNeighbors(cell: Column, k: Int): Column =
-    col(CellNeighborsExpr(ex(cell), k))
+  /** The (2k+1)^2 neighborhood of a cell (array<long>) — kNN candidate
+    * generation; explodes into an equi-join key. */
+  def cellNeighbors(cell: Column, k: Int): Column = {
+    // plan-time bounds: k < 0 silently returns an empty neighborhood
+    // (emptying a kNN candidate set with no error) and a huge k runs
+    // (2k+1)^2 set insertions per row
+    require(k >= 0 && k <= 32,
+      s"cell_neighbors ring k=$k outside [0, 32] ((2k+1)^2 cells per row)")
+    call(s"cell_neighbors_$k", ArrayType(LongType, containsNull = false),
+      CellIndex, "neighborhood", cell -> LongType)(k)
+  }
 
-  /** projected (x, y) metres -> packed planar axial hex id */
-  def hexBin(x: Column, y: Column, sizeMeters: Double): Column =
-    col(HexBinExpr(ex(x), ex(y), sizeMeters))
+  /** projected (x, y) metres -> packed planar axial hex id (pointy-top,
+    * circumradius `sizeMeters`), mirrored verbatim by the DuckDB oracle of
+    * q_hex_occupancy */
+  def hexBin(x: Column, y: Column, sizeMeters: Double): Column = {
+    require(sizeMeters > 0.0 && java.lang.Double.isFinite(sizeMeters),
+      s"hex size $sizeMeters must be a positive finite length in metres")
+    call(s"hex_bin_$sizeMeters", LongType, HexIndex, "bin",
+      x -> DoubleType, y -> DoubleType)(sizeMeters)
+  }
 
   /** packed hex id -> struct(q, r, x, y) (axial coords + center metres) */
   def hexDecode(hex: Column, sizeMeters: Double): Column =
     col(HexDecodeExpr(ex(hex), sizeMeters))
 
   /** all hexes within grid distance k (3k^2+3k+1 ids) */
-  def hexDisk(hex: Column, k: Int): Column =
-    col(HexDiskExpr(ex(hex), k))
+  def hexDisk(hex: Column, k: Int): Column = {
+    require(k >= 0 && k <= 64, s"hex_disk k=$k outside [0, 64]")
+    call(s"hex_disk_$k", ArrayType(LongType, containsNull = false),
+      HexIndex, "disk", hex -> LongType)(k)
+  }
 
   /** lon/lat degrees -> ISEA equal-area hex DGGS id */
   def iseaHexId(lon: Column, lat: Column, resolution: Int,
                 aperture: Int = 4): Column =
     col(IseaHexIdExpr(ex(lon), ex(lat), resolution, aperture))
 
-  /** lon/lat degrees -> packed XYZ web-map tile id at `zoom` */
-  def tileId(lon: Column, lat: Column, zoom: Int): Column =
-    col(TileIdExpr(ex(lon), ex(lat), zoom))
+  /** lon/lat degrees -> packed XYZ web-map tile id at `zoom`, mirrored
+    * verbatim by the DuckDB oracle of q_tile_xyz */
+  def tileId(lon: Column, lat: Column, zoom: Int): Column = {
+    require(zoom >= 0 && zoom <= TileIndex.MaxZoom,
+      s"tile zoom $zoom outside [0, ${TileIndex.MaxZoom}]")
+    call(s"tile_id_z$zoom", LongType, TileIndex, "tileId",
+      lon -> DoubleType, lat -> DoubleType)(zoom)
+  }
 
   /** packed tile id -> struct(z, x, y) */
   def tileDecode(tile: Column): Column = col(TileDecodeExpr(ex(tile)))
 
   /** packed tile id -> Bing quadkey text (parent = string prefix) */
-  def quadkey(tile: Column): Column = col(QuadkeyExpr(ex(tile)))
+  def quadkey(tile: Column): Column =
+    call("quadkey", StringType, TileIndex, "quadkey", tile -> LongType)()
 
   /** quadkey text -> packed tile id (malformed -> null) */
   def quadkeyToTile(qk: Column): Column = col(QuadkeyToTileExpr(ex(qk)))
 
-  /** lon/lat degrees -> geohash text at `precision` chars */
-  def geohash(lon: Column, lat: Column, precision: Int): Column =
-    col(GeohashExpr(ex(lon), ex(lat), precision))
+  /** lon/lat degrees -> geohash text at `precision` chars, mirrored
+    * verbatim by the DuckDB oracle of q_geohash */
+  def geohash(lon: Column, lat: Column, precision: Int): Column = {
+    require(precision >= 1 && precision <= TileIndex.MaxPrecision,
+      s"geohash precision $precision outside [1, ${TileIndex.MaxPrecision}]")
+    call(s"geohash_p$precision", StringType, TileIndex, "geohash",
+      lon -> DoubleType, lat -> DoubleType)(precision)
+  }
 
   /** geohash text -> struct(lon, lat) cell center (malformed -> null) */
   def geohashDecode(gh: Column): Column = col(GeohashDecodeExpr(ex(gh)))
@@ -1070,16 +815,25 @@ object geo {
   def cellCoverLookup(lon: Column, lat: Column, table: CoverTable): Column =
     col(CellCoverLookupExpr(ex(lon), ex(lat), table))
 
+  /** SQL `point_in_polygon`: point-in-polygon against a flat
+    * [lon0,lat0,lon1,lat1,...] ring column (see PointInPolygonExpr) */
+  private[expr] def pointInPolygon(lon: Column, lat: Column, ring: Column): Column =
+    call("point_in_polygon", BooleanType, PointInPolygonExpr, "containsAd",
+      lon -> DoubleType, lat -> DoubleType,
+      ring -> ArrayType(DoubleType, containsNull = false))()
+
   /** point-in-polygon against a plan-constant ring table, addressed by a
-    * small int index column (see PointInPolygonIdxExpr). */
+    * small int index column (see PointInPolygonExpr.containsIdx). */
   def pointInPolygonIdx(lon: Column, lat: Column, idx: Column,
                         rings: Array[Array[Double]]): Column =
-    col(PointInPolygonIdxExpr(ex(lon), ex(lat), ex(idx), rings))
+    call("point_in_polygon_idx", BooleanType, PointInPolygonExpr, "containsIdx",
+      lon -> DoubleType, lat -> DoubleType, idx -> IntegerType)(rings)
 
   def geodDistance(lon1: Column, lat1: Column, lon2: Column, lat2: Column,
                    geod: graft.geo.geodesic.Geodesic =
                      graft.geo.geodesic.Geodesic.WGS84): Column =
-    col(GeodesicDistExpr(ex(lon1), ex(lat1), ex(lon2), ex(lat2), geod))
+    call("geod_distance", DoubleType, GeodesicCalls, "distance", lon1 -> DoubleType,
+      lat1 -> DoubleType, lon2 -> DoubleType, lat2 -> DoubleType)(geod)
 
   def geodDirect(lon1: Column, lat1: Column, azi: Column, s12: Column,
                  geod: graft.geo.geodesic.Geodesic =
@@ -1091,6 +845,28 @@ object geo {
   def geodWaypoints(lon1: Column, lat1: Column, lon2: Column, lat2: Column,
                     n: Int,
                     geod: graft.geo.geodesic.Geodesic =
-                      graft.geo.geodesic.Geodesic.WGS84): Column =
-    col(GeodesicWaypointsExpr(ex(lon1), ex(lat1), ex(lon2), ex(lat2), n, geod))
+                      graft.geo.geodesic.Geodesic.WGS84): Column = {
+    require(n >= 1 && n <= 100000,
+      s"waypoint count n=$n outside [1, 100000] (allocates n+1 structs per row)")
+    val point = StructType(Seq("lon", "lat", "azi")
+      .map(StructField(_, DoubleType, nullable = false)))
+    call(s"geod_waypoints_$n", ArrayType(point, containsNull = false),
+      GeodesicCalls, "waypoints", lon1 -> DoubleType, lat1 -> DoubleType,
+      lon2 -> DoubleType, lat2 -> DoubleType)(n, geod)
+  }
+
+  /** SQL `geod_polygon_area`: struct(area_m2, perimeter_m) of the
+    * WGS84 geodesic polygon over a flat [lon0,lat0,lon1,lat1,...] ring
+    * (see GeodesicCalls.polygonArea) */
+  private[expr] def geodPolygonArea(ring: Column): Column =
+    call("geod_polygon_area", StructType(Seq("area_m2", "perimeter_m")
+      .map(StructField(_, DoubleType, nullable = false))), GeodesicCalls,
+      "polygonArea", ring -> ArrayType(DoubleType, containsNull = false))(
+      graft.geo.geodesic.Geodesic.WGS84)
+
+  /** SQL `rtodms`: radians -> DMS text (3 fractional second digits); `pos`
+    * and `neg` are hemisphere suffixes, '\u0000' for a leading '-' */
+  private[expr] def radToDms(rad: Column, pos: Char = '\u0000',
+                             neg: Char = '\u0000'): Column =
+    call("rtodms", StringType, Dms, "radToDms", rad -> DoubleType)(pos, neg, 3)
 }

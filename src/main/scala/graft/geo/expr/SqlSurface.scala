@@ -2,7 +2,7 @@ package graft.geo.expr
 
 import java.util.Locale
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
@@ -100,25 +100,6 @@ case class DmsToRadExpr(child: Expression)
          |else { ${ev.value} = $tmp.doubleValue(); }
        """.stripMargin
     })
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** radians -> DMS text (`rtodms`, 3 fractional second digits). */
-case class RadToDmsExpr(child: Expression, pos: Char, neg: Char)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def inputTypes = Seq(DoubleType)
-  override def prettyName: String = "rtodms"
-
-  protected override def nullSafeEval(r: Any): Any =
-    Dms.radToDms(r.asInstanceOf[Double], pos, neg, 3)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, r =>
-      s"graft.geo.expr.Dms$$.MODULE$$.radToDms($r, (char)${pos.toInt}, " +
-        s"(char)${neg.toInt}, 3)")
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -257,6 +238,9 @@ object GraftFunctions {
     s.charAt(0)
   }
 
+  private def lift(e: Expression): Column = GraftSqlShim.column(e)
+  private def lower(c: Column): Expression = GraftSqlShim.expressionEager(c)
+
   private def arity(fn: String, args: Seq[Expression], lo: Int, hi: Int): Unit =
     if (args.length < lo || args.length > hi)
       throw new IllegalArgumentException(
@@ -299,19 +283,19 @@ object GraftFunctions {
       "cell_id(lon, lat, level) - S2-style cube-face Hilbert cell id")(
       { args =>
         arity("cell_id", args, 3, 3)
-        CellIdExpr(args(0), args(1), intArg("cell_id", "level", args(2)))
+        lower(geo.cellId(lift(args(0)), lift(args(1)), intArg("cell_id", "level", args(2))))
       }),
     entry("cell_parent",
       "cell_parent(cell, level) - ancestor cell at a coarser level")(
       { args =>
         arity("cell_parent", args, 2, 2)
-        CellParentExpr(args(0), intArg("cell_parent", "level", args(1)))
+        lower(geo.cellParent(lift(args(0)), intArg("cell_parent", "level", args(1))))
       }),
     entry("cell_neighbors",
       "cell_neighbors(cell, k) - the (2k+1)^2 neighborhood, array<long>")(
       { args =>
         arity("cell_neighbors", args, 2, 2)
-        CellNeighborsExpr(args(0), intArg("cell_neighbors", "k", args(1)))
+        lower(geo.cellNeighbors(lift(args(0)), intArg("cell_neighbors", "k", args(1))))
       }),
     entry("cell_decode",
       "cell_decode(cell) - struct(face, i, j) of a cell id")(
@@ -321,7 +305,7 @@ object GraftFunctions {
         "metres (axial coords, cube rounding)")(
       { args =>
         arity("hex_bin", args, 3, 3)
-        HexBinExpr(args(0), args(1), doubleArg("hex_bin", "size_m", args(2)))
+        lower(geo.hexBin(lift(args(0)), lift(args(1)), doubleArg("hex_bin", "size_m", args(2))))
       }),
     entry("hex_decode",
       "hex_decode(hex, size_m) - struct(q, r, x, y): axial coords + " +
@@ -335,7 +319,7 @@ object GraftFunctions {
         "(3k^2+3k+1 ids), array<long>")(
       { args =>
         arity("hex_disk", args, 2, 2)
-        HexDiskExpr(args(0), intArg("hex_disk", "k", args(1)))
+        lower(geo.hexDisk(lift(args(0)), intArg("hex_disk", "k", args(1))))
       }),
     entry("isea_hex",
       "isea_hex(lon, lat, resolution[, aperture]) - ISEA equal-area hex " +
@@ -352,7 +336,7 @@ object GraftFunctions {
         "(slippy-map spherical-Mercator pyramid)")(
       { args =>
         arity("tile_id", args, 3, 3)
-        TileIdExpr(args(0), args(1), intArg("tile_id", "zoom", args(2)))
+        lower(geo.tileId(lift(args(0)), lift(args(1)), intArg("tile_id", "zoom", args(2))))
       }),
     entry("tile_decode",
       "tile_decode(tile) - struct(z, x, y) of a packed tile id")(
@@ -360,7 +344,7 @@ object GraftFunctions {
     entry("quadkey",
       "quadkey(tile) - Bing quadkey text of a packed tile id " +
         "(z base-4 digits; parent = string prefix)")(
-      { args => arity("quadkey", args, 1, 1); QuadkeyExpr(args(0)) }),
+      { args => arity("quadkey", args, 1, 1); lower(geo.quadkey(lift(args(0)))) }),
     entry("quadkey_to_tile",
       "quadkey_to_tile(text) - packed tile id of a Bing quadkey; " +
         "NULL when malformed")(
@@ -369,7 +353,8 @@ object GraftFunctions {
       "geohash(lon, lat, precision) - base-32 geohash text (1-12 chars)")(
       { args =>
         arity("geohash", args, 3, 3)
-        GeohashExpr(args(0), args(1), intArg("geohash", "precision", args(2)))
+        lower(geo.geohash(lift(args(0)), lift(args(1)),
+          intArg("geohash", "precision", args(2))))
       }),
     entry("geohash_decode",
       "geohash_decode(text) - struct(lon, lat) cell center of a geohash; " +
@@ -379,7 +364,7 @@ object GraftFunctions {
       "geod_distance(lon1, lat1, lon2, lat2) - WGS84 geodesic metres")(
       { args =>
         arity("geod_distance", args, 4, 4)
-        GeodesicDistExpr(args(0), args(1), args(2), args(3), Geodesic.WGS84)
+        lower(geo.geodDistance(lift(args(0)), lift(args(1)), lift(args(2)), lift(args(3))))
       }),
     entry("geod_direct",
       "geod_direct(lon, lat, azi_deg, s_m) - struct(lon, lat, azi) at " +
@@ -393,15 +378,15 @@ object GraftFunctions {
         "the connecting geodesic, array<struct(lon, lat, azi)>")(
       { args =>
         arity("geod_waypoints", args, 5, 5)
-        GeodesicWaypointsExpr(args(0), args(1), args(2), args(3),
-          intArg("geod_waypoints", "n", args(4)), Geodesic.WGS84)
+        lower(geo.geodWaypoints(lift(args(0)), lift(args(1)), lift(args(2)),
+          lift(args(3)), intArg("geod_waypoints", "n", args(4))))
       }),
     entry("point_in_polygon",
       "point_in_polygon(lon, lat, ring) - even-odd test against a flat " +
         "[lon0,lat0,lon1,lat1,...] ring")(
       { args =>
         arity("point_in_polygon", args, 3, 3)
-        PointInPolygonExpr(args(0), args(1), args(2))
+        lower(geo.pointInPolygon(lift(args(0)), lift(args(1)), lift(args(2))))
       }),
     entry("proj_factors",
       "proj_factors(defn, lon, lat) - scale/distortion diagnostics of a " +
@@ -446,7 +431,7 @@ object GraftFunctions {
         "counter-clockwise positive")(
       { args =>
         arity("geod_polygon_area", args, 1, 1)
-        GeodPolygonAreaExpr(args(0), Geodesic.WGS84)
+        lower(geo.geodPolygonArea(lift(args(0))))
       }),
     entry("dmstor",
       "dmstor(text) - DMS text (\"45d30'15.3\\\"N\", \"0.79r\") to radians; " +
@@ -457,11 +442,11 @@ object GraftFunctions {
         "single-char hemisphere suffixes (e.g. 'N','S')")(
       { args =>
         arity("rtodms", args, 1, 3)
-        if (args.length == 1) RadToDmsExpr(args(0), '\u0000', '\u0000')
+        if (args.length == 1) lower(geo.radToDms(lift(args(0))))
         else {
           arity("rtodms", args, 3, 3)
-          RadToDmsExpr(args(0), charArg("rtodms", "pos", args(1)),
-            charArg("rtodms", "neg", args(2)))
+          lower(geo.radToDms(lift(args(0)), charArg("rtodms", "pos", args(1)),
+            charArg("rtodms", "neg", args(2))))
         }
       }),
 
@@ -472,32 +457,31 @@ object GraftFunctions {
         "case/whitespace-normalized text")(
       { args =>
         arity("doc_fingerprint", args, 1, 1)
-        graft.data.FingerprintExpr(args(0))
+        lower(graft.data.dataops.fingerprint(lift(args(0))))
       }),
     entry("simhash",
       "simhash(text[, seed]) - 64-bit SimHash over word tokens")(
       { args =>
         arity("simhash", args, 1, 2)
-        graft.data.SimHashExpr(args(0),
+        lower(graft.data.dataops.simhash(lift(args(0)),
           if (args.length > 1) intArg("simhash", "seed", args(1)).toLong
-          else 42L)
+          else 42L))
       }),
     entry("minhash",
       "minhash(text[, num_hashes, shingle]) - MinHash signature array " +
         "over word shingles")(
       { args =>
         arity("minhash", args, 1, 3)
-        graft.data.MinHashExpr(args(0),
+        lower(graft.data.dataops.minhash(lift(args(0)),
           if (args.length > 1) intArg("minhash", "num_hashes", args(1)) else 64,
-          if (args.length > 2) intArg("minhash", "shingle", args(2)) else 3,
-          42L)
+          if (args.length > 2) intArg("minhash", "shingle", args(2)) else 3))
       }),
     entry("repetition_stats",
       "repetition_stats(text) - Gopher-style repetition struct (word/" +
         "bigram/trigram totals, distinct counts, top-gram frequency)")(
       { args =>
         arity("repetition_stats", args, 1, 1)
-        graft.data.RepetitionStatsExpr(args(0))
+        lower(graft.data.dataops.repetitionStats(lift(args(0))))
       }),
     entryCol("token_count_ws",
       "token_count_ws(text) - whitespace token count (0 for null/blank)")(
@@ -539,10 +523,10 @@ object GraftFunctions {
     * builder lifts argument expressions into Columns, applies the
     * library function, and lowers the result back to an Expression. */
   private def entryCol(name: String, usage: String)(
-      f: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+      f: Column => Column) =
     entry(name, usage) { args =>
       arity(name, args, 1, 1)
-      GraftSqlShim.expressionEager(f(GraftSqlShim.column(args(0))))
+      lower(f(lift(args(0))))
     }
 
   private def entry(name: String, usage: String)(b: Builder) =

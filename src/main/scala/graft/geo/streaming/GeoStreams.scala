@@ -69,7 +69,7 @@ object GeoStreams {
                              textCol: String = "text",
                              expectedSnapshotDocs: Long = -1L,
                              fpp: Double = 0.01): DataFrame = {
-    import graft.data.{dataops, BloomHolder, BloomMightContainExpr}
+    import graft.data.{dataops, BloomHolder}
     val oldFp = snapshot.select(
       dataops.fingerprint(col(textCol)).as("__graft_fp"),
       xxhash64(col(textCol)).as("__graft_fp2"))
@@ -78,9 +78,7 @@ object GeoStreams {
       if (expectedSnapshotDocs > 0) expectedSnapshotDocs else oldFp.count())
     val bloom = BloomHolder.from(
       oldFp.stat.bloomFilter(col("__graft_fp"), nOld, fpp))
-    def hit(c: org.apache.spark.sql.Column) = org.apache.spark.sql.GraftSqlShim
-      .column(BloomMightContainExpr(
-        org.apache.spark.sql.GraftSqlShim.expression(c), bloom))
+    def hit(c: org.apache.spark.sql.Column) = dataops.bloomMightContain(c, bloom)
     val withFp = docs
       .withColumn("__graft_fp", dataops.fingerprint(col(textCol)))
       .withColumn("__graft_fp2", xxhash64(col(textCol)))

@@ -29,7 +29,9 @@ class OracleContractSpec extends AnyFunSuite {
     assert(q.size == 107, s"query census moved: ${q.size} (update this pin)")
     assert(o.size == 95,
       s"oracled count moved: ${o.size} — either update this pin for a new" +
-        " oracle, or a guarded builder silently degraded (check stderr)")
+        " oracle, or a guarded builder silently degraded; omitted for an " +
+        "absent asset: " + SparkEntry.oracleOmitted.toSeq.sortBy(_._1)
+          .map { case (n, e) => s"$n (${e.file})" }.mkString(", "))
     assert((q -- o) == rowsOnly,
       s"rows-only set drifted: ${(q -- o).toSeq.sorted}")
   }
